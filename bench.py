@@ -1,31 +1,22 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Headline-query timing at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints the compact metric record as the FINAL stdout line:
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+The repo's performance yardstick is ``python3 perfbench/run.py``
+(``BENCHMARK.json``). This script is the sf0.1 headline CLI that
+``BASELINE.json``'s "BENCH within 2x of BASELINE" check is stated
+against.
 
-The full per-run measurement arrays are printed on an EARLIER stdout line
-(prefixed ``BENCH_RUNS_DETAIL``) and written to ``bench_runs.json`` beside
-this script — NOT on the final line. Round 5's final line carried the full
-``runs`` dict and outgrew the driver's tail capture, so BENCH_r05.json
-landed ``parsed: null`` and the 2x perf gate was blind (VERDICT r5 #1).
-The final line must stay small enough to survive a bounded tail capture.
+Methodology: a global warm-up (table footers + one untimed flagship
+execution for JVM/codegen startup), then every headline query runs once
+untimed (its own plan/codegen warm-up) and ``N_RUNS`` timed runs through
+the noop sink — full plan execution, no driver-side collect. The final
+stdout line is one JSON object:
 
-Methodology (variance control): after a global warm-up (table footers +
-one untimed flagship execution for JVM/codegen startup), every query
-runs once untimed (its own plan/codegen warm-up), then ``BENCH_RUNS``
-(default 3) timed runs. ``queries`` reports the per-query median;
-``runs`` carries every individual measurement so a regression is
-distinguishable from environmental noise.
+    {"metric": "headline_queries_total_sec", "value": N, "unit": "sec",
+     "queries": {name: median_sec}, "n_runs": 3, "sf": 0.1}
 
-Each timed run executes the full plan via a noop sink — no driver-side
-collect cost in the measurement.
-
-Cross-round comparability caveat: the driver REGENERATES the testdata
-each round, and the corpus statistics move — e.g. round 6's documents
-carry ~1.6x round 5's true near-duplicate pair count (9020 vs 5737
-exact-Jaccard pairs at sf0.01) — so dedup-family medians shift with the
-data, not the code. Compare queries within a round, or against the
-same parquet snapshot.
+The test data is regenerated between rounds, so dedup-family medians
+move with the data, not only the code: compare against the same parquet
+snapshot.
 """
 
 from __future__ import annotations
@@ -41,7 +32,7 @@ if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-N_RUNS = int(os.environ.get("BENCH_RUNS", "3"))
+N_RUNS = 3
 
 # Headline set: the flagship plus one representative per operator family
 # (join, star-broadcast, agg, window, top-k, sessionization, json, dedup,
@@ -69,8 +60,7 @@ HEADLINE = [
     "q95_market_share",
     "x96_neardup_clusters",
     # production dedup path: xxhash64 clusters + incremental anti-join —
-    # benched so the fast family (not the md5 oracle-pinned x43/x96) is
-    # the number the 2×-gate watches (VERDICT r4 next-round #5)
+    # the fast family, not the md5 oracle-pinned x43/x96
     "x115_neardup_clusters_fast",
     "x117_incremental_dedup",
     "x97_sequence_pack",
@@ -80,271 +70,71 @@ HEADLINE = [
     # Zipfian hot-key join (sort-merge pinned): carries the SMJ cost the
     # 100 TB plan pays; AQE skew-split engagement proven in tests/test_skew.py
     "x122_skew_join_zipf",
-    # layout + sketch + LM-scoring paths added r5: Morton interleave
-    # (codegen'd bit math + one agg exchange), mergeable HLL union,
-    # corpus-trained unigram-LM quality scoring
+    # layout + sketch + LM-scoring paths: Morton interleave (codegen'd bit
+    # math + one agg exchange), mergeable HLL union, corpus-trained
+    # unigram-LM quality scoring
     "x124_zorder_layout",
     "q123_hll_union_contract",
     "x125_unigram_logprob",
     # Q22 archetype: scalar-subquery + anti-join decorrelation
     "q126_sales_opportunity",
-    # tokenizer-training + graph-dataflow paths added late r5: BPE
-    # merge-pair counting (vocab-first explode), domain PageRank
-    # (3 unrolled iterations over the checkpointed syndication graph)
+    # tokenizer training + graph dataflow: BPE merge-pair counting
+    # (vocab-first explode), domain PageRank (3 unrolled iterations over
+    # the checkpointed syndication graph)
     "x134_bpe_merge_pairs",
     "x138_domain_pagerank",
-    # media seam (VERDICT r5 next-round #7): the Arrow-batched Python
-    # decode path is the engine's ONE deliberate Python hot path — x53
-    # (stdlib raster decode via mapInPandas) and x83 (AVI/MJPEG frame
-    # sampling) give it a watched number
+    # media seam: the Arrow-batched Python decode path is the engine's
+    # ONE deliberate Python hot path — x53 (stdlib raster decode via
+    # mapInPandas) and x83 (AVI/MJPEG frame sampling)
     "x53_decode_mapinpandas",
     "x83_frame_sample",
-    # r6 addition: the histogram-shaped PR curve (x154's PQ recall
-    # CONTRACT stays out of the headline like x121/x133 — a contract
-    # pays a brute-force baseline by construction; the production PQ
-    # path inside it is encode + ADC only)
+    # histogram-shaped PR curve (x154's PQ recall CONTRACT stays out: a
+    # contract pays a brute-force baseline by construction)
     "x155_pr_calibration",
-    # r6 addition: BM25 — the lexical-retrieval family's watched number
-    # (corpus word explode + broadcast stats + TakeOrderedAndProject)
+    # BM25: corpus word explode + broadcast stats + TakeOrderedAndProject
     "x158_bm25_search",
-    # r6 addition: SemDeDup — semantic dedup's watched number (broadcast
-    # centroid assignment + the per-cell pair join)
+    # SemDeDup: broadcast centroid assignment + the per-cell pair join
     "x174_semdedup",
-    # r6 addition: Lloyd k-means — the clustering/iterative family's
-    # watched number (array-fold distances vs broadcast centroids,
-    # map-side-combinable argmin; 3 assignment passes + 2 updates)
+    # Lloyd k-means: array-fold distances vs broadcast centroids,
+    # map-side-combinable argmin; 3 assignment passes + 2 updates
     "x178_kmeans_lloyd",
-    # r6 addition: the REAL-codec media seam (WAV encode->decode round
-    # trip per row through Arrow-batched mapInPandas) — the engine's
-    # deliberate Python hot path now watched with real codec work
+    # real-codec media seam: WAV encode->decode round trip per row
+    # through Arrow-batched mapInPandas
     "x180_audio_features",
-    # r8 additions: the Gopher-style repetition filters (expression-side
-    # trigram dedup + one bigram explode) and the transcendental-free
-    # word-rarity scorer (vocab shuffle + score join, x125's shape) —
-    # the round's new corpus-quality paths, watched from birth
+    # Gopher-style repetition filters (expression-side trigram dedup +
+    # one bigram explode) and the transcendental-free word-rarity scorer
     "x188_repetition_signals",
     "x189_word_rarity",
 ]
 
-# VERDICT r8 #4: every driver-gated row must carry a bench number —
-# x155's 25x regression was visible ONLY because x155 happened to be in
-# the headline; an equivalent blowup in x187/x190 would have shipped
-# silently. Every DRIVER_WINDOW row not already in HEADLINE is timed
-# with one warm-up + one measured run (enough to catch order-of-
-# magnitude regressions at a fraction of the 4-execution headline
-# cost) and reported under extras.gated_queries with its own total.
-# Computed dynamically so window rotations are benched from birth.
+
+def _sf_value(sf_dir: str) -> float | str:
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    try:
+        return float(sf)
+    except ValueError:
+        return sf
 
 
-def _median_of(fn, n: int = 3) -> float:
-    runs = []
-    for _ in range(n):
-        t0 = time.perf_counter()
-        fn()
-        runs.append(time.perf_counter() - t0)
-    return round(statistics.median(runs), 4)
-
-
-def _canary_cpu(spark) -> None:
-    """The fixed CPU-bound probe shared by the bracketing canary and the
-    r14 interleaved canary — constant work at every scale factor."""
-    from pyspark.sql import functions as F
-
-    (
-        spark.range(0, 32_000_000, 1, 32)
-        .select(
-            (
-                (F.col("id") * F.lit(2654435761) + F.lit(1140071481932319848))
-                % F.lit(1000003)
-            ).alias("h")
-        )
-        .agg(F.sum("h").alias("s"), F.max("h").alias("m"))
-        .write.format("noop").mode("overwrite").save()
+def final_line(timings: dict[str, float], sf: float | str) -> str:
+    """The one JSON line the run ends with; medians at 3 dp (1 ms on
+    seconds-scale rows)."""
+    return json.dumps(
+        {
+            "metric": "headline_queries_total_sec",
+            "value": round(sum(timings.values()), 4),
+            "unit": "sec",
+            "queries": {k: round(v, 3) for k, v in timings.items()},
+            "n_runs": N_RUNS,
+            "sf": sf,
+        }
     )
 
 
-def canary_probe_once(spark) -> float:
-    """One single-shot timed cpu probe (r14, PLANS.md bench-mapping
-    note): fired after EVERY measured row so the sample median
-    co-samples the exact wall-clock window being normalized. The
-    two-point bracketing canary mis-normalized r13's driver run (564
-    hl/canary vs 138-140 steady-state) because the box's throughput
-    swung DURING the measured section, which instantaneous start/end
-    probes cannot see."""
-    t0 = time.perf_counter()
-    _canary_cpu(spark)
-    return round(time.perf_counter() - t0, 4)
-
-
-def measure_canary(spark) -> dict:
-    """Machine-speed canary (VERDICT r11 #2): a fixed CPU-bound
-    microbench — constant work at EVERY scale factor, no I/O — so a
-    cross-round headline delta can be split into "the box is slower"
-    vs "the code is slower" without re-litigating host noise. Two
-    probes, each 1 warm-up + median-of-3 through the noop sink:
-
-    * cpu: 32M-row in-memory range -> integer hash chain -> single
-      partial-agg fold (whole-stage codegen, exchange carries 32 rows)
-      — sustained per-core arithmetic throughput.
-    * shuffle: 4M-row range -> groupBy(id % 65536) -> count — one real
-      65536-key exchange, the fixed cost of shuffle machinery.
-
-    3 warm-ups (JIT tier-up needs more than one pass on a ~0.1 s probe)
-    then median-of-5 — the probes are cheap enough that extra runs cost
-    less than one mis-adjudicated round.
-
-    Interpretation contract: headline totals are comparable across
-    rounds AFTER dividing by (this round's canary / reference round's
-    canary); a headline move the canary ratio fully explains is host
-    noise, a residual is code."""
-    from pyspark.sql import functions as F
-
-    def cpu():
-        _canary_cpu(spark)
-
-    def shuffle():
-        (
-            spark.range(0, 4_000_000, 1, 32)
-            .groupBy((F.col("id") % 65536).alias("k"))
-            .count()
-            .write.format("noop").mode("overwrite").save()
-        )
-
-    for _ in range(3):
-        cpu()
-        shuffle()
-    return {
-        "canary_cpu_sec": _median_of(cpu, 5),
-        "canary_shuffle_sec": _median_of(shuffle, 5),
-    }
-
-
-def measure_extras(spark) -> dict:
-    """Composed-artifact + lakehouse-layer bench lines (VERDICT r7
-    next-round #3/#4). Not per-query medians: the e2e pipeline is one
-    wall-time number; the lakehouse pairs exist for their SHAPE
-    (bucketed < shuffle, pruned < full), each median-of-3 with untimed
-    setup."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ua2sql_spark.catalog import load_table
-    from ua2sql_spark.operators.bucketing import bucketed_join, write_bucketed
-    from ua2sql_spark.operators.manifest import build_file_manifest
-    from ua2sql_spark.pipeline import corpus_pipeline
-
-    extras: dict = {}
-    scratch = tempfile.mkdtemp(prefix="bench_extras_")
-    try:
-        # --- e2e corpus pipeline: ingest-parity read -> NFC -> quality
-        # gate -> exact+near dedup -> pack -> WebDataset export, as ONE
-        # watched number (run once: the stages inside persist/export —
-        # a median-of-3 would triple the round's slowest line for a
-        # number whose variance the stage counts already expose).
-        t0 = time.perf_counter()
-        m = corpus_pipeline(spark, SF_DIR, os.path.join(scratch, "wds"))
-        extras["pipeline_e2e_sec"] = round(time.perf_counter() - t0, 4)
-        extras["pipeline_rows"] = {
-            "raw": m["n_raw"],
-            "gated": m["n_gated"],
-            "survivors": m["n_survivors"],
-            "exported": m["n_exported"],
-        }
-
-        # --- bucketed vs shuffle join (broadcast off: the 100 TB shape
-        # is two fact tables, neither broadcastable — at bench scale the
-        # small side would otherwise broadcast and measure nothing).
-        orders = load_table(spark, SF_DIR, "orders").select(
-            F.col("o_orderkey").alias("orderkey"), "o_totalprice"
-        )
-        li = load_table(spark, SF_DIR, "lineitem").select(
-            F.col("l_orderkey").alias("orderkey"), "l_extendedprice"
-        )
-        write_bucketed(orders, "bench_orders_b", "orderkey", 32,
-                       path=os.path.join(scratch, "ob"))
-        write_bucketed(li, "bench_lineitem_b", "orderkey", 32,
-                       path=os.path.join(scratch, "lb"))
-        agg = lambda j: (  # noqa: E731
-            j.groupBy("orderkey")
-            .agg(F.sum("l_extendedprice").alias("rev"))
-            .write.format("noop").mode("overwrite").save()
-        )
-        no_bhj = {
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-        }
-        old_conf = {k: spark.conf.get(k, None) for k in no_bhj}
-        try:
-            for k, v in no_bhj.items():
-                spark.conf.set(k, v)
-            agg(orders.join(li, "orderkey"))  # warm-up (plan + codegen)
-            extras["join_shuffle_sec"] = _median_of(
-                lambda: agg(orders.join(li, "orderkey"))
-            )
-            agg(bucketed_join(spark, "bench_orders_b", "bench_lineitem_b", "orderkey"))
-            extras["join_bucketed_sec"] = _median_of(
-                lambda: agg(
-                    bucketed_join(
-                        spark, "bench_orders_b", "bench_lineitem_b", "orderkey"
-                    )
-                )
-            )
-        finally:
-            for k, v in old_conf.items():
-                spark.conf.unset(k) if v is None else spark.conf.set(k, v)
-            spark.sql("DROP TABLE IF EXISTS bench_orders_b")
-            spark.sql("DROP TABLE IF EXISTS bench_lineitem_b")
-
-        # --- manifest-pruned vs full scan: lineitem range-laid-out on
-        # l_shipdate into 32 files (the clustered layout a 100 TB table
-        # maintains anyway), manifest built once, then a 30-day window
-        # read both ways. Identical results asserted by test_catalog /
-        # test_layout; here just the two watched numbers.
-        lay = os.path.join(scratch, "li_ranged")
-        full = load_table(spark, SF_DIR, "lineitem")
-        # 128 range files: what manifest pruning actually saves is file
-        # opens/footers (at 100 TB, millions of them) — at 32 files the
-        # fixed open cost is noise and both paths time identically
-        full.repartitionByRange(128, "l_shipdate").write.parquet(lay)
-        manifest = build_file_manifest(spark, lay, ["l_shipdate"]).cache()
-        manifest.count()
-        lo, hi = "1996-03-01", "1996-03-31"
-        # The prune DECISION is manifest-bounded driver metadata work,
-        # amortized across every query on the table (like the bucketed
-        # tables' one-time write above) — timed once on its own line;
-        # the per-query lines compare the SCANS the reader actually
-        # runs: all 128 files vs only the stat-surviving ones.
-        from ua2sql_spark.operators.manifest import prune_files
-
-        t0 = time.perf_counter()
-        files = prune_files(manifest, "l_shipdate", lo, hi, cast="timestamp")
-        extras["scan_prune_decision_sec"] = round(time.perf_counter() - t0, 4)
-        extras["scan_files_pruned"] = {"kept": len(files), "total": 128}
-        cnt = lambda df: (  # noqa: E731
-            df.groupBy("l_returnflag").count()
-            .write.format("noop").mode("overwrite").save()
-        )
-        pruned_df = lambda: spark.read.parquet(*files).filter(  # noqa: E731
-            F.col("l_shipdate").between(lo, hi)
-        )
-        plain_df = lambda: spark.read.parquet(lay).filter(  # noqa: E731
-            F.col("l_shipdate").between(lo, hi)
-        )
-        cnt(plain_df())
-        extras["scan_full_sec"] = _median_of(lambda: cnt(plain_df()))
-        cnt(pruned_df())
-        extras["scan_manifest_pruned_sec"] = _median_of(lambda: cnt(pruned_df()))
-        manifest.unpersist()
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return extras
-
-
 def main() -> None:
-    from ua2sql_spark.session import get_spark
+    from ua2sql_spark.catalog import load_tables
     from ua2sql_spark.registry import all_queries
+    from ua2sql_spark.session import get_spark
 
     spark = get_spark("ua2sql_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -352,222 +142,30 @@ def main() -> None:
     ghosts = [n for n in HEADLINE if n not in specs]
     if ghosts:
         # A renamed/deleted query must fail loudly: silently dropping it
-        # would shrink the headline total and read as a fake speedup to
-        # the 2x-gate (registry.py applies the same ghost discipline to
-        # DRIVER_WINDOW).
+        # would shrink the headline total and read as a fake speedup.
         raise KeyError(f"HEADLINE lists unregistered queries: {ghosts}")
-    names = list(HEADLINE) + [
-        n for n in os.environ.get("BENCH_EXTRA", "").split(",") if n and n in specs
-    ]
 
     def execute(name: str) -> None:
-        # Force full execution of the plan without driver-side collect cost.
         specs[name].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
 
     # Global warm-up: touch every table (file listing/footers), then run
-    # the flagship end-to-end once untimed — JVM/codegen startup costs
-    # ~12 s on the first executed query and would otherwise be billed
-    # to it.
-    from ua2sql_spark.catalog import load_tables
-
+    # the flagship once untimed — JVM/codegen startup costs ~12 s on the
+    # first executed query and would otherwise be billed to it.
     for df in load_tables(spark, SF_DIR).values():
         df.limit(1).count()
-    execute(names[0])
-
-    # Machine-speed canary, bracketing the measured section: the START
-    # numbers normalize cross-round comparisons; END minus START exposes
-    # host-throughput drift WITHIN the run (the r11 signature).
-    canary_start = measure_canary(spark)
+    execute(HEADLINE[0])
 
     timings: dict[str, float] = {}
-    all_runs: dict[str, list[float]] = {}
-    il_samples: list[float] = []  # r14 interleaved canary, one per row
-    for name in names:
+    for name in HEADLINE:
         execute(name)  # per-query untimed warm-up (plan + codegen)
         runs = []
         for _ in range(N_RUNS):
             t0 = time.perf_counter()
             execute(name)
-            runs.append(round(time.perf_counter() - t0, 4))
-        all_runs[name] = runs
-        timings[name] = round(statistics.median(runs), 4)
-        il_samples.append(canary_probe_once(spark))
-
-    # Driver-gated rows outside the headline: 1 warm-up + 1 timed run.
-    # Write-path rows rebuild their table EVERY execution (idempotence
-    # harness), so a warm-up warms nothing and just doubles a ~20 s
-    # commit sequence — they run once, cold, which is also how the
-    # driver sees them.
-    from ua2sql_spark.registry import DRIVER_WINDOW
-
-    # Rows whose TIMED execution commits table versions every call
-    # (fresh-build idempotence harnesses) — their cost is dominated by
-    # commit fixed costs, not plan quality, so they report under their
-    # own subtotal and the cross-round 2x watch reads the read tier
-    # (VERDICT r12 #3: r12's gated total jumped 31->123 s purely
-    # because rotation pulled x208+x206 into the window on a degraded
-    # host). Fixture-CACHED rows (x200/x201/x204/x212/...) commit only
-    # in their warm-up build; their timed run is a read and stays in
-    # the read tier.
-    WRITE_HEAVY = {"x208_repair_convergence", "x206_incremental_reconcile"}
-    gated: dict[str, float] = {}
-    for name in DRIVER_WINDOW:
-        if name in names or name not in specs:
-            continue
-        if name not in WRITE_HEAVY:
-            execute(name)
-        t0 = time.perf_counter()
-        execute(name)
-        gated[name] = round(time.perf_counter() - t0, 4)
-        il_samples.append(canary_probe_once(spark))
-
-    extras = measure_extras(spark)
-    extras["gated_queries"] = gated
-    extras["gated_window_total_sec"] = round(sum(gated.values()), 4)
-    # read tier = gated_window_total_sec - gated_write_heavy_sec (kept
-    # derivable rather than emitted: the compact line is 2000-char
-    # tail-capture bounded and the redundant scalar was the margin)
-    extras["gated_write_heavy_sec"] = round(
-        sum(v for k, v in gated.items() if k in WRITE_HEAVY), 4
-    )
-    extras.update(canary_start)
-    canary_end = measure_canary(spark)
-    # end-of-run raw numbers ride the detail sidecar (compact_line strips
-    # non-scalars); the compact line carries one drift ratio — >1 means
-    # the box got slower WHILE the suite ran (the r11 signature).
-    extras["canary_end"] = canary_end
-    extras["canary_drift"] = round(
-        canary_end["canary_cpu_sec"] / max(canary_start["canary_cpu_sec"], 1e-9),
-        4,
-    )
-    # Canary-normalized headline, VALID only when the box held steady
-    # (VERDICT r12 #5: the r12 anchors disagreed 245-466 canary-units
-    # exactly on the runs whose within-run drift was far from 1 — a
-    # normalization by a moving denominator is noise, so the ratio is
-    # emitted with an explicit validity bit and consumers must ignore
-    # it when canary_valid = 0).
-    drift = extras["canary_drift"]
-    extras["canary_valid"] = 1 if abs(drift - 1.0) <= 0.15 else 0
-    # r14 interleaved canary (PLANS.md bench-mapping note): the median
-    # of the per-row probes co-samples the exact wall-clock window the
-    # headline total was measured in, so headline_per_canary_il stays a
-    # meaningful cross-round comparator even when canary_valid = 0.
-    il_med = statistics.median(il_samples) if il_samples else 0.0
-    il_mean = statistics.fmean(il_samples) if il_samples else 0.0
-    extras["canary_il_median_sec"] = round(il_med, 4)
-    extras["canary_il_cv"] = round(
-        statistics.pstdev(il_samples) / il_mean, 4
-    ) if il_samples and il_mean > 0 else 0.0
-    extras["canary_il_samples"] = il_samples  # map/list: detail line only
-
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf_val: float | str = float(sf)
-    except ValueError:
-        sf_val = sf
-    total = round(sum(timings.values()), 4)
-    # headline in machine-speed units: headline total / mean bracketing
-    # canary cpu time — the cross-round comparator when canary_valid=1
-    # (a stable box makes start/end agree, so the mean is just noise
-    # reduction, not a fudge).
-    mean_canary = (
-        canary_start["canary_cpu_sec"] + canary_end["canary_cpu_sec"]
-    ) / 2
-    extras["headline_per_canary"] = round(total / max(mean_canary, 1e-9), 2)
-    # The r14-preferred comparator (PLANS.md): normalized by the median
-    # of the probes fired INSIDE the measured section. Read this first
-    # from r14 on; headline_per_canary remains for pre-r14 records.
-    extras["headline_per_canary_il"] = round(
-        total / max(extras["canary_il_median_sec"], 1e-9), 2
-    )
-    detail = {
-        "metric": "headline_queries_total_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "extras": extras,
-        "runs": all_runs,
-        "n_runs": N_RUNS,
-        "sf": sf_val,
-    }
-    # Full per-run arrays: sidecar file + an early (non-final) stdout line.
-    with open(os.path.join(REPO_ROOT, "bench_runs.json"), "w") as fh:
-        json.dump(detail, fh)
-    print("BENCH_RUNS_DETAIL " + json.dumps(detail))
+            runs.append(time.perf_counter() - t0)
+        timings[name] = statistics.median(runs)
     spark.stop()
-    # Compact record LAST: this is the line the driver parses, and the
-    # driver keeps only the LAST 2000 chars of stdout (VERDICT r9 #1:
-    # r9's line grew to 4897 chars via extras.gated_queries and was
-    # clipped mid-JSON -> BENCH_r09.json "parsed": null). Rules:
-    #   - headline per-query medians stay (driver contract: "queries"),
-    #   - extras carries SCALARS ONLY — every per-query map lives in
-    #     bench_runs.json and the BENCH_RUNS_DETAIL line above,
-    #   - hard assert < 1800 chars (10% margin) so this class of
-    #     regression can never ship again.
-    line = compact_line(total, timings, extras, N_RUNS, sf_val)
-    sys.stdout.flush()
-    print(line)
-
-
-# Extras that ride ONLY bench_runs.json / the BENCH_RUNS_DETAIL line,
-# never the compact line (VERDICT r14 #2: the r14 canary keys pushed
-# `join_bucketed_sec`/`scan_prune_decision_sec` off the driver-parsed
-# line via the shed order, losing two cross-round lakehouse
-# comparators). `headline_per_canary_il` superseded `headline_per_canary`
-# as the preferred normalizer from r14 on, and `canary_il_cv` is a
-# dispersion diagnostic — both are detail-grade, the lakehouse pairs
-# are driver-record-grade.
-_DETAIL_ONLY_EXTRAS = frozenset({"canary_il_cv", "headline_per_canary"})
-
-# Last-resort shed order when the compact line would STILL exceed its
-# budget (least cross-round-critical first); every shed key still rides
-# bench_runs.json and the BENCH_RUNS_DETAIL line. The driver-contract
-# comparators (queries map, gated totals, canary cpu/drift/validity/
-# interleaved normalization, both lakehouse pairs, the prune decision,
-# pipeline e2e) are never in this list — pinned by
-# tests/test_plans.py::test_bench_compact_line_survives_driver_tail_capture.
-_EXTRAS_SHED_ORDER = [
-    "canary_shuffle_sec",
-]
-
-
-def compact_line(total, timings, extras, n_runs, sf_val) -> str:
-    """Serialize the driver-facing final stdout line, enforcing the size
-    contract (unit-tested in tests/test_plans.py so a growing headline
-    set or a new extras map fails in CI, not in the driver's record).
-    Self-healing under growth: worst-case width overflows shed
-    low-priority extras scalars (``_EXTRAS_SHED_ORDER``) instead of
-    shipping a line the driver's 2000-char tail capture would clip
-    mid-JSON."""
-    scalar_extras = {
-        k: v
-        for k, v in extras.items()
-        if isinstance(v, (int, float, str)) and k not in _DETAIL_ONLY_EXTRAS
-    }
-    compact = {
-        "metric": "headline_queries_total_sec",
-        "value": total,
-        "unit": "sec",
-        # Medians at 3dp on the compact line only (1 ms precision on
-        # seconds-scale rows; 4dp stays in bench_runs.json/DETAIL) —
-        # ~40 chars of headroom so a degraded-box run with double-digit
-        # medians never pushes the lakehouse comparators off the line.
-        "queries": {k: round(v, 3) for k, v in timings.items()},
-        "extras": scalar_extras,
-        "n_runs": n_runs,
-        "sf": sf_val,
-    }
-    line = json.dumps(compact)
-    for k in _EXTRAS_SHED_ORDER:
-        if len(line) < 1800:
-            break
-        if scalar_extras.pop(k, None) is not None:
-            line = json.dumps(compact)
-    assert len(line) < 1800, (
-        f"compact bench line is {len(line)} chars (driver captures 2000); "
-        "move any new per-query data to bench_runs.json, not the final line"
-    )
-    return line
+    print(final_line(timings, _sf_value(SF_DIR)))
 
 
 if __name__ == "__main__":

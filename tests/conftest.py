@@ -151,7 +151,6 @@ SLOW_LANE_TESTS = {
     # -- bucketing: the 43 s session fixture builds bucketed tables the
     #    default lane doesn't need — the bucketed-join shape stays
     #    pinned by test_plans.py::test_bucketed_join_is_shuffle_free
-    #    and watched by bench extras join_bucketed_sec
     "test_bucketing.py::test_bucketed_join_has_no_exchange",
     "test_bucketing.py::test_bucketed_groupby_has_no_exchange",
     "test_bucketing.py::test_bucket_pruning_point_lookup",

@@ -16,6 +16,8 @@ from ua2sql_spark.operators.layout import (
 )
 from tests.conftest import SF_DIR
 
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
 
 def _orders_with_month(spark):
     return load_table(spark, SF_DIR, "orders").withColumn(
@@ -62,7 +64,12 @@ def test_compaction_rewrites_only_fragmented_partitions(spark, tmp_path):
     ), stats0
 
     target = 64 * 1024 * 1024  # every month fits one file at this target
+    # Dynamic overwrite must come from the write itself: a write that
+    # fell back to the static session mode would wipe the intact month,
+    # and the session conf must read as it did before the call.
+    spark.conf.set(_OVERWRITE_MODE, "static")
     rewritten = compact_partitions(spark, path, ["mon"], target_file_bytes=target)
+    assert spark.conf.get(_OVERWRITE_MODE) == "static"
     assert sorted(s.partition for s in rewritten) == [
         f"mon={m}" for m in frag_months
     ]
@@ -174,7 +181,9 @@ def test_manifest_skips_files_for_zordered_box_query(spark, tmp_path):
 
 def test_upsert_parquet_merge_semantics(spark, tmp_path):
     """MERGE-shaped upsert: matched keys replaced, new keys appended,
-    untouched partitions byte-identical, return value = rows written."""
+    untouched partitions byte-identical (also under a static session
+    overwrite mode, which the upsert leaves as it found it), return
+    value = rows written."""
     from ua2sql_spark.operators.merge import upsert_parquet
 
     path = str(tmp_path / "tbl")
@@ -189,8 +198,10 @@ def test_upsert_parquet_merge_semantics(spark, tmp_path):
         [(3, "d2", "C2"), (5, "d2", "e"), (5, "d2", "e")],  # replace, insert, dup
         "id bigint, day string, val string",
     )
+    spark.conf.set(_OVERWRITE_MODE, "static")
     written = upsert_parquet(batch, path, key_cols=["id"], partition_col="day")
     assert written == 2  # the deduped batch; no carried rows (id=3 replaced)
+    assert spark.conf.get(_OVERWRITE_MODE) == "static"
 
     got = {
         (r["id"], r["day"]): r["val"] for r in spark.read.parquet(path).collect()

@@ -70,6 +70,24 @@ def test_contract_shapes():
     assert set(o) <= set(q), "oracle_sql keys must be a subset of queries"
 
 
+def test_slow_lane_roster_names_existing_tests():
+    """Every SLOW_LANE_TESTS entry ``file::name`` must name a test that
+    ``tests/<file>`` still defines — a renamed test would otherwise
+    silently move from the slow lane back into the default lane."""
+    import re
+
+    from tests.conftest import SLOW_LANE_TESTS
+
+    tests_dir = os.path.dirname(os.path.abspath(__file__))
+    stale = []
+    for entry in sorted(SLOW_LANE_TESTS):
+        fname, name = entry.split("::")
+        with open(os.path.join(tests_dir, fname)) as fh:
+            if not re.search(rf"^\s*def {re.escape(name)}\(", fh.read(), re.M):
+                stale.append(entry)
+    assert not stale, stale
+
+
 def test_driver_window_families():
     """The driver hard-checks the first 50 registry entries; every SURVEY
     family must keep a representative inside that window."""

@@ -718,99 +718,22 @@ def test_lateral_topk_decorrelates_to_window_group_limit(spark):
     assert "BroadcastNestedLoop" not in plan and "Cartesian" not in plan, plan
 
 
-def test_bench_compact_line_survives_driver_tail_capture():
-    """VERDICT r9 #1: the driver parses only the LAST 2000 chars of bench
-    stdout; r9's final line grew to 4897 chars (extras.gated_queries) and
-    BENCH_r09.json landed parsed:null. compact_line() must (a) strip every
-    non-scalar extras entry and (b) stay under 1800 chars at worst-case
-    per-query widths for the CURRENT headline set — so a growing headline
-    or a new extras map fails here, not in the driver's record."""
+def test_bench_headline_registered_and_final_line_fits():
+    """bench.py's headline names are all registered queries, and its
+    final line stays one short JSON object with exactly the six keys,
+    even with every median at a worst-case 99.999 s."""
     import json
 
     import bench
 
-    # Worst-case widths, calibrated to plausible extremes rather than
-    # astronomic ones (VERDICT r14 #2: an over-wide synthetic worst case
-    # forced a shed order that dropped real comparators): per-query
-    # medians at 99.999 s (the slowest row ever recorded is 22.8 s on a
-    # 2.4x-degraded box), extras at 999.9999 s (25x the worst gated
-    # window on record), plus the maps/lists that MUST be stripped.
-    timings = {name: 99.9999 for name in bench.HEADLINE}
-    extras = {
-        "pipeline_e2e_sec": 999.9999,
-        "join_shuffle_sec": 999.9999,
-        "join_bucketed_sec": 999.9999,
-        "scan_prune_decision_sec": 999.9999,
-        "scan_full_sec": 999.9999,
-        "scan_manifest_pruned_sec": 999.9999,
-        "gated_window_total_sec": 999.9999,
-        # round-13 tier split (VERDICT r12 #3) + canary validity
-        # (VERDICT r12 #5): three more scalars must fit (the read tier
-        # is derivable as window_total - write_heavy, not emitted)
-        "gated_write_heavy_sec": 999.9999,
-        "canary_valid": 1,
-        "headline_per_canary": 9999.99,
-        "canary_cpu_sec": 999.9999,
-        "canary_shuffle_sec": 999.9999,
-        "canary_drift": 999.9999,
-        # round-14 interleaved canary (the r13 normalization fix):
-        # plus the raw sample LIST that must be stripped like the maps
-        "canary_il_median_sec": 999.9999,
-        "canary_il_cv": 999.9999,
-        "headline_per_canary_il": 9999.99,
-        "canary_il_samples": [9999.9999] * 80,
-        # end-of-run canary raws are a MAP — must be stripped like
-        # gated_queries
-        "canary_end": {"canary_cpu_sec": 9999.9999, "canary_shuffle_sec": 9999.9999},
-        "gated_queries": {f"x{i}_per_query_map_entry": 999.9999 for i in range(60)},
-    }
-    line = bench.compact_line(
-        sum(timings.values()), timings, extras, n_runs=3, sf_val=0.1
-    )
+    specs = all_queries()
+    assert [n for n in bench.HEADLINE if n not in specs] == []
+
+    line = bench.final_line({name: 99.999 for name in bench.HEADLINE}, 0.1)
     assert len(line) < 1800, len(line)
     parsed = json.loads(line)
-    assert "gated_queries" not in parsed["extras"]
-    assert "canary_end" not in parsed["extras"]
-    assert "canary_il_samples" not in parsed["extras"]
-    # r15: superseded/diagnostic canary scalars are detail-only so the
-    # lakehouse comparators always fit (VERDICT r14 #2)
-    assert "canary_il_cv" not in parsed["extras"]
-    assert "headline_per_canary" not in parsed["extras"]
-    assert parsed["extras"]["headline_per_canary_il"] == 9999.99
-    assert parsed["extras"]["canary_il_median_sec"] == 999.9999
-    # driver-contract scalars survive worst-case shedding (they are
-    # deliberately absent from bench._EXTRAS_SHED_ORDER) — including
-    # BOTH lakehouse pairs and the prune decision, the keys r14 lost
-    assert parsed["extras"]["canary_cpu_sec"] == 999.9999
-    assert parsed["extras"]["gated_window_total_sec"] == 999.9999
-    assert parsed["extras"]["gated_write_heavy_sec"] == 999.9999
-    assert parsed["extras"]["canary_drift"] == 999.9999
-    assert parsed["extras"]["canary_valid"] == 1
-    assert parsed["extras"]["join_bucketed_sec"] == 999.9999
-    assert parsed["extras"]["join_shuffle_sec"] == 999.9999
-    assert parsed["extras"]["scan_prune_decision_sec"] == 999.9999
-    assert parsed["extras"]["scan_full_sec"] == 999.9999
-    assert parsed["extras"]["scan_manifest_pruned_sec"] == 999.9999
-    assert parsed["extras"]["pipeline_e2e_sec"] == 999.9999
-    assert set(parsed["queries"]) == set(bench.HEADLINE)
-    DRIVER_CONTRACT_KEYS = (
-        "gated_window_total_sec",
-        "gated_write_heavy_sec",
-        "canary_drift",
-        "canary_valid",
-        "canary_cpu_sec",
-        "canary_il_median_sec",
-        "headline_per_canary_il",
-        "join_bucketed_sec",
-        "join_shuffle_sec",
-        "scan_prune_decision_sec",
-        "scan_full_sec",
-        "scan_manifest_pruned_sec",
-        "pipeline_e2e_sec",
-    )
-    for key in DRIVER_CONTRACT_KEYS:
-        assert key not in bench._EXTRAS_SHED_ORDER
-        assert key not in bench._DETAIL_ONLY_EXTRAS
+    assert set(parsed) == {"metric", "value", "unit", "queries", "n_runs", "sf"}
+    assert parsed["queries"] == {name: 99.999 for name in bench.HEADLINE}
 
 
 def test_lsh_index_probe_prunes_band_partitions(spark, tmp_path):

@@ -92,22 +92,16 @@ def _dir_bytes(path: str) -> tuple[int, int]:
         return 0, 0
 
 
-def rebalance_partition_count(spark: SparkSession, path: str) -> int | None:
-    """The scan-rebalance decision as a number: ``defaultParallelism``
-    when the table at ``path`` has a compute-heavy-small layout (fewer
-    splits than cores, within the byte guards), else ``None``.
-
-    Exposed (r15) for operators that need to PIN a downstream
-    exchange's partition count against AQE's small-bytes coalescing —
-    e.g. x176 pins its edge ``distinct`` with
-    ``repartition(n, keys...)`` (REPARTITION_BY_NUM, which AQE never
-    coalesces) so the per-edge intersect stage that inherits that
-    partitioning through a localCheckpoint runs at core count instead
-    of the 1 MiB-floor count. Same scale story as the rebalance: at
-    100 TB the layout yields far more splits than cores, the guard
-    returns None, and AQE keeps full control."""
-    if (spark.conf.get(SCAN_REBALANCE_CONF, "true") or "").lower() != "true":
-        return None
+def _scan_rebalance(
+    spark: SparkSession, df: DataFrame, path: str, rebalance: bool = True
+) -> DataFrame:
+    """Repartition ``df`` to ``defaultParallelism`` when the table at
+    ``path`` has a compute-heavy-small layout (fewer splits than cores,
+    within the byte guards); otherwise return it unchanged."""
+    if not rebalance or (
+        (spark.conf.get(SCAN_REBALANCE_CONF, "true") or "").lower() != "true"
+    ):
+        return df
     total, n_files = _dir_bytes(path)
     min_b = int(
         spark.conf.get(SCAN_REBALANCE_MIN_BYTES_CONF, str(_SCAN_REBALANCE_MIN_BYTES))
@@ -116,7 +110,7 @@ def rebalance_partition_count(spark: SparkSession, path: str) -> int | None:
         spark.conf.get(SCAN_REBALANCE_MAX_BYTES_CONF, str(_SCAN_REBALANCE_MAX_BYTES))
     )
     if total < min_b or total > max_b:
-        return None
+        return df
     try:
         max_pb = int(spark.conf.get("spark.sql.files.maxPartitionBytes"))
     except Exception:
@@ -126,17 +120,8 @@ def rebalance_partition_count(spark: SparkSession, path: str) -> int | None:
     splits = n_files + total // max(max_pb, 1)
     cores = spark.sparkContext.defaultParallelism
     if splits >= cores:
-        return None
-    return cores
-
-
-def _scan_rebalance(
-    spark: SparkSession, df: DataFrame, path: str, rebalance: bool = True
-) -> DataFrame:
-    if not rebalance:
         return df
-    n = rebalance_partition_count(spark, path)
-    return df.repartition(n) if n else df
+    return df.repartition(cores)
 
 
 def table_path(sf_dir: str, name: str) -> str:

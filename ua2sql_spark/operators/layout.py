@@ -165,27 +165,20 @@ def compact_partitions(
     total_files = sum(n[-1] for n in nfiles_rows)
     bucket = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.col("__nfiles"))
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            slice_df.join(F.broadcast(nfiles_df), join_cond)
-            .withColumn("__bucket", bucket)
-            .repartition(total_files, *[F.col(c) for c in partition_cols], F.col("__bucket"))
-            .drop("__bucket", "__nfiles", *[f"__p_{c}" for c in partition_cols])
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", rows_per_file)
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        else:
-            # previously unset: restore that, or later plain partitioned
-            # overwrites silently keep stale partitions (same fix as
-            # merge.py's upsert_parquet)
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    # Per-write dynamic overwrite (as merge.py's upsert_parquet): only
+    # the fragmented partitions are replaced, and the session conf is
+    # never touched.
+    (
+        slice_df.join(F.broadcast(nfiles_df), join_cond)
+        .withColumn("__bucket", bucket)
+        .repartition(total_files, *[F.col(c) for c in partition_cols], F.col("__bucket"))
+        .drop("__bucket", "__nfiles", *[f"__p_{c}" for c in partition_cols])
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("maxRecordsPerFile", rows_per_file)
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
     return frag
 
 

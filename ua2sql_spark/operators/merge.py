@@ -171,22 +171,15 @@ def upsert_parquet(
     obs = Observation("upsert_parquet_rows")
     out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            out.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        else:
-            # previously unset: restore that, or every later plain
-            # partitioned overwrite in this session silently keeps
-            # stale partitions
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    # Per-write option, not the session conf: only the touched
+    # partitions are replaced, and no other write in the session sees
+    # a changed overwrite mode.
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
     return int(obs.get["rows"])
 
 

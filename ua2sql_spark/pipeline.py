@@ -3,8 +3,7 @@
 Every stage exists (and is driver-gated) individually; this module
 wires the production path a training-data build actually runs — the
 shape the reference's users chain by hand (ingest ``ua2sql.py:96``,
-normalize/filter, dedup, export) — as ONE lazy Spark plan chain with
-a single watched wall-time number in ``bench.py``:
+normalize/filter, dedup, export) — as ONE lazy Spark plan chain:
 
     read → NFC normalize → quality gate → exact dedup → near dedup
          → sequence packing → WebDataset export

@@ -866,12 +866,13 @@ def _x176_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # after r14's AQE-floor and de-spread ones): pinning the distinct's
     # exchange at core count — repartition(cores, u, v) replacing the
     # distinct's own exchange (REPARTITION_BY_NUM, AQE-coalesce-exempt),
-    # guarded by catalog.rebalance_partition_count — spread every
-    # checkpoint-captured frame 10 → 32 partitions, but ran 1.47x WORSE
-    # (interleaved A/B median 3.67 → 5.38 s, scripts/r15_ab_x176.py):
-    # 3x the tasks across triangle_stats' many checkpoint-materialized
-    # stages cost more in fixed task latency than the intersect's extra
-    # parallelism buys at this scale. The AQE-coalesced distinct stands.
+    # applied only to the small local layouts the scan rebalance fires
+    # on — spread every checkpoint-captured frame 10 → 32 partitions,
+    # but ran 1.47x WORSE (interleaved 7-round A/B at sf0.1, median
+    # 3.67 → 5.38 s): 3x the tasks across triangle_stats' many
+    # checkpoint-materialized stages cost more in fixed task latency
+    # than the intersect's extra parallelism buys at this scale. The
+    # AQE-coalesced distinct stands.
     return raw_pairs.distinct()
 
 

@@ -252,6 +252,12 @@ def neardup_ingest_batch(
        present, full signature agreement) — a partially-appended or
        updated doc survives to the re-append, whose full band rows
        complete the partial set (ADVICE r10).
+
+    Precondition: ``tokenizer`` (default ``word_set``) emits arrays of
+    DISTINCT tokens, as ``minhash_lsh_pairs`` also requires. The exact
+    verify computes |A∪B| as |A|+|B|−|A∩B|, which is exact only when
+    neither array repeats an element; a tokenizer with repeats would
+    inflate the union and under-count the Jaccard.
     """
     assert verify in ("signature", "exact")
     from ua2sql_spark.operators.dedup import (
