@@ -234,8 +234,8 @@ def test_jdbc_sink_roundtrip_embedded_derby(spark, landing, tmp_path):
     url = f"jdbc:derby:{tmp_path}/derby_db;create=true"
     props = {"driver": "org.apache.derby.iapi.jdbc.AutoloadedDriver"}
 
-    write_feed_jdbc(df, url, "custom_events", feed="custom",
-                    properties=props, pg_types=False)
+    assert write_feed_jdbc(df, url, "custom_events", feed="custom",
+                           properties=props, pg_types=False) == 2
     back = spark.read.jdbc(url, "custom_events", properties=props)
     assert back.count() == 2
     got = {r["USERID" if "USERID" in back.columns else "userid"]: r
@@ -244,8 +244,8 @@ def test_jdbc_sink_roundtrip_embedded_derby(spark, landing, tmp_path):
 
     # append semantics: a second write doubles the rows (at-least-once,
     # reference T4 — no unique constraint on event tables, ua2sql.py:46-86)
-    write_feed_jdbc(df, url, "custom_events", feed="custom",
-                    properties=props, pg_types=False)
+    assert write_feed_jdbc(df, url, "custom_events", feed="custom",
+                           properties=props, pg_types=False) == 2
     assert spark.read.jdbc(url, "custom_events", properties=props).count() == 4
 
 
@@ -281,6 +281,24 @@ def test_jdbc_idempotent_upsert(spark, landing, tmp_path):
     assert back.count() == 3
     cols = {c.lower() for c in back.columns}
     assert {"userid", "ts", "name"} <= cols
+
+    # Latest-wins inside one batch (an original and its correction
+    # drained together): in either order, the greater submit_time is
+    # the version inserted.
+    orig = {"ts": BASE_MS + 240_000, "submit_time": BASE_MS + 250_000,
+            "userid": "u4", "sessionid": 8, "name": "buy",
+            "custom_params": {"v": 1}}
+    fix = dict(orig, submit_time=BASE_MS + 260_000, custom_params={"v": 2})
+    for n, rows in enumerate([[orig, fix], [fix, orig]]):
+        d = tmp_path / f"versions{n}"
+        d.mkdir()
+        write_jsonl_gz(str(d / "dump.txt.gz"), rows)
+        batch = read_feed(spark, str(d), "custom")
+        assert upsert_feed_jdbc(batch, url, f"custom_v{n}", "custom",
+                                properties=props, pg_types=False) == 1
+        (row,) = spark.read.jdbc(url, f"custom_v{n}", properties=props).collect()
+        row = {k.lower(): v for k, v in row.asDict().items()}
+        assert json.loads(row["custom_params"]) == {"v": 2}
 
 
 def test_stream_upsert_sink_end_to_end(spark, landing, tmp_path):

@@ -492,21 +492,23 @@ def test_zorder_column_matches_reference_morton(spark, pts, tri):
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 def test_upsert_parquet_matches_dict_semantics(spark, ops, tmp_path_factory):
     """Applying a sequence of random batches through upsert_parquet
-    equals last-writer-wins dict semantics keyed on id. The partition is
-    a pure function of the key (day = id % 3) per the operator's
-    stable-partition precondition — an earlier draft of this test let
-    keys migrate partitions and correctly caught the stale-copy hazard
-    the docstring now documents."""
+    equals last-writer-wins dict semantics keyed on id. Batches go in
+    raw, so a key may carry conflicting versions within one batch; with
+    no submit_time column the greatest whole row wins, i.e. the greatest
+    (day, val). The partition is a pure function of the key (day = id %
+    3) per the operator's stable-partition precondition — an earlier
+    draft of this test let keys migrate partitions and correctly caught
+    the stale-copy hazard the docstring now documents."""
     from ua2sql_spark.operators.merge import upsert_parquet
 
     path = str(tmp_path_factory.mktemp("upsert") / "tbl")
     expect: dict[int, tuple[str, int]] = {}
     for batch_rows in ops:
-        uniq = {k: (f"d{k % 3}", v) for k, v in batch_rows}
-        rows = [(k, day, val) for k, (day, val) in uniq.items()]
+        rows = [(k, f"d{k % 3}", v) for k, v in batch_rows]
         batch = spark.createDataFrame(rows, "id bigint, day string, val bigint")
         upsert_parquet(batch, path, key_cols=["id"], partition_col="day")
-        expect.update(uniq)
+        # ascending order: the greatest version of each key is set last
+        expect.update({k: (day, val) for k, day, val in sorted(rows)})
     got = {
         r["id"]: (r["day"], r["val"]) for r in spark.read.parquet(path).collect()
     }

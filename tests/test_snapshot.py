@@ -73,6 +73,17 @@ def test_cow_upsert_time_travel_and_diff(spark, tmp_path):
     assert _rows(read_snapshot(spark, path, 1))[(1, "d1")] == "a"
     assert (9, "d9") not in _rows(read_snapshot(spark, path, 1))
 
+    # Latest-wins inside one batch, whichever order the two versions of
+    # id=6 arrive in: the greater submit_time is the committed row.
+    old, new = (6, "d4", "old", 1), (6, "d4", "new", 2)
+    for n, versions in enumerate([[old, new], [new, old]]):
+        b = spark.createDataFrame(
+            versions, "id bigint, day string, val string, submit_time bigint"
+        )
+        p = str(tmp_path / f"latest{n}")
+        assert upsert_cow(b, p, ["id"], "day") == (0, 1)
+        assert _rows(read_snapshot(spark, p)) == {(6, "d4"): "new"}
+
 
 def test_cow_fresh_table_and_guard_rails(spark, tmp_path):
     from ua2sql_spark.operators.snapshot import (
@@ -94,6 +105,32 @@ def test_cow_fresh_table_and_guard_rails(spark, tmp_path):
     batch.write.partitionBy("day").parquet(path2)
     with pytest.raises(ValueError, match="bootstrap"):
         upsert_cow(batch, path2, ["id"], "day")
+
+
+def test_touched_partition_bound_rejects_before_writing(spark, tmp_path, monkeypatch):
+    """The one touched-partition bound (merge.MAX_TOUCHED_PARTITIONS)
+    guards all three partition-scoped writers: past it, upsert_parquet,
+    upsert_cow and delete_cow raise before writing a file or a version."""
+    from ua2sql_spark.operators import merge
+    from ua2sql_spark.operators.snapshot import delete_cow, latest_version, upsert_cow
+
+    base = spark.createDataFrame(
+        [(1, "d1", "a"), (2, "d2", "b")], "id bigint, day string, val string"
+    )
+    pq, cow = str(tmp_path / "pq"), str(tmp_path / "cow")
+    merge.upsert_parquet(base, pq, ["id"], "day")
+    upsert_cow(base, cow, ["id"], "day")
+    files = sorted(spark.read.parquet(pq).inputFiles())
+
+    monkeypatch.setattr(merge, "MAX_TOUCHED_PARTITIONS", 1)
+    with pytest.raises(ValueError, match="partitions touched"):
+        merge.upsert_parquet(base, pq, ["id"], "day")
+    assert sorted(spark.read.parquet(pq).inputFiles()) == files
+    with pytest.raises(ValueError, match="partitions touched"):
+        upsert_cow(base, cow, ["id"], "day")
+    with pytest.raises(ValueError, match="partitions touched"):
+        delete_cow(spark, cow, F.col("id") > 0, "day")
+    assert latest_version(spark, cow) == 0
 
 
 def test_staged_manifest_never_visible_as_version(spark, tmp_path):
@@ -582,10 +619,11 @@ def test_incremental_view_maintenance_matches_rebuild(spark, tmp_path):
 
 
 def test_hive_escape_parity_with_jvm(spark):
-    """ADVICE r6 #1: the pure-Python fallback for Hive partition-path
-    escaping must match Spark's ExternalCatalogUtils bit-for-bit on
-    reserved characters, so a private-API move can never degrade to a
-    raw (wrong) directory probe and a silent carried-row drop."""
+    """The sinks name partition directories with the pure-Python
+    ``escape_path_name`` only; it must match Spark's own (private)
+    ExternalCatalogUtils.escapePathName bit-for-bit on reserved
+    characters, or a probe would miss the directory the writer made and
+    the rewrite would silently drop that partition's carried rows."""
     from ua2sql_spark.operators.merge import escape_path_name
 
     jvm_esc = (

@@ -459,6 +459,22 @@ def test_stream_upsert_parquet_exactly_once_effect(spark, tmp_path):
     assert again.count() == 4
     assert {r["userid"] for r in again.collect()} == {"u0", "u1", "u2", "u3"}
 
+    # Backlog: an original delivery and a later correction of one of its
+    # rows land as two files before one availableNow run. Spark packs
+    # the larger (original) file first, so "first row met" is the stale
+    # one; the table must keep the correction (greater submit_time).
+    orig = {"ts": BASE_MS, "submit_time": BASE_MS + 1_000, "userid": "u7",
+            "name": "e7", "custom_params": {"v": 1}}
+    other = {"ts": BASE_MS, "submit_time": BASE_MS + 1_000, "userid": "u8",
+             "name": "e8"}
+    write_rows(os.path.join(landing, "c.txt.gz"), [orig, other])
+    write_rows(os.path.join(landing, "d.txt.gz"),
+               [dict(orig, submit_time=BASE_MS + 2_000, custom_params={"v": 2})])
+    run("ck1")
+    got = {r["userid"]: r["custom_params"] for r in spark.read.parquet(table).collect()}
+    assert set(got) == {"u0", "u1", "u2", "u3", "u7", "u8"}
+    assert json.loads(got["u7"]) == {"v": 2}
+
 
 def test_stream_snapshot_upsert_versions_every_batch(spark, tmp_path):
     """Versioned twin of the T4 lakehouse leg: each micro-batch commits

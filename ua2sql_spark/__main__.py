@@ -24,22 +24,12 @@ from ua2sql_spark.config import ConfigError, IngestConfig, load_config
 
 
 def _jdbc_sink(cfg: IngestConfig):
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
     from ua2sql_spark.sources.jdbc import write_feed_jdbc
 
     def sink(df, feed: str) -> int:
-        # Inserted-count from the WRITE job's own metrics (observe) —
-        # a separate df.count() would re-execute the whole landing-read
-        # + transform pipeline, a full second pass over the feed at
-        # scale (the parquet_sink/ingest.py discipline). ua2sql.py:239-241.
-        obs = Observation(f"jdbc_sink_rows_{feed}")
-        observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        write_feed_jdbc(
-            observed, cfg.jdbc_url, feed, feed, properties=cfg.jdbc_properties
+        return write_feed_jdbc(
+            df, cfg.jdbc_url, feed, feed, properties=cfg.jdbc_properties
         )
-        return int(obs.get["rows"])
 
     return sink
 

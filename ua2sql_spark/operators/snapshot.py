@@ -51,7 +51,11 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ua2sql_spark.operators.merge import _partition_dir_name
+from ua2sql_spark.operators.merge import (
+    _partition_dir_name,
+    latest_per_key,
+    touched_partitions,
+)
 
 _SNAP_DIR = "_snapshots"
 # {:06d} is a zero-pad MINIMUM: version 1_000_000 renders as "v1000000"
@@ -675,7 +679,6 @@ def upsert_cow(
     path: str,
     key_cols: list[str],
     partition_col: str,
-    max_touched_partitions: int = 10_000,
     stats_cols: list[str] | None = None,
     constraints: dict[str, str] | None = None,
 ) -> tuple[int, int]:
@@ -685,6 +688,8 @@ def upsert_cow(
     non-destructive — rewritten partitions land as NEW files, the new
     manifest version points at them, and every prior version stays
     readable until vacuumed. Returns (new_version, rows_written).
+    Batch versions and the touched-partition bound follow the policy in
+    ``operators/merge.py`` (latest-wins per key).
 
     ``constraints`` adds Delta-style CHECK invariants (name -> SQL
     predicate over the table's columns). The commit's EFFECTIVE set is
@@ -695,7 +700,7 @@ def upsert_cow(
     persists in the manifest sidecar and is enforced on every later
     upsert automatically; ``drop_constraint`` removes one."""
     spark = batch.sparkSession
-    batch = batch.dropDuplicates(key_cols)
+    batch = latest_per_key(batch, key_cols)
 
     prev_for_cons = latest_version(spark, path)
     persisted_cons = (
@@ -733,18 +738,7 @@ def upsert_cow(
     if effective_cons:
         _enforce_constraints(batch, path, effective_cons)
 
-    touched = [
-        r[0]
-        for r in batch.select(partition_col)
-        .distinct()
-        .limit(max_touched_partitions + 1)
-        .collect()
-    ]
-    if len(touched) > max_touched_partitions:
-        raise ValueError(
-            f"batch touches more than {max_touched_partitions} partitions; "
-            "partition the upsert batches or raise the bound"
-        )
+    touched = touched_partitions(batch, partition_col)
 
     prev = latest_version(spark, path)
     if prev is not None:
@@ -761,9 +755,7 @@ def upsert_cow(
                 "from the table explicitly"
             )
         manifest = read_manifest(spark, path, prev)
-        touched_dirs = {
-            _partition_dir_name(spark, partition_col, v) for v in touched
-        }
+        touched_dirs = {_partition_dir_name(partition_col, v) for v in touched}
         # the version's OWN view of the touched partitions (not the
         # directory's, which may hold other versions' files)
         live_touched = [
@@ -780,10 +772,7 @@ def upsert_cow(
         ]
         if live_touched:
             slice_df = _read_manifest_files(spark, live_touched)
-            cond = None
-            for k in key_cols:
-                c = F.col(f"t.{k}").eqNullSafe(F.col(f"b.{k}"))
-                cond = c if cond is None else cond & c
+            cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"b.{k}")) for k in key_cols]
             # schema evolution: a batch may ADD columns the target's
             # older files lack — carried rows read those as NULL (the
             # batch's dtype), so the touched partition's rewrite lands
@@ -821,9 +810,7 @@ def upsert_cow(
     obs = Observation("upsert_cow_rows")
     out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
 
-    touched_dir_names = [
-        _partition_dir_name(spark, partition_col, v) for v in touched
-    ]
+    touched_dir_names = [_partition_dir_name(partition_col, v) for v in touched]
     before = _list_partition_files(spark, path, touched_dir_names)
     out.write.mode("append").partitionBy(partition_col).parquet(path)
     after = _list_partition_files(spark, path, touched_dir_names)
@@ -868,7 +855,6 @@ def delete_cow(
     path: str,
     condition,
     partition_col: str,
-    max_touched_partitions: int = 10_000,
     key_cols: list[str] | None = None,
 ) -> tuple[int, int]:
     """Row-level copy-on-write DELETE — the compliance path
@@ -883,7 +869,8 @@ def delete_cow(
     an ``isin`` literal (ADVICE r8 low). The keys are deduplicated and
     localCheckpoint-ed once — they are consumed by three passes.
 
-    Same partition-granular CoW discipline as :func:`upsert_cow`: only
+    Same partition-granular CoW discipline as :func:`upsert_cow`, and
+    the same touched-partition bound (``operators/merge.py``): only
     partitions CONTAINING matches are rewritten (minus the matching
     rows), everything else is carried by manifest reference, the new
     manifest rename is the commit point, and a partition whose every
@@ -925,23 +912,11 @@ def delete_cow(
         def _survivors(df: DataFrame) -> DataFrame:
             return df.filter(~hit)
 
-    touched = [
-        r[0]
-        for r in _matches(snap)
-        .select(partition_col)
-        .distinct()
-        .limit(max_touched_partitions + 1)
-        .collect()
-    ]
+    touched = touched_partitions(_matches(snap), partition_col)
     if not touched:
         return prev, 0
-    if len(touched) > max_touched_partitions:
-        raise ValueError(
-            f"delete touches more than {max_touched_partitions} partitions; "
-            "split the predicate or raise the bound"
-        )
     manifest = read_manifest(spark, path, prev)
-    touched_dirs = {_partition_dir_name(spark, partition_col, v) for v in touched}
+    touched_dirs = {_partition_dir_name(partition_col, v) for v in touched}
     live_touched = [
         r["file"]
         for r in manifest.filter(F.col("partition").isin(list(touched_dirs)))
@@ -1308,10 +1283,7 @@ def snapshot_changes(
     if new is None:
         return old.withColumn("_change_type", F.lit("delete"))
 
-    cond = None
-    for k in key_cols:
-        c = F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}"))
-        cond = c if cond is None else cond & c
+    cond = [F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}")) for k in key_cols]
     cols = new.columns
     # Presence must be detected with non-null MARKER columns, not the
     # key values: upsert_cow joins keys null-safely, so a NULL key is a

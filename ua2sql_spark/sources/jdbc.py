@@ -24,8 +24,10 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from ua2sql_spark.operators.merge import latest_per_key
 
 REFERENCE_BATCH_SIZE = 1000  # ua2sql.py:238
 
@@ -79,19 +81,25 @@ def write_feed_jdbc(
     properties: dict[str, str] | None = None,
     batchsize: int = REFERENCE_BATCH_SIZE,
     pg_types: bool = True,
-) -> None:
-    """Append ``df`` to a JDBC table with the reference's batching.
+) -> int:
+    """Append ``df`` to a JDBC table with the reference's batching and
+    return the rows appended.
 
     Mirrors ua2sql.py:209-246; auto-creates the table on first write
     (the reference's metadata.create_all, ua2sql.py:91). ``pg_types``
     emits the PostgreSQL-specific DDL types (INET/JSONB/NUMERIC); turn
     it off for non-PG targets (the e2e test runs against embedded
-    Derby, which Spark ships)."""
+    Derby, which Spark ships). The count is observed on the write job
+    itself — a separate ``count()`` would re-run the whole upstream
+    pipeline (ua2sql.py:239-241)."""
     props = dict(properties or {})
     props.update(jdbc_writer_options(feed, batchsize))
     if not pg_types:
         props.pop("createTableColumnTypes", None)
-    df.write.mode("append").options(**props).jdbc(url, table, properties=props)
+    obs = Observation("write_feed_jdbc_rows")
+    observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    observed.write.mode("append").options(**props).jdbc(url, table, properties=props)
+    return int(obs.get["rows"])
 
 
 def upsert_feed_jdbc(
@@ -103,21 +111,21 @@ def upsert_feed_jdbc(
     properties: dict[str, str] | None = None,
     batchsize: int = REFERENCE_BATCH_SIZE,
     pg_types: bool = True,
-    ts_col: str = "ts",
 ) -> int:
     """Idempotent insert-if-absent (the T4 exactly-once upgrade,
     SURVEY §4 custom-work item 4): re-delivered rows become no-ops, so
     at-least-once delivery (the reference's checkpoint-after-commit
     crash window, ua2sql.py:274-278) lands each logical row once.
 
-    Plan: (1) ``dropDuplicates(keys)`` inside the batch, (2) left-anti
-    join against the target's *existing keys* — the JDBC read projects
-    only the key columns and, when ``ts_col`` is a key, pushes a
-    ``ts BETWEEN batch_min AND batch_max`` predicate down to the
-    database, so the anti-join side is bounded by the batch's event-time
-    span rather than the whole history (the 100 TB requirement: a day's
-    re-ingest must not scan years of target keys), (3) append survivors
-    with the reference's batching.
+    Plan: (1) one row per key, by the latest-wins version order of
+    ``operators/merge.py``, (2) left-anti join against the target's
+    *existing keys* — the JDBC read projects only the key columns and,
+    when ``ts`` is a key, pushes a ``ts BETWEEN batch_min AND
+    batch_max`` predicate down to the database, so the anti-join side
+    is bounded by the batch's event-time span rather than the whole
+    history (the 100 TB requirement: a day's re-ingest must not scan
+    years of target keys), (3) append survivors with the reference's
+    batching.
 
     Engine-agnostic composition (runs against Derby in tests and PG in
     production); correctness needs a single writer per table — the
@@ -128,16 +136,16 @@ def upsert_feed_jdbc(
     Returns the number of rows actually appended."""
     keys = list(key_cols or NATURAL_KEYS[feed])
     spark = df.sparkSession
-    fresh = df.dropDuplicates(keys)
+    fresh = latest_per_key(df, keys)
     try:
         existing = spark.read.jdbc(url, table, properties=dict(properties or {}))
         existing = existing.select(*keys)
     except Exception:
         existing = None  # first write: target table absent
     if existing is not None:
-        if ts_col in keys:
+        if "ts" in keys:
             bounds = fresh.agg(
-                F.min(ts_col).alias("lo"), F.max(ts_col).alias("hi")
+                F.min("ts").alias("lo"), F.max("ts").alias("hi")
             ).collect()[0]
             if bounds["lo"] is not None:
                 # Keep NULL-ts target rows in the probe set: the bounds
@@ -146,33 +154,22 @@ def upsert_feed_jdbc(
                 # NULL-ts row could never see its existing copy and the
                 # eqNullSafe idempotency below would be defeated.
                 existing = existing.filter(
-                    F.col(ts_col).between(F.lit(bounds["lo"]), F.lit(bounds["hi"]))
-                    | F.col(ts_col).isNull()
+                    F.col("ts").between(F.lit(bounds["lo"]), F.lit(bounds["hi"]))
+                    | F.col("ts").isNull()
                 )
         # Null-safe key equality: the reference's schema allows NULL in
         # every non-ts key (e.g. sessionid, ua2sql.py:62) and a plain
         # equality anti-join would re-insert NULL-keyed rows forever.
         # `<=>` keeps the join an equi-join for the planner (hashable
         # keys), so this still runs as broadcast/sort-merge, not NLJ.
-        lhs, rhs = fresh.alias("b"), existing.alias("t")
-        cond = None
-        for k in keys:
-            c = F.col(f"b.{k}").eqNullSafe(F.col(f"t.{k}"))
-            cond = c if cond is None else cond & c
-        fresh = lhs.join(rhs, cond, "left_anti")
-    # Inserted-count from the write job's own metrics (observe), not a
-    # separate count() — counting first would execute the anti-join
-    # twice, a full extra pass over the diff at scale. Writing an empty
-    # diff is a harmless no-op append, so no pre-count gate is needed.
-    from pyspark.sql import Observation
-
-    obs = Observation("upsert_fresh_rows")
-    fresh = fresh.observe(obs, F.count(F.lit(1)).alias("rows"))
-    write_feed_jdbc(
+        cond = [F.col(f"b.{k}").eqNullSafe(F.col(f"t.{k}")) for k in keys]
+        fresh = fresh.alias("b").join(existing.alias("t"), cond, "left_anti")
+    # Writing an empty diff is a harmless no-op append, so no pre-count
+    # gate is needed.
+    return write_feed_jdbc(
         fresh, url, table, feed,
         properties=properties, batchsize=batchsize, pg_types=pg_types,
     )
-    return int(obs.get["rows"])
 
 
 def jdbc_upsert_sink(
