@@ -442,6 +442,16 @@ def test_config_missing_and_empty_keys_named():
     assert "password" in str(exc.value) and "database" in str(exc.value)
 
 
+@pytest.mark.parametrize("uri", ["file:///var/lib/ua2sql/jobid", "s3a://bucket/jobid"])
+def test_config_checkpoint_path_uri_rejected(uri):
+    """The JobId log is driver-local: a URI checkpoint_path would never
+    be found again and every run would silently become a backfill."""
+    with pytest.raises(ConfigError) as exc:
+        parse_config(dict(GOOD, checkpoint_path=uri))
+    assert "checkpoint_path" in str(exc.value)
+    assert parse_config(dict(GOOD, checkpoint_path="~/jobid")).checkpoint_path.endswith("/jobid")
+
+
 def test_cli_main_end_to_end(spark, unity_api, tmp_path):
     """``python -m ua2sql_spark config.json`` over the local API fixture:
     config scan → HTTP export → landing → parquet lakehouse sink →

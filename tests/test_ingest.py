@@ -11,7 +11,7 @@ from __future__ import annotations
 import gzip
 import json
 import os
-from datetime import datetime
+from datetime import datetime, timezone
 from decimal import Decimal
 
 import pytest
@@ -122,13 +122,174 @@ def test_empty_file(spark, landing):
 
 def test_checkpoint_protocol(spark, tmp_path):
     cp = JobIdCheckpoint(spark, str(tmp_path / "jobid"))
-    assert cp.find_previous_job_id("custom") is None
+    assert cp.find_previous_job_id("custom") is None  # missing directory
     cp.append("custom-0", "custom", ts=datetime(2024, 1, 1, 10))
     cp.append("custom-1", "custom", ts=datetime(2024, 1, 2, 10))
     cp.append("appStart-7", "appStart", ts=datetime(2024, 1, 3, 10))
-    assert cp.find_previous_job_id("custom") == "custom-1"  # max_by ts
+    assert cp.find_previous_job_id("custom") == "custom-1"  # latest ts
     assert cp.find_previous_job_id("appStart") == "appStart-7"
     assert cp.find_previous_job_id("transaction") is None
+    # a ts tie breaks toward the larger jobId, whatever the append order
+    cp.append("custom-9", "custom", ts=datetime(2024, 1, 5, 10))
+    cp.append("custom-10", "custom", ts=datetime(2024, 1, 5, 10))
+    assert cp.find_previous_job_id("custom") == "custom-9"
+    # no Spark needed: a session-less instance reads and writes the log
+    bare = JobIdCheckpoint(None, cp.path)
+    assert bare.find_previous_job_id("custom") == "custom-9"
+    bare.append("custom-11", "custom", ts=datetime(2024, 1, 6, 10))
+    assert cp.find_previous_job_id("custom") == "custom-11"
+    # a directory holding only Spark's _SUCCESS and .crc files is empty
+    only_markers = tmp_path / "markers"
+    only_markers.mkdir()
+    (only_markers / "_SUCCESS").write_bytes(b"")
+    (only_markers / ".part-00000-x-c000.snappy.parquet.crc").write_bytes(b"crc")
+    assert JobIdCheckpoint(None, str(only_markers)).find_previous_job_id("custom") is None
+
+
+def test_checkpoint_reads_logs_written_before_pyarrow(spark, tmp_path):
+    """One log mixing every writer it has had: Spark's parquet writer
+    (INT96 ts, naive in UTC), pyarrow's tz-aware files (as the
+    benchmark's history generator writes them) and ``append``."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StringType, StructField, StructType, TimestampType
+
+    path = str(tmp_path / "jobid")
+    spark_schema = StructType(
+        [
+            StructField("ts", TimestampType()),
+            StructField("jobId", StringType()),
+            StructField("jobType", StringType()),
+        ]
+    )
+    for row in [
+        (datetime(2024, 1, 1, 3, 0, 0, 250000), "custom-0", "custom"),
+        (datetime(2024, 1, 3, 3), "appStart-2", "appStart"),
+    ]:
+        spark.createDataFrame([row], spark_schema).coalesce(1).write.mode("append").parquet(path)
+    tz_schema = pa.schema(
+        [("ts", pa.timestamp("us", tz="UTC")), ("jobId", pa.string()), ("jobType", pa.string())]
+    )
+    pq.write_table(
+        pa.table(
+            {"ts": [datetime(2024, 1, 2, 3, tzinfo=timezone.utc)], "jobId": ["custom-1"], "jobType": ["custom"]},
+            schema=tz_schema,
+        ),
+        os.path.join(path, "part-00000-0000abcd-0001-c000.snappy.parquet"),
+        compression="snappy",
+    )
+    cp = JobIdCheckpoint(spark, path)
+    assert cp.find_previous_job_id("custom") == "custom-1"  # tz-aware beats INT96
+    assert cp.find_previous_job_id("appStart") == "appStart-2"  # INT96 beats nothing
+    cp.append("transaction-0", "transaction", ts=datetime(2024, 1, 1, 4))
+    cp.append("appStart-1", "appStart", ts=datetime(2024, 1, 2, 3))
+    assert cp.find_previous_job_id("appStart") == "appStart-2"  # older append loses
+    assert cp.find_previous_job_id("transaction") == "transaction-0"
+    cp.append("custom-2", "custom", ts=datetime(2024, 1, 2, 3, 0, 0, 1))
+    assert cp.find_previous_job_id("custom") == "custom-2"  # by one microsecond
+
+    log = ds.dataset(path, format="parquet").to_table().to_pylist()
+    assert sorted(r["jobId"] for r in log) == [
+        "appStart-1", "appStart-2", "custom-0", "custom-1", "custom-2", "transaction-0",
+    ]
+    spark_read = spark.read.schema(spark_schema).parquet(path).collect()
+    assert {(r["jobId"], r["ts"]) for r in spark_read} >= {
+        ("custom-0", datetime(2024, 1, 1, 3, 0, 0, 250000)),
+        ("custom-2", datetime(2024, 1, 2, 3, 0, 0, 1)),
+    }
+
+
+def test_checkpoint_crash_before_rename_leaves_no_record(tmp_path, monkeypatch):
+    import pyarrow.dataset as ds
+
+    cp = JobIdCheckpoint(None, str(tmp_path / "jobid"))
+    cp.append("custom-0", "custom", ts=datetime(2024, 1, 1))
+    real_replace = os.replace
+    calls = []
+
+    def crash_once(src, dst):
+        calls.append(src)
+        if len(calls) == 1:
+            raise OSError("simulated crash before rename")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash_once)
+    with pytest.raises(OSError, match="simulated crash"):
+        cp.append("custom-1", "custom", ts=datetime(2024, 1, 2))
+    assert os.path.exists(calls[0])  # the fsynced temp file is left behind...
+    assert cp.find_previous_job_id("custom") == "custom-0"  # ...and unseen
+    assert ds.dataset(cp.path, format="parquet").to_table().column("jobId").to_pylist() == ["custom-0"]
+
+    cp.append("custom-1", "custom", ts=datetime(2024, 1, 2))
+    assert cp.find_previous_job_id("custom") == "custom-1"
+
+
+def _two_custom_exports(tmp_path):
+    fixtures = tmp_path / "fixtures"
+    fixtures.mkdir()
+    runs = [
+        [write_jsonl_gz(str(fixtures / f"c{n}.txt.gz"), [{"ts": BASE_MS + n, "userid": f"u{n}", "name": "x"}])]
+        for n in range(2)
+    ]
+    client = LocalFileExportClient(exports={"custom": runs})
+    asked = []
+    request = client.request_export
+    client.request_export = lambda feed, start, cont: asked.append(cont) or request(feed, start, cont)
+    return client, asked
+
+
+def test_sink_failure_keeps_checkpoint_and_staging(spark, tmp_path):
+    """Checkpoint-after-commit (ua2sql.py:274-278): a sink that raises
+    leaves the checkpoint at the prior job and the staged dump in place;
+    the next run asks to continue from the prior job and lands it."""
+    client, asked = _two_custom_exports(tmp_path)
+    cp = JobIdCheckpoint(spark, str(tmp_path / "jobid"))
+    staging = str(tmp_path / "staging")
+    sink = parquet_sink(str(tmp_path / "warehouse"))
+    run_ingest(spark, client, staging, cp, sink, feeds=("custom",), poll_interval_s=0.0)
+    assert cp.find_previous_job_id("custom") == "custom-0"
+
+    def failing_sink(df, feed):
+        raise RuntimeError("sink down")
+
+    with pytest.raises(RuntimeError, match="sink down"):
+        run_ingest(spark, client, staging, cp, failing_sink, feeds=("custom",), poll_interval_s=0.0)
+    assert cp.find_previous_job_id("custom") == "custom-0"
+    assert os.listdir(os.path.join(staging, "custom")) == ["c1.txt.gz"]
+
+    res = run_ingest(spark, client, staging, cp, sink, feeds=("custom",), poll_interval_s=0.0)
+    assert asked == [None, "custom-0", "custom-0"]
+    assert res[0].job_id == "custom-1" and res[0].rows == 1
+    assert cp.find_previous_job_id("custom") == "custom-1"
+    landed = spark.read.parquet(str(tmp_path / "warehouse" / "custom"))
+    assert sorted(r["userid"] for r in landed.collect()) == ["u0", "u1"]
+
+
+def test_checkpoint_failure_after_commit_redelivers(spark, tmp_path, monkeypatch):
+    """A crash between the sink commit and the checkpoint append makes
+    the next run re-deliver the same job: its rows land twice
+    (at-least-once, never lost)."""
+    client, asked = _two_custom_exports(tmp_path)
+    cp = JobIdCheckpoint(spark, str(tmp_path / "jobid"))
+    staging = str(tmp_path / "staging")
+    sink = parquet_sink(str(tmp_path / "warehouse"))
+
+    def append_crashes(job_id, job_type, ts=None):
+        raise OSError("crash after commit")
+
+    monkeypatch.setattr(cp, "append", append_crashes)
+    with pytest.raises(OSError, match="crash after commit"):
+        run_ingest(spark, client, staging, cp, sink, feeds=("custom",), poll_interval_s=0.0)
+    assert cp.find_previous_job_id("custom") is None
+    monkeypatch.undo()
+
+    res = run_ingest(spark, client, staging, cp, sink, feeds=("custom",), poll_interval_s=0.0)
+    assert asked == [None, None]
+    assert res[0].job_id == "custom-0"
+    assert cp.find_previous_job_id("custom") == "custom-0"
+    landed = spark.read.parquet(str(tmp_path / "warehouse" / "custom"))
+    assert sorted(r["userid"] for r in landed.collect()) == ["u0", "u0"]
 
 
 def test_full_ingest_resume_and_at_least_once(spark, tmp_path):

@@ -9,10 +9,10 @@ write, checkpoint append (strictly after the sink commits).
 
 Sink selection (SURVEY §3): with ``lakehouse_root`` set the feeds land
 as parquet (the 100 TB path); otherwise the reference's PostgreSQL
-tables via the batched JDBC appender. The JobId checkpoint lives in
-parquet either way (the reference keeps it in a PG table; ours is
-engine-local so ingest works even when the sink database is down —
-documented deviation, SURVEY §4).
+tables via the batched JDBC appender. The JobId checkpoint lives in a
+driver-local parquet directory either way (the reference keeps it in a
+PG table; ours is local so ingest works even when the sink database is
+down — documented deviation, SURVEY §4).
 """
 
 from __future__ import annotations

@@ -14,6 +14,9 @@ try/except, ua2sql.py:288-291). Deviations (documented, SURVEY §4):
   password are different operator errors; we name them distinctly).
 * No ``exit(1)`` side effects — callers decide how fatal a bad config
   is (the reference's module-level exits make it untestable).
+* ``checkpoint_path`` must be a local path: the JobId log is
+  driver-local, and a URI (``file:///…``, ``s3a://…``) would never be
+  found again, silently turning every run into a 30-day backfill.
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ import json
 import os
 from dataclasses import dataclass
 from typing import Any
+from urllib.parse import urlsplit
 
 # ua2sql.py:28-31
 REQUIRED_KEYS = (
@@ -56,8 +60,9 @@ class IngestConfig:
     # Override of the Unity API origin (tests point it at a local
     # fixture; production default is the real endpoint).
     unity_api_base_url: str | None = None
-    # JobId checkpoint location; defaults to a subdir of the staging
-    # root (subdirs survive the reference's files-only staging wipe).
+    # JobId checkpoint location, a local directory; defaults to a subdir
+    # of the staging root (subdirs survive the reference's files-only
+    # staging wipe).
     checkpoint_path: str | None = None
 
     @property
@@ -102,6 +107,10 @@ def parse_config(raw: dict[str, Any]) -> IngestConfig:
     backup = raw.get("backup_collection_path") or None  # ua2sql.py:288-291
     lakehouse = raw.get("lakehouse_root") or None
     checkpoint = raw.get("checkpoint_path") or None
+    if checkpoint is not None and urlsplit(checkpoint).scheme:
+        raise ConfigError(
+            f"invalid ingest config — checkpoint_path must be a local path, got URI {checkpoint!r}"
+        )
     return IngestConfig(
         user=raw["user"],
         password=raw["password"],
