@@ -104,36 +104,63 @@ def _write_orders_like(tmp_path, n=64) -> str:
     return str(tmp_path)
 
 
-def test_scan_rebalance_opt_in_only(spark, tmp_path):
+def test_scan_rebalance_opt_in_only(spark, tmp_path, monkeypatch):
+    import os
+
     from pyspark.sql import functions as F
 
+    from ua2sql_spark import catalog
+
     sf_dir = _write_orders_like(tmp_path)
-    spark.conf.set("spark.ua2sql.scan.rebalance.minBytes", "1")
+    monkeypatch.setattr(catalog, "_SCAN_REBALANCE_MIN_BYTES", 1)
+    plain = load_table(spark, sf_dir, "orders")
+    reb = load_table(spark, sf_dir, "orders", rebalance=True)
+    assert "Exchange" not in plain._jdf.queryExecution().executedPlan().toString()
+    plan = reb._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" in plan, "rebalance=True must add a round-robin exchange"
+    # (b) pushdown + pruning survive the repartition
+    filtered = (
+        load_table(spark, sf_dir, "orders", rebalance=True)
+        .filter(F.col("o_orderkey") <= 10)
+        .select("o_custkey")
+    )
+    fplan = filtered._jdf.queryExecution().executedPlan().toString()
+    assert "LessThanOrEqual(o_orderkey,10)" in fplan
+    assert "ReadSchema: struct<o_orderkey:bigint,o_custkey:bigint>" in fplan
+    # (d) identical results either way
+    a = sorted(plain.collect())
+    b = sorted(reb.collect())
+    assert a == b
+    # the split estimate honours spark.sql.files.maxPartitionBytes, which
+    # Spark reads back with a unit suffix ('134217728b'): small enough
+    # splits give every core a task, so no exchange is needed
+    total = os.path.getsize(catalog.table_path(sf_dir, "orders"))
+    cores = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.files.maxPartitionBytes", f"{max(total // cores, 1)}b")
     try:
-        plain = load_table(spark, sf_dir, "orders")
-        reb = load_table(spark, sf_dir, "orders", rebalance=True)
-        assert "Exchange" not in plain._jdf.queryExecution().executedPlan().toString()
-        plan = reb._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plan, "rebalance=True must add a round-robin exchange"
-        # (b) pushdown + pruning survive the repartition
-        filtered = (
-            load_table(spark, sf_dir, "orders", rebalance=True)
-            .filter(F.col("o_orderkey") <= 10)
-            .select("o_custkey")
-        )
-        fplan = filtered._jdf.queryExecution().executedPlan().toString()
-        assert "LessThanOrEqual(o_orderkey,10)" in fplan
-        assert "ReadSchema: struct<o_orderkey:bigint,o_custkey:bigint>" in fplan
-        # (d) identical results either way
-        a = sorted(plain.collect())
-        b = sorted(reb.collect())
-        assert a == b
-        # (c) min-bytes guard: tiny table skips the exchange even when asked
-        spark.conf.set("spark.ua2sql.scan.rebalance.minBytes", str(1 << 30))
-        guarded = load_table(spark, sf_dir, "orders", rebalance=True)
-        assert (
-            "Exchange"
-            not in guarded._jdf.queryExecution().executedPlan().toString()
-        )
+        split = load_table(spark, sf_dir, "orders", rebalance=True)
+        assert "Exchange" not in split._jdf.queryExecution().executedPlan().toString()
     finally:
-        spark.conf.unset("spark.ua2sql.scan.rebalance.minBytes")
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    # (c) min-bytes guard: tiny table skips the exchange even when asked
+    monkeypatch.setattr(catalog, "_SCAN_REBALANCE_MIN_BYTES", 1 << 30)
+    guarded = load_table(spark, sf_dir, "orders", rebalance=True)
+    assert "Exchange" not in guarded._jdf.queryExecution().executedPlan().toString()
+
+
+def test_engine_reads_no_private_session_conf():
+    """Static guard: the engine defines no ``spark.ua2sql.*`` session
+    conf. A new knob needs a measured reason — whoever adds one edits
+    this test and records that reason in CHANGES.md."""
+    import pathlib
+
+    import ua2sql_spark
+
+    root = pathlib.Path(ua2sql_spark.__file__).parent
+    hits = [
+        f"{p.relative_to(root)}:{n}"
+        for p in sorted(root.rglob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "spark.ua2sql." in line
+    ]
+    assert hits == [], hits

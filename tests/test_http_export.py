@@ -42,11 +42,13 @@ class FakeUnityAPI:
         self.create_bodies: list[dict] = []
         self.auth_headers: list[str | None] = []
         self.fail_create = False
+        self.failing_files: set[str] = set()  # result files served as 500
+        self.job_id = "job-1"
         self.port = 0  # set once the server binds
 
     def job_json(self) -> dict:
         done = self.status_gets >= self.polls_until_done
-        out = {"id": "job-1", "status": "completed" if done else "running"}
+        out = {"id": self.job_id, "status": "completed" if done else "running"}
         if done:
             out["result"] = {
                 "fileList": [
@@ -78,11 +80,13 @@ def _make_handler(api: FakeUnityAPI):
                 return self._send(500, b"{}")
             n = int(self.headers.get("content-length", 0))
             api.create_bodies.append(json.loads(self.rfile.read(n)))
-            self._send(200, json.dumps({"id": "job-1"}).encode())
+            self._send(200, json.dumps({"id": api.job_id}).encode())
 
         def do_GET(self):
             if self.path.startswith("/files/"):
                 name = self.path.rsplit("/", 1)[1]
+                if name in api.failing_files:
+                    return self._send(500, b"")
                 return self._send(
                     200, api.files[name], ctype="application/octet-stream"
                 )
@@ -195,6 +199,71 @@ def test_full_ingest_over_http(spark, unity_api, tmp_path):
         poll_interval_s=0.01,
     )
     assert unity_api.create_bodies[0]["continueFrom"] == "job-1"
+
+
+def test_failed_download_keeps_checkpoint_and_empty_export_advances(
+    spark, tmp_path
+):
+    """A result file that fails to download must fail the run before the
+    sink (the reference skips it, ua2sql.py:156, and its checkpoint then
+    moves past the lost rows): nothing lands, the checkpoint stays put,
+    and the re-run lands every row exactly once. A completed job with an
+    empty fileList is the opposite case, a genuine 'nothing new': 0 rows
+    and the checkpoint advances to that job."""
+    import requests
+
+    from ua2sql_spark.sources.checkpoint import JobIdCheckpoint
+    from ua2sql_spark.sources.ingest import parquet_sink, run_ingest
+
+    api = FakeUnityAPI(
+        files={
+            "a.txt.gz": _gz_jsonl([{"ts": 1_700_000_000_000, "userid": "a1"}]),
+            "b.txt.gz": _gz_jsonl(
+                [
+                    {"ts": 1_700_000_001_000, "userid": "b1"},
+                    {"ts": 1_700_000_002_000, "userid": "b2"},
+                ]
+            ),
+        },
+        polls_until_done=0,
+    )
+    api.failing_files = {"b.txt.gz"}
+    server = ThreadingHTTPServer(("127.0.0.1", 0), _make_handler(api))
+    api.port = server.server_address[1]
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    cp = JobIdCheckpoint(spark, str(tmp_path / "jobid"))
+    warehouse = tmp_path / "warehouse"
+
+    def ingest():
+        return run_ingest(
+            spark,
+            _client(api),
+            str(tmp_path / "staging"),
+            cp,
+            parquet_sink(str(warehouse)),
+            feeds=("custom",),
+            poll_interval_s=0.01,
+        )
+
+    try:
+        with pytest.raises(requests.HTTPError):
+            ingest()
+        assert cp.find_previous_job_id("custom") is None
+        assert not (warehouse / "custom").exists()
+
+        api.failing_files.clear()
+        assert ingest()[0].rows == 3
+        assert cp.find_previous_job_id("custom") == "job-1"
+        landed = spark.read.parquet(str(warehouse / "custom"))
+        assert sorted(r["userid"] for r in landed.collect()) == ["a1", "b1", "b2"]
+
+        api.job_id, api.files = "job-2", {}
+        res = ingest()
+        assert (res[0].job_id, res[0].rows) == ("job-2", 0)
+        assert cp.find_previous_job_id("custom") == "job-2"
+        assert spark.read.parquet(str(warehouse / "custom")).count() == 3
+    finally:
+        server.shutdown()
 
 
 def test_unity_export_datasource(spark):

@@ -390,110 +390,6 @@ def test_manifest_keeps_stats_less_files(spark, tmp_path):
     assert not any("nostats" not in f for f in kept), kept
 
 
-def test_load_table_prunes_via_manifest_when_enabled(spark, tmp_path):
-    """VERDICT r5 next-round #5: the ORDINARY load_table path consults a
-    file-stats manifest beside the table (opt-in conf) and scans fewer
-    files for a range-filtered read — with results identical to the
-    unpruned path."""
-    from ua2sql_spark.catalog import (
-        MANIFEST_DIR_CONF,
-        MANIFEST_ENABLED_CONF,
-        load_table,
-    )
-    from ua2sql_spark.operators.manifest import build_file_manifest
-
-    # a documents table clustered on doc_id so per-file ranges are narrow
-    src = load_table(spark, SF_DIR, "documents")
-    sf_dir = str(tmp_path / "sfX")
-    table_dir = f"{sf_dir}/documents.parquet"
-    (
-        src.repartitionByRange(8, "doc_id")
-        .write.mode("overwrite")
-        .parquet(table_dir)
-    )
-    build_file_manifest(spark, table_dir, columns=["doc_id"]).write.mode(
-        "overwrite"
-    ).parquet(f"{sf_dir}/documents.manifest.parquet")
-
-    total_files = len(spark.read.parquet(table_dir).inputFiles())
-    assert total_files == 8
-
-    lo, hi = 10, 40
-    spark.conf.set(MANIFEST_ENABLED_CONF, "true")
-    try:
-        pruned = load_table(spark, sf_dir, "documents", where=("doc_id", lo, hi))
-        assert len(pruned.inputFiles()) < total_files, (
-            "manifest pruning did not reduce the files scanned"
-        )
-        # exactness: pruned result == plain filtered read
-        expect = (
-            spark.read.parquet(table_dir)
-            .filter(F.col("doc_id").between(lo, hi))
-            .orderBy("doc_id")
-            .collect()
-        )
-        got = pruned.orderBy("doc_id").collect()
-        assert got == expect
-        # the conf OFF path still answers identically (and scans all files)
-        spark.conf.set(MANIFEST_ENABLED_CONF, "false")
-        plain = load_table(spark, sf_dir, "documents", where=("doc_id", lo, hi))
-        assert len(plain.inputFiles()) == total_files
-        assert plain.orderBy("doc_id").collect() == expect
-        # no-overlap range: empty frame, table schema preserved
-        spark.conf.set(MANIFEST_ENABLED_CONF, "true")
-        empty = load_table(
-            spark, sf_dir, "documents", where=("doc_id", 10**9, 2 * 10**9)
-        )
-        assert empty.count() == 0
-        assert empty.schema == src.schema
-        # MANIFEST_DIR_CONF override (read-only table dirs): same pruning
-        alt = str(tmp_path / "manifests")
-        spark.read.parquet(f"{sf_dir}/documents.manifest.parquet").write.parquet(
-            f"{alt}/documents"
-        )
-        spark.conf.set(MANIFEST_DIR_CONF, alt)
-        via_dir = load_table(spark, sf_dir, "documents", where=("doc_id", lo, hi))
-        assert len(via_dir.inputFiles()) < total_files
-    finally:
-        spark.conf.set(MANIFEST_ENABLED_CONF, "false")
-        spark.conf.unset(MANIFEST_DIR_CONF)
-
-
-def test_load_table_falls_back_when_manifest_lacks_column(spark, tmp_path):
-    """Regression (round-6 review): a manifest built WITHOUT stats for
-    the filter column used to prune every file (empty frame, silent
-    data loss); and string stats probed with the default bigint cast
-    used to null out and prune everything. Both must keep results
-    identical to the plain path."""
-    from ua2sql_spark.catalog import MANIFEST_ENABLED_CONF, load_table
-    from ua2sql_spark.operators.manifest import build_file_manifest, prune_files
-
-    src = load_table(spark, SF_DIR, "documents")
-    sf_dir = str(tmp_path / "sfY")
-    table_dir = f"{sf_dir}/documents.parquet"
-    src.repartitionByRange(4, "doc_id").write.parquet(table_dir)
-    # manifest covers ONLY lang — doc_id probes cannot be pruned
-    build_file_manifest(spark, table_dir, columns=["lang"]).write.parquet(
-        f"{sf_dir}/documents.manifest.parquet"
-    )
-    expect = (
-        spark.read.parquet(table_dir)
-        .filter(F.col("doc_id").between(10, 40))
-        .count()
-    )
-    assert expect > 0
-    spark.conf.set(MANIFEST_ENABLED_CONF, "true")
-    try:
-        got = load_table(spark, sf_dir, "documents", where=("doc_id", 10, 40))
-        assert got.count() == expect
-    finally:
-        spark.conf.set(MANIFEST_ENABLED_CONF, "false")
-    # string stats + bigint cast: try_cast nulls keep files conservatively
-    manifest = spark.read.parquet(f"{sf_dir}/documents.manifest.parquet")
-    kept = prune_files(manifest, "lang", 0, 1)  # default cast='bigint'
-    assert len(kept) == len(spark.read.parquet(table_dir).inputFiles())
-
-
 def test_prune_files_returns_none_when_column_has_no_stats(spark, tmp_path):
     """Regression (round-6 review): prune_files distinguishes 'manifest
     has no rows for this column' (None — caller cannot prune) from
@@ -507,3 +403,8 @@ def test_prune_files_returns_none_when_column_has_no_stats(spark, tmp_path):
     manifest = build_file_manifest(spark, table_dir, columns=["doc_id"])
     assert prune_files(manifest, "lang", 0, 1) is None
     assert prune_files(manifest, "doc_id", 10**12, 2 * 10**12) == []
+    # string stats probed with the default bigint cast: try_cast nulls
+    # keep every file conservatively (never an empty, data-losing list)
+    by_lang = build_file_manifest(spark, table_dir, columns=["lang"])
+    kept = prune_files(by_lang, "lang", 0, 1)
+    assert kept and len(kept) == len(spark.read.parquet(table_dir).inputFiles())

@@ -3,6 +3,13 @@
 At 100 TB these would be partitioned lakehouse tables; the access path is
 identical — ``spark.read.parquet`` with filter pushdown and column
 pruning left to Catalyst. Never collect, never infer row-by-row.
+
+``load_table`` has one read path per table (``_load_events`` for
+``events``, ``spark.read.parquet`` otherwise) followed by the optional
+scan rebalance, whose byte guards are the module constants
+``_SCAN_REBALANCE_MIN_BYTES`` / ``_SCAN_REBALANCE_MAX_BYTES``; no session
+conf changes what it reads. Manifest-pruned reads of a file subset are
+``operators.manifest.read_pruned``.
 """
 
 from __future__ import annotations
@@ -26,23 +33,6 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Dimension tables small enough to broadcast at any realistic scale factor
-# (region/nation are bounded by geography; supplier/part grow slowly).
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
-
-
-# Opt-in manifest-driven file pruning for the ordinary load_table path
-# (VERDICT r5 next-round #5). When MANIFEST_ENABLED_CONF is true and the
-# caller passes a range predicate, load_table consults the file-stats
-# manifest (operators/manifest.py) persisted beside the table —
-# `<sf_dir>/<name>.manifest.parquet`, or `<MANIFEST_DIR_CONF>/<name>`
-# when the table directory is read-only — and hands Spark only the
-# surviving files. At 100 TB this skips both the listing and the footer
-# reads of non-overlapping files; Catalyst still does row-group pruning
-# and pushdown inside the chosen files.
-MANIFEST_ENABLED_CONF = "spark.ua2sql.manifest.enabled"
-MANIFEST_DIR_CONF = "spark.ua2sql.manifest.dir"
-
 # --- Scale-adaptive scan rebalance (OPTIMIZATION_r14.md §scan) ---------
 # A parquet row group is the unit of scan parallelism: a table written
 # as one file with one row group scans as ONE task no matter how many
@@ -50,8 +40,9 @@ MANIFEST_DIR_CONF = "spark.ua2sql.manifest.dir"
 # cosine folds, decimal casts) serializes behind it. When the caller
 # declares its scan-side work heavy (``load_table(..., rebalance=True)``)
 # AND the file layout yields fewer splits than the session has cores
-# AND the table is small enough that one round-robin exchange is cheap,
-# load_table rebalances the scan to ``defaultParallelism`` partitions.
+# AND the table size lies within [_SCAN_REBALANCE_MIN_BYTES,
+# _SCAN_REBALANCE_MAX_BYTES], load_table rebalances the scan to
+# ``defaultParallelism`` partitions.
 # Opt-in per call site because only the query knows its per-row compute
 # weight (guide §8: use what you know that the optimizer does not) —
 # A/B at sf0.1 showed heavy-compute scans gain 0.5-3 s while trivial
@@ -62,14 +53,12 @@ MANIFEST_DIR_CONF = "spark.ua2sql.manifest.dir"
 # shuffle anyway). Filter pushdown and column pruning are unaffected —
 # Catalyst pushes deterministic predicates and prunes columns through
 # a Repartition node (asserted in tests/test_plans.py).
-SCAN_REBALANCE_CONF = "spark.ua2sql.scan.rebalance"  # default: true
+
 # Below this, the table is broadcast-dim-sized and scan-side work is
 # trivial; the exchange would be pure overhead (region..part).
-SCAN_REBALANCE_MIN_BYTES_CONF = "spark.ua2sql.scan.rebalance.minBytes"
 _SCAN_REBALANCE_MIN_BYTES = 256 * 1024
 # Above this, a blanket shuffle of the whole table is no longer "cheap
 # insurance" — real layouts this size carry enough row groups already.
-SCAN_REBALANCE_MAX_BYTES_CONF = "spark.ua2sql.scan.rebalance.maxBytes"
 _SCAN_REBALANCE_MAX_BYTES = 1 << 30
 
 
@@ -93,28 +82,19 @@ def _dir_bytes(path: str) -> tuple[int, int]:
 
 
 def _scan_rebalance(
-    spark: SparkSession, df: DataFrame, path: str, rebalance: bool = True
+    spark: SparkSession, df: DataFrame, path: str, rebalance: bool
 ) -> DataFrame:
     """Repartition ``df`` to ``defaultParallelism`` when the table at
     ``path`` has a compute-heavy-small layout (fewer splits than cores,
     within the byte guards); otherwise return it unchanged."""
-    if not rebalance or (
-        (spark.conf.get(SCAN_REBALANCE_CONF, "true") or "").lower() != "true"
-    ):
+    if not rebalance:
         return df
     total, n_files = _dir_bytes(path)
-    min_b = int(
-        spark.conf.get(SCAN_REBALANCE_MIN_BYTES_CONF, str(_SCAN_REBALANCE_MIN_BYTES))
-    )
-    max_b = int(
-        spark.conf.get(SCAN_REBALANCE_MAX_BYTES_CONF, str(_SCAN_REBALANCE_MAX_BYTES))
-    )
-    if total < min_b or total > max_b:
+    if not _SCAN_REBALANCE_MIN_BYTES <= total <= _SCAN_REBALANCE_MAX_BYTES:
         return df
-    try:
-        max_pb = int(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    except Exception:
-        max_pb = 128 * 1024 * 1024
+    # The resolved byte value of spark.sql.files.maxPartitionBytes; the
+    # string conf reads back with a unit suffix ('134217728b', '64m').
+    max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     # Upper bound on the split count Spark can extract from this layout
     # (actual parallelism is further capped by row-group placement).
     splits = n_files + total // max(max_pb, 1)
@@ -128,90 +108,17 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def manifest_path(spark: SparkSession, sf_dir: str, name: str) -> str:
-    override = spark.conf.get(MANIFEST_DIR_CONF, None)
-    if override:
-        return os.path.join(override, name)
-    return os.path.join(sf_dir, f"{name}.manifest.parquet")
-
-
 def load_table(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    where: tuple | None = None,
-    rebalance: bool = False,
+    spark: SparkSession, sf_dir: str, name: str, rebalance: bool = False
 ) -> DataFrame:
-    """Load a catalog table; ``where=(col, lo, hi[, cast])`` applies an
-    inclusive range predicate — and, when manifest pruning is enabled
-    and a manifest exists for the table, skips every data file whose
-    [min, max] on ``col`` cannot overlap [lo, hi] before Spark even
-    lists it. The predicate is ALWAYS re-applied exactly, so results
-    are identical with and without a manifest."""
+    """Load a catalog table; ``rebalance=True`` declares the caller's
+    scan-side work heavy (see ``_scan_rebalance``). Filters go on the
+    returned frame, where Catalyst pushes them into the parquet scan."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        df = _load_events(spark, sf_dir)
-        # events needs ts normalization before any predicate; manifest
-        # stats on raw ts encodings would not match the normalized
-        # column, so events always takes the plain path.
-        if where is not None:
-            col, lo, hi = where[0], where[1], where[2]
-            from pyspark.sql import functions as F
-
-            df = df.filter(F.col(col).between(F.lit(lo), F.lit(hi)))
-        return _scan_rebalance(spark, df, table_path(sf_dir, name), rebalance)
-    if where is not None:
-        from pyspark.sql import functions as F
-
-        col, lo, hi = where[0], where[1], where[2]
-        cast = where[3] if len(where) > 3 else "bigint"
-        pred = F.col(col).between(F.lit(lo), F.lit(hi))
-        if spark.conf.get(MANIFEST_ENABLED_CONF, "false").lower() == "true":
-            mpath = manifest_path(spark, sf_dir, name)
-            if _hadoop_exists(spark, mpath):
-                from ua2sql_spark.operators.manifest import prune_files
-
-                manifest = spark.read.parquet(mpath)
-                files = prune_files(manifest, col, lo, hi, cast=cast)
-                # files is None: manifest built without stats for THIS
-                # column — no pruning possible; fall through to the
-                # plain scan rather than silently returning zero rows
-                if files is not None:
-                    if not files:
-                        # no file overlaps: an empty frame with the
-                        # table's schema (reading zero files would
-                        # fail schema inference)
-                        return (
-                            spark.read.parquet(table_path(sf_dir, name))
-                            .filter(F.lit(False))
-                        )
-                    return _scan_rebalance(
-                        spark,
-                        spark.read.parquet(*files).filter(pred),
-                        table_path(sf_dir, name),
-                        rebalance,
-                    )
-        return _scan_rebalance(
-            spark,
-            spark.read.parquet(table_path(sf_dir, name)).filter(pred),
-            table_path(sf_dir, name),
-            rebalance,
-        )
-    return _scan_rebalance(
-        spark,
-        spark.read.parquet(table_path(sf_dir, name)),
-        table_path(sf_dir, name),
-        rebalance,
-    )
-
-
-def _hadoop_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
+    path = table_path(sf_dir, name)
+    df = _load_events(spark, sf_dir) if name == "events" else spark.read.parquet(path)
+    return _scan_rebalance(spark, df, path, rebalance)
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -282,9 +189,3 @@ def _bigint_ts_to_micros():
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     """Load every test table as a DataFrame keyed by name."""
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register each table as a temp view so ``spark.sql`` works too."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -24,6 +24,15 @@ Reference parity (driver-side Python; none of this touches Spark):
   (``iter_content``, never the whole dump in RAM) and decompression
   parallelizes across executors.
 
+  Second deviation: a failed fetch RAISES (``requests.HTTPError``) where
+  the reference skips the file (ua2sql.py:156). A non-200 result-file
+  GET, or a non-200 job GET after the poll saw the job completed, would
+  otherwise land a partial dump and then append the checkpoint, so the
+  next run would continue past the lost rows and never fetch them again.
+  Raising stops the pipeline before the sink: the checkpoint does not
+  move and the next run re-requests the same export. A job that is not
+  completed still returns ``[]``.
+
 The client is a plain dataclass satisfying the
 ``ua2sql_spark.sources.ingest.ExportClient`` protocol; tests point
 ``base_url`` at a local ``http.server`` fixture — no network.
@@ -90,10 +99,13 @@ class HttpExportClient:
             return r.json()["id"]
         return None  # ua2sql.py:113
 
-    def _get_job(self, job_id: str) -> dict[str, Any] | None:
-        r = self.session.get(
+    def _job_response(self, job_id: str) -> requests.Response:
+        return self.session.get(
             f"{self._exports_url}/{job_id}", auth=self._auth, timeout=self.timeout_s
         )
+
+    def _get_job(self, job_id: str) -> dict[str, Any] | None:
+        r = self._job_response(job_id)
         if r.status_code != 200:
             return None
         return r.json()
@@ -103,8 +115,10 @@ class HttpExportClient:
         return job is not None and job.get("status") == "completed"
 
     def download_results(self, job_id: str, staging_dir: str) -> list[str]:
-        job = self._get_job(job_id)
-        if job is None or job.get("status") != "completed":
+        r = self._job_response(job_id)
+        r.raise_for_status()  # never mistake a failed fetch for "no files"
+        job = r.json()
+        if job.get("status") != "completed":
             return []  # ua2sql.py:139-146 prints-and-returns; we no-op
         file_list = (job.get("result") or {}).get("fileList")
         if not file_list:
@@ -117,8 +131,7 @@ class HttpExportClient:
             # it decompressed in-place (ua2sql.py:154).
             name = posixpath.basename(entry["name"])
             r = self.session.get(entry["url"], stream=True, timeout=self.timeout_s)
-            if r.status_code != 200:
-                continue  # skip the file, as the reference does (ua2sql.py:156)
+            r.raise_for_status()  # the reference skips it (ua2sql.py:156)
             dst = os.path.join(staging_dir, name)
             with open(dst, "wb") as f:
                 for chunk in r.iter_content(chunk_size=1 << 20):
