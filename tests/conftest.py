@@ -240,6 +240,6 @@ def assert_oracle_match(spark, duck, spec, sf_dir: str = SF_DIR) -> None:
     a = normalize(spark_pd)
     b = normalize(duck_pd)
     try:
-        pd.testing.assert_frame_equal(a, b, check_dtype=False, rtol=1e-9, atol=1e-9)
+        pd.testing.assert_frame_equal(a, b, check_dtype=False, rtol=0, atol=0)
     except AssertionError as exc:
         raise AssertionError(f"{spec.name}: value mismatch\n{exc}") from exc

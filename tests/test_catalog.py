@@ -164,3 +164,19 @@ def test_engine_reads_no_private_session_conf():
         if "spark.ua2sql." in line
     ]
     assert hits == [], hits
+
+
+def test_checkpoint_imports_no_pyspark():
+    """Static guard: the JobId log is driver-local pyarrow, so
+    ``sources/checkpoint.py`` imports nothing from ``pyspark``, at module
+    level or inside a function."""
+    import ast
+    import pathlib
+
+    import ua2sql_spark.sources.checkpoint as checkpoint
+
+    tree = ast.parse(pathlib.Path(checkpoint.__file__).read_text())
+    imported = [
+        alias.name for node in ast.walk(tree) if isinstance(node, ast.Import) for alias in node.names
+    ] + [node.module or "" for node in ast.walk(tree) if isinstance(node, ast.ImportFrom)]
+    assert [m for m in imported if m.split(".")[0] == "pyspark"] == [], imported

@@ -11,6 +11,7 @@ from __future__ import annotations
 import gzip
 import json
 import os
+import stat
 from datetime import datetime, timezone
 from decimal import Decimal
 
@@ -149,13 +150,16 @@ def test_checkpoint_protocol(spark, tmp_path):
 def test_checkpoint_reads_logs_written_before_pyarrow(spark, tmp_path):
     """One log mixing every writer it has had: Spark's parquet writer
     (INT96 ts, naive in UTC), pyarrow's tz-aware files (as the
-    benchmark's history generator writes them) and ``append``."""
+    benchmark's history generator writes them) and ``append``. The next
+    append folds them all into one file and changes no answer."""
     import pyarrow as pa
     import pyarrow.dataset as ds
     import pyarrow.parquet as pq
     from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
     path = str(tmp_path / "jobid")
+    cp = JobIdCheckpoint(spark, path)
+    cp.append("transaction-0", "transaction", ts=datetime(2024, 1, 1, 4))
     spark_schema = StructType(
         [
             StructField("ts", TimestampType()),
@@ -179,11 +183,12 @@ def test_checkpoint_reads_logs_written_before_pyarrow(spark, tmp_path):
         os.path.join(path, "part-00000-0000abcd-0001-c000.snappy.parquet"),
         compression="snappy",
     )
-    cp = JobIdCheckpoint(spark, path)
+    assert len(ds.dataset(path, format="parquet").files) == 4
     assert cp.find_previous_job_id("custom") == "custom-1"  # tz-aware beats INT96
     assert cp.find_previous_job_id("appStart") == "appStart-2"  # INT96 beats nothing
-    cp.append("transaction-0", "transaction", ts=datetime(2024, 1, 1, 4))
     cp.append("appStart-1", "appStart", ts=datetime(2024, 1, 2, 3))
+    assert len(ds.dataset(path, format="parquet").files) == 1
+    assert cp.find_previous_job_id("custom") == "custom-1"
     assert cp.find_previous_job_id("appStart") == "appStart-2"  # older append loses
     assert cp.find_previous_job_id("transaction") == "transaction-0"
     cp.append("custom-2", "custom", ts=datetime(2024, 1, 2, 3, 0, 0, 1))
@@ -223,6 +228,47 @@ def test_checkpoint_crash_before_rename_leaves_no_record(tmp_path, monkeypatch):
 
     cp.append("custom-1", "custom", ts=datetime(2024, 1, 2))
     assert cp.find_previous_job_id("custom") == "custom-1"
+
+
+def test_checkpoint_crash_before_removal_keeps_answers(tmp_path, monkeypatch):
+    """A crash after the fold's rename, before the files it read are
+    removed, leaves duplicated rows that change no lookup; the next
+    append folds the log into one file again. The directory is fsynced
+    before any removal, so the removals cannot outlive the rename."""
+    import pyarrow.dataset as ds
+
+    cp = JobIdCheckpoint(None, str(tmp_path / "jobid"))
+    cp.append("custom-0", "custom", ts=datetime(2024, 1, 1))
+    cp.append("appStart-0", "appStart", ts=datetime(2024, 1, 1))
+    real_fsync = os.fsync
+    events = []
+
+    def fsync(fd):
+        events.append("fsync-dir" if stat.S_ISDIR(os.fstat(fd).st_mode) else "fsync-file")
+        real_fsync(fd)
+
+    def crash(path):
+        events.append("remove")
+        raise OSError("simulated crash before removal")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "fsync", fsync)
+        m.setattr(os, "remove", crash)
+        with pytest.raises(OSError, match="simulated crash"):
+            cp.append("custom-1", "custom", ts=datetime(2024, 1, 2))
+    assert events == ["fsync-file", "fsync-dir", "remove"]
+    assert len(ds.dataset(cp.path, format="parquet").files) == 2
+    assert cp.find_previous_job_id("custom") == "custom-1"
+    assert cp.find_previous_job_id("appStart") == "appStart-0"
+    assert sorted(ds.dataset(cp.path, format="parquet").to_table().column("jobId").to_pylist()) == [
+        "appStart-0", "appStart-0", "custom-0", "custom-0", "custom-1",
+    ]
+
+    cp.append("transaction-0", "transaction", ts=datetime(2024, 1, 3))
+    assert len(ds.dataset(cp.path, format="parquet").files) == 1
+    assert cp.find_previous_job_id("custom") == "custom-1"
+    assert cp.find_previous_job_id("appStart") == "appStart-0"
+    assert cp.find_previous_job_id("transaction") == "transaction-0"
 
 
 def _two_custom_exports(tmp_path):

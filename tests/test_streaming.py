@@ -476,6 +476,43 @@ def test_stream_upsert_parquet_exactly_once_effect(spark, tmp_path):
     assert json.loads(got["u7"]) == {"v": 2}
 
 
+def test_stream_upsert_reads_each_batch_once(spark, tmp_path):
+    """The foreachBatch upsert scans its micro-batch once: the source's
+    ``numInputRows`` over the run equals the rows delivered (a second
+    scan would count them twice), and the table still keeps the latest
+    version of each key."""
+    from ua2sql_spark.operators.merge import parquet_upsert_sink
+    from ua2sql_spark.streaming.ingest import stream_feed
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    table = str(tmp_path / "tbl")
+    sink0 = parquet_upsert_sink(table, key_cols=["userid"], partition_col="day")
+
+    def sink(df, epoch_id):
+        sink0(df.withColumn("day", F.to_date("ts")), epoch_id)
+
+    def run():
+        q = stream_feed(spark, str(landing), "custom", str(tmp_path / "ck"), sink)
+        q.awaitTermination(120)
+        return sum(p["numInputRows"] for p in q.recentProgress)
+
+    def row(i, submit, v):
+        return {"ts": BASE_MS + i * 86_400_000, "submit_time": submit, "userid": f"u{i}",
+                "name": f"e{i}", "custom_params": {"v": v}}
+
+    first = [row(i, BASE_MS, 1) for i in range(4)]
+    write_rows(os.path.join(landing, "a.txt.gz"), first)
+    assert run() == 4
+    # one backlogged batch: a redelivery of u0-u3, a correction of u1
+    # and a new key u4
+    backlog = first + [row(1, BASE_MS + 1, 2), row(4, BASE_MS, 1)]
+    write_rows(os.path.join(landing, "b.txt.gz"), backlog)
+    assert run() == len(backlog)
+    got = {r["userid"]: json.loads(r["custom_params"]) for r in spark.read.parquet(table).collect()}
+    assert got == {"u0": {"v": 1}, "u1": {"v": 2}, "u2": {"v": 1}, "u3": {"v": 1}, "u4": {"v": 1}}
+
+
 def test_stream_snapshot_upsert_versions_every_batch(spark, tmp_path):
     """Versioned twin of the T4 lakehouse leg: each micro-batch commits
     one snapshot version; earlier versions stay readable (time travel),

@@ -34,6 +34,8 @@ Scale design:
   hands Spark those paths — the table root is never listed, so a
   micro-batch against a 10⁶-file table costs |touched| existence
   probes + the touched files, not an 10⁶-entry listing per batch.
+* The batch is read once: its latest-per-key rows are materialised
+  (``localCheckpoint``) before the touched partitions are collected.
 * The rewrite cost is proportional to the touched partitions' size;
   the anti-join shuffles only those partitions against the batch, and
   AQE broadcast-converts the batch side when it is small.
@@ -159,7 +161,11 @@ def upsert_parquet(
     assumption); keys that genuinely migrate need a record-level index
     or a full-table merge."""
     spark = batch.sparkSession
-    batch = latest_per_key(batch, key_cols)
+    # Materialised once: the touched-partition collect and the write
+    # both read these blocks, so the micro-batch source is scanned once.
+    # Not persist(): building the columnar cache costs more CPU than the
+    # second scan it saves.
+    batch = latest_per_key(batch, key_cols).localCheckpoint(eager=True)
     touched = touched_partitions(batch, partition_col)
 
     # Partition-path-constructed slice: only touched directories are

@@ -7,16 +7,32 @@ and one row is appended after each successful ingest (ua2sql.py:278) —
 *after* the insert commits, giving at-least-once delivery (SURVEY §2.9
 T4).
 
-Here the log is an append-only parquet directory on the driver's local
-filesystem (local paths only, no URIs), read and written with pyarrow on
-the driver: neither operation runs a Spark job. The on-disk format is
-the one the Spark-written log always had, one snappy parquet file of one
-(ts, jobId, jobType) row per job. Reads cast every file to one explicit
-schema, so Spark's INT96 files (naive ``timestamp[ns]``, UTC) and
-tz-aware ones mix. An append writes a dot-prefixed temp file, fsyncs it
-and renames it to ``part-*.parquet``: a crash before the rename leaves
-nothing a reader sees, because dataset discovery skips names starting
-with ``.`` or ``_`` (which also hides ``_SUCCESS`` and ``.crc`` files).
+Here the log is a parquet directory on the driver's local filesystem
+(local paths only, no URIs), read and written with pyarrow on the
+driver: neither operation runs a Spark job. It holds one folded file of
+every (ts, jobId, jobType) row, plus any files a crash or an older
+writer left: Spark's log wrote one snappy parquet file per job. Reads
+cast every file to one explicit schema, so Spark's INT96 files (naive
+``timestamp[ns]``, UTC) and tz-aware ones mix. An append is a fold, as
+Structured Streaming compacts its metadata log so readers open one
+file: it reads the visible files, writes their rows plus the new one to
+a dot-prefixed temp file, fsyncs it, renames it to ``part-*.parquet``,
+fsyncs the directory and only then removes the files it read. The
+file format is unchanged (same schema, plain ``part-*.parquet``), so
+``spark.read.parquet`` and a schema-less ``pyarrow.dataset`` read it.
+
+* A crash before the rename leaves nothing a reader sees, because
+  dataset discovery skips names starting with ``.`` or ``_`` (which
+  also hides ``_SUCCESS`` and ``.crc`` files).
+* A crash after the rename leaves rows duplicated across the new file
+  and the old ones. The max-of-``(ts, jobId)`` lookup gives the same
+  answer, and the next append folds them into one file again.
+* The directory fsync keeps the removals from outliving the rename
+  after a power loss, which would empty the log.
+
+One writer at a time, and no read during an append, as in the
+reference's serial job (ua2sql.py:293-295): an append removes the files
+it read.
 """
 
 from __future__ import annotations
@@ -39,7 +55,7 @@ CHECKPOINT_SCHEMA = pa.schema(
 
 
 class JobIdCheckpoint:
-    """Append-only (ts, jobId, jobType) log with latest-per-type lookup.
+    """(ts, jobId, jobType) log with latest-per-type lookup.
 
     ``spark`` is accepted for signature compatibility and not used: the
     log is driver-local, ``path`` a local directory."""
@@ -67,7 +83,7 @@ class JobIdCheckpoint:
         """Record a completed ingest (reference ua2sql.py:278). Call only
         after the sink write succeeds — checkpoint-after-commit is the
         at-least-once contract (ua2sql.py:274-278). A naive ``ts`` is
-        UTC."""
+        UTC. Folds the log into one new file (module docstring)."""
         ts = ts or datetime.now(timezone.utc)
         if ts.tzinfo is None:
             ts = ts.replace(tzinfo=timezone.utc)
@@ -76,10 +92,19 @@ class JobIdCheckpoint:
             schema=CHECKPOINT_SCHEMA,
         )
         os.makedirs(self.path, exist_ok=True)
+        log = ds.dataset(self.path, schema=CHECKPOINT_SCHEMA, format="parquet")
+        folded = pa.concat_tables([log.to_table(), row])
         name = f"part-{uuid.uuid4()}.snappy.parquet"
         tmp = os.path.join(self.path, f".{name}.tmp")
         with open(tmp, "wb") as f:
-            pq.write_table(row, f, compression="snappy")
+            pq.write_table(folded, f, compression="snappy")
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, os.path.join(self.path, name))
+        fd = os.open(self.path, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
+        for old in log.files:
+            os.remove(old)
