@@ -180,3 +180,63 @@ def test_checkpoint_imports_no_pyspark():
         alias.name for node in ast.walk(tree) if isinstance(node, ast.Import) for alias in node.names
     ] + [node.module or "" for node in ast.walk(tree) if isinstance(node, ast.ImportFrom)]
     assert [m for m in imported if m.split(".")[0] == "pyspark"] == [], imported
+
+
+# ---------------------------------------------------------------------------
+# Schema cache: a repeat load_table of unchanged files reads with the
+# schema inferred last time and runs no Spark job; a rewritten, added or
+# removed file re-infers (stat-listing key, see the catalog docstring).
+# ---------------------------------------------------------------------------
+def _jobs_run_by(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-catalog-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeat_load_table_runs_no_job(spark, tmp_path):
+    sf_dir = _write_events(tmp_path, pa.array(_TS, pa.timestamp("ns")))
+    _write_orders_like(tmp_path)
+    for name in ("events", "orders"):
+        first, jobs = _jobs_run_by(spark, lambda: load_table(spark, sf_dir, name))
+        assert jobs == 1, (name, jobs)  # the schema-inference job
+        again, jobs = _jobs_run_by(spark, lambda: load_table(spark, sf_dir, name))
+        assert jobs == 0, (name, jobs)
+        assert again.schema == first.schema
+        assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_rewritten_events_file_reinfers_schema(spark, tmp_path):
+    """A single-file table rewritten with another ts encoding (new size
+    and mtime) must not be read with the stale schema."""
+    sf_dir = _write_events(tmp_path, pa.array(_TS, pa.timestamp("us")))
+    assert [r["ts"] for r in load_table(spark, sf_dir, "events").orderBy("event_id").collect()] == _TS
+    _write_events(tmp_path, pa.array(_epoch(1), pa.int64()))
+    got = [r["ts"] for r in load_table(spark, sf_dir, "events").orderBy("event_id").collect()]
+    assert got == [t.replace(microsecond=0) for t in _TS]
+
+
+def test_directory_table_file_set_changes_are_seen(spark, tmp_path):
+    table = tmp_path / "orders.parquet"
+    table.mkdir()
+    for i in range(2):
+        pq.write_table(
+            pa.table({"o_orderkey": pa.array([i], pa.int64())}), str(table / f"part-{i}.parquet")
+        )
+    sf_dir = str(tmp_path)
+    assert load_table(spark, sf_dir, "orders").count() == 2
+    pq.write_table(pa.table({"o_orderkey": pa.array([2], pa.int64())}), str(table / "part-2.parquet"))
+    added, jobs = _jobs_run_by(spark, lambda: load_table(spark, sf_dir, "orders"))
+    assert jobs == 1  # a new file set re-infers
+    assert sorted(r[0] for r in added.collect()) == [0, 1, 2]
+    (table / "part-0.parquet").unlink()
+    removed, jobs = _jobs_run_by(spark, lambda: load_table(spark, sf_dir, "orders"))
+    assert jobs == 1
+    assert sorted(r[0] for r in removed.collect()) == [1, 2]

@@ -10,11 +10,26 @@ scan rebalance, whose byte guards are the module constants
 ``_SCAN_REBALANCE_MIN_BYTES`` / ``_SCAN_REBALANCE_MAX_BYTES``; no session
 conf changes what it reads. Manifest-pruned reads of a file subset are
 ``operators.manifest.read_pruned``.
+
+Schema cache: inferring a parquet schema runs one Spark job (it reads
+a footer), 0.14-0.20 s warm, and a repeated query would pay it on every
+call. ``_read_parquet`` remembers the schema it inferred and reads a
+repeat with ``spark.read.schema(s).parquet(path)``, which runs no job.
+The key is the session, the table path, the session's
+``spark.sql.legacy.parquet.nanosAsLong`` value (it changes the inferred
+type of a TIMESTAMP(NANOS) column) and the stat listing of the table's
+data files as (relative name, size, ``st_mtime_ns``). Adding or
+removing a file, or rewriting one so that its size or mtime changes,
+re-infers: the same mtime contract as ``queries.common.fixture_artifact``.
+A rewrite that keeps both size and mtime is not seen. A path that is not
+locally stat-able (an object store) is inferred on every read, as
+before the cache.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -62,34 +77,42 @@ _SCAN_REBALANCE_MIN_BYTES = 256 * 1024
 _SCAN_REBALANCE_MAX_BYTES = 1 << 30
 
 
-def _dir_bytes(path: str) -> tuple[int, int]:
-    """(total_bytes, n_files) for a local file or directory; (0, 0) when
-    the path is not locally stat-able (object store) — the caller then
-    skips rebalance, which is the safe default at cluster scale."""
+def _stat_listing(path: str) -> tuple[tuple[str, int, int], ...] | None:
+    """Sorted (relative name, size, st_mtime_ns) of every data file of
+    the local file or directory table at ``path`` (``_``/``.``-prefixed
+    files skipped, as Spark skips them); a single-file table lists itself
+    under the name ``""``. ``None`` when the path is not locally
+    stat-able (object store, missing path)."""
     try:
         if os.path.isfile(path):
-            return os.path.getsize(path), 1
-        total, n = 0, 0
+            st = os.stat(path)
+            return (("", st.st_size, st.st_mtime_ns),)
+        if not os.path.isdir(path):
+            return None
+        listing = []
         for root, _dirs, files in os.walk(path):
             for f in files:
                 if f.startswith(("_", ".")):
                     continue
-                total += os.path.getsize(os.path.join(root, f))
-                n += 1
-        return total, n
+                full = os.path.join(root, f)
+                st = os.stat(full)
+                listing.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+        return tuple(sorted(listing))
     except OSError:
-        return 0, 0
+        return None
 
 
 def _scan_rebalance(
-    spark: SparkSession, df: DataFrame, path: str, rebalance: bool
+    spark: SparkSession, df: DataFrame, listing: tuple | None, rebalance: bool
 ) -> DataFrame:
-    """Repartition ``df`` to ``defaultParallelism`` when the table at
-    ``path`` has a compute-heavy-small layout (fewer splits than cores,
-    within the byte guards); otherwise return it unchanged."""
-    if not rebalance:
+    """Repartition ``df`` to ``defaultParallelism`` when the table whose
+    ``_stat_listing`` is ``listing`` has a compute-heavy-small layout
+    (fewer splits than cores, within the byte guards); otherwise return
+    it unchanged. A table that is not locally stat-able is never
+    rebalanced, the safe default at cluster scale."""
+    if not rebalance or not listing:
         return df
-    total, n_files = _dir_bytes(path)
+    total, n_files = sum(size for _name, size, _mtime in listing), len(listing)
     if not _SCAN_REBALANCE_MIN_BYTES <= total <= _SCAN_REBALANCE_MAX_BYTES:
         return df
     # The resolved byte value of spark.sql.files.maxPartitionBytes; the
@@ -117,11 +140,36 @@ def load_table(
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = table_path(sf_dir, name)
-    df = _load_events(spark, sf_dir) if name == "events" else spark.read.parquet(path)
-    return _scan_rebalance(spark, df, path, rebalance)
+    listing = _stat_listing(path)
+    if name == "events":
+        df = _load_events(spark, path, listing)
+    else:
+        df = _read_parquet(spark, path, listing)
+    return _scan_rebalance(spark, df, listing, rebalance)
 
 
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+# session -> {table path: ((nanosAsLong, stat listing), schema)}; one
+# entry per path, so a changed listing replaces its stale entry.
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _read_parquet(spark: SparkSession, path: str, listing: tuple | None) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema inferred once per
+    (session, path, nanosAsLong, listing); see the module docstring."""
+    if listing is None:
+        return spark.read.parquet(path)
+    key = (spark.conf.get(_NANOS_AS_LONG, "false"), listing)
+    schemas = _SCHEMAS.setdefault(spark, {})
+    cached = schemas.get(path)
+    if cached is not None and cached[0] == key:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[path] = (key, df.schema)
+    return df
+
+
+def _load_events(spark: SparkSession, path: str, listing: tuple | None) -> DataFrame:
     """Normalise events.ts to TIMESTAMP regardless of how the file encodes it.
 
     Generations of the driver testdata have shipped ts as TIMESTAMP(NANOS)
@@ -147,9 +195,8 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # effect: other TIMESTAMP(NANOS) parquet reads surface as bigint
     # instead of erroring, which is this engine's documented contract
     # for nanos columns anyway (ns→µs handled explicitly, as below).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = table_path(sf_dir, "events")
-    df = spark.read.parquet(path)
+    spark.conf.set(_NANOS_AS_LONG, "true")
+    df = _read_parquet(spark, path, listing)
     ts_type = df.schema["ts"].dataType.simpleString()
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(_bigint_ts_to_micros()))
