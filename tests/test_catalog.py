@@ -166,6 +166,64 @@ def test_engine_reads_no_private_session_conf():
     assert hits == [], hits
 
 
+def test_every_engine_module_is_reached_from_a_root():
+    """Static guard: every module under ``ua2sql_spark/`` is imported,
+    directly or transitively, from a root that runs outside the tests:
+    the reference job (``__main__``), the query registry, the
+    ``__spark_entry__`` contract, ``bench.py`` or ``perfbench``. A
+    module only its own tests reach is dead weight. Whoever adds one
+    wires it to a root or exempts it here with the reason."""
+    import ast
+    import pathlib
+
+    import ua2sql_spark
+
+    pkg = pathlib.Path(ua2sql_spark.__file__).parent
+    repo = pkg.parent
+    # ``plans/`` holds plan-inspection helpers that tests use as checks
+    # on the plans registered queries build; no production path needs them.
+    exempt = ["ua2sql_spark", "plans"]
+
+    def module_name(path):
+        parts = list(path.relative_to(repo).with_suffix("").parts)
+        return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+    modules = {module_name(p): p for p in pkg.rglob("*.py")}
+
+    def imported(name, path):
+        base = name.split(".") if path.name == "__init__.py" else name.split(".")[:-1]
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                yield from (a.name for a in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                mod = node.module or ""
+                if node.level:
+                    mod = ".".join(base[: len(base) - node.level + 1] + ([mod] if mod else []))
+                yield mod
+                yield from (f"{mod}.{a.name}" for a in node.names)
+
+    roots = [
+        pkg / "__main__.py",
+        pkg / "registry.py",
+        repo / "__spark_entry__.py",
+        repo / "bench.py",
+        *sorted((repo / "perfbench").glob("*.py")),
+    ]
+    todo = [(module_name(p), p) for p in roots]
+    reached = {name for name, _ in todo}
+    while todo:
+        name, path = todo.pop()
+        for mod in imported(name, path):
+            parts = mod.split(".")
+            for i in range(1, len(parts) + 1):
+                prefix = ".".join(parts[:i])
+                if prefix in modules and prefix not in reached:
+                    reached.add(prefix)
+                    todo.append((prefix, modules[prefix]))
+    unreached = sorted(m for m in modules.keys() - reached if m.split(".")[:2] != exempt)
+    assert unreached == [], unreached
+
+
 def test_checkpoint_imports_no_pyspark():
     """Static guard: the JobId log is driver-local pyarrow, so
     ``sources/checkpoint.py`` imports nothing from ``pyspark``, at module

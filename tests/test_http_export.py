@@ -266,219 +266,6 @@ def test_failed_download_keeps_checkpoint_and_empty_export_advances(
         server.shutdown()
 
 
-def test_unity_export_datasource(spark):
-    """`spark.read.format('unity_export')`: control plane on the driver
-    (job ensure + fileList), data plane distributed — one file per
-    partition, downloaded/gunzipped/parsed on executors; schema-first
-    projection parity (missing→NULL, JSONB island as JSON text)."""
-    from ua2sql_spark.sources.datasource import UnityExportDataSource
-    from ua2sql_spark.sources.unity import normalize_feed
-
-    rows_a = [
-        {"ts": 1_700_000_000_123, "userid": "a1", "name": "x", "sessionid": 1,
-         "custom_params": {"k": [1, 2]}, "unknown_extra": "dropped"},
-    ]
-    rows_b = [{"ts": 1_700_000_060_000, "userid": "b1", "name": "y"}]
-    rows_c = [{"ts": 1_700_000_120_000, "userid": "c1", "name": "z"}]
-    api = FakeUnityAPI(
-        files={
-            "a.txt.gz": _gz_jsonl(rows_a),
-            "b.txt.gz": _gz_jsonl(rows_b),
-            # uncompressed file: the reader sniffs gzip magic per file
-            "c.txt": "".join(json.dumps(r) + "\n" for r in rows_c).encode(),
-        },
-        polls_until_done=0,
-    )
-    server = ThreadingHTTPServer(("127.0.0.1", 0), _make_handler(api))
-    api.port = server.server_address[1]
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    try:
-        spark.dataSource.register(UnityExportDataSource)
-        df = (
-            spark.read.format("unity_export")
-            .option("base_url", f"http://127.0.0.1:{api.port}")
-            .option("project_id", PROJECT)
-            .option("api_key", API_KEY)
-            .option("feed", "custom")
-            .option("job_id", "job-1")
-            .load()
-        )
-        assert df.rdd.getNumPartitions() == 3  # one task per result file
-        got = {r["userid"]: r for r in df.collect()}
-        assert set(got) == {"a1", "b1", "c1"}
-        assert json.loads(got["a1"]["custom_params"]) == {"k": [1, 2]}
-        assert "unknown_extra" not in df.columns  # extras dropped
-        assert got["b1"]["sessionid"] is None  # missing key → NULL
-        # composes with the landing normalizer: typed timestamps out
-        typed = normalize_feed(df, "custom")
-        a1 = {r["userid"]: r for r in typed.collect()}["a1"]
-        assert a1["ts"].year == 2023 and a1["ts"].microsecond == 123000
-    finally:
-        server.shutdown()
-
-
-class SequencedUnityAPI:
-    """Job-chain fake: each POST hands out the next scripted job (or 500
-    when exhausted — the API's 'nothing to export'); every scripted job
-    is immediately 'completed' with its own fileList."""
-
-    def __init__(self, jobs: list[tuple[str, dict[str, bytes]]]):
-        self.jobs = dict(jobs)
-        self.queue = [jid for jid, _ in jobs]
-        self.create_bodies: list[dict] = []
-        self.port = 0
-
-    def handler(self):
-        api = self
-
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
-            def _send(self, code, payload, ctype="application/json"):
-                self.send_response(code)
-                self.send_header("content-type", ctype)
-                self.send_header("content-length", str(len(payload)))
-                self.end_headers()
-                self.wfile.write(payload)
-
-            def do_POST(self):
-                n = int(self.headers.get("content-length", 0))
-                api.create_bodies.append(json.loads(self.rfile.read(n)))
-                if not api.queue:
-                    return self._send(500, b"{}")
-                self._send(200, json.dumps({"id": api.queue.pop(0)}).encode())
-
-            def do_GET(self):
-                if "/files/" in self.path:
-                    _, rest = self.path.split("/files/", 1)
-                    jid, name = rest.split("/", 1)
-                    return self._send(
-                        200, api.jobs[jid][name], ctype="application/octet-stream"
-                    )
-                jid = self.path.rsplit("/", 1)[1]
-                if jid not in api.jobs:
-                    return self._send(404, b"{}")
-                body = {
-                    "id": jid,
-                    "status": "completed",
-                    "result": {
-                        "fileList": [
-                            {
-                                "name": name,
-                                "url": f"http://127.0.0.1:{api.port}/files/{jid}/{name}",
-                            }
-                            for name in api.jobs[jid]
-                        ]
-                    },
-                }
-                self._send(200, json.dumps(body).encode())
-
-        return Handler
-
-
-def test_unity_export_jobs_stream(spark, tmp_path):
-    """Streaming leg e2e (T1/T3 as a DataSource): offsets are the
-    continueFrom job chain; manifests parse distributed via
-    mapInPandas; a query restart resumes from the checkpointed job id,
-    not from scratch."""
-    import time as _time
-
-    from ua2sql_spark.sources.datasource import (
-        UnityExportJobsDataSource,
-        parse_export_manifest,
-    )
-
-    api = SequencedUnityAPI(
-        [
-            ("job-1", {
-                "a.txt.gz": _gz_jsonl(
-                    [{"ts": 1_700_000_000_123, "userid": "u1", "name": "x",
-                      "custom_params": {"k": 1}}]
-                ),
-                "b.txt.gz": _gz_jsonl(
-                    [{"ts": 1_700_000_060_000, "userid": "u2", "name": "y"}]
-                ),
-            }),
-            ("job-2", {
-                "c.txt.gz": _gz_jsonl(
-                    [{"ts": 1_700_000_120_000, "userid": "u3", "name": "z"}]
-                ),
-            }),
-        ]
-    )
-    server = ThreadingHTTPServer(("127.0.0.1", 0), api.handler())
-    api.port = server.server_address[1]
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    spark.dataSource.register(UnityExportJobsDataSource)
-
-    out = str(tmp_path / "out")
-
-    def start_query():
-        manifests = (
-            spark.readStream.format("unity_export_jobs")
-            .option("base_url", f"http://127.0.0.1:{api.port}")
-            .option("project_id", PROJECT)
-            .option("api_key", API_KEY)
-            .option("feed", "custom")
-            .option("poll_interval_s", "0.01")
-            .load()
-        )
-        return (
-            parse_export_manifest(manifests, "custom")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / "cp"))
-            .trigger(processingTime="50 milliseconds")
-            .start()
-        )
-
-    def wait_rows(n, timeout=60):
-        from ua2sql_spark.sources.unity import raw_schema
-
-        deadline = _time.monotonic() + timeout
-        got = []
-        while _time.monotonic() < deadline:
-            try:
-                got = (
-                    spark.read.schema(raw_schema("custom"))
-                    .parquet(out)
-                    .select("userid")
-                    .collect()
-                )
-            except Exception:
-                got = []
-            if len(got) >= n:
-                return {r["userid"] for r in got}
-            _time.sleep(0.1)
-        raise AssertionError(f"wanted {n} rows, got {got}")
-
-    try:
-        q = start_query()
-        assert wait_rows(3) == {"u1", "u2", "u3"}
-        q.stop()
-        # first create was a fresh backfill; second resumed the chain
-        assert "continueFrom" not in api.create_bodies[0]
-        assert api.create_bodies[1]["continueFrom"] == "job-1"
-        # restart from the same checkpoint: a new job appears; the query
-        # must resume with continueFrom=job-2, not re-read the chain
-        api.jobs["job-3"] = {
-            "d.txt.gz": _gz_jsonl(
-                [{"ts": 1_700_000_180_000, "userid": "u4", "name": "w"}]
-            )
-        }
-        api.queue.append("job-3")
-        api.create_bodies.clear()
-        q = start_query()
-        assert wait_rows(4) == {"u1", "u2", "u3", "u4"}
-        q.stop()
-        assert api.create_bodies[0]["continueFrom"] == "job-2"
-    finally:
-        for query in spark.streams.active:
-            query.stop()
-        server.shutdown()
-
-
 # ---- S11 config scan ----
 
 GOOD = {

@@ -614,96 +614,3 @@ def test_export_jsonl_gz_roundtrip(spark, tmp_path):
     assert {r["doc_id"] for r in back.collect()} == {
         r["doc_id"] for r in d.collect()
     }
-
-
-def test_unity_backup_writer_atomic_commit(spark, tmp_path):
-    """Python DataSource WRITER leg: tasks stage hidden shards, the
-    driver's commit publishes them + a manifest atomically; overwrite
-    replaces prior shards; abort leaves nothing visible. Read-back via
-    Spark's JSON reader must reproduce the rows exactly."""
-    import gzip
-    import json
-    import os
-
-    from ua2sql_spark.sources.datasource import (
-        UnityBackupDataSource,
-        UnityBackupWriter,
-        _BackupCommit,
-    )
-
-    spark.dataSource.register(UnityBackupDataSource)
-    path = str(tmp_path / "backup")
-    df = spark.range(100).selectExpr("id", "id * 3 AS v").repartition(4)
-    df.write.format("unity_backup").option("path", path).mode("append").save()
-
-    files = sorted(os.listdir(path))
-    parts = [f for f in files if f.startswith("part-")]
-    assert len(parts) == 4 and "_MANIFEST.json" in files
-    assert not [f for f in files if f.startswith(".staged")]
-    manifest = json.load(open(os.path.join(path, "_MANIFEST.json")))
-    assert manifest["total_rows"] == 100
-    assert sum(s["rows"] for s in manifest["shards"]) == 100
-
-    back = spark.read.json(os.path.join(path, "part-*.jsonl.gz"))
-    got = {(r["id"], r["v"]) for r in back.collect()}
-    assert got == {(i, i * 3) for i in range(100)}
-
-    # overwrite: fewer tasks -> old shards must not survive
-    df2 = spark.range(10).selectExpr("id", "id AS v").repartition(1)
-    df2.write.format("unity_backup").option("path", path).mode("overwrite").save()
-    parts2 = [f for f in sorted(os.listdir(path)) if f.startswith("part-")]
-    assert len(parts2) == 1
-    assert json.load(open(os.path.join(path, "_MANIFEST.json")))["total_rows"] == 10
-
-    # overwrite never renumbers from zero: shard names always extend
-    # past the highest prior index, so a crash mid-publication can
-    # never clobber a file the live manifest still references — the
-    # surviving shard is the one the manifest names
-    man2 = json.load(open(os.path.join(path, "_MANIFEST.json")))
-    assert [s["file"] for s in man2["shards"]] == parts2
-
-    # append after overwrite must EXTEND: new shards number past the
-    # existing ones, the manifest unions prior + new
-    df3 = spark.range(5).selectExpr("id", "id AS v").repartition(1)
-    df3.write.format("unity_backup").option("path", path).mode("append").save()
-    parts3 = [f for f in sorted(os.listdir(path)) if f.startswith("part-")]
-    assert len(parts3) == 2 and parts3[0] == parts2[0]
-    assert int(parts3[1].split("-")[1].split(".")[0]) > int(
-        parts3[0].split("-")[1].split(".")[0]
-    )
-    man3 = json.load(open(os.path.join(path, "_MANIFEST.json")))
-    assert man3["total_rows"] == 15 and len(man3["shards"]) == 2
-    assert [s["file"] for s in man3["shards"]] == parts3
-
-    # a .staged leftover from a task that never returned a commit
-    # message (failed/speculated) is swept by the next commit
-    stray = os.path.join(path, ".staged-0rphan.jsonl.gz")
-    with gzip.open(stray, "wt") as fh:
-        fh.write("{}\n")
-    spark.range(1).selectExpr("id", "id AS v").repartition(1).write.format(
-        "unity_backup"
-    ).option("path", path).mode("append").save()
-    assert not os.path.exists(stray)
-
-    # abort sweeps staged files and publishes nothing
-    staged = os.path.join(path, ".staged-deadbeef.jsonl.gz")
-    with gzip.open(staged, "wt") as fh:
-        fh.write("{}\n")
-    UnityBackupWriter(path, overwrite=False).abort(
-        [_BackupCommit(staged=staged, rows=1)]
-    )
-    assert not os.path.exists(staged)
-    assert len([f for f in os.listdir(path) if f.startswith("part-")]) == 3
-
-
-def test_unity_backup_abort_before_any_write(tmp_path):
-    """Regression (round-6 review): abort() can fire before any task
-    created the target directory (upstream stage failure) — the staged
-    sweep must not raise FileNotFoundError and mask the real error."""
-    from ua2sql_spark.sources.datasource import UnityBackupWriter
-
-    missing = str(tmp_path / "never-created")
-    UnityBackupWriter(missing, overwrite=False).abort([])  # must not raise
-    import os
-
-    assert not os.path.exists(missing)

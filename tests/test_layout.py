@@ -338,30 +338,6 @@ def test_vacuum_orphans_deletes_only_aged_unreferenced(spark, tmp_path):
     manifest.unpersist()
 
 
-def test_write_with_bloom_adds_filters(spark, tmp_path):
-    """The bloom writer must actually emit filter bitsets (file grows
-    by roughly the filter size; content identical), giving readers
-    row-group skipping on equality probes over non-clustered keys."""
-    import glob
-    import os
-
-    from ua2sql_spark.operators.layout import write_with_bloom
-
-    df = spark.range(200_000).selectExpr("id AS k", "id * 2 AS v")
-    plain, bloomed = str(tmp_path / "plain"), str(tmp_path / "bloomed")
-    df.coalesce(1).write.parquet(plain)
-    write_with_bloom(df.coalesce(1), bloomed, ["k"], ndv=200_000)
-
-    size = lambda p: sum(
-        os.path.getsize(f) for f in glob.glob(p + "/*.parquet")
-    )
-    # ndv=200k at the default FPP needs >100 KiB of bitset; plain and
-    # bloomed files hold identical data otherwise.
-    assert size(bloomed) - size(plain) > 100 * 1024, (size(plain), size(bloomed))
-    got = spark.read.parquet(bloomed).orderBy("k").collect()
-    assert len(got) == 200_000 and got[17]["v"] == 34
-
-
 def test_manifest_keeps_stats_less_files(spark, tmp_path):
     """Files whose columns carry no statistics must surface as NULL
     min/max in the manifest and be conservatively KEPT by prune_files —

@@ -1033,53 +1033,6 @@ def test_delete_cow_compliance_path(spark, tmp_path):
     assert {r["id"] for r in read_snapshot(spark, path).collect()} == {2, 4}
 
 
-def test_cluster_snapshot_zorder_enables_pruned_reads(spark, tmp_path):
-    """OPTIMIZE ZORDER over the snapshot store: rows identical, prior
-    version intact, and the rewritten files' committed stats let
-    read_snapshot(where=...) prune files on EITHER interleaved column."""
-    from ua2sql_spark.operators.manifest import prune_files
-    from ua2sql_spark.operators.snapshot import (
-        cluster_snapshot,
-        read_manifest,
-        read_snapshot,
-        snapshot_stats,
-        upsert_cow,
-    )
-
-    path = str(tmp_path / "tbl")
-    # a and b interleave badly in insertion order: every file in the
-    # original layout spans the full range of both
-    rows = [
-        (i, "d1" if i % 2 == 0 else "d2", (i * 37) % 1000, (i * 61) % 1000)
-        for i in range(4000)
-    ]
-    df = spark.createDataFrame(rows, "id bigint, day string, a bigint, b bigint")
-    upsert_cow(df.repartition(8), path, ["id"], "day", stats_cols=["a", "b"])
-
-    before = {(r["id"]) for r in read_snapshot(spark, path, 0).collect()}
-    v = cluster_snapshot(spark, path, "day", ["a", "b"], total_files=16)
-    assert v == 1
-    after = {(r["id"]) for r in read_snapshot(spark, path, 1).collect()}
-    assert after == before
-    assert {r["id"] for r in read_snapshot(spark, path, 0).collect()} == before
-
-    s1 = snapshot_stats(spark, path, 1)
-    files1 = {r["file"] for r in read_manifest(spark, path, 1).collect()}
-    assert {r["file"] for r in s1.select("file").distinct().collect()} == files1
-
-    # narrow predicates on EITHER column prune strictly, and pruned
-    # reads stay exact
-    for col in ("a", "b"):
-        kept = prune_files(s1, col, 0, 49)
-        assert kept is not None and 0 < len(kept) < len(files1), (col, len(kept) if kept else None, len(files1))
-        exact = {r["id"] for r in df.filter(F.col(col).between(0, 49)).collect()}
-        got = {
-            r["id"]
-            for r in read_snapshot(spark, path, 1, where=(col, 0, 49)).collect()
-        }
-        assert got == exact, col
-
-
 def test_stats_coverage_is_judged_per_column(spark, tmp_path):
     """ADVICE r8 high: a file whose stats rows cover only OTHER columns
     must be conservatively KEPT when pruning on a column it has no

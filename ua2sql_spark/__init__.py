@@ -11,7 +11,7 @@ Analytics event feeds into PostgreSQL) as an idiomatic Spark engine:
   and a checkpoint ("JobId") protocol (``ua2sql.py:165-176, 278``).
 * **Streaming** (``ua2sql_spark.streaming``): the same pipeline as
   Structured Streaming — file source over a landing dir, foreachBatch JDBC
-  sink, checkpointLocation replacing the JobId table, watermarks/windows.
+  sink, checkpointLocation replacing the JobId table.
 * **Analytics surface** (``ua2sql_spark.queries``): the full relational
   query surface the reference exists to enable (joins, aggregations,
   windows, sorts, set ops, JSON payload querying) plus LLM-data-pipeline

@@ -464,13 +464,6 @@ def resize_image_real(payload: bytes, target_long_side: int) -> bytes:
     return f"{magic}\n{new_w} {new_h}\n{maxval}\n".encode() + bytes(out)
 
 
-def resize_real(width: int, height: int, target_long_side: int) -> tuple[int, int]:
-    """Metadata-only resize of an already-decoded raster — kept for the
-    historical seam; `resize_image_real` does the full pixel resample
-    for netpbm payloads, `resize_dims` the pure arithmetic."""
-    return resize_dims(width, height, target_long_side)
-
-
 def resize_dims(width: int, height: int, target_long_side: int) -> tuple[int, int]:
     """Aspect-preserving integer resize arithmetic (floor), long side
     clamped to ``target_long_side``; never upscales."""

@@ -83,52 +83,6 @@ def build_bloom_index(
     )
 
 
-def save_bloom_index(
-    fps: DataFrame,
-    path: str,
-    fp_col: str,
-    n_shards: int = 4,
-    m_bits: int = 1 << 14,
-    k: int = 3,
-) -> None:
-    """Persist the bloom as an APPEND-ONLY word log: ``words/`` holds
-    (shard, word_idx, bits) rows, ``params/`` pins the geometry.
-    Blooms are OR-mergeable, so growth is an append of the new batch's
-    words and readers aggregate ``bit_or(bits)`` per (shard, word_idx)
-    — a config-bounded aggregation, never a read-modify-write (no
-    transaction needed; a replayed append ORs in bits already set)."""
-    spark = fps.sparkSession
-    build_bloom_index(fps, fp_col, n_shards, m_bits, k).write.mode(
-        "overwrite"
-    ).parquet(path + "/words")
-    spark.createDataFrame(
-        [(n_shards, m_bits, k)], "n_shards int, m_bits int, k int"
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/params")
-
-
-def append_bloom_index(fps: DataFrame, path: str, fp_col: str) -> None:
-    """OR a new batch's fingerprints into a saved bloom (geometry from
-    the params sidecar). Append-only and replay-idempotent — see
-    :func:`save_bloom_index`."""
-    spark = fps.sparkSession
-    p = spark.read.parquet(path + "/params").collect()[0]
-    build_bloom_index(
-        fps, fp_col, p["n_shards"], p["m_bits"], p["k"]
-    ).write.mode("append").parquet(path + "/words")
-
-
-def load_bloom_words(spark, path: str):
-    """(aggregated bloom words, params Row) for a saved bloom — the
-    bit_or fold over the append log happens here, once per load."""
-    p = spark.read.parquet(path + "/params").collect()[0]
-    words = (
-        spark.read.parquet(path + "/words")
-        .groupBy("shard", "word_idx")
-        .agg(F.bit_or("bits").alias("bits"))
-    )
-    return words, p
-
-
 def bloom_maybe(
     batch: DataFrame,
     bloom_words: DataFrame,

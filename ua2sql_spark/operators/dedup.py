@@ -561,9 +561,7 @@ def probe_lsh_index(
     band rows collide, with ``sig_agree`` = number of matching minhash
     components and ``n_bands`` = number of DISTINCT bands that collided
     (callers can pre-rank or pre-filter candidates before their exact
-    verify tier without touching the historical text; ``n_bands`` also
-    distinguishes a fully-indexed replay from a crash-truncated partial
-    append — see streaming/dedup_ingest.neardup_ingest_batch).
+    verify tier without touching the historical text).
 
     The probed (band_no, band_bucket) keys are collected driver-side —
     bounded by num_bands x num_buckets (a config-sized set, NOT the

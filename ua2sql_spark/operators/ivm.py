@@ -1,18 +1,18 @@
 """Incremental view maintenance from a change feed.
 
-``streaming/rollup.py`` maintains standing aggregates from APPEND-ONLY
-batches — correct for immutable event streams, wrong the moment the
-base table supports updates/deletes (which ``operators/snapshot.py``'s
-MERGE does). This module closes that gap with the differential rule:
-every change-feed row carries a sign (+1 for insert/update_postimage,
--1 for delete/update_preimage), so the aggregate DELTA per group is a
-plain signed sum and the refreshed view is ``old + delta`` — updates
-and deletes maintain COUNT/SUM views exactly, without ever re-reading
-the base table.
+Standing aggregates folded from APPEND-ONLY batches are correct for
+immutable event streams and wrong the moment the base table supports
+updates/deletes (which ``operators/snapshot.py``'s MERGE does). This
+module maintains them with the differential rule: every change-feed
+row carries a sign (+1 for insert/update_postimage, -1 for
+delete/update_preimage), so the aggregate DELTA per group is a plain
+signed sum and the refreshed view is ``old + delta`` — updates and
+deletes maintain COUNT/SUM views exactly, without ever re-reading the
+base table.
 
 Reference provenance: the reference delegates all aggregation to
 PostgreSQL (README.md:28); at 100 TB a standing view must refresh from
-deltas. This is the CDF-consumer counterpart of the rollup sink.
+deltas, consuming the snapshot store's change feed (CDF).
 
 Design (the 100 TB argument):
 

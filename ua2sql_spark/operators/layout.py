@@ -372,28 +372,3 @@ def vacuum_orphans(
         if not dry_run:
             fs.delete(p, False)
     return sorted(orphans)
-
-
-def write_with_bloom(
-    df: DataFrame,
-    path: str,
-    bloom_cols: list[str],
-    ndv: int = 1_000_000,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet with per-column BLOOM FILTERS — the point-lookup
-    layout lever: for equality predicates on a high-cardinality
-    non-sort column (where min/max stats are useless because every
-    file spans the whole key range), the reader tests the row-group's
-    bloom filter and skips groups that cannot contain the key. This is
-    the complement to clustering (`write_clustered` makes min/max
-    effective for ONE ordering) — blooms buy skipping on the OTHER
-    lookup keys at ~1 byte/value. Readers apply them transparently
-    (parquet-mr row-group filtering under pushed equality predicates);
-    writers must opt in, which is exactly what this helper pins.
-    """
-    w = df.write.mode(mode)
-    for c in bloom_cols:
-        w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
-        w = w.option(f"parquet.bloom.filter.expected.ndv#{c}", str(ndv))
-    w.parquet(path)

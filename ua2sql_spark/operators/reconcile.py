@@ -261,28 +261,3 @@ def repair_from_reference(
                 spark, snap_path, extra, partition_col, key_cols=key_cols
             )
     return {"upserted": n_upsert, "deleted": n_delete}
-
-
-def schema_drift_report(spark, left: DataFrame, right: DataFrame) -> DataFrame:
-    """Metadata-level companion to the row-level diff: per column,
-    whether it exists on both sides and whether the types agree — the
-    check to run BEFORE :func:`reconcile_tables`, because a dropped or
-    re-typed column silently narrows the row diff's default compare
-    set (shared columns only). Pure driver-side schema walk rendered
-    as a DataFrame so audits can union/persist it; no data is read."""
-    lt = {f.name: f.dataType.simpleString() for f in left.schema.fields}
-    rt = {f.name: f.dataType.simpleString() for f in right.schema.fields}
-    rows = []
-    for c in sorted(set(lt) | set(rt)):
-        if c not in rt:
-            status = ONLY_LEFT
-        elif c not in lt:
-            status = ONLY_RIGHT
-        elif lt[c] != rt[c]:
-            status = "type_mismatch"
-        else:
-            status = "match"
-        rows.append((c, status, lt.get(c), rt.get(c)))
-    return spark.createDataFrame(
-        rows, "column string, status string, left_type string, right_type string"
-    )

@@ -427,7 +427,7 @@ def _commit_manifest(
     ``constraints`` (name -> SQL predicate) persists the table's CHECK
     invariants as another sidecar. ``None`` means "carry the previous
     latest version's constraints unchanged" — so metadata-oblivious
-    commits (delete, compact, rollback, cluster) can never silently
+    commits (delete, compact, rollback) can never silently
     drop the table's invariants; pass a dict (possibly empty) to set
     the constraint set explicitly."""
     import json as _json
@@ -962,18 +962,6 @@ def delete_cow(
     return version, n_deleted
 
 
-def snapshot_upsert_sink(path: str, key_cols: list[str], partition_col: str):
-    """``foreachBatch`` closure over :func:`upsert_cow` — the versioned
-    twin of ``merge.parquet_upsert_sink``: every micro-batch commits one
-    snapshot version, so the stream's table history is replayable and
-    each training run can pin the exact version it read."""
-
-    def _sink(df: DataFrame, epoch_id: int) -> None:
-        upsert_cow(df, path, key_cols=key_cols, partition_col=partition_col)
-
-    return _sink
-
-
 def rollback(spark: SparkSession, path: str, to_version: int) -> int:
     """Restore the table to an earlier version by committing a NEW
     version whose manifest equals the old one — manifest-only, zero
@@ -1179,68 +1167,6 @@ def compact_snapshot(
         stats_df=stats_df,
     )
     return version, sorted(p for p, _ in frag)
-
-
-def cluster_snapshot(
-    spark: SparkSession,
-    path: str,
-    partition_col: str,
-    zorder_cols: list[str],
-    total_files: int = 32,
-) -> int:
-    """OPTIMIZE ZORDER for the snapshot store: rewrite the LATEST
-    version's rows clustered on the Morton code of ``zorder_cols``
-    (``layout.zorder_column``), committed as a new version with fresh
-    per-file stats — the pairing that makes ``read_snapshot(where=...)``
-    skip files for predicates on ANY interleaved column.
-
-    One range exchange on (partition, z) + local sort, one partitioned
-    write job, one manifest commit; no global sort. Copy-on-write like
-    everything here: prior versions stay readable until vacuumed.
-    Returns the new version."""
-    from ua2sql_spark.operators.layout import zorder_column
-    from ua2sql_spark.operators.manifest import file_stats
-
-    prev = latest_version(spark, path)
-    if prev is None:
-        raise ValueError(f"no snapshots under {path}")
-    manifest = read_manifest(spark, path, prev)
-    part_dirs = [r["partition"] for r in manifest.select("partition").distinct().collect()]
-    df = read_snapshot(spark, path, prev)
-    out = (
-        df.withColumn("__z", zorder_column(*zorder_cols))
-        .repartitionByRange(total_files, F.col(partition_col), F.col("__z"))
-        .sortWithinPartitions(partition_col, "__z")
-        .drop("__z")
-    )
-    before = _list_partition_files(spark, path, part_dirs)
-    out.write.mode("append").partitionBy(partition_col).parquet(path)
-    after = _list_partition_files(spark, path, part_dirs)
-    new_files = _manifest_rows_with_counts(
-        spark, [(f, part) for f, (part, _sz) in after.items() if f not in before]
-    )
-    version = prev + 1
-    # stats over the zorder columns are the entire point of the rewrite;
-    # keep any previously-stats'd columns too
-    prev_stats = snapshot_stats(spark, path, prev)
-    cols = list(zorder_cols)
-    if prev_stats is not None:
-        cols = sorted(
-            set(cols)
-            | {r["col"] for r in prev_stats.select("col").distinct().collect()}
-        )
-    stats_df = file_stats(spark, [f for f, _p, _rc in new_files], cols)
-    _commit_manifest(
-        spark,
-        path,
-        version,
-        new_files,
-        operation="OPTIMIZE_ZORDER",
-        op_metrics={"files_written": len(new_files)},
-        table_schema=table_schema(spark, path, prev),
-        stats_df=stats_df,
-    )
-    return version
 
 
 def snapshot_changes(

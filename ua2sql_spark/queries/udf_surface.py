@@ -1,8 +1,7 @@
 """The full Python-execution surface of SURVEY §2.10, one oracle-checked
 query per API: scalar ``pandas_udf`` (x73), grouped-agg ``pandas_udf``
 (x74), ``mapInArrow`` (x75), Python UDTF (x76), grouped-map
-``applyInPandas`` (x77). ``mapInPandas`` is x53 (multimodal) and
-``applyInPandasWithState`` lives in ``streaming/stateful.py``.
+``applyInPandas`` (x77). ``mapInPandas`` is x53 (multimodal).
 
 Engine policy (SURVEY §2.10): the *hot path* is always native column
 expressions — every query here deliberately computes something that is

@@ -1,4 +1,4 @@
-"""Streaming ingest + event-time operators (SURVEY §2.9 T1–T10).
+"""Streaming ingest (SURVEY §2.9 T1–T4).
 
 The reference is a poll-based micro-batch consumer: request export,
 poll, land files, insert, record offset in the JobId table
@@ -11,9 +11,6 @@ poll, land files, insert, record offset in the JobId table
   README.md:30) — drain everything new, then stop
 * ``foreachBatch`` = the batched JDBC insert (S7); at-least-once by
   default, same as the reference's checkpoint-after-commit (T4)
-
-T7–T10 (watermarks, windows, session windows, stateful dedup) extend
-past the reference, which delegates lateness to Unity's export cutoff.
 """
 
 from __future__ import annotations
@@ -21,7 +18,6 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ua2sql_spark.sources.unity import read_feed_stream
@@ -51,101 +47,3 @@ def stream_feed(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str | None = None,
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
-    """T7/T8: watermarked tumbling/sliding window aggregation. Late rows
-    beyond ``watermark`` are dropped (state is bounded — the 100 TB
-    requirement for unbounded streams)."""
-    win = F.window(ts_col, window, slide) if slide else F.window(ts_col, window)
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(win.alias("w"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            key_col,
-            "n_events",
-        )
-    )
-
-
-def session_windows(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """T9: gap-based session windows. The reference's feeds arrive
-    pre-sessionized by Unity (`sessionid`, ua2sql.py:62); this computes
-    the same thing engine-side for sources that don't."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("w"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            key_col,
-            "n_events",
-        )
-    )
-
-
-def stream_stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    within: str = "10 minutes",
-    left_watermark: str = "1 hour",
-    right_watermark: str = "1 hour",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream join with a time-bound correlation: a right row
-    matches a left row with the same ``key`` whose timestamp falls in
-    ``[left_ts, left_ts + within]`` (the impression→click attribution
-    shape). ``how="leftOuter"`` additionally emits each unmatched left row
-    (NULL right side) once the watermark passes its join window — the
-    "impressions that never converted" output, which only becomes safe
-    to emit when no matching click can still arrive.
-
-    Bounded state is the 100 TB requirement: the watermarks on *both*
-    inputs plus the two-sided time-range condition let Spark evict
-    buffered rows once the watermark passes ``left_ts + within`` —
-    without them, each side's join state grows forever (and outer
-    results could never be emitted at all). The join itself shuffles
-    both streams on ``key``, the same hash partitioning a batch
-    equi-join would use."""
-    l = left.withWatermark(left_ts, left_watermark).alias("l")
-    r = right.withWatermark(right_ts, right_watermark).alias("r")
-    lt, rt = F.col(f"l.{left_ts}"), F.col(f"r.{right_ts}")
-    cond = (
-        (F.col(f"l.{key}") == F.col(f"r.{key}"))
-        & (rt >= lt)
-        & (rt <= lt + F.expr(f"INTERVAL {within}"))
-    )
-    return l.join(r, cond, how)
-
-
-def dedup_within_watermark(
-    events: DataFrame,
-    keys: list[str],
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """T10/T4 upgrade path: drop re-delivered rows inside the watermark
-    horizon — bounded-state idempotency for the at-least-once feeds
-    (the natural key for the reference's schema is
-    (userid, sessionid, ts, name), SURVEY §2.9 T4)."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
