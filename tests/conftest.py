@@ -19,25 +19,21 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-# --- Two test lanes (r15, VERDICT r14 #1) ------------------------------
-# The suite grew to 550 tests / 44-54 min, which outruns the driver's
-# verify window — VERIFY_r14 truncated at 65% and the driver lost its
-# only independent test signal. Split: the DEFAULT lane (plain
-# `pytest tests/`, what the driver runs) must finish well under 15 min
-# and keeps full per-family coverage — every operator family, every
-# plan pin, the DRIVER_WINDOW oracle rows, the meta/contract tests.
-# Tests marked `slow` — exhaustive sweeps whose per-row logic a default
-# representative already exercises (below-fold oracle rows, long
-# property suites, multi-minute snapshot/stream soaks) — run only in
-# the builder lane: SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/.
+# --- Two test lanes ---------------------------------------------------
+# The DEFAULT lane (plain `pytest tests/`) must finish well under 15 min.
+# It runs every registered query against its DuckDB oracle, every
+# operator family, every plan pin and the meta/contract tests. The tests
+# named in SLOW_LANE_TESTS — exhaustive sweeps, long property suites and
+# multi-minute snapshot/stream soaks whose core logic a default-lane test
+# or an oracle row already exercises — run only in the full lane:
+# SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/.
 FULL_TESTS = os.environ.get("SPARK_GRAFT_FULL_TESTS", "") == "1"
 
-# Central slow-lane roster (besides per-test `slow` marks, e.g.
-# test_oracle's below-fold parametrization). Chosen from the r15 full
-# run's --durations=0 (550 tests, 53.5 min): every entry is an
-# exhaustive sweep, soak, or brute-force differential whose operator
-# logic a default-lane representative (or a DRIVER_WINDOW oracle row)
-# still exercises end-to-end. Kept representatives noted inline.
+# Slow-lane roster, chosen from a full run's --durations=0 (550 tests,
+# 53.5 min): every entry is an exhaustive sweep, soak, or brute-force
+# differential whose operator logic a default-lane representative (or an
+# oracle row) still exercises end-to-end. Kept representatives noted
+# inline.
 SLOW_LANE_TESTS = {
     # -- operators_property: brute-force differentials > 18 s
     #    (kept: test_minhash_verify_branches_agree — pins the r15 size
@@ -54,9 +50,9 @@ SLOW_LANE_TESTS = {
     #    test_check_constraints_enforced_persisted_and_dropped, the one
     #    check that a persisted constraint stops a later upsert; plus
     #    every sub-15 s semantics test; the x200/x201/x204/x206/x208/
-    #    x212 oracle rows cover these paths e2e in the driver gate)
+    #    x212 oracle rows cover these paths e2e in the default lane)
     "test_snapshot.py::test_incremental_view_maintenance_matches_rebuild",
-    "test_snapshot.py::test_changes_since_and_cursor_resume",
+    "test_snapshot.py::test_changes_since_tags_commits_and_resumes",
     "test_snapshot.py::test_change_feed_reconstructs_any_version",
     "test_snapshot.py::test_add_constraint_validates_existing_rows",
     "test_snapshot.py::test_manifest_records_exact_row_counts",
@@ -95,7 +91,6 @@ SLOW_LANE_TESTS = {
     "test_snapshot.py::test_delete_cow_accepts_keys_dataframe",
     "test_snapshot.py::test_snapshot_changes_detects_evolved_column_only_updates",
     "test_snapshot.py::test_schema_evolution_across_versions",
-    "test_snapshot.py::test_cursor_migrates_legacy_file_checkpoint",
     "test_snapshot.py::test_snapshot_changes_row_level_cdf",
     "test_snapshot.py::test_vacuum_retention_respects_retained_snapshots",
     "test_operators_property.py::test_lsh_index_probe_rejects_same_named_different_tokenizer",
@@ -108,23 +103,15 @@ SLOW_LANE_TESTS = {
 }
 
 
-def pytest_configure(config):
-    config.addinivalue_line(
-        "markers",
-        "slow: builder-lane test (exhaustive sweep/soak); skipped in the"
-        " default lane, run with SPARK_GRAFT_FULL_TESTS=1",
-    )
-
-
 def pytest_collection_modifyitems(config, items):
     if FULL_TESTS:
         return
     skip = pytest.mark.skip(
-        reason="builder slow lane (SPARK_GRAFT_FULL_TESTS=1 to run)"
+        reason="slow lane (SPARK_GRAFT_FULL_TESTS=1 to run)"
     )
     for item in items:
         base = item.nodeid.rsplit("/", 1)[-1].split("[", 1)[0]
-        if "slow" in item.keywords or base in SLOW_LANE_TESTS:
+        if base in SLOW_LANE_TESTS:
             item.add_marker(skip)
 
 
@@ -149,7 +136,7 @@ def duck():
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    """Canonical form mirroring the driver's order-insensitive compare:
+    """Canonical form for the order-insensitive oracle compare:
     columns sorted by name, dtypes widened, rows sorted by stringified value."""
     df = df[sorted(df.columns)].copy()
     for c in df.columns:

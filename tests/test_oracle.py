@@ -1,7 +1,8 @@
 """Differential tests: every registered query vs its DuckDB oracle.
 
-This mirrors the driver's correctness gate (SURVEY.md §5.1) at sf0.001
-so regressions surface locally before a round runs.
+Every query in the registry runs on Spark and its oracle SQL runs on
+DuckDB over the same sf0.001 parquet tables; the two must agree on row
+count, column names and every value at ``rtol=0, atol=0``.
 """
 
 from __future__ import annotations
@@ -10,48 +11,22 @@ import os
 
 import pytest
 
-from ua2sql_spark.registry import DRIVER_WINDOW, all_queries
-from tests.conftest import SF_DIR, TABLES, assert_oracle_match
+from ua2sql_spark.registry import all_queries
+from tests.conftest import TABLES, assert_oracle_match
 
 SPECS = all_queries()
 WITH_ORACLE = [name for name, spec in SPECS.items() if spec.oracle is not None]
-ROWS_ONLY = [name for name, spec in SPECS.items() if spec.oracle is None]
-
-# Lane split (r15, VERDICT r14 #1): the default lane runs exactly what
-# the driver's correctness gate samples — the 50 DRIVER_WINDOW rows —
-# plus every meta/contract test below; the other ~176 below-fold rows
-# (each one driver-green in a past round, re-scheduled by the rotation)
-# run in the builder lane. The FULL registry sweep remains one command:
-# SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/test_oracle.py
-_ORACLE_PARAMS = [
-    name
-    if name in DRIVER_WINDOW
-    else pytest.param(name, marks=pytest.mark.slow)
-    for name in WITH_ORACLE
-]
 
 
-@pytest.mark.parametrize("name", _ORACLE_PARAMS)
+@pytest.mark.parametrize("name", WITH_ORACLE)
 def test_oracle_match(spark, duck, name):
     assert_oracle_match(spark, duck, SPECS[name])
 
 
-if ROWS_ONLY:
-
-    @pytest.mark.parametrize("name", ROWS_ONLY)
-    def test_rows_only(spark, name):
-        """Non-SQL-expressible ops: plan executes and yields a stable schema."""
-        df = SPECS[name].fn(spark, SF_DIR)
-        assert df.columns, f"{name}: no columns"
-        assert df.count() >= 0
-
-else:
-
-    def test_every_query_has_an_oracle():
-        """Stronger than rows-only: the registry currently carries a DuckDB
-        oracle for every single query, so the driver's hard hash check
-        covers the whole surface it samples."""
-        assert WITH_ORACLE == list(SPECS)
+def test_every_query_has_an_oracle():
+    """A query registered without an oracle would drop out of
+    ``test_oracle_match``; every registered query must carry one."""
+    assert WITH_ORACLE == list(SPECS)
 
 
 def test_entry_smoke(spark):
@@ -88,143 +63,11 @@ def test_slow_lane_roster_names_existing_tests():
     assert not stale, stale
 
 
-def test_driver_window_families():
-    """The driver hard-checks the first 50 registry entries; every SURVEY
-    family must keep a representative inside that window."""
-    from ua2sql_spark.registry import DRIVER_WINDOW, all_queries
-
-    names = list(all_queries())
-    assert len(DRIVER_WINDOW) == 50
-    assert names[:50] == list(DRIVER_WINDOW)
-    required = {
-        # Rotation #12 (round 14, registry.py's rotation comment records
-        # the full in/out family accounting; every rotated-out row is
-        # driver-green in r13). The window is staleness-driven this
-        # round: the whole r6 cohort (17) + the whole r7 cohort (24)...
-        "q123_hll_union_contract", "q147_recursive_hierarchy",
-        "q150_pipe_syntax", "x136_lang_stats_applyinarrow",
-        "x142_cdc_chunks", "x143_unicode_normalize",
-        "x151_tokenizer_fertility", "x153_exif_probe",
-        "x154_pq_recall_contract", "x170_inverted_index",
-        "x175_column_profile", "x176_copurchase_triangles",
-        "x177_rolling_mad_anomaly", "x178_kmeans_lloyd",
-        "x182_annotator_agreement", "x184_rfm_segmentation",
-        "x97_sequence_pack",
-        "q119_string_agg", "q137_bivariate_stats",
-        "q140_bitmap_exact_distinct", "q144_gap_fill_locf",
-        "q146_histogram_equi_width", "q151_collation_group",
-        "q168_growth_accounting",
-        "x131_temperature_resample", "x146_record_linkage",
-        "x150_epoch_upsample", "x156_stratified_exact_sample",
-        "x157_quality_constraints", "x160_url_canonicalize",
-        "x161_source_diversity", "x163_lang_source_mi",
-        "x164_dup_size_histogram", "x165_event_cooccurrence",
-        "x166_event_path_trigrams", "x167_value_drift_psi",
-        "x169_jl_projection", "x171_phrase_match",
-        "x172_source_overlap", "x183_bot_cadence",
-        # ...plus the round-14 first-time gates, windowed from birth
-        # (the x198/x204/x209 discipline): CIDR longest-prefix-match
-        # enrichment and exact weighted median
-        "x218_cidr_route_enrich", "x219_weighted_median",
-        # ...the late-r14 swap (slot from q152 parameterized-SQL,
-        # r7-green and first in line for rotation #13; the SQL surface
-        # keeps q147 recursive + q150 pipe): the two-hop maintained-
-        # view cascade, gated from birth
-        "x220_ivm_agg_cascade",
-        # ...plus the kept family representatives: the multi-way join
-        # archetype, the as-of join, the set-op family's only driver
-        # row, reconcile, PII, X12 layout health, and the IVM join view
-        # (re-proven after this round's ADVICE fixes)
-        "q95_market_share", "q35_asof_join", "q11_setop_union",
-        "x202_table_reconcile", "x111_pii_scrub",
-        "x212_snapshot_layout_health", "x217_ivm_join_view",
-    }
-    assert required <= set(DRIVER_WINDOW)
-
-
-def test_driver_freshness_max_staleness():
-    """VERDICT r10 #1: staleness policy, computed like the never-checked
-    ledger. For every registered oracle-bearing query NOT scheduled in
-    the current DRIVER_WINDOW, its last driver-green round must be at
-    most MAX_STALENESS rounds behind the newest CORRECTNESS record on
-    disk. The bound equals the steady-state rotation period (153
-    below-fold rows / ~24 rotated per round ≈ 6.4 → 7) — a session
-    that skips its freshness rotation fails here the round after.
-    Window rows are exempt (they are re-checked by the next driver
-    run). Round 12 retired the x125 local-only carve-out: the row is
-    re-keyed to integer-exact whole-bit surprisal and gated like any
-    other."""
-    import glob
-    import json
-    import os
-    import re
-
-    from ua2sql_spark.registry import DRIVER_WINDOW, all_queries
-
-    MAX_STALENESS = 7
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last_green: dict[str, int] = {}
-    newest = 0
-    for f in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        newest = max(newest, rnd)
-        with open(f) as fh:
-            rec = json.load(fh)
-        for name, res in rec.items():
-            ok = res.get("err") is None and res.get("rows_match") and res.get(
-                "hash_match", True
-            )
-            if ok:
-                last_green[name] = max(last_green.get(name, 0), rnd)
-    stale = {
-        f"{name} (last green r{last_green.get(name, 0)})"
-        for name in all_queries()
-        if name not in DRIVER_WINDOW
-        and newest - last_green.get(name, 0) > MAX_STALENESS
-    }
-    assert not stale, (
-        f"rows older than {MAX_STALENESS} rounds and not scheduled for "
-        f"re-check (newest record r{newest}): {sorted(stale)}"
-    )
-
-
-def test_never_driver_checked_ledger_is_computed():
-    """VERDICT r9 #7: the rotation ledger drifted twice when hand-counted
-    (18 -> 19 vs the true 20). Derive never-driver-checked = registry −
-    ∪CORRECTNESS_r*.json and pin the EXPECTED set: every row is either
-    already driver-checked or inside the current DRIVER_WINDOW (the
-    historical x125 carve-out — hashed ROUND(LN(p),4) columns — was
-    retired in round 12 when the row was re-keyed to integer bit-length
-    surprisal and windowed).
-    A new query that is neither checked nor windowed must be added to
-    the expected set here CONSCIOUSLY (it is the driver-gate contract)."""
-    import glob
-    import json
-    import os
-
-    from ua2sql_spark.registry import DRIVER_WINDOW, all_queries
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    checked: set[str] = set()
-    for f in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        with open(f) as fh:
-            checked |= set(json.load(fh))
-    never = set(all_queries()) - checked
-    # Every never-checked row must be in the CURRENT window (scheduled
-    # for its first check next driver run). The x125 carve-out is
-    # retired as of round 12 (re-keyed and windowed).
-    unscheduled = never - set(DRIVER_WINDOW)
-    assert not unscheduled, (
-        f"never-driver-checked rows not in DRIVER_WINDOW: {sorted(unscheduled)}"
-    )
-
-
 def test_no_oracle_is_empty_at_driver_sf():
     """A 0-row result trivially 'matches' its oracle — this meta-test
-    pins every registered oracle to >0 rows at the driver's sf0.01, so
-    a predicate that silently selects nothing fails loudly instead of
-    green-washing the correctness gate. DuckDB-only: ~6 s for all
+    pins every registered oracle to >0 rows at sf0.01, so a predicate
+    that silently selects nothing fails loudly instead of green-washing
+    the correctness gate. DuckDB-only: ~6 s for all
     oracles, no Spark involved."""
     import duckdb
 

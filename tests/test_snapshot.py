@@ -407,18 +407,13 @@ def test_version_numbers_beyond_six_digits_stay_visible():
     assert not _VER_RE.match(".tmp-abc") and not _VER_RE.match("v12")
 
 
-def test_changes_since_and_cursor_resume(spark, tmp_path):
+def test_changes_since_tags_commits_and_resumes(spark, tmp_path):
     """Incremental CDF: per-commit steps tagged _commit_version (a key
-    updated twice appears under both versions), and the checkpointed
-    cursor delivers each batch at-least-once with durable resume."""
-    from ua2sql_spark.operators.snapshot import (
-        ChangeFeedCursor,
-        changes_since,
-        upsert_cow,
-    )
+    updated twice appears under both versions), and a consumer resuming
+    from the last version it applied sees only later commits."""
+    from ua2sql_spark.operators.snapshot import changes_since, upsert_cow
 
     path = str(tmp_path / "tbl")
-    ck = str(tmp_path / "cursor")
     mk = lambda rows: spark.createDataFrame(
         rows, "id bigint, day string, val string"
     )
@@ -449,20 +444,15 @@ def test_changes_since_and_cursor_resume(spark, tmp_path):
     with _pytest.raises(ValueError, match="re-bootstrap"):
         changes_since(spark, path, 99, ["id"])
 
-    # cursor: a FRESH consumer starts at -1, so its first poll includes
-    # v0's inserts; commit advances durably and a restart resumes past
-    cur = ChangeFeedCursor(spark, path, ["id"], ck)
-    df, latest = cur.poll()
-    assert latest == 2 and df.count() == len(full)
-    cur.commit(latest)
-    df2, latest2 = ChangeFeedCursor(spark, path, ["id"], ck).poll()
-    assert latest2 == 2 and df2.count() == 0
-
+    # resuming at the latest version yields nothing; a later commit
+    # yields only its own changes
+    assert changes_since(spark, path, 2, ["id"]).count() == 0
     upsert_cow(mk([(2, "d1", "b1")]), path, ["id"], "day")                 # v3
-    df3, latest3 = ChangeFeedCursor(spark, path, ["id"], ck).poll()
-    rows3 = {(r["id"], r["_change_type"]) for r in df3.collect()}
-    assert latest3 == 3
-    assert rows3 == {(2, "update_preimage"), (2, "update_postimage")}
+    rows3 = {
+        (r["id"], r["_commit_version"], r["_change_type"])
+        for r in changes_since(spark, path, 2, ["id"]).collect()
+    }
+    assert rows3 == {(2, 3, "update_preimage"), (2, 3, "update_postimage")}
 
 
 def test_changes_since_spans_schema_evolving_commit(spark, tmp_path):
@@ -674,30 +664,6 @@ def test_upsert_cow_rejects_batch_missing_target_columns(spark, tmp_path):
     assert snap.count() == 1 and "note" in snap.columns
 
 
-def test_cursor_checkpoint_via_hadoop_fs(spark, tmp_path):
-    """ADVICE r6 #4: the cursor checkpoint rides the same Hadoop
-    FileSystem API as the table ops (works with a file: URI, not just a
-    posix path), and commit survives an existing checkpoint."""
-    from ua2sql_spark.operators.snapshot import ChangeFeedCursor, upsert_cow
-
-    path = str(tmp_path / "tbl")
-    upsert_cow(
-        spark.createDataFrame([(1, "d1", 1.0)], "id bigint, day string, val double"),
-        path,
-        ["id"],
-        "day",
-    )
-    ck = "file://" + str(tmp_path / "ckdir" / "cursor")
-    cur = ChangeFeedCursor(spark, path, ["id"], ck)
-    assert cur.position() == -1
-    df, latest = cur.poll()
-    assert df.count() == 1 and latest == 0
-    cur.commit(latest)
-    assert ChangeFeedCursor(spark, path, ["id"], ck).position() == 0
-    cur.commit(7)  # overwrite an existing checkpoint
-    assert cur.position() == 7
-
-
 def test_ivm_versioned_refresh_is_atomic(spark, tmp_path):
     """ADVICE r6 #3: the view is manifest-versioned — an orphan data
     directory (a refresh that crashed before its manifest commit) is
@@ -789,50 +755,6 @@ def test_upsert_cow_rejects_narrow_batch_touching_only_new_partitions(
     )
     upsert_cow(wide, path, ["id"], "day")
     assert "extra" in table_schema(spark, path, 1).names
-
-
-def test_cursor_commit_is_monotone_and_crash_safe(spark, tmp_path):
-    """ADVICE r7 #2: commit never deletes a durable position before the
-    new one exists — the checkpoint is a directory of version-named
-    markers; position() is their max, foreign files are ignored, and a
-    re-commit of the same version is idempotent."""
-    from ua2sql_spark.operators.snapshot import ChangeFeedCursor, upsert_cow
-
-    path = str(tmp_path / "tbl")
-    upsert_cow(
-        spark.createDataFrame([(1, "d1", 1.0)], "id bigint, day string, val double"),
-        path,
-        ["id"],
-        "day",
-    )
-    ck = str(tmp_path / "ckdir" / "cursor")
-    cur = ChangeFeedCursor(spark, path, ["id"], ck)
-    assert cur.position() == -1
-    cur.commit(0)
-    assert cur.position() == 0
-    # the marker for v0 exists as a file BEFORE any later commit: a
-    # crash between commits can never regress below a committed position
-    import os
-
-    assert any(n.startswith("v-") for n in os.listdir(tmp_path / "ckdir" / "cursor"))
-    cur.commit(7)
-    assert cur.position() == 7
-    # superseded markers are GC'd, the new one survives (the local FS
-    # also writes hidden .crc checksum twins — not markers)
-    names = sorted(
-        n
-        for n in os.listdir(tmp_path / "ckdir" / "cursor")
-        if n.startswith("v-")
-    )
-    assert names == [f"v-{7:020d}"]
-    cur.commit(7)  # idempotent re-commit
-    assert cur.position() == 7
-    # a stale lower-version commit (replayed consumer) can't move it back
-    cur.commit(3)
-    assert cur.position() == 7
-    # foreign files in the checkpoint dir are not markers
-    (tmp_path / "ckdir" / "cursor" / "README").write_text("hi")
-    assert cur.position() == 7
 
 
 def test_vacuum_view_survives_path_respelling_and_bigint_groups(spark, tmp_path):
@@ -1063,44 +985,6 @@ def test_stats_coverage_is_judged_per_column(spark, tmp_path):
     assert read_snapshot(spark, path, 1, where=("a", 0, 119)).count() == exact_a
 
 
-def test_cursor_migrates_legacy_file_checkpoint(spark, tmp_path):
-    """ADVICE r8 medium: a pre-r8 single-FILE checkpoint (content = the
-    integer position) must be read and converted, not silently treated
-    as position -1 (whole-feed replay) and then crash commit()'s
-    mkdirs."""
-    from ua2sql_spark.operators.snapshot import ChangeFeedCursor, upsert_cow
-
-    path = str(tmp_path / "tbl")
-    df = spark.createDataFrame([(1, "d1", 1.0)], "id bigint, day string, v double")
-    upsert_cow(df, path, ["id"], "day")
-    upsert_cow(
-        spark.createDataFrame([(2, "d1", 2.0)], "id bigint, day string, v double"),
-        path, ["id"], "day",
-    )
-
-    ck = str(tmp_path / "ck")
-    with open(ck, "w") as f:
-        f.write("0\n")
-    cur = ChangeFeedCursor(spark, path, ["id"], ck)
-    # position comes from the legacy file, not -1
-    assert cur.position() == 0
-    import os
-    assert os.path.isdir(ck)  # migrated to a marker directory
-    changes, latest = cur.poll()
-    # only v1's delta (id=2 insert), never a replay from v0
-    assert {r["id"] for r in changes.collect()} == {2}
-    cur.commit(latest)
-    assert ChangeFeedCursor(spark, path, ["id"], ck).position() == latest
-
-    # a checkpoint file that is NOT a legacy integer is refused loudly
-    ck2 = str(tmp_path / "ck2")
-    with open(ck2, "w") as f:
-        f.write("not-a-position")
-    import pytest as _pytest
-    with _pytest.raises(RuntimeError, match="legacy"):
-        ChangeFeedCursor(spark, path, ["id"], ck2).position()
-
-
 def test_delete_cow_accepts_keys_dataframe(spark, tmp_path):
     """ADVICE r8 low: delete_cow(condition=<keys DataFrame>) deletes by
     semi-join — same result as the predicate form, no driver-side isin
@@ -1280,41 +1164,6 @@ def test_add_constraint_validates_existing_rows(spark, tmp_path):
     assert "tag_ok" in table_constraints(spark, path)
 
 
-def test_cursor_recovers_interrupted_legacy_migration(spark, tmp_path):
-    """ADVICE r9 #2: a crash between delete(legacy file) and
-    rename(staged, checkpoint) leaves no checkpoint but a durable
-    ``.tmp-migrate-<name>-*`` dir. position() must adopt it instead of
-    silently returning -1 and replaying the whole feed. A sibling
-    cursor's stage (different checkpoint name) is never adopted."""
-    import os
-
-    from ua2sql_spark.operators.snapshot import ChangeFeedCursor, upsert_cow
-
-    path = str(tmp_path / "tbl")
-    upsert_cow(
-        spark.createDataFrame([(1, "d1", 1.0)], "id bigint, day string, v double"),
-        path, ["id"], "day",
-    )
-    parent = tmp_path / "cks"
-    parent.mkdir()
-    # simulate the post-crash state: staged marker dir, no checkpoint
-    staged = parent / ".tmp-migrate-cur-deadbeef"
-    staged.mkdir()
-    (staged / f"v-{7:020d}").touch()
-    # an unrelated cursor's orphan must not be adopted
-    other = parent / ".tmp-migrate-other-cafe"
-    other.mkdir()
-    (other / f"v-{99:020d}").touch()
-
-    cur = ChangeFeedCursor(spark, path, ["id"], str(parent / "cur"))
-    assert cur.position() == 7
-    assert os.path.isdir(parent / "cur")
-    assert not (parent / ".tmp-migrate-cur-deadbeef").exists()
-    assert (parent / ".tmp-migrate-other-cafe").exists()
-    # idempotent afterwards
-    assert cur.position() == 7
-
-
 def test_describe_history_tags_every_operation(spark, tmp_path):
     """Every commit path stamps a _commit_info sidecar: DESCRIBE
     HISTORY reports version/operation/metrics newest-first, including
@@ -1353,38 +1202,6 @@ def test_describe_history_tags_every_operation(spark, tmp_path):
     assert by_v[3]["metrics"]["to_version"] == "1"
     assert by_v[4]["metrics"]["constraint"] == "vpos"
     assert all(h["timestamp"] for h in hist)
-
-
-def test_cursor_migration_sweeps_stale_stage_dirs(spark, tmp_path):
-    """A successful legacy migration must remove stage dirs left by
-    EARLIER crashed attempts — otherwise deleting the checkpoint later
-    (an intentional cursor reset) would 'recover' the stale stage and
-    silently resurrect an obsolete position instead of replaying."""
-    import os
-
-    from ua2sql_spark.operators.snapshot import ChangeFeedCursor, upsert_cow
-
-    path = str(tmp_path / "tbl")
-    upsert_cow(
-        spark.createDataFrame([(1, "d1", 1.0)], "id bigint, day string, v double"),
-        path, ["id"], "day",
-    )
-    parent = tmp_path / "cks"
-    parent.mkdir()
-    ck = parent / "cur"
-    ck.write_text("5")  # legacy single-file checkpoint, position 5
-    stale = parent / ".tmp-migrate-cur-oldcrash"
-    stale.mkdir()
-    (stale / f"v-{3:020d}").touch()
-
-    cur = ChangeFeedCursor(spark, path, ["id"], str(ck))
-    assert cur.position() == 5  # migrated from the legacy file
-    assert not stale.exists()  # stale stage swept by the migration
-    # intentional reset now behaves as documented: fresh cursor
-    import shutil
-
-    shutil.rmtree(ck)
-    assert cur.position() == -1
 
 
 def test_read_view_mixed_width_fallback_still_reachable(spark, tmp_path):

@@ -1332,190 +1332,6 @@ def changes_since(
     return out
 
 
-class ChangeFeedCursor:
-    """Checkpointed cursor over a snapshot table's change feed — the
-    micro-batch consumer loop for index refresh / replication jobs:
-    each ``poll()`` returns (changes DataFrame, latest_version) for
-    everything committed since the cursor, and ``commit(version)``
-    durably advances it.
-
-    The checkpoint is a DIRECTORY of monotonically version-named
-    marker files (``v-<020d>``): commit = write-temp + rename to a NEW
-    name, position = max name. Nothing is ever deleted before the new
-    position is durable (ADVICE r7 #2 — the previous delete-then-rename
-    of a single file had a crash window that reset a COMMITTED position
-    to -1 and replayed the feed from v0, double-applying every
-    historical delta into non-idempotent consumers such as the IVM
-    refresher). A crashed consumer re-reads at most its last
-    uncommitted batch: at-least-once, never lost progress."""
-
-    def __init__(self, spark: SparkSession, path: str, key_cols: list[str], checkpoint: str):
-        self.spark = spark
-        self.path = path
-        self.key_cols = list(key_cols)
-        self.checkpoint = checkpoint
-
-    def _migrate_legacy(self, jvm, fs, p) -> None:
-        """Pre-r8 checkpoints were a single FILE whose content is the
-        integer position. Without migration, listStatus of that file
-        finds no ``v-`` markers, so ``position()`` silently returns -1
-        and the consumer replays the WHOLE feed from v0 into
-        non-idempotent consumers — and ``commit()``'s mkdirs over the
-        file then fails (ADVICE r8 medium). Detect the legacy file,
-        read its position, and convert it to a marker directory before
-        any read or commit proceeds.
-
-        Crash recovery (ADVICE r9 #2): the swap below is
-        stage-marker-dir -> delete(legacy file) -> rename(staged, p).
-        A crash between the delete and the rename leaves NO checkpoint
-        at p but a fully-staged ``.tmp-migrate-<name>-*`` dir beside it
-        — previously nothing ever looked for it, so the next
-        ``position()`` silently returned -1 and replayed the whole feed
-        into non-idempotent consumers (the exact failure migration
-        exists to prevent). The staged dir is durable by construction,
-        so completing the rename here is always safe; the dir name
-        embeds the checkpoint's own name so cursors sharing a parent
-        directory can never adopt each other's stage."""
-        HPath = jvm.org.apache.hadoop.fs.Path
-        if not fs.exists(p):
-            parent = p.getParent()
-            if parent is not None and fs.exists(parent):
-                orphans = [
-                    st.getPath()
-                    for st in fs.listStatus(parent)
-                    if st.getPath()
-                    .getName()
-                    .startswith(f".tmp-migrate-{p.getName()}-")
-                ]
-                if orphans:
-                    # Any staged dir carries the same legacy position
-                    # (all staged from the one legacy file); adopt the
-                    # lexicographically last for determinism, drop the
-                    # rest.
-                    chosen = max(orphans, key=lambda q: q.getName())
-                    if not fs.rename(chosen, p):
-                        raise RuntimeError(
-                            "could not complete interrupted legacy-cursor "
-                            f"migration {chosen.toString()} -> "
-                            f"{self.checkpoint}"
-                        )
-                    for o in orphans:
-                        if o.getName() != chosen.getName() and fs.exists(o):
-                            fs.delete(o, True)
-            return
-        if not fs.getFileStatus(p).isFile():
-            return
-        stream = fs.open(p)
-        try:
-            data = []
-            while True:
-                b = stream.read()
-                if b < 0:
-                    break
-                data.append(b)
-        finally:
-            stream.close()
-        try:
-            pos = int(bytes(data).decode("utf-8").strip())
-        except ValueError as exc:
-            raise RuntimeError(
-                f"cursor checkpoint {self.checkpoint} is a file but not a "
-                "legacy integer checkpoint — refusing to overwrite"
-            ) from exc
-        import uuid
-
-        tmp = HPath(
-            p.getParent(), f".tmp-migrate-{p.getName()}-{uuid.uuid4().hex}"
-        )
-        fs.mkdirs(tmp)
-        fs.create(HPath(tmp, f"v-{pos:020d}"), True).close()
-        # Swap: the legacy file stays in place until the marker dir is
-        # fully staged; a crash between delete and rename re-runs the
-        # migration finding no file (position -1) ONLY if the rename
-        # also failed — so delete last is not safe; rename cannot
-        # overwrite a file on all FS, so delete-then-rename with the
-        # staged dir already durable is the narrowest window, and the
-        # staged dir is recoverable by hand.
-        if not fs.delete(p, False):
-            fs.delete(tmp, True)
-            raise RuntimeError(
-                f"could not remove legacy cursor file {self.checkpoint}"
-            )
-        if not fs.rename(tmp, p):
-            raise RuntimeError(
-                f"legacy cursor migration rename failed for {self.checkpoint}; "
-                f"staged markers left at {tmp.toString()}"
-            )
-        # Sweep stage dirs from EARLIER crashed attempts: left behind,
-        # they would be "adopted" by the recovery branch above if the
-        # checkpoint is ever intentionally deleted (operator resetting
-        # the cursor), silently resurrecting an obsolete position
-        # instead of replaying from -1.
-        parent = p.getParent()
-        if parent is not None and fs.exists(parent):
-            for st in fs.listStatus(parent):
-                name = st.getPath().getName()
-                if name.startswith(f".tmp-migrate-{p.getName()}-"):
-                    fs.delete(st.getPath(), True)
-
-    def _markers(self, fs, p) -> list[int]:
-        if not fs.exists(p):
-            return []
-        out = []
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("v-"):
-                try:
-                    out.append(int(name[2:]))
-                except ValueError:
-                    continue  # foreign file; never a committed marker
-        return out
-
-    def position(self) -> int:
-        jvm, fs, p = _jfs(self.spark, self.checkpoint)
-        self._migrate_legacy(jvm, fs, p)
-        versions = self._markers(fs, p)
-        return max(versions) if versions else -1  # fresh: deliver v0 too
-
-    def poll(self) -> tuple[DataFrame, int]:
-        pos = self.position()
-        latest = latest_version(self.spark, self.path)
-        if latest is None:
-            raise ValueError(f"no snapshots under {self.path}")
-        return (
-            changes_since(self.spark, self.path, pos, self.key_cols, latest),
-            latest,
-        )
-
-    def commit(self, version: int) -> None:
-        # Same Hadoop FileSystem the table operations use (ADVICE r6
-        # #4), so the checkpoint can live beside an s3a:/hdfs: table.
-        # The marker content is empty — the version lives in the NAME,
-        # committed by a rename to a name that never pre-exists, so no
-        # step can clobber an earlier durable position.
-        import uuid
-
-        jvm, fs, p = _jfs(self.spark, self.checkpoint)
-        self._migrate_legacy(jvm, fs, p)
-        fs.mkdirs(p)
-        HPath = jvm.org.apache.hadoop.fs.Path
-        tmp = HPath(p, f".tmp-{uuid.uuid4().hex}")
-        fs.create(tmp, True).close()
-        target = HPath(p, f"v-{version:020d}")
-        if not fs.rename(tmp, target):
-            fs.delete(tmp, False)
-            if not fs.exists(target):  # exists => same version already committed
-                raise RuntimeError(
-                    f"cursor checkpoint rename failed for {self.checkpoint}"
-                )
-        # Best-effort GC of superseded markers AFTER the new position
-        # is durable; a crash here only leaves extra markers behind
-        # (position() takes the max, so they are harmless).
-        for v in self._markers(fs, p):
-            if v < version:
-                fs.delete(HPath(p, f"v-{v:020d}"), False)
-
-
 # ---------------------------------------------------------------------------
 # Tags + shallow clone (VERDICT r10 #7): the cheap branch-for-experiment
 # primitives a 100 TB corpus store wants before any risky rewrite. A tag

@@ -528,172 +528,21 @@ def x212_snapshot_layout_health(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# x217: incrementally-maintained join view (round 13) — the standing
-# keyed join view V = A ⋈ B refreshed from BOTH base tables' change
-# feeds (operators/ivm_join.py), under the driver gate. The fixture
-# builds two CoW tables from `documents` arithmetic (A = every doc
-# keyed by doc_id; B = scores for doc_id % 3 <> 1), materializes the
-# view, then mutates BOTH sides (A: n_chars update %5, delete %11;
-# B: insert the %3=1 keys at score+100, delete %13) and refreshes —
-# so the final view state is closed-form: keys with %11<>0 AND %13<>0,
-# score = %7 (+100 for the late-insert %3=1 cohort). The row emits the
-# per-source view aggregate PLUS n_diff — the symmetric difference
-# between the maintained view and a from-scratch recompute — pinned 0:
-# recompute-equality is the soundness claim, checked by the driver
-# hash every rotation, not just by local tests.
-# Scale shape: refresh reads ONLY the touched-key slices of the
-# current base snapshots (semi-joins) and rewrites only view
-# partitions holding touched keys; the view is itself a CoW table, so
-# it inherits time travel / change feed / layout health.
+# The fixture x217 and x220 share: two CoW tables built from `documents`
+# arithmetic (A = every doc keyed by doc_id; B = scores for
+# doc_id % 3 <> 1), the join view V = A ⋈ B and the aggregate view
+# W = COUNT/SUM(score) per source over V. Both views are materialized,
+# then BOTH bases are mutated (A: n_chars update %5, delete %11; B:
+# insert the %3=1 keys at score+100, delete %13) and each view is
+# refreshed once: V from both bases' change feeds, W from V's own feed.
+# The final state is closed-form — keys with %11<>0 AND %13<>0,
+# score = %7 (+100 for the late-insert %3=1 cohort) — so one DuckDB CTE
+# is the oracle of both rows. Building it once serves both queries.
 # ---------------------------------------------------------------------------
-@query(
-    "x217_ivm_join_view",
-    oracle="""
-    WITH k AS (
-        SELECT doc_id, source,
-               CASE WHEN doc_id % 3 = 1 THEN doc_id % 7 + 100
-                    ELSE doc_id % 7 END AS score
-        FROM documents
-        WHERE doc_id % 11 <> 0 AND doc_id % 13 <> 0
-    )
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(score) AS BIGINT) AS sum_score,
-           CAST(0 AS BIGINT) AS n_diff
-    FROM k GROUP BY source ORDER BY source
-    """,
-)
-def x217_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maintained join view after mutations on both bases: per-source
-    state plus a recompute-equality symmetric-difference count
-    (pinned 0)."""
-    from ua2sql_spark.operators.ivm_join import (
-        build_join_view,
-        refresh_join_view,
-    )
-    from ua2sql_spark.operators.snapshot import (
-        delete_cow,
-        read_snapshot,
-        upsert_cow,
-    )
-    from ua2sql_spark.queries.common import fixture_artifact
-
-    d = load_table(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-
-    def build(root: str) -> None:
-        a_path, b_path, v_path = root + "/a", root + "/b", root + "/v"
-        a0 = d.select(
-            "doc_id",
-            (did % 4).cast("string").alias("grp"),
-            "source",
-            "n_chars",
-        )
-        upsert_cow(a0, a_path, ["doc_id"], "grp")
-        b0 = d.filter(did % 3 != 1).select(
-            "doc_id",
-            (did % 7).cast("bigint").alias("score"),
-            (did % 4).cast("string").alias("bgrp"),
-        )
-        upsert_cow(b0, b_path, ["doc_id"], "bgrp")
-        build_join_view(spark, a_path, b_path, "doc_id", "grp", v_path)
-        # mutate A: update + delete
-        upsert_cow(
-            a0.filter(did % 5 == 0).withColumn(
-                "n_chars", F.coalesce(F.col("n_chars"), F.lit(0)) + 1
-            ),
-            a_path, ["doc_id"], "grp",
-        )
-        delete_cow(spark, a_path, did % 11 == 0, "grp")
-        # mutate B: late insert of the %3=1 cohort + delete
-        upsert_cow(
-            d.filter(did % 3 == 1).select(
-                "doc_id",
-                (did % 7 + 100).cast("bigint").alias("score"),
-                (did % 4).cast("string").alias("bgrp"),
-            ),
-            b_path, ["doc_id"], "bgrp",
-        )
-        delete_cow(spark, b_path, did % 13 == 0, "bgrp")
-        refresh_join_view(spark, v_path)
-
-    root = fixture_artifact(spark, sf_dir, "x217jv", "documents", build)
-    view = read_snapshot(spark, root + "/v").select(
-        "doc_id", "source", "score"
-    )
-    a1 = read_snapshot(spark, root + "/a")
-    b1 = read_snapshot(spark, root + "/b")
-    recompute = a1.join(b1.select("doc_id", "score"), "doc_id").select(
-        "doc_id", "source", "score"
-    )
-    n_diff = (
-        view.exceptAll(recompute).count()
-        + recompute.exceptAll(view).count()
-    )
-    return (
-        view.groupBy(F.col("source").cast("string").alias("source"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum("score").cast("bigint").alias("sum_score"),
-        )
-        .select(
-            "source",
-            "n_rows",
-            "sum_score",
-            F.lit(n_diff).cast("bigint").alias("n_diff"),
-        )
-        .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# x220: maintained-view CASCADE (round 14) — the standing-view DAG a
-# warehouse actually runs: base tables A, B (CoW) -> join view
-# V = A ⋈ B kept current from BOTH bases' change feeds
-# (operators/ivm_join.py) -> aggregate view W = COUNT/SUM per group
-# kept current from V'S OWN feed (operators/ivm.py). x217 proved V is
-# a real table (feed/SCD2 compose); this row proves the composition
-# END-TO-END under the driver gate: after mixed mutations on both
-# bases and ONE refresh of each view, W equals a from-scratch
-# GROUP BY over a from-scratch A ⋈ B — the symmetric difference is
-# emitted and pinned 0. The Delta Live Tables two-hop DAG, maintained
-# from churn-proportional deltas at every hop: no step ever re-joins
-# A×B or re-aggregates V.
-# Fixture mutations mirror x217's closed form (update %5, delete %11
-# on A; late-insert %3=1 at +100, delete %13 on B), so the oracle is
-# the same k CTE aggregated — fully arithmetic-derivable by DuckDB.
-# Scale shape: hop 1 recomputes only feed-touched keys (semi-joined
-# base slices, partition-local view rewrite); hop 2 applies a signed
-# delta aggregate bounded by |touched groups| and rewrites only the
-# hash buckets holding them. Refresh cost scales with churn at both
-# hops, never with |V| or |W|.
-# ---------------------------------------------------------------------------
-@query(
-    "x220_ivm_agg_cascade",
-    oracle="""
-    WITH k AS (
-        SELECT doc_id, source,
-               CASE WHEN doc_id % 3 = 1 THEN doc_id % 7 + 100
-                    ELSE doc_id % 7 END AS score
-        FROM documents
-        WHERE doc_id % 11 <> 0 AND doc_id % 13 <> 0
-    )
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(score) AS BIGINT) AS sum_score,
-           CAST(0 AS BIGINT) AS w_diff
-    FROM k GROUP BY source ORDER BY source
-    """,
-)
-def x220_ivm_agg_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-hop maintained-view cascade after mutations on both bases:
-    the aggregate view's state per source, plus its symmetric
-    difference vs a from-scratch recompute (pinned 0)."""
-    from ua2sql_spark.operators.ivm import (
-        build_view,
-        read_view,
-        refresh_from_feed,
-    )
+def _ivm_views_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """Root of the built fixture: the bases ``a/`` and ``b/``, the join
+    view ``v/`` and the aggregate view ``w/``."""
+    from ua2sql_spark.operators.ivm import build_view, refresh_from_feed
     from ua2sql_spark.operators.ivm_join import (
         build_join_view,
         refresh_join_view,
@@ -755,7 +604,120 @@ def x220_ivm_agg_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed = snapshot_changes(spark, v_path, v0, v1, ["doc_id"])
         refresh_from_feed(spark, w_path, feed, "source", "score")
 
-    root = fixture_artifact(spark, sf_dir, "x220cascade", "documents", build)
+    return fixture_artifact(spark, sf_dir, "ivmviews", "documents", build)
+
+
+# ---------------------------------------------------------------------------
+# x217: incrementally-maintained join view (round 13) — the standing
+# keyed join view V = A ⋈ B refreshed from BOTH base tables' change
+# feeds (operators/ivm_join.py), over the shared fixture above. The row
+# emits the per-source view aggregate PLUS n_diff — the symmetric
+# difference between the maintained view and a from-scratch recompute
+# — pinned 0: recompute-equality is the soundness claim, checked by the
+# oracle compare on every test run, not just by the ivm_join tests.
+# Scale shape: refresh reads ONLY the touched-key slices of the
+# current base snapshots (semi-joins) and rewrites only view
+# partitions holding touched keys; the view is itself a CoW table, so
+# it inherits time travel / change feed / layout health.
+# ---------------------------------------------------------------------------
+@query(
+    "x217_ivm_join_view",
+    oracle="""
+    WITH k AS (
+        SELECT doc_id, source,
+               CASE WHEN doc_id % 3 = 1 THEN doc_id % 7 + 100
+                    ELSE doc_id % 7 END AS score
+        FROM documents
+        WHERE doc_id % 11 <> 0 AND doc_id % 13 <> 0
+    )
+    SELECT source,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(SUM(score) AS BIGINT) AS sum_score,
+           CAST(0 AS BIGINT) AS n_diff
+    FROM k GROUP BY source ORDER BY source
+    """,
+)
+def x217_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Maintained join view after mutations on both bases: per-source
+    state plus a recompute-equality symmetric-difference count
+    (pinned 0)."""
+    from ua2sql_spark.operators.snapshot import read_snapshot
+
+    root = _ivm_views_fixture(spark, sf_dir)
+    view = read_snapshot(spark, root + "/v").select(
+        "doc_id", "source", "score"
+    )
+    a1 = read_snapshot(spark, root + "/a")
+    b1 = read_snapshot(spark, root + "/b")
+    recompute = a1.join(b1.select("doc_id", "score"), "doc_id").select(
+        "doc_id", "source", "score"
+    )
+    n_diff = (
+        view.exceptAll(recompute).count()
+        + recompute.exceptAll(view).count()
+    )
+    return (
+        view.groupBy(F.col("source").cast("string").alias("source"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.sum("score").cast("bigint").alias("sum_score"),
+        )
+        .select(
+            "source",
+            "n_rows",
+            "sum_score",
+            F.lit(n_diff).cast("bigint").alias("n_diff"),
+        )
+        .orderBy("source")
+    )
+
+
+# ---------------------------------------------------------------------------
+# x220: maintained-view CASCADE (round 14) — the standing-view DAG a
+# warehouse actually runs: base tables A, B (CoW) -> join view
+# V = A ⋈ B kept current from BOTH bases' change feeds
+# (operators/ivm_join.py) -> aggregate view W = COUNT/SUM per group
+# kept current from V'S OWN feed (operators/ivm.py). x217 proved V is
+# a real table (feed/SCD2 compose); this row proves the composition
+# END-TO-END under the oracle gate: after mixed mutations on both
+# bases and ONE refresh of each view, W equals a from-scratch
+# GROUP BY over a from-scratch A ⋈ B — the symmetric difference is
+# emitted and pinned 0. The Delta Live Tables two-hop DAG, maintained
+# from churn-proportional deltas at every hop: no step ever re-joins
+# A×B or re-aggregates V.
+# It reads the fixture x217 reads, so the oracle is the same k CTE
+# aggregated — fully arithmetic-derivable by DuckDB.
+# Scale shape: hop 1 recomputes only feed-touched keys (semi-joined
+# base slices, partition-local view rewrite); hop 2 applies a signed
+# delta aggregate bounded by |touched groups| and rewrites only the
+# hash buckets holding them. Refresh cost scales with churn at both
+# hops, never with |V| or |W|.
+# ---------------------------------------------------------------------------
+@query(
+    "x220_ivm_agg_cascade",
+    oracle="""
+    WITH k AS (
+        SELECT doc_id, source,
+               CASE WHEN doc_id % 3 = 1 THEN doc_id % 7 + 100
+                    ELSE doc_id % 7 END AS score
+        FROM documents
+        WHERE doc_id % 11 <> 0 AND doc_id % 13 <> 0
+    )
+    SELECT source,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(SUM(score) AS BIGINT) AS sum_score,
+           CAST(0 AS BIGINT) AS w_diff
+    FROM k GROUP BY source ORDER BY source
+    """,
+)
+def x220_ivm_agg_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-hop maintained-view cascade after mutations on both bases:
+    the aggregate view's state per source, plus its symmetric
+    difference vs a from-scratch recompute (pinned 0)."""
+    from ua2sql_spark.operators.ivm import read_view
+    from ua2sql_spark.operators.snapshot import read_snapshot
+
+    root = _ivm_views_fixture(spark, sf_dir)
     w = read_view(spark, root + "/w").select(
         F.col("grp").alias("source"),
         F.col("n").cast("bigint").alias("n_rows"),
