@@ -45,6 +45,42 @@ def test_contract_shapes():
     assert set(o) <= set(q), "oracle_sql keys must be a subset of queries"
 
 
+def test_artifact_sweep_reclaims_dirs_of_exited_processes(spark, tmp_path, monkeypatch):
+    """Fixture artifacts of registered queries are named
+    ``ua2sql_<tag>_<pid>_<uuid>`` in the temp dir. A new one sweeps this
+    process's stale dirs of its tag and the dirs of every process that
+    has exited, and keeps the dirs of live processes and of live cache
+    keys."""
+    import subprocess
+    import sys
+    import tempfile
+    import uuid
+
+    from ua2sql_spark.queries import common
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    gone = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
+                          capture_output=True, text=True, check=True).stdout.strip()
+
+    def artifact(tag, pid):
+        d = tmp_path / f"ua2sql_{tag}_{pid}_{uuid.uuid4().hex}"
+        d.mkdir()
+        (d / "part-0.parquet").write_bytes(b"x")
+        return d.name
+
+    artifact("t", gone)
+    artifact("u", gone)
+    artifact("t", os.getpid())
+    kept = [artifact("t", os.getppid()), artifact("u", os.getpid()), artifact("t", os.getpid())]
+    monkeypatch.setitem(common._FIXTURE_CACHE, ("t", "sf", 0.0), str(tmp_path / kept[-1]))
+    (tmp_path / "ua2sql_pyfiles_x").mkdir()
+    kept.append("ua2sql_pyfiles_x")
+
+    path = common.fresh_artifact(spark, "t")
+    assert path.startswith(str(tmp_path / f"ua2sql_t_{os.getpid()}_"))
+    assert sorted(p.name for p in tmp_path.iterdir()) == sorted(kept)
+
+
 def test_slow_lane_roster_names_existing_tests():
     """Every SLOW_LANE_TESTS entry ``file::name`` must name a test that
     ``tests/<file>`` still defines — a renamed test would otherwise

@@ -29,6 +29,8 @@ ops on identical operands in the same order.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -72,17 +74,11 @@ _FIXTURE_CACHE: dict[tuple, str] = {}
 def fixture_artifact(spark, sf_dir: str, tag: str, source_table: str, build) -> str:
     """Return the path of the deterministic fixture artifact for
     ``tag``, building via ``build(path)`` on first use per (process,
-    testdata). Cleanup of THIS process's stale dirs happens only on
-    (re)build, through the table-side Hadoop FS (on a non-local
-    defaultFS a driver-local shutil.rmtree would miss the real files).
-    The per-(process, invocation) unique dir name means two concurrent
-    processes over the same sf_dir can never share — or delete — each
-    other's artifact (ADVICE r7 #4)."""
+    testdata). Stale dirs are swept only on (re)build (see
+    :func:`fresh_artifact`). The per-(process, invocation) unique
+    dir name means two concurrent processes over the same sf_dir can
+    never share — or delete — each other's artifact (ADVICE r7 #4)."""
     import os
-    import tempfile
-    import uuid
-
-    from ua2sql_spark.operators.snapshot import _jfs
 
     try:
         mtime = os.path.getmtime(os.path.join(sf_dir, source_table + ".parquet"))
@@ -92,56 +88,50 @@ def fixture_artifact(spark, sf_dir: str, tag: str, source_table: str, build) -> 
     cached = _FIXTURE_CACHE.get(key)
     if cached is not None and os.path.isdir(cached):
         return cached
-    prefix = f"ua2sql_{tag}_{os.getpid()}_"
-    tmp_root = tempfile.gettempdir()
-    jvm, fs, _ = _jfs(spark, tmp_root)
-    root_p = jvm.org.apache.hadoop.fs.Path(tmp_root)
-    # Sweep THIS process's stale artifacts for the tag — but never a
-    # dir another LIVE cache key still points at (same tag, different
-    # sf_dir/mtime: e.g. a scale-comparison loop alternating two
-    # sf_dirs would otherwise rebuild on every switch, and a lazy
-    # DataFrame still referencing the other key's path would read a
-    # deleted dir).
-    live = {
-        os.path.basename(v) for v in _FIXTURE_CACHE.values() if v is not None
-    }
-    if fs.exists(root_p):
-        for st in fs.listStatus(root_p):
-            name = st.getPath().getName()
-            if name.startswith(prefix) and name not in live:
-                fs.delete(st.getPath(), True)
-    path = os.path.join(tmp_root, prefix + uuid.uuid4().hex)
+    path = fresh_artifact(spark, tag)
     build(path)
     _FIXTURE_CACHE[key] = path
     return path
 
 
+_ARTIFACT_NAME = re.compile(r"ua2sql_(.+)_(\d+)_[0-9a-f]{32}")
+
+
 def fresh_artifact(spark, tag: str) -> str:
-    """A NEVER-cached artifact dir under the ``fixture_artifact`` naming
-    scheme (ADVICE r12 #3): per-call freshness is the caller's contract
+    """A new, NEVER-cached ``<tmp>/ua2sql_<tag>_<pid>_<uuid>`` artifact
+    path (ADVICE r12 #3): per-call freshness is the caller's contract
     (x208 rebuilds its diverged snapshot every execution — a cached
-    fixture would make its idempotence claim false), but the
-    ``ua2sql_<tag>_<pid>_`` prefix lets the SAME stale-artifact sweep
-    reclaim prior calls' dirs, so repeated executions (bench + every
-    emulation run) don't leak a corpus copy per run. Sweeps through the
-    table-side Hadoop FS like :func:`fixture_artifact`, and never a dir
-    a live cache key still points at."""
+    fixture would make its idempotence claim false).
+
+    Each call first deletes the stale artifact dirs: this process's
+    earlier ones for ``tag``, and any whose process has exited
+    (otherwise every finished test, bench or emulation process would
+    leave its copies behind for good). A dir a live cache key points at
+    is never deleted (same tag, different sf_dir/mtime: a
+    scale-comparison loop alternating two sf_dirs would otherwise
+    rebuild on every switch, and a lazy DataFrame still referencing the
+    other key's path would read a deleted dir). The sweep goes through
+    the table-side Hadoop FS: on a non-local defaultFS a driver-local
+    ``shutil.rmtree`` would miss the real files."""
     import os
     import tempfile
     import uuid
 
     from ua2sql_spark.operators.snapshot import _jfs
+    from ua2sql_spark.session import pid_alive
 
-    prefix = f"ua2sql_{tag}_{os.getpid()}_"
+    me = os.getpid()
     tmp_root = tempfile.gettempdir()
     jvm, fs, _ = _jfs(spark, tmp_root)
     root_p = jvm.org.apache.hadoop.fs.Path(tmp_root)
-    live = {
-        os.path.basename(v) for v in _FIXTURE_CACHE.values() if v is not None
-    }
+    live = {os.path.basename(v) for v in _FIXTURE_CACHE.values() if v is not None}
     if fs.exists(root_p):
         for st in fs.listStatus(root_p):
             name = st.getPath().getName()
-            if name.startswith(prefix) and name not in live:
+            m = _ARTIFACT_NAME.fullmatch(name)
+            if m is None or name in live:
+                continue
+            pid = int(m.group(2))
+            if (pid == me and m.group(1) == tag) or (pid != me and not pid_alive(pid)):
                 fs.delete(st.getPath(), True)
-    return os.path.join(tmp_root, prefix + uuid.uuid4().hex)
+    return os.path.join(tmp_root, f"ua2sql_{tag}_{me}_{uuid.uuid4().hex}")
