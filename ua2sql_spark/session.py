@@ -34,6 +34,19 @@ you'd also want on a 1000-executor cluster:
   14.7 -> 9.1 CPU-s before ``query_mix``), the warm-up cycle after it
   11.5 -> 8.7 s, and the driver JVM's metaspace shrank by ~100 MB
   while the mapped archive added about as much resident memory.
+* A driver JVM on the parallel collector, ``-XX:+UseParallelGC``
+  (Spark's collector until JDK 9 made G1 the JVM's default). In local
+  mode the driver JVM does all of a batch job's work, so it is a
+  throughput process with no pause-time target. G1 grows its young
+  generation toward 60% of the heap and leaves old regions uncollected
+  until a concurrent cycle, so a driver touches most of its heap. On a
+  4-vCPU box (perfbench, 2 GB driver heap, 14 interleaved pairs per
+  workload, medians) peak RSS fell 2585 -> 1509 MB on ``query_mix``
+  (14/14 pairs) and 1609 -> 1303 MB on ``land_feeds`` (14/14), while
+  setup and rotation CPU stayed flat or fell. The archive still maps: a
+  dynamic archive dumped under one of G1, parallel and serial maps
+  under the others. A launch environment that already selects a
+  collector keeps it (see :func:`collector_options`).
 """
 
 from __future__ import annotations
@@ -53,6 +66,12 @@ from pyspark.sql import SparkSession
 # How long the exit hook of a dumping start waits for the JVM to write
 # the archive (~11 s on a 4-vCPU box) before it kills the JVM.
 DUMP_WAIT_S = 120
+
+# The driver JVM's collector (see the module docstring), and the
+# environment variables through which a launch can already select one.
+PARALLEL_GC = "-XX:+UseParallelGC"
+COLLECTOR_ENVS = ("PYSPARK_SUBMIT_ARGS", "SPARK_SUBMIT_OPTS", "JAVA_TOOL_OPTIONS",
+                  "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS")
 
 
 def _default_shuffle_partitions() -> int:
@@ -93,12 +112,12 @@ def get_spark(app_name: str = "ua2sql_spark", shuffle_partitions: int | None = N
         # 100 the LRU thrashes and every repeat recompiles them all.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
-    cds = None
+    launch = None
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
-        cds = cds_launch(_find_spark_home())  # flags reach only a JVM this call starts
-    if cds is None:
+        launch = driver_launch(_find_spark_home())  # flags reach only a JVM this call starts
+    if launch is None:
         return builder.getOrCreate()
-    java_options, conf_dir, dump_to = cds
+    java_options, conf_dir, archive, dump_to = launch
     saved = os.environ.get("SPARK_CONF_DIR")
     os.environ["SPARK_CONF_DIR"] = conf_dir
     try:
@@ -111,6 +130,9 @@ def get_spark(app_name: str = "ua2sql_spark", shuffle_partitions: int | None = N
     proc = getattr(SparkContext._gateway, "proc", None)
     if dump_to is not None and proc is not None:
         atexit.register(commit_archive, spark, proc, dump_to)
+    elif archive is not None and not archive_mapped(spark._jvm.System.getProperty("java.vm.info")):
+        with contextlib.suppress(OSError):
+            os.remove(archive)  # unusable: the next start dumps a fresh one
     return spark
 
 
@@ -151,26 +173,50 @@ def archive_key(java: str, jars_dir: str) -> str:
     return h.hexdigest()[:16]
 
 
-def cds_launch(spark_home: str) -> tuple[str, str, str | None] | None:
+def collector_options() -> str:
+    """:data:`PARALLEL_GC`, or ``""`` when the launch environment already
+    selects a collector: a second ``-XX:+Use...GC`` stops the JVM
+    ("Multiple garbage collectors selected")."""
+    chosen = (re.search(r"-XX:\+Use\w+GC\b", os.environ.get(name, "")) for name in COLLECTOR_ENVS)
+    return "" if any(chosen) else PARALLEL_GC
+
+
+def driver_launch(spark_home: str) -> tuple[str, str, str | None, str | None] | None:
+    """How to start the driver JVM: its java options (the collector of
+    :func:`collector_options`, then the CDS flags of :func:`cds_launch`),
+    the ``SPARK_CONF_DIR`` to launch with, the archive it maps and the
+    temp file it dumps one to. ``None`` means start as usual: the conf
+    dir holds a file Spark reads, whose ``spark.driver.defaultJavaOptions``
+    a builder value would override, or there is nothing to add."""
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    try:
+        if os.path.exists(conf) and any(not n.endswith(".template") for n in os.listdir(conf)):
+            return None
+    except OSError:
+        return None
+    options, conf_dir, archive, dump_to = cds_launch(spark_home) or ("", conf, None, None)
+    options = " ".join(filter(None, (collector_options(), options)))
+    return (options, conf_dir, archive, dump_to) if options else None
+
+
+def cds_launch(spark_home: str) -> tuple[str, str, str | None, str | None] | None:
     """How to start the driver JVM from the engine's CDS archive: its
-    java options, the ``SPARK_CONF_DIR`` to launch with, and the temp
-    file a start without an archive dumps one to (``None`` when the
-    archive exists). ``None`` means start as usual.
+    java options, the ``SPARK_CONF_DIR`` to launch with, the archive it
+    maps (``None`` when there is none yet) and the temp file a start
+    without an archive dumps one to (``None`` when the archive exists).
+    ``None`` means start without CDS.
 
     JDK 17 refuses to dump when a non-empty directory is on the class
-    path, and the conf dir is its first entry. So only a conf dir that
-    holds nothing but ``*.template`` files (nothing Spark reads) is
-    replaced, by one empty dir at a fixed path, because the archive
-    records the class path."""
-    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    path, and the conf dir is its first entry. So the caller uses CDS
+    only when the conf dir holds nothing but ``*.template`` files
+    (nothing Spark reads), and the conf dir is replaced by one empty dir
+    at a fixed path, because the archive records the class path."""
     java = java_binary()
     if java is None:
         return None
     root = cds_dir()
     empty = os.path.join(root, "conf")
     try:
-        if os.path.exists(conf) and any(not n.endswith(".template") for n in os.listdir(conf)):
-            return None
         key = archive_key(java, os.path.join(spark_home, "jars"))
         os.makedirs(empty, exist_ok=True)
         if os.listdir(empty) or not os.access(root, os.W_OK):
@@ -182,9 +228,17 @@ def cds_launch(spark_home: str) -> tuple[str, str, str | None] | None:
     quiet = "-Xlog:cds=off,cds+dynamic=off"
     archive = os.path.join(root, key + ".jsa")
     if os.path.isfile(archive):
-        return f"-XX:SharedArchiveFile={archive} -Xshare:auto {quiet}", empty, None
+        return f"-XX:SharedArchiveFile={archive} -Xshare:auto {quiet}", empty, archive, None
     dump_to = os.path.join(root, f"{key}.{os.getpid()}.tmp")
-    return f"-XX:ArchiveClassesAtExit={dump_to} {quiet}", empty, dump_to
+    return f"-XX:ArchiveClassesAtExit={dump_to} {quiet}", empty, None, dump_to
+
+
+def archive_mapped(vm_info: str) -> bool:
+    """Whether a JVM whose ``java.vm.info`` is ``vm_info`` maps a CDS
+    archive: ``mixed mode, sharing`` when it does. A JVM that cannot use
+    the archive it is given reads ``mixed mode``: under ``-Xshare:auto``
+    it then maps not even the JDK's base archive."""
+    return "sharing" in vm_info.split(", ")
 
 
 def commit_archive(spark: SparkSession, proc, dump_to: str) -> None:
@@ -230,6 +284,9 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
     ``spark.sql.codegen.cache.maxEntries`` is a static conf, so such a
     session keeps Spark's default of 100 generated classes (see the
     module docstring); only sessions from :func:`get_spark` get 1000.
+    Its JVM is already running, so it also keeps its own collector and
+    starts from no engine archive: the parallel collector and the CDS
+    flags reach only a JVM that :func:`get_spark` launches.
     """
     for k, v in [
         ("spark.sql.session.timeZone", "UTC"),
