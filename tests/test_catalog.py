@@ -166,13 +166,42 @@ def test_engine_reads_no_private_session_conf():
     assert hits == [], hits
 
 
-def test_every_engine_module_is_reached_from_a_root():
-    """Static guard: every module under ``ua2sql_spark/`` is imported,
-    directly or transitively, from a root that runs outside the tests:
-    the reference job (``__main__``), the query registry, the
-    ``__spark_entry__`` contract, ``bench.py`` or ``perfbench``. A
-    module only its own tests reach is dead weight. Whoever adds one
-    wires it to a root or exempts it here with the reason."""
+# Top-level functions and classes that no root reaches but that stay, with
+# the reason. An exempt name counts as a root, so its helpers need no entry.
+UNREACHED_KEPT = {
+    "sources.ingest.LocalFileExportClient": "test double of the Unity export client",
+    "functions.gif.encode_gif": "builds the GIF fixtures the media queries decode",
+    "functions.media.encode_avi_mjpeg": "builds the AVI fixtures the media queries decode",
+    "functions.media.encode_mov_mjpeg": "builds the MOV fixtures the media queries decode",
+    "sources.corpus_export.read_webdataset": "reads back the WebDataset shards the corpus pipeline writes",
+    "sources.unity.split_corrupt": "separates malformed export lines, which real feeds deliver",
+    "sources.unity.landed_schema": "declares the landed feed schema that read_feed's output is checked against",
+    "sources.jdbc.jdbc_upsert_sink": "the Structured Streaming + JDBC sink of the landing path",
+    "operators.ivf.probe_ivf_index": "the search half of the index that x198 builds",
+    "queries.multimodal.decode_images": "real-codec media seam",
+    "queries.multimodal.thumbnail_images": "real-codec media seam",
+    "queries.multimodal.probe_media": "real-codec media seam",
+    "functions.media.fake_decode_image": "real-codec media seam",
+    "functions.media.resize_image_real": "real-codec media seam",
+    "functions.media.sample_frames_real": "real-codec media seam",
+}
+
+
+def test_every_engine_function_is_reached_from_a_root():
+    """Static guard: every top-level function and class under
+    ``ua2sql_spark/`` is reached by name from a root that runs outside
+    the tests: a registered query, a module-level statement,
+    ``__main__.main``, or what ``__spark_entry__``, ``bench.py`` and
+    ``perfbench`` use. A definition only its own tests reach is dead
+    weight. Whoever adds one wires it to a root or names it in
+    ``UNREACHED_KEPT`` with the reason.
+
+    Names resolve through each module's imports (a function-local import
+    binds for the whole module) and through package re-exports. An
+    import alone reaches nothing; a name must be used. Module-level
+    statements and ``@query`` registrations count only in a module that a
+    root imports, directly or transitively, and a module that no root
+    imports fails the guard by itself."""
     import ast
     import pathlib
 
@@ -180,48 +209,119 @@ def test_every_engine_module_is_reached_from_a_root():
 
     pkg = pathlib.Path(ua2sql_spark.__file__).parent
     repo = pkg.parent
-    # ``plans/`` holds plan-inspection helpers that tests use as checks
-    # on the plans registered queries build; no production path needs them.
-    exempt = ["ua2sql_spark", "plans"]
 
     def module_name(path):
         parts = list(path.relative_to(repo).with_suffix("").parts)
         return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
-    modules = {module_name(p): p for p in pkg.rglob("*.py")}
-
-    def imported(name, path):
-        base = name.split(".") if path.name == "__init__.py" else name.split(".")[:-1]
-        for node in ast.walk(ast.parse(path.read_text())):
+    outside = [repo / "__spark_entry__.py", repo / "bench.py", *sorted((repo / "perfbench").glob("*.py"))]
+    paths = {module_name(p): p for p in [*pkg.rglob("*.py"), *outside]}
+    trees = {m: ast.parse(p.read_text()) for m, p in paths.items()}
+    defs = {
+        m: {n.name: n for n in t.body if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))}
+        for m, t in trees.items()
+    }
+    binds, imports = {}, {}
+    for m, tree in trees.items():
+        base = m.split(".") if paths[m].name == "__init__.py" else m.split(".")[:-1]
+        b, imp = binds[m], imports[m] = {}, set()
+        for node in ast.walk(tree):
             if isinstance(node, ast.Import):
-                yield from (a.name for a in node.names)
+                for a in node.names:
+                    b[a.asname or a.name.split(".")[0]] = a.name if a.asname else a.name.split(".")[0]
+                    imp.add(a.name)
             elif isinstance(node, ast.ImportFrom):
                 mod = node.module or ""
                 if node.level:
                     mod = ".".join(base[: len(base) - node.level + 1] + ([mod] if mod else []))
-                yield mod
-                yield from (f"{mod}.{a.name}" for a in node.names)
+                imp.add(mod)
+                for a in node.names:
+                    b[a.asname or a.name] = f"{mod}.{a.name}"
+                    imp.add(f"{mod}.{a.name}")
 
-    roots = [
-        pkg / "__main__.py",
-        pkg / "registry.py",
-        repo / "__spark_entry__.py",
-        repo / "bench.py",
-        *sorted((repo / "perfbench").glob("*.py")),
-    ]
-    todo = [(module_name(p), p) for p in roots]
-    reached = {name for name, _ in todo}
+    # the modules that run: the roots' and every module they import
+    outside_names = [m for m in paths if m.split(".")[0] != "ua2sql_spark"]
+    loaded, todo = set(), ["ua2sql_spark.__main__", "ua2sql_spark.registry", *outside_names]
     while todo:
-        name, path = todo.pop()
-        for mod in imported(name, path):
-            parts = mod.split(".")
-            for i in range(1, len(parts) + 1):
-                prefix = ".".join(parts[:i])
-                if prefix in modules and prefix not in reached:
-                    reached.add(prefix)
-                    todo.append((prefix, modules[prefix]))
-    unreached = sorted(m for m in modules.keys() - reached if m.split(".")[:2] != exempt)
-    assert unreached == [], unreached
+        parts = todo.pop().split(".")
+        for i in range(1, len(parts) + 1):
+            prefix = ".".join(parts[:i])
+            if prefix in paths and prefix not in loaded:
+                loaded.add(prefix)
+                todo += imports[prefix]
+
+    def resolve(dotted, hops=0):
+        """(module, top-level name) that a dotted path names, or None."""
+        parts = dotted.split(".")
+        for i in range(len(parts) - 1, 0, -1):
+            mod = ".".join(parts[:i])
+            if mod in paths:
+                name = parts[i]
+                if name in defs[mod]:
+                    return mod, name
+                if name in binds[mod] and hops < 10:  # a re-export
+                    return resolve(".".join([binds[mod][name], *parts[i + 1 :]]), hops + 1)
+                return None
+        return None
+
+    def used(module, nodes):
+        """The definitions that names used in ``nodes`` resolve to."""
+        for node in nodes:
+            for sub in ast.walk(node):
+                if isinstance(sub, ast.Attribute):
+                    chain = [sub.attr]
+                    head = sub.value
+                    while isinstance(head, ast.Attribute):
+                        chain.append(head.attr)
+                        head = head.value
+                    if not isinstance(head, ast.Name):
+                        continue
+                    name, rest = head.id, chain[::-1]
+                elif isinstance(sub, ast.Name):
+                    name, rest = sub.id, []
+                else:
+                    continue
+                if name in defs[module]:
+                    yield module, name
+                elif name in binds[module]:
+                    hit = resolve(".".join([binds[module][name], *rest]))
+                    if hit is not None:
+                        yield hit
+
+    def registered(fn):
+        return any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+            for d in fn.decorator_list
+        )
+
+    roots = [("ua2sql_spark.__main__", "main")]
+    roots += [(f"ua2sql_spark.{k.rsplit('.', 1)[0]}", k.rsplit(".", 1)[1]) for k in UNREACHED_KEPT]
+    for m, tree in ((m, t) for m, t in trees.items() if m in loaded):
+        top = [n for n in tree.body if not isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))]
+        for fn in defs[m].values():
+            if m.split(".")[0] != "ua2sql_spark" or registered(fn):
+                roots.append((m, fn.name))
+            # decorators and defaults run when the module is imported
+            top += [*fn.decorator_list, *getattr(fn, "bases", [])]
+            if not isinstance(fn, ast.ClassDef):
+                top += [*fn.args.defaults, *(d for d in fn.args.kw_defaults if d is not None)]
+        roots += used(m, top)
+    for m, name in roots:
+        assert name in defs.get(m, {}), f"root {m}.{name} is not a top-level definition"
+    reached = set(roots)
+    todo = list(reached)
+    while todo:
+        m, name = todo.pop()
+        for hit in used(m, [defs[m][name]]):
+            if hit not in reached:
+                reached.add(hit)
+                todo.append(hit)
+    engine = [m for m in defs if m.split(".")[0] == "ua2sql_spark" and m.split(".")[:2] != ["ua2sql_spark", "plans"]]
+    unreached = sorted(
+        [f"{m} (module)" for m in engine if m not in loaded]
+        + [f"{m}.{name}" for m in engine for name in defs[m] if (m, name) not in reached]
+    )
+    assert unreached == [], "unreached: " + ", ".join(unreached)
 
 
 def test_checkpoint_imports_no_pyspark():

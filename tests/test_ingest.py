@@ -595,22 +595,3 @@ def test_webdataset_export_roundtrip_and_determinism(spark, tmp_path):
     assert back == {
         k: (v, v.encode("utf-8")) for k, v in expected.items()
     }
-
-
-def test_export_jsonl_gz_roundtrip(spark, tmp_path):
-    from ua2sql_spark.sources.corpus_export import export_jsonl_gz
-    from ua2sql_spark.catalog import load_table
-    from tests.conftest import SF_DIR
-
-    d = load_table(spark, SF_DIR, "documents").select("doc_id", "lang", "text")
-    path = str(tmp_path / "jsonl")
-    export_jsonl_gz(d, path, n_files=3)
-    import glob
-
-    files = glob.glob(path + "/part-*.json.gz")
-    assert len(files) == 3
-    back = spark.read.json(path)
-    assert back.count() == d.count()
-    assert {r["doc_id"] for r in back.collect()} == {
-        r["doc_id"] for r in d.collect()
-    }

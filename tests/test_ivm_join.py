@@ -137,13 +137,21 @@ def test_build_rejects_non_key_column_collision(spark, tmp_path):
                         str(tmp_path / "v"))
 
 
+def _as_of(history, version):
+    """SCD2 rows whose validity interval covers ``version``."""
+    return history.filter(
+        (F.col("valid_from") <= version)
+        & (F.col("valid_to").isNull() | (F.col("valid_to") > version))
+    )
+
+
 def test_view_is_a_table_scd2_and_feed_compose(spark, tmp_path):
     """The maintained view is a real CoW table: its OWN change feed and
     an SCD2 history fold off it work exactly as they do on base tables
-    — scd2_as_of(view_history, v) equals read_snapshot(view, v) at
-    every view version across a refresh that upserts AND deletes."""
+    — the view history as of v equals read_snapshot(view, v) at every
+    view version across a refresh that upserts AND deletes."""
     from ua2sql_spark.operators.ivm_join import refresh_join_view
-    from ua2sql_spark.operators.scd2 import build_scd2, scd2_as_of
+    from ua2sql_spark.operators.scd2 import build_scd2
     from ua2sql_spark.operators.snapshot import (
         delete_cow,
         list_versions,
@@ -164,7 +172,7 @@ def test_view_is_a_table_scd2_and_feed_compose(spark, tmp_path):
         cols = ["k", "grp", "a_val", "b_val"]
         got = sorted(
             tuple(r[c] for c in cols)
-            for r in scd2_as_of(hist, v).select(cols).collect()
+            for r in _as_of(hist, v).select(cols).collect()
         )
         want = sorted(
             tuple(r[c] for c in cols)
@@ -205,7 +213,7 @@ def test_value_empty_feed_advances_cursor_without_view_commits(spark, tmp_path):
 def test_cursor_read_fails_closed_on_staged_sidecar(spark, tmp_path):
     """ADVICE r13 #1: a writer crash between delete and rename leaves
     only the .tmp- stage; the cursor read must surface the rename-
-    recovery diagnostic (like _tags/_clones), not 'no cursor'."""
+    recovery diagnostic, not 'no cursor'."""
     from ua2sql_spark.operators.ivm_join import _CURSOR_SIDECAR, _read_cursor
     from ua2sql_spark.operators.snapshot import _jfs, _snap_root
 

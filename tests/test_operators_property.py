@@ -548,32 +548,6 @@ def test_zorder_sql_matches_reference_in_duckdb(pts):
     assert got == [morton(a, b) for a, b in pts]
 
 
-def test_salted_join_equals_plain_join(spark):
-    """salted_join == plain join on a Zipf-skewed fact (70% of rows on
-    one key) with duplicate keys on BOTH sides, for inner and left —
-    including the null-extension rows of the left join."""
-    from ua2sql_spark.operators.salt import salted_join
-
-    big = spark.range(2000).selectExpr(
-        "id",
-        # 70% hot key 0, the rest spread over 1..49; key 999 unmatched
-        "CASE WHEN id % 10 < 7 THEN 0 WHEN id % 97 = 0 THEN 999 "
-        "ELSE CAST(id % 49 + 1 AS BIGINT) END AS k",
-        "id * 2 AS payload",
-    )
-    small = spark.range(300).selectExpr(
-        "CAST(id % 50 AS BIGINT) AS k",  # duplicate small-side keys (6 each)
-        "id AS attr",
-    )
-
-    for how in ("inner", "left"):
-        got = salted_join(big, small, ["k"], n_salts=8, salt_from="id", how=how)
-        want = big.join(small, ["k"], how)
-        gs = sorted(map(tuple, got.select("k", "id", "payload", "attr").collect()))
-        ws = sorted(map(tuple, want.select("k", "id", "payload", "attr").collect()))
-        assert gs == ws, f"{how}: {len(gs)} vs {len(ws)} rows"
-
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 

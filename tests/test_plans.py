@@ -336,29 +336,6 @@ def test_zorder_layout_is_projection_plus_one_agg(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_write_zordered_range_partitions_on_z(spark, tmp_path):
-    """The z-order layout write plans one range exchange on the Morton
-    key (sampled range partitioning, no global single-partition sort)
-    and the written files carry disjoint z-ranges."""
-    from ua2sql_spark.operators.layout import write_zordered, zorder_column
-
-    o = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_custkey")
-    o = o.withColumn("day", F.dayofyear(F.lit("2024-03-05")) + F.col("o_orderkey") % 300)
-    staged = (
-        o.withColumn("__z", zorder_column("o_custkey", "day"))
-        .repartitionByRange(4, F.col("__z"))
-        .sortWithinPartitions("__z")
-    )
-    plan = staged._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in plan.lower(), plan
-
-    path = str(tmp_path / "zordered")
-    write_zordered(o, path, ["o_custkey", "day"], num_files=4)
-    back = spark.read.parquet(path)
-    assert back.count() == o.count()
-    assert "__z" not in back.columns
-
-
 def test_persisted_ivf_index_prunes_partitions_and_matches_inline(spark, tmp_path):
     """save_ivf_index materializes cell-partitioned inverted lists; a
     probe scans ONLY the probed cells (partition pruning visible in the

@@ -6,6 +6,8 @@ the feed)."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from tests.conftest import SF_DIR  # noqa: F401  (fixture wiring)
 
 
@@ -13,8 +15,16 @@ def _rows(df):
     return {(r["id"], r["day"]): r["val"] for r in df.collect()}
 
 
+def _as_of(history, version):
+    """SCD2 rows whose validity interval covers ``version``."""
+    return history.filter(
+        (F.col("valid_from") <= version)
+        & (F.col("valid_to").isNull() | (F.col("valid_to") > version))
+    )
+
+
 def test_scd2_reconstruction_equals_time_travel(spark, tmp_path):
-    from ua2sql_spark.operators.scd2 import build_scd2, scd2_as_of
+    from ua2sql_spark.operators.scd2 import build_scd2
     from ua2sql_spark.operators.snapshot import (
         bootstrap_snapshot,
         list_versions,
@@ -56,7 +66,7 @@ def test_scd2_reconstruction_equals_time_travel(spark, tmp_path):
 
     hist = build_scd2(spark, path, ["id"])
     for v in list_versions(spark, path):
-        assert _rows(scd2_as_of(hist, v)) == _rows(read_snapshot(spark, path, v)), v
+        assert _rows(_as_of(hist, v)) == _rows(read_snapshot(spark, path, v)), v
 
     # interval sanity: id=3 has exactly two states; the first closed at v1
     h3 = sorted(

@@ -234,6 +234,9 @@ def test_engine_launch_selects_the_parallel_collector_once(tmp_path, monkeypatch
     ("_JAVA_OPTIONS", "-Dx=1 -XX:+UseShenandoahGC"),
 ])
 def test_a_collector_the_environment_selects_is_the_only_one(tmp_path, monkeypatch, name, value):
+    """Under a collector where the engine's archive maps, the engine keeps
+    its CDS flags. Under ZGC or Shenandoah it adds no JVM options at all,
+    so such a start neither maps nor dumps the archive."""
     from ua2sql_spark.session import PARALLEL_GC, get_spark
 
     _fake_install(tmp_path, monkeypatch)
@@ -241,6 +244,11 @@ def test_a_collector_the_environment_selects_is_the_only_one(tmp_path, monkeypat
     get_spark()
     monkeypatch.setenv(name, value)
     get_spark()
+    if "ZGC" in value or "Shenandoah" in value:
+        (engine, _), (chosen, conf_dir) = launch.calls
+        assert PARALLEL_GC in engine["spark.driver.defaultJavaOptions"].split()
+        assert "spark.driver.defaultJavaOptions" not in chosen and conf_dir is None
+        return
     engine, chosen = _java_options(launch)
     assert engine == [PARALLEL_GC, *chosen] and PARALLEL_GC not in chosen
     (tmp_path / "nocache").write_text("a file where the cache dir would go")

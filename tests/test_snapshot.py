@@ -1,5 +1,5 @@
 """Copy-on-write snapshots: time-travel reads, version diffs, commit
-atomicity, and the vacuum retention contract (operators/snapshot.py)."""
+atomicity, change feeds and compaction (operators/snapshot.py)."""
 
 from __future__ import annotations
 
@@ -154,41 +154,47 @@ def test_staged_manifest_never_visible_as_version(spark, tmp_path):
     assert list_versions(spark, path) == [0]
 
 
-def test_vacuum_retention_respects_retained_snapshots(spark, tmp_path):
-    """vacuum against live_files_union keeps every retained version's
-    files; vacuum against only the LATEST manifest ends time travel —
-    the Delta-VACUUM retention contract, stated and tested."""
-    from ua2sql_spark.operators.layout import vacuum_orphans
+def test_commits_write_the_manifest_and_schema_sidecar_only(spark, tmp_path):
+    """The on-disk format: every kind of commit leaves a version
+    directory holding the manifest's parquet files and the schema
+    sidecar, and nothing else under ``_snapshots/``."""
+    import os
+
     from ua2sql_spark.operators.snapshot import (
-        live_files_union,
-        read_manifest,
-        read_snapshot,
+        _snap_root,
+        compact_snapshot,
+        delete_cow,
+        rollback,
         upsert_cow,
     )
 
     path = str(tmp_path / "tbl")
-    b1 = spark.createDataFrame([(1, "d1", "a")], "id bigint, day string, val string")
-    b2 = spark.createDataFrame([(1, "d1", "b")], "id bigint, day string, val string")
-    upsert_cow(b1, path, ["id"], "day")
-    upsert_cow(b2, path, ["id"], "day")
+    mk = lambda rows: spark.createDataFrame(rows, "id bigint, day string, val string")
+    upsert_cow(mk([(1, "d1", "a"), (2, "d2", "b")]), path, ["id"], "day")  # v0
+    upsert_cow(mk([(2, "d2", "B")]), path, ["id"], "day")                   # v1
+    delete_cow(spark, path, F.col("id") == 2, "day")                        # v2
+    upsert_cow(mk([(4, "d1", "d")]), path, ["id"], "day")                   # v3
+    assert compact_snapshot(spark, path, "day", min_files=1)[0] == 4        # v4
+    assert rollback(spark, path, 0) == 5                                     # v5
+    root = _snap_root(path)
+    assert sorted(os.listdir(root)) == [f"v{v:06d}" for v in range(6)]
+    for name in os.listdir(root):
+        entries = os.listdir(os.path.join(root, name))
+        meta = {e for e in entries if e.startswith("_")}
+        assert meta == {"_SUCCESS", "_table_schema.json"}, (name, entries)
+        data = [e for e in entries if not e.startswith((".", "_"))]
+        assert data and all(e.endswith(".parquet") for e in data), (name, entries)
 
-    # union-manifest vacuum: nothing to delete (age floor 0 to force)
-    gone = vacuum_orphans(
-        spark, path, live_files_union(spark, path), max_age_hours=0.0, dry_run=False
-    )
-    assert gone == []
-    assert _rows(read_snapshot(spark, path, 0)) == {(1, "d1"): "a"}
 
-    # latest-only vacuum: v0's file is an orphan; v1 survives intact
-    gone2 = vacuum_orphans(
-        spark,
-        path,
-        read_manifest(spark, path, 1).select("file"),
-        max_age_hours=0.0,
-        dry_run=False,
-    )
-    assert len(gone2) == 1
-    assert _rows(read_snapshot(spark, path, 1)) == {(1, "d1"): "b"}
+def test_manifest_spanning_two_table_roots_is_rejected(spark, tmp_path):
+    """One ``basePath`` cannot read files under two table roots (a
+    shallow clone's manifest): the read fails with a clear error instead
+    of Spark's conflicting-directory one."""
+    from ua2sql_spark.operators.snapshot import _read_manifest_files
+
+    files = [f"{tmp_path}/a/day=d1/x.parquet", f"{tmp_path}/b/day=d1/y.parquet"]
+    with pytest.raises(ValueError, match="span 2 table roots"):
+        _read_manifest_files(spark, files)
 
 
 def test_compact_snapshot_and_rollback(spark, tmp_path):
@@ -437,7 +443,7 @@ def test_changes_since_tags_commits_and_resumes(spark, tmp_path):
     assert fgot[(1, 0, "insert")] == "a" and fgot[(2, 0, "insert")] == "b"
     assert len(full) == len(feed) + 2
 
-    # a vacuumed/never-committed base version must fail with the
+    # a never-committed base version must fail with the
     # re-bootstrap message, not silently skip
     import pytest as _pytest
 
@@ -667,14 +673,12 @@ def test_upsert_cow_rejects_batch_missing_target_columns(spark, tmp_path):
 def test_ivm_versioned_refresh_is_atomic(spark, tmp_path):
     """ADVICE r6 #3: the view is manifest-versioned — an orphan data
     directory (a refresh that crashed before its manifest commit) is
-    invisible to readers, and vacuum reclaims unreferenced data dirs
-    without disturbing the live version."""
+    invisible to readers, before and after the next refresh commits."""
     from ua2sql_spark.operators.ivm import (
         build_view,
         list_view_versions,
         read_view,
         refresh_from_feed,
-        vacuum_view,
     )
     from ua2sql_spark.operators.snapshot import (
         changes_since,
@@ -712,11 +716,6 @@ def test_ivm_versioned_refresh_is_atomic(spark, tmp_path):
     # pinned read of the old version still works (time travel)
     old = {r["grp"]: r["n"] for r in read_view(spark, view, version=0).collect()}
     assert old == {"a": 1, "b": 1}
-
-    # vacuum keep=1: v0 manifest + the orphan dir go; latest survives
-    assert vacuum_view(spark, view, keep_versions=1) >= 1
-    assert list_view_versions(spark, view) == [1]
-    assert {r["grp"]: r["n"] for r in read_view(spark, view).collect()} == got
 
 
 def test_upsert_cow_rejects_narrow_batch_touching_only_new_partitions(
@@ -757,149 +756,18 @@ def test_upsert_cow_rejects_narrow_batch_touching_only_new_partitions(
     assert "extra" in table_schema(spark, path, 1).names
 
 
-def test_vacuum_view_survives_path_respelling_and_bigint_groups(spark, tmp_path):
-    """ADVICE r7 #5 + VERDICT r7 wrong-#3: vacuum liveness compares
-    d-<uuid> basenames (a file:// or trailing-slash spelling of the
-    view path must not delete live data), and a BIGINT group column
-    round-trips through the all-groups-deleted empty case with its
-    real type, not a hardcoded string."""
-    from ua2sql_spark.operators.ivm import (
-        build_view,
-        read_view,
-        refresh_from_feed,
-        vacuum_view,
-    )
-    from ua2sql_spark.operators.snapshot import (
-        changes_since,
-        read_snapshot,
-        upsert_cow,
-    )
-
-    path = str(tmp_path / "tbl")
-    view = str(tmp_path / "view")
-    mk = lambda rows: spark.createDataFrame(
-        rows, "id bigint, grp bigint, amount double"
-    )
-    upsert_cow(mk([(1, 10, 4.0), (2, 20, 6.0)]), path, ["id"], "grp")  # v0
-    build_view(read_snapshot(spark, path, 0), "grp", "amount", view)
-    upsert_cow(mk([(3, 10, 1.0)]), path, ["id"], "grp")                # v1
-    refresh_from_feed(spark, view, changes_since(spark, path, 0, ["id"], 1),
-                      "grp", "amount")
-    live = {r["grp"]: r["n"] for r in read_view(spark, view).collect()}
-    assert live == {10: 2, 20: 1}
-
-    # vacuum with a differently-spelled (file:// + trailing slash) view
-    # path: with full-string comparison every live dir would "mismatch"
-    # and be deleted — basename comparison keeps the view readable
-    assert vacuum_view(spark, f"file://{view}/", keep_versions=1) >= 0
-    assert {r["grp"]: r["n"] for r in read_view(spark, view).collect()} == live
-
-    # delete every row via a synthetic change feed -> EMPTY view whose
-    # grp column still reads back as BIGINT (not the old hardcoded
-    # "grp string" fallback)
-    feed = spark.createDataFrame(
-        [(1, 10, 4.0, "delete"), (3, 10, 1.0, "delete"), (2, 20, 6.0, "delete")],
-        "id bigint, grp bigint, amount double, _change_type string",
-    )
-    pre_dtype = dict(read_view(spark, view).dtypes)["grp"]
-    refresh_from_feed(spark, view, feed, "grp", "amount")
-    empty = read_view(spark, view)
-    assert empty.count() == 0
-    # the empty view reports the view's own committed group type (an
-    # integer width here), never the old hardcoded "grp string"
-    assert dict(empty.dtypes)["grp"] == pre_dtype != "string"
-
-
-def test_versioned_data_skipping(spark, tmp_path):
-    """read_snapshot(where=...) prunes files via the version's COMMITTED
-    stats: exact results, strict file subset, per-version independence
-    (time travel prunes with the old version's stats), conservative
-    keep for files never covered by stats, and propagation through
-    compaction and rollback."""
-    from ua2sql_spark.operators.manifest import prune_files
-    from ua2sql_spark.operators.snapshot import (
-        compact_snapshot,
-        read_manifest,
-        read_snapshot,
-        rollback,
-        snapshot_stats,
-        upsert_cow,
-    )
-
-    path = str(tmp_path / "tbl")
-    mk = lambda rows: spark.createDataFrame(rows, "id bigint, day string, val double")
-
-    # v0 committed WITHOUT stats (the pre-stats legacy case)
-    upsert_cow(mk([(i, "d1", float(i)) for i in range(0, 100)]), path, ["id"], "day")
-    assert snapshot_stats(spark, path, 0) is None
-    # where= on a stats-less version: exact, nothing pruned
-    got = read_snapshot(spark, path, 0, where=("id", 10, 19)).count()
-    assert got == 10
-
-    # v1 adds a disjoint id range in a new partition, WITH stats
-    upsert_cow(
-        mk([(i, "d2", float(i)) for i in range(1000, 1100)]),
-        path, ["id"], "day", stats_cols=["id"],
-    )
-    s1 = snapshot_stats(spark, path, 1)
-    assert s1 is not None
-    # only the v1-written file is covered; v0's carried file is absent
-    n_files = read_manifest(spark, path, 1).count()
-    assert s1.select("file").distinct().count() < n_files
-
-    # pruned read: exact rows from the covered range...
-    assert read_snapshot(spark, path, 1, where=("id", 1000, 1009)).count() == 10
-    # ...and the UNCOVERED file is kept conservatively (v0 rows found)
-    assert read_snapshot(spark, path, 1, where=("id", 10, 19)).count() == 10
-
-    # v2 rewrites d1 with stats -> now every file is covered
-    upsert_cow(
-        mk([(i, "d1", float(i)) for i in range(0, 100)]),
-        path, ["id"], "day", stats_cols=["id"],
-    )
-    s2 = snapshot_stats(spark, path, 2)
-    files2 = {r["file"] for r in read_manifest(spark, path, 2).collect()}
-    assert {r["file"] for r in s2.select("file").distinct().collect()} == files2
-    # the prune decision is a strict subset for a range hitting one file
-    kept = prune_files(s2, "id", 1000, 1009)
-    assert kept is not None and 0 < len(kept) < len(files2)
-    assert read_snapshot(spark, path, 2, where=("id", 1000, 1009)).count() == 10
-    # zero-overlap range -> empty, schema intact
-    empty = read_snapshot(spark, path, 2, where=("id", 10**9, 2 * 10**9))
-    assert empty.count() == 0 and set(empty.columns) == {"id", "day", "val"}
-    # time travel still prunes with v1's OWN stats
-    assert read_snapshot(spark, path, 1, where=("id", 1000, 1009)).count() == 10
-
-    # compaction recomputes stats for coalesced files, carries the rest
-    v3, compacted = compact_snapshot(spark, path, "day")
-    if compacted:  # d1 may or may not be fragmented enough
-        s3 = snapshot_stats(spark, path, v3)
-        files3 = {r["file"] for r in read_manifest(spark, path, v3).collect()}
-        assert {r["file"] for r in s3.select("file").distinct().collect()} == files3
-        assert read_snapshot(spark, path, v3, where=("id", 1000, 1009)).count() == 10
-
-    # rollback propagates the restored version's stats
-    v_rb = rollback(spark, path, 2)
-    assert snapshot_stats(spark, path, v_rb) is not None
-    assert read_snapshot(spark, path, v_rb, where=("id", 0, 9)).count() == 10
-
-
 def test_delete_cow_compliance_path(spark, tmp_path):
     """Row-level CoW DELETE: matching rows gone from the new version,
     prior versions intact (time travel), fully-emptied partitions
     vanish by manifest absence, the change feed emits the erasure as
-    delete events (so IVM applies it), NULL predicate rows are KEPT
-    (SQL DELETE semantics), stats propagate, and vacuum afterwards
-    hard-erases the pre-delete files."""
+    delete events (so IVM applies it), and NULL predicate rows are KEPT
+    (SQL DELETE semantics)."""
     from ua2sql_spark.operators.ivm import build_view, read_view, refresh_from_feed
-    from ua2sql_spark.operators.layout import vacuum_orphans
     from ua2sql_spark.operators.snapshot import (
         changes_since,
         delete_cow,
-        delete_versions_before,
         read_manifest,
         read_snapshot,
-        snapshot_stats,
         upsert_cow,
     )
 
@@ -913,7 +781,7 @@ def test_delete_cow_compliance_path(spark, tmp_path):
             (1, "d1", "alice", 1.0), (2, "d1", "bob", 2.0),
             (3, "d2", "alice", 3.0), (4, "d3", None, 4.0),
         ]),
-        path, ["id"], "day", stats_cols=["id"],
+        path, ["id"], "day",
     )                                                                     # v0
     build_view(read_snapshot(spark, path, 0), "day", "val", view)
 
@@ -922,15 +790,11 @@ def test_delete_cow_compliance_path(spark, tmp_path):
     assert (v, n) == (1, 2)
     left = {r["id"] for r in read_snapshot(spark, path).collect()}
     assert left == {2, 4}
-    # time travel: v0 still has alice (until vacuumed)
+    # time travel: v0 still has alice
     assert {r["id"] for r in read_snapshot(spark, path, 0).collect()} == {1, 2, 3, 4}
     # the emptied partition has no manifest entry at v1
     parts = {r["partition"] for r in read_manifest(spark, path, 1).collect()}
     assert "day=d2" not in parts and "day=d1" in parts and "day=d3" in parts
-    # stats propagated and cover exactly v1's files
-    s1 = snapshot_stats(spark, path, 1)
-    files1 = {r["file"] for r in read_manifest(spark, path, 1).collect()}
-    assert {r["file"] for r in s1.select("file").distinct().collect()} == files1
     # the change feed carries the erasure...
     feed = changes_since(spark, path, 0, ["id"], 1)
     deletes = {r["id"] for r in feed.filter(F.col("_change_type") == "delete").collect()}
@@ -943,46 +807,6 @@ def test_delete_cow_compliance_path(spark, tmp_path):
     # matching nothing commits nothing
     v2, n2 = delete_cow(spark, path, F.col("user") == "nobody", "day")
     assert (v2, n2) == (1, 0)
-
-    # hard erasure: drop pre-delete manifests, vacuum orphans
-    from ua2sql_spark.operators.snapshot import live_files_union
-
-    delete_versions_before(spark, path, 1)
-    gone = vacuum_orphans(
-        spark, path, live_files_union(spark, path), max_age_hours=0.0, dry_run=False
-    )
-    assert gone, "pre-delete files should be vacuumable"
-    assert {r["id"] for r in read_snapshot(spark, path).collect()} == {2, 4}
-
-
-def test_stats_coverage_is_judged_per_column(spark, tmp_path):
-    """ADVICE r8 high: a file whose stats rows cover only OTHER columns
-    must be conservatively KEPT when pruning on a column it has no
-    [min,max] for — the old whole-file "covered" set silently dropped
-    its rows. Repro: v0 commits stats on 'a' only, v1 commits a second
-    partition with stats on 'b' only; where=('a',...) must equal the
-    exact filter."""
-    from ua2sql_spark.operators.snapshot import read_snapshot, upsert_cow
-
-    path = str(tmp_path / "tbl")
-    mk = lambda rows: spark.createDataFrame(rows, "id bigint, day string, a bigint, b bigint")
-    upsert_cow(
-        mk([(i, "d1", i, 1000 - i) for i in range(0, 20)]),
-        path, ["id"], "day", stats_cols=["a"],
-    )
-    upsert_cow(
-        mk([(i, "d2", i, 1000 - i) for i in range(100, 120)]),
-        path, ["id"], "day", stats_cols=["b"],
-    )
-    # the v0 file has stats rows (for 'a') but NONE for 'b': pruning on
-    # 'b' must keep it
-    exact_b = read_snapshot(spark, path, 1).filter(F.col("b").between(981, 1000)).count()
-    assert exact_b == 20
-    assert read_snapshot(spark, path, 1, where=("b", 981, 1000)).count() == exact_b
-    # and pruning on 'a' keeps the v1 file (stats only for 'b')
-    exact_a = read_snapshot(spark, path, 1).filter(F.col("a").between(0, 119)).count()
-    assert exact_a == 40
-    assert read_snapshot(spark, path, 1, where=("a", 0, 119)).count() == exact_a
 
 
 def test_delete_cow_accepts_keys_dataframe(spark, tmp_path):
@@ -1038,170 +862,18 @@ def test_view_survives_integer_width_drift(spark, tmp_path):
     got = {(r["grp"], r["n"]) for r in read_view(spark, view).collect()}
     assert got == {(10, 2), (20, 1)}
 
-
-def test_check_constraints_enforced_persisted_and_dropped(spark, tmp_path):
-    """Delta-style CHECK constraints: violations abort the commit
-    before anything lands; the set persists in the manifest sidecar and
-    is enforced on LATER upserts that never mention it; NULL passes
-    (SQL CHECK semantics); metadata-oblivious commits (delete) carry
-    the set; drop_constraint removes one via a metadata-only version."""
-    import pytest as _pytest
-
-    from ua2sql_spark.operators.snapshot import (
-        ConstraintViolation,
-        delete_cow,
-        drop_constraint,
-        latest_version,
-        read_snapshot,
-        table_constraints,
-        upsert_cow,
+    # a feed that deletes every group leaves an EMPTY view whose grp
+    # column still reads back as the committed integer type, not the old
+    # hardcoded "grp string" fallback
+    gone = spark.createDataFrame(
+        [(1, 10, 4.0, "delete"), (2, 10, 6.0, "delete"), (3, 20, 8.0, "delete")],
+        "id bigint, grp bigint, amount double, _change_type string",
     )
-
-    path = str(tmp_path / "tbl")
-    mk = lambda rows: spark.createDataFrame(rows, "id bigint, day string, bal double")
-    upsert_cow(
-        mk([(1, "d1", 10.0), (2, "d2", 20.0)]),
-        path, ["id"], "day",
-        constraints={"bal_nonneg": "bal >= 0", "id_pos": "id > 0"},
-    )
-    assert table_constraints(spark, path) == {
-        "bal_nonneg": "bal >= 0", "id_pos": "id > 0",
-    }
-
-    # a later upsert that never mentions constraints is still checked
-    with _pytest.raises(ConstraintViolation, match="bal_nonneg"):
-        upsert_cow(mk([(3, "d1", -5.0)]), path, ["id"], "day")
-    # nothing committed by the failed upsert
-    assert latest_version(spark, path) == 0
-    assert read_snapshot(spark, path).count() == 2
-
-    # NULL passes (SQL CHECK: only FALSE violates)
-    upsert_cow(
-        spark.createDataFrame([(4, "d1", None)], "id bigint, day string, bal double"),
-        path, ["id"], "day",
-    )
-    assert read_snapshot(spark, path).count() == 3
-
-    # delete commits carry the constraint sidecar forward
-    delete_cow(spark, path, F.col("id") == 4, "day")
-    assert latest_version(spark, path) == 2
-    assert set(table_constraints(spark, path)) == {"bal_nonneg", "id_pos"}
-
-    # drop one: metadata-only commit, data unchanged, other kept
-    v = drop_constraint(spark, path, "bal_nonneg")
-    assert v == 3
-    assert table_constraints(spark, path) == {"id_pos": "id > 0"}
-    assert read_snapshot(spark, path).count() == 2
-    upsert_cow(mk([(5, "d2", -1.0)]), path, ["id"], "day")  # now allowed
-    with _pytest.raises(ConstraintViolation, match="id_pos"):
-        upsert_cow(mk([(-6, "d2", 1.0)]), path, ["id"], "day")
-    with _pytest.raises(KeyError):
-        drop_constraint(spark, path, "nope")
-    # time travel still sees both constraints on the old version
-    assert set(table_constraints(spark, path, 0)) == {"bal_nonneg", "id_pos"}
-
-
-def test_add_constraint_validates_existing_rows(spark, tmp_path):
-    """ADVICE r9 #1 (Delta ADD CONSTRAINT semantics): adding a NEW
-    constraint via upsert_cow(constraints=...) on a non-empty table must
-    scan the stored rows too — otherwise table_constraints() advertises
-    an invariant the data already violates. Re-sending the identical
-    persisted set stays cheap (no existing-data job needed), and a
-    constraint on a column the batch INTRODUCES sees stored rows as
-    NULL (which passes CHECK)."""
-    import pytest as _pytest
-
-    from ua2sql_spark.operators.snapshot import (
-        ConstraintViolation,
-        latest_version,
-        table_constraints,
-        upsert_cow,
-    )
-
-    path = str(tmp_path / "tbl")
-    mk = lambda rows: spark.createDataFrame(rows, "id bigint, day string, bal double")
-    upsert_cow(mk([(1, "d1", -10.0), (2, "d2", 20.0)]), path, ["id"], "day")
-
-    # stored row id=1 violates the incoming constraint -> whole commit
-    # aborts, nothing written, constraint NOT persisted
-    with _pytest.raises(ConstraintViolation, match="bal_nonneg"):
-        upsert_cow(
-            mk([(3, "d1", 5.0)]), path, ["id"], "day",
-            constraints={"bal_nonneg": "bal >= 0"},
-        )
-    assert latest_version(spark, path) == 0
-    assert table_constraints(spark, path) == {}
-
-    # fix the stored violation, then the same ADD succeeds
-    upsert_cow(mk([(1, "d1", 10.0)]), path, ["id"], "day")
-    upsert_cow(
-        mk([(3, "d1", 5.0)]), path, ["id"], "day",
-        constraints={"bal_nonneg": "bal >= 0"},
-    )
-    assert table_constraints(spark, path) == {"bal_nonneg": "bal >= 0"}
-
-    # re-sending the identical persisted set is not an ADD; and a
-    # CHANGED predicate under the same name re-validates stored rows
-    upsert_cow(
-        mk([(4, "d2", 1.0)]), path, ["id"], "day",
-        constraints={"bal_nonneg": "bal >= 0"},
-    )
-    with _pytest.raises(ConstraintViolation, match="bal_nonneg"):
-        upsert_cow(
-            mk([(5, "d2", 100.0)]), path, ["id"], "day",
-            constraints={"bal_nonneg": "bal >= 50"},
-        )
-
-    # constraint on a batch-introduced column: stored rows lack it ->
-    # NULL -> passes; the batch's own rows are still checked
-    wide = spark.createDataFrame(
-        [(6, "d1", 1.0, "ok")], "id bigint, day string, bal double, tag string"
-    )
-    upsert_cow(
-        wide, path, ["id"], "day",
-        constraints={"tag_ok": "tag IN ('ok', 'meh')"},
-    )
-    assert "tag_ok" in table_constraints(spark, path)
-
-
-def test_describe_history_tags_every_operation(spark, tmp_path):
-    """Every commit path stamps a _commit_info sidecar: DESCRIBE
-    HISTORY reports version/operation/metrics newest-first, including
-    metadata-only commits; pre-tagging versions degrade to UNKNOWN."""
-    from ua2sql_spark.operators.snapshot import (
-        delete_cow,
-        describe_history,
-        drop_constraint,
-        rollback,
-        upsert_cow,
-    )
-
-    path = str(tmp_path / "tbl")
-    mk = lambda rows: spark.createDataFrame(rows, "id bigint, day string, v double")
-    upsert_cow(
-        mk([(i, "d1", float(i)) for i in range(10)]),
-        path, ["id"], "day", constraints={"vpos": "v >= 0"},
-    )
-    upsert_cow(mk([(10, "d2", 10.0)]), path, ["id"], "day")
-    delete_cow(spark, path, F.col("id") == 3, "day")
-    rollback(spark, path, 1)
-    drop_constraint(spark, path, "vpos")
-
-    hist = describe_history(spark, path)
-    ops = [(h["version"], h["operation"]) for h in hist]
-    assert ops == [
-        (4, "DROP_CONSTRAINT"),
-        (3, "RESTORE"),
-        (2, "DELETE"),
-        (1, "UPSERT"),
-        (0, "UPSERT"),
-    ]
-    by_v = {h["version"]: h for h in hist}
-    assert by_v[0]["metrics"]["rows_written"] == "10"
-    assert by_v[2]["metrics"]["rows_deleted"] == "1"
-    assert by_v[3]["metrics"]["to_version"] == "1"
-    assert by_v[4]["metrics"]["constraint"] == "vpos"
-    assert all(h["timestamp"] for h in hist)
+    pre_dtype = dict(read_view(spark, view).dtypes)["grp"]
+    refresh_from_feed(spark, view, gone, "grp", "amount")
+    empty = read_view(spark, view)
+    assert empty.count() == 0
+    assert dict(empty.dtypes)["grp"] == pre_dtype != "string"
 
 
 def test_read_view_mixed_width_fallback_still_reachable(spark, tmp_path):
@@ -1245,194 +917,6 @@ def test_read_view_mixed_width_fallback_still_reachable(spark, tmp_path):
     _commit_view_manifest(spark, view, 1, [(0, str(tmp_path / "missing_dir"))])
     with _pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist|Path does not"):
         read_view(spark, view, 1).collect()
-
-
-def test_tags_pin_versions_and_protect_retention(spark, tmp_path):
-    """Tags (VERDICT r10 #7): named pointers readable via
-    read_snapshot(version=name), immutable while they exist, and
-    retention pins — delete_versions_before refuses to age out a
-    tagged version."""
-    from ua2sql_spark.operators.snapshot import (
-        delete_tag,
-        delete_versions_before,
-        list_tags,
-        read_snapshot,
-        tag_snapshot,
-        upsert_cow,
-    )
-
-    path = str(tmp_path / "tbl")
-    mk = lambda rows: spark.createDataFrame(rows, "id bigint, day string, val string")
-    upsert_cow(mk([(1, "d1", "a")]), path, ["id"], "day")          # v0
-    upsert_cow(mk([(1, "d1", "b")]), path, ["id"], "day")          # v1
-    upsert_cow(mk([(1, "d1", "c")]), path, ["id"], "day")          # v2
-
-    assert tag_snapshot(spark, path, "train-run-7", version=1) == 1
-    assert tag_snapshot(spark, path, "latest-blessed") == 2  # default latest
-    assert list_tags(spark, path) == {"train-run-7": 1, "latest-blessed": 2}
-    assert _rows(read_snapshot(spark, path, "train-run-7")) == {(1, "d1"): "b"}
-
-    # immutable while present; version must exist; name syntax guarded
-    with pytest.raises(ValueError, match="already points"):
-        tag_snapshot(spark, path, "train-run-7", version=2)
-    with pytest.raises(ValueError, match="does not exist"):
-        tag_snapshot(spark, path, "ghost", version=9)
-    with pytest.raises(ValueError, match="version syntax"):
-        tag_snapshot(spark, path, "v000001")
-    with pytest.raises(ValueError, match="no tag"):
-        read_snapshot(spark, path, "nope")
-
-    # retention refuses to drop a tagged version...
-    with pytest.raises(ValueError, match="train-run-7"):
-        delete_versions_before(spark, path, keep_from=2)
-    # ...until the tag is deleted
-    assert delete_tag(spark, path, "train-run-7") == 1
-    assert delete_versions_before(spark, path, keep_from=2) == [0, 1]
-    assert _rows(read_snapshot(spark, path, "latest-blessed")) == {(1, "d1"): "c"}
-
-
-def test_shallow_clone_reads_time_travels_and_localizes(spark, tmp_path):
-    """Shallow clone (VERDICT r10 #7): a manifest-only v0 referencing
-    the source's live files at a pinned version — zero data copied;
-    reads work through the per-root grouped reader; CoW mutations
-    localize touched partitions into the clone's own directory and
-    leave the source untouched."""
-    from ua2sql_spark.operators.snapshot import (
-        clone_snapshot,
-        describe_history,
-        read_manifest,
-        read_snapshot,
-        tag_snapshot,
-        upsert_cow,
-    )
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "clone")
-    mk = lambda rows: spark.createDataFrame(rows, "id bigint, day string, val string")
-    upsert_cow(mk([(1, "d1", "a"), (2, "d2", "b")]), src, ["id"], "day")  # v0
-    upsert_cow(mk([(3, "d3", "c")]), src, ["id"], "day")                  # v1
-    tag_snapshot(spark, src, "blessed", version=1)
-
-    assert clone_snapshot(spark, src, dst, version="blessed") == 0
-    # zero data copied: every clone manifest entry points into src
-    files = [r["file"] for r in read_manifest(spark, dst, 0).collect()]
-    assert files and all("/src/" in f for f in files)
-    assert _rows(read_snapshot(spark, dst)) == {
-        (1, "d1"): "a", (2, "d2"): "b", (3, "d3"): "c",
-    }
-    hist = describe_history(spark, dst)
-    assert hist[0]["operation"] == "CLONE"
-    assert hist[0]["metrics"]["source_version"] == "1"
-
-    # source keeps moving; the clone stays pinned
-    upsert_cow(mk([(1, "d1", "MUTATED")]), src, ["id"], "day")            # src v2
-    assert _rows(read_snapshot(spark, dst))[(1, "d1")] == "a"
-
-    # CoW upsert on the clone: touched partition localizes under dst,
-    # untouched partitions still reference src files; src unchanged
-    upsert_cow(mk([(2, "d2", "B2"), (4, "d2", "d")]), dst, ["id"], "day")  # dst v1
-    assert _rows(read_snapshot(spark, dst)) == {
-        (1, "d1"): "a", (2, "d2"): "B2", (3, "d3"): "c", (4, "d2"): "d",
-    }
-    m1 = {r["file"] for r in read_manifest(spark, dst, 1).collect()}
-    assert any("/clone/" in f and "day=d2" in f for f in m1)
-    assert all("/src/" in f for f in m1 if "day=d2" not in f)
-    assert _rows(read_snapshot(spark, src))[(2, "d2")] == "b"
-    # the clone's own time travel works
-    assert _rows(read_snapshot(spark, dst, 0))[(2, "d2")] == "b"
-
-    # a clone must land in a fresh directory
-    with pytest.raises(ValueError, match="already has snapshots"):
-        clone_snapshot(spark, src, dst)
-
-
-def test_shallow_clone_vacuum_contract(spark, tmp_path):
-    """Clone-safe vacuum is the DEFAULT (VERDICT r11 #3): clone_snapshot
-    registers the clone in the source's sidecar, so the plain recipe
-    vacuum_orphans(live_files_union(src)) keeps every clone readable
-    with ZERO caller bookkeeping, even after the clone diverges.
-    Source-only vacuum is the explicit include_clones=False opt-in (the
-    documented clone-invalidating mode)."""
-    from ua2sql_spark.operators.layout import vacuum_orphans
-    from ua2sql_spark.operators.snapshot import (
-        clone_snapshot,
-        delete_versions_before,
-        list_clones,
-        live_files_union,
-        read_snapshot,
-        upsert_cow,
-    )
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "clone")
-    mk = lambda rows: spark.createDataFrame(rows, "id bigint, day string, val string")
-    upsert_cow(mk([(1, "d1", "a"), (2, "d2", "x")]), src, ["id"], "day")  # src v0
-    clone_snapshot(spark, src, dst)                         # pins src v0's files
-    assert list_clones(spark, src) == [dst]
-    # the clone DIVERGES (localizes d2) but still references src's d1
-    upsert_cow(mk([(2, "d2", "X2")]), dst, ["id"], "day")   # dst v1
-    upsert_cow(mk([(1, "d1", "b")]), src, ["id"], "day")    # src v1 rewrites d1
-    # source shortens retention to v1 only: v0's file is now orphaned
-    # FROM THE SOURCE'S OWN point of view, but the clone still needs it
-    delete_versions_before(spark, src, keep_from=1)
-
-    # DEFAULT recipe — no clone bookkeeping at the call site
-    gone = vacuum_orphans(
-        spark, src, live_files_union(spark, src), max_age_hours=0, dry_run=False
-    )
-    assert gone == []
-    assert _rows(read_snapshot(spark, dst)) == {(1, "d1"): "a", (2, "d2"): "X2"}
-
-    # EXPLICIT source-only opt-in sweeps the clone's foreign file —
-    # the documented clone-invalidating mode
-    gone2 = vacuum_orphans(
-        spark,
-        src,
-        live_files_union(spark, src, include_clones=False),
-        max_age_hours=0,
-        dry_run=False,
-    )
-    assert len(gone2) >= 1
-    with pytest.raises(Exception):
-        read_snapshot(spark, dst).collect()
-
-
-def test_clone_registry_fails_vacuum_closed_and_unregisters(spark, tmp_path):
-    """A registered clone that was deleted from disk must make
-    live_files_union RAISE (fail closed) rather than silently skip —
-    skipping would hand vacuum a live set missing the clone's
-    references. unregister_clone retires it consciously; clones of
-    clones are unioned recursively."""
-    import shutil
-
-    from ua2sql_spark.operators.snapshot import (
-        clone_snapshot,
-        list_clones,
-        live_files_union,
-        unregister_clone,
-        upsert_cow,
-    )
-
-    src = str(tmp_path / "src")
-    c1 = str(tmp_path / "c1")
-    c2 = str(tmp_path / "c1_of_c1")
-    mk = lambda rows: spark.createDataFrame(rows, "id bigint, day string, val string")
-    upsert_cow(mk([(1, "d1", "a")]), src, ["id"], "day")
-    clone_snapshot(spark, src, c1)
-    clone_snapshot(spark, c1, c2)  # grandclone registers on c1, not src
-    assert list_clones(spark, src) == [c1]
-    assert list_clones(spark, c1) == [c2]
-    # recursive union: src's live set covers the grandclone's files too
-    n_with = live_files_union(spark, src).count()
-    assert n_with >= live_files_union(spark, src, include_clones=False).count()
-
-    shutil.rmtree(c2)
-    with pytest.raises(ValueError, match="unreadable"):
-        live_files_union(spark, src).count()
-    unregister_clone(spark, c1, c2)
-    assert live_files_union(spark, src).count() == n_with  # same files: c2 was zero-copy
-    with pytest.raises(ValueError, match="not a registered clone"):
-        unregister_clone(spark, c1, c2)
 
 
 def test_snapshot_layout_health_agrees_with_compaction(spark, tmp_path):
@@ -1558,71 +1042,49 @@ def test_layout_health_min_files_matches_compaction_threshold(spark, tmp_path):
 
 
 def test_sidecar_writes_are_staged_and_fail_closed(spark, tmp_path):
-    """ADVICE r12 #1: _clones.json mutates via stage + rename; a crash
+    """ADVICE r12 #1: a mutable sidecar (``ivm_join``'s cursor) changes
+    via stage + rename, so a clean write leaves no stage behind; a crash
     between delete and rename (simulated: stage present, final gone)
-    makes readers raise instead of reporting an empty registry — the
-    empty answer is exactly the vacuum data loss the sidecar prevents."""
-    import os
-
-    from ua2sql_spark.operators.snapshot import (
-        clone_snapshot,
-        list_clones,
-        upsert_cow,
-    )
-
-    src = str(tmp_path / "src")
-    upsert_cow(
-        spark.createDataFrame([(1, "d1", "a")], "id bigint, day string, v string"),
-        src,
-        ["id"],
-        "day",
-    )
-    clone_snapshot(spark, src, str(tmp_path / "c1"))
-    assert list_clones(spark, src) == [str(tmp_path / "c1")]
-    snap_root = os.path.join(src, "_snapshots")
-    # no stage residue after a clean write
-    assert not [
-        n for n in os.listdir(snap_root) if n.startswith(".tmp-_clones.json-")
-    ]
-    # simulate the crash window: stage exists, final missing (drop the
-    # local FS's checksum twin too, or the recovery read would validate
-    # the new bytes against the OLD file's crc)
-    with open(os.path.join(snap_root, ".tmp-_clones.json-deadbeef"), "w") as fh:
-        fh.write("[]")
-    os.remove(os.path.join(snap_root, "_clones.json"))
-    crc = os.path.join(snap_root, "._clones.json.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    with pytest.raises(ValueError, match="crashed between delete and rename"):
-        list_clones(spark, src)
-    # recovery: rename the stage into place
-    os.rename(
-        os.path.join(snap_root, ".tmp-_clones.json-deadbeef"),
-        os.path.join(snap_root, "_clones.json"),
-    )
-    assert list_clones(spark, src) == []
-
-
-def test_live_files_union_names_clone_registry_cycles(spark, tmp_path):
-    """ADVICE r12 #4: a hand-corrupted _clones.json (self-registration)
-    must surface as a named diagnostic on the vacuum path, not an
-    unbounded RecursionError."""
+    makes readers raise instead of reading "never written", and renaming
+    the stage into place recovers."""
     import json
     import os
 
-    from ua2sql_spark.operators.snapshot import live_files_union, upsert_cow
-
-    src = str(tmp_path / "src")
-    upsert_cow(
-        spark.createDataFrame([(1, "d1", "a")], "id bigint, day string, v string"),
-        src,
-        ["id"],
-        "day",
+    from ua2sql_spark.operators.ivm_join import (
+        _CURSOR_SIDECAR,
+        _read_cursor,
+        _write_cursor,
+        build_join_view,
     )
-    with open(os.path.join(src, "_snapshots", "_clones.json"), "w") as fh:
-        json.dump([src], fh)  # self-registration: the simplest cycle
-    with pytest.raises(ValueError, match="clone registry cycle"):
-        live_files_union(spark, src).count()
+    from ua2sql_spark.operators.snapshot import upsert_cow
+
+    a, b, view = (str(tmp_path / n) for n in ("a", "b", "view"))
+    upsert_cow(
+        spark.createDataFrame([(1, "g0", "x")], "k bigint, grp string, v string"),
+        a, ["k"], "grp",
+    )
+    upsert_cow(spark.createDataFrame([(1, 1.0)], "k bigint, w double"), b, ["k"], "k")
+    build_join_view(spark, a, b, "k", "grp", view)
+    cur = _read_cursor(spark, view)
+    _write_cursor(spark, view, {**cur, "a_version": 7})  # replaces the file
+    assert _read_cursor(spark, view) == {**cur, "a_version": 7}
+    snap_root = os.path.join(view, "_snapshots")
+    assert not [n for n in os.listdir(snap_root) if n.startswith(f".tmp-{_CURSOR_SIDECAR}-")]
+    # simulate the crash window: stage exists, final missing (drop the
+    # local FS's checksum twin too, or the recovery read would validate
+    # the new bytes against the OLD file's crc)
+    stage = os.path.join(snap_root, f".tmp-{_CURSOR_SIDECAR}-deadbeef")
+    with open(stage, "w") as fh:
+        fh.write(json.dumps(cur, sort_keys=True))
+    os.remove(os.path.join(snap_root, _CURSOR_SIDECAR))
+    crc = os.path.join(snap_root, f".{_CURSOR_SIDECAR}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    with pytest.raises(ValueError, match="crashed between delete and rename"):
+        _read_cursor(spark, view)
+    # recovery: rename the stage into place
+    os.rename(stage, os.path.join(snap_root, _CURSOR_SIDECAR))
+    assert _read_cursor(spark, view) == cur
 
 
 def test_compact_snapshot_partition_allowlist(spark, tmp_path):

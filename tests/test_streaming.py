@@ -203,17 +203,16 @@ def test_stream_upsert_parquet_exactly_once_effect(spark, tmp_path):
     A re-delivered key is a no-op replace, a new key appends, and
     replaying the whole stream from a fresh checkpoint (at-least-once
     redelivery of everything) leaves the table unchanged."""
-    from ua2sql_spark.operators.merge import parquet_upsert_sink
+    from ua2sql_spark.operators.merge import upsert_parquet
     from ua2sql_spark.streaming.ingest import stream_feed
 
     landing = tmp_path / "landing"
     landing.mkdir()
     table = str(tmp_path / "tbl")
-    sink0 = parquet_upsert_sink(table, key_cols=["userid"], partition_col="day")
 
     def sink(df, epoch_id):
         # derive the date partition at write, the usual lakehouse shape
-        sink0(df.withColumn("day", F.to_date("ts")), epoch_id)
+        upsert_parquet(df.withColumn("day", F.to_date("ts")), table, ["userid"], "day")
 
     def run(ckpt):
         q = stream_feed(spark, str(landing), "custom", str(tmp_path / ckpt), sink)
@@ -260,16 +259,15 @@ def test_stream_upsert_reads_each_batch_once(spark, tmp_path):
     ``numInputRows`` over the run equals the rows delivered (a second
     scan would count them twice), and the table still keeps the latest
     version of each key."""
-    from ua2sql_spark.operators.merge import parquet_upsert_sink
+    from ua2sql_spark.operators.merge import upsert_parquet
     from ua2sql_spark.streaming.ingest import stream_feed
 
     landing = tmp_path / "landing"
     landing.mkdir()
     table = str(tmp_path / "tbl")
-    sink0 = parquet_upsert_sink(table, key_cols=["userid"], partition_col="day")
 
     def sink(df, epoch_id):
-        sink0(df.withColumn("day", F.to_date("ts")), epoch_id)
+        upsert_parquet(df.withColumn("day", F.to_date("ts")), table, ["userid"], "day")
 
     def run():
         q = stream_feed(spark, str(landing), "custom", str(tmp_path / "ck"), sink)

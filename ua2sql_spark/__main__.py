@@ -63,8 +63,8 @@ def _maintain_main(argv: list[str], spark=None) -> int:
     layout-health report as JSON lines, then (only with ``--compact``)
     rewrite EXACTLY the would_compact set via the partitions allowlist.
     The operator pair guarantees report/rewrite agreement for any
-    ``--min-files``; the default is report-only (dry-run-by-default,
-    same stance as vacuum_orphans)."""
+    ``--min-files``; the default is report-only (dry-run by default:
+    rewriting is the opt-in)."""
     import json
 
     from ua2sql_spark.operators.snapshot import (

@@ -8,8 +8,7 @@ pruning left to Catalyst. Never collect, never infer row-by-row.
 ``events``, ``spark.read.parquet`` otherwise) followed by the optional
 scan rebalance, whose byte guards are the module constants
 ``_SCAN_REBALANCE_MIN_BYTES`` / ``_SCAN_REBALANCE_MAX_BYTES``; no session
-conf changes what it reads. Manifest-pruned reads of a file subset are
-``operators.manifest.read_pruned``.
+conf changes what it reads.
 
 Schema cache: inferring a parquet schema runs one Spark job (it reads
 a footer), 0.14-0.20 s warm, and a repeated query would pay it on every

@@ -1,9 +1,4 @@
 """Reusable column-expression library (no UDFs — all JVM-side)."""
 
-from ua2sql_spark.functions.arrays import cosine, dot, l1_norm, l2_norm, sq_norm  # noqa: F401
-from ua2sql_spark.functions.text import (  # noqa: F401
-    minhash_columns,
-    word_set,
-    word_shingles,
-    words,
-)
+from ua2sql_spark.functions.arrays import dot, sq_norm  # noqa: F401
+from ua2sql_spark.functions.text import word_set  # noqa: F401

@@ -31,24 +31,6 @@ def sq_norm(a: Column) -> Column:
     )
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(sq_norm(a))
-
-
-def l1_norm(a: Column) -> Column:
-    return F.aggregate(
-        F.transform(a, lambda x: F.abs(x.cast("double"))), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity; NULL when either norm is zero (division yields
-    NULL rather than NaN under Spark semantics only for NULL inputs, so
-    guard explicitly)."""
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom != 0, dot(a, b) / denom)
-
-
 def sign_bucket(e: Column, n_dims: int = 8) -> Column:
     """Random-hyperplane-style LSH bucket: sign bits of the first
     ``n_dims`` components packed into a long (SURVEY X5 scale path)."""

@@ -13,11 +13,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def words(text: Column, sep: str = " ") -> Column:
-    """Whitespace tokens (positional, with repeats)."""
-    return F.split(text, sep)
-
-
 def word_set(text: Column, sep: str = " ") -> Column:
     """Distinct tokens."""
     return F.array_distinct(F.split(text, sep))
@@ -30,17 +25,6 @@ def char_shingles(text: Column, n: int = 4) -> Column:
     idx = F.sequence(F.lit(1), F.length(text) - (n - 1))
     grams = F.transform(idx, lambda i: F.substring(text, i, n))
     return F.when(F.length(text) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def word_shingles(text: Column, n: int = 3, sep: str = " ") -> Column:
-    """Positional n-word shingles as strings; empty array when the text
-    has fewer than ``n`` tokens (guard against sequence() descending)."""
-    w = words(text, sep)
-    idx = F.sequence(F.lit(1), F.size(w) - (n - 1))
-    mk = lambda i: F.concat_ws(" ", *[F.element_at(w, i + k) for k in range(n)])  # noqa: E731
-    return F.when(F.size(w) >= n, F.transform(idx, mk)).otherwise(
         F.array().cast("array<string>")
     )
 
@@ -73,21 +57,10 @@ def token_hash_int_fast(token: Column) -> Column:
     return F.xxhash64(token).bitwiseAND(F.lit((1 << 60) - 1))
 
 
-def minhash_columns(token: Column, num_hashes: int) -> list[Column]:
-    """Aggregate expressions: MIN(md5_int(token) ^ seed_j) per hash
-    function. Use after exploding tokens, inside groupBy(id).agg(*these).
-    The md5 is computed once per token; hashes differ by xor seed."""
-    base = token_hash_int(token)
-    return [
-        F.min(base.bitwiseXOR(F.lit(xor_seed(j)))).alias(f"h{j}")
-        for j in range(num_hashes)
-    ]
-
-
 def minhash_array_columns(token_hashes: Column, num_hashes: int) -> list[Column]:
     """Shuffle-free minhash: ``array_min`` over the per-token xor'd hash
-    ints — a pure projection per document, same values as
-    :func:`minhash_columns` after explode/groupBy. ``token_hashes`` is
+    ints — a pure projection per document, same values as a per-hash
+    ``MIN`` after explode/groupBy. ``token_hashes`` is
     the materialized ``transform(tokens, token_hash_int)`` array column
     (materialize it in its own ``select`` so the md5s are computed once,
     not once per hash function)."""
@@ -100,7 +73,9 @@ def minhash_array_columns(token_hashes: Column, num_hashes: int) -> list[Column]
 
 
 def sql_minhash_exprs(token_expr: str, num_hashes: int) -> list[str]:
-    """DuckDB equivalents of :func:`minhash_columns` (same algorithm)."""
+    """DuckDB aggregates ``MIN(md5_int(token) ^ seed_j)`` per hash
+    function, to run after exploding tokens: the same values as
+    :func:`minhash_array_columns`."""
     base = f"(('0x' || substring(md5({token_expr}), 1, 15))::BIGINT)"
     return [
         f"MIN(xor({base}, {xor_seed(j)})) AS h{j}" for j in range(num_hashes)

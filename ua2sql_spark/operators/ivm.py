@@ -44,18 +44,16 @@ Design (the 100 TB argument):
 
 from __future__ import annotations
 
-import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ua2sql_spark.operators.snapshot import _jfs
+from ua2sql_spark.operators.snapshot import _jfs, _list_version_dirs
 
 DEC = "decimal(28,8)"
 _N_BUCKETS = 64
 _IVM_DIR = "_ivm"
-_VER_RE = re.compile(r"^v(\d{6,})$")
 _MANIFEST_SCHEMA = "bucket bigint, dir string"
 
 _SIGN = {
@@ -86,16 +84,7 @@ def _manifest_path(view_path: str, version: int) -> str:
 
 
 def list_view_versions(spark: SparkSession, view_path: str) -> list[int]:
-    jvm, fs, _ = _jfs(spark, view_path)
-    root = jvm.org.apache.hadoop.fs.Path(_ivm_root(view_path))
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        m = _VER_RE.match(st.getPath().getName())
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    return _list_version_dirs(spark, _ivm_root(view_path))
 
 
 def _latest_view_version(spark: SparkSession, view_path: str) -> int | None:
@@ -350,35 +339,3 @@ def read_view(spark: SparkSession, view_path: str, version: int | None = None) -
         (F.col("sum_value").cast("double") / F.col("n")).alias("avg_value"),
     )
 
-
-def vacuum_view(spark: SparkSession, view_path: str, keep_versions: int = 2) -> int:
-    """Delete data directories unreferenced by the ``keep_versions``
-    newest manifests, and the older manifests themselves. Returns the
-    number of directories removed. Driver-side but bounded by the
-    version count × ≤``_N_BUCKETS`` manifest rows."""
-    versions = list_view_versions(spark, view_path)
-    if len(versions) <= keep_versions:
-        return 0
-    keep, drop = versions[-keep_versions:], versions[:-keep_versions]
-    live = set()
-    for ver in keep:
-        live.update(d for _b, d in _read_manifest(spark, view_path, ver))
-    # a data dir d-<uuid> is referenced via its bucket=N children.
-    # Liveness compares the d-<uuid> BASENAME (uuid-unique by
-    # construction), never the full path string — a caller spelling the
-    # view path differently from the manifest writer (trailing slash,
-    # file:// scheme, qualified URI) must not fail every match and
-    # delete live data (ADVICE r7 #5).
-    live_names = {
-        d.rsplit("/bucket=", 1)[0].rstrip("/").rsplit("/", 1)[-1] for d in live
-    }
-    jvm, fs, root = _jfs(spark, view_path)
-    removed = 0
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith("d-") and name not in live_names:
-            fs.delete(st.getPath(), True)
-            removed += 1
-    for ver in drop:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(_manifest_path(view_path, ver)), True)
-    return removed

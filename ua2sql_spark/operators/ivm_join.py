@@ -10,9 +10,8 @@ Design — "the view IS a table":
 
 * ``V`` is itself a copy-on-write snapshot table (``upsert_cow`` /
   ``delete_cow`` keyed on the join key), so the maintained view gets
-  time travel, a change feed, layout health, compaction, tags and
-  clones FOR FREE — downstream consumers can chain another IVM off the
-  view's own feed.
+  time travel, a change feed, layout health and compaction FOR FREE —
+  downstream consumers can chain another IVM off the view's own feed.
 * Refresh rule (delta-join specialized to unique-key equi joins —
   both sides keyed by ``k``, at most one row per key per side): the
   set of keys whose view row can have changed is exactly
@@ -26,9 +25,8 @@ Design — "the view IS a table":
 * Scale shape: the change feeds are churn-proportional
   (``snapshot_changes`` diffs only changed files); K is
   churn-bounded; both base-table slices are key-semi-joins against
-  the CURRENT snapshots — with per-file stats (``stats_cols``) or
-  key-clustered layout those reads prune to the files holding K, and
-  in the worst case they are one scan each, never a re-join of A×B.
+  the CURRENT snapshots — one scan each at worst, never a re-join of
+  A×B.
   The view rewrite touches only partitions holding K (the CoW
   upsert/delete contract).
 * Refresh is idempotent per (va, vb) target: re-running against the
@@ -49,7 +47,6 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ua2sql_spark.operators.snapshot import (
     _read_sidecar_fail_closed,
@@ -65,9 +62,9 @@ _CURSOR_SIDECAR = "_join_view_cursor.json"
 
 
 def _read_cursor(spark: SparkSession, view_path: str) -> dict:
-    # Fail-closed like _tags.json/_clones.json (ADVICE r13 #1): a writer
-    # crash between delete and rename must surface as the staged-sidecar
-    # recovery error, not as "no cursor -> full view rebuild".
+    # Fail-closed (ADVICE r13 #1): a writer crash between delete and
+    # rename must surface as the staged-sidecar recovery error, not as
+    # "no cursor -> full view rebuild".
     raw = _read_sidecar_fail_closed(spark, view_path, _CURSOR_SIDECAR)
     if raw is None:
         raise ValueError(

@@ -210,17 +210,3 @@ def upsert_parquet(
     )
     return int(obs.get["rows"])
 
-
-def parquet_upsert_sink(
-    path: str, key_cols: list[str], partition_col: str
-):
-    """``foreachBatch`` closure over :func:`upsert_parquet` — plug into
-    ``streaming.ingest.stream_feed`` for the lakehouse twin of
-    ``sources/jdbc.py:jdbc_upsert_sink``: the checkpoint gives
-    at-least-once micro-batches, the key anti-join makes re-deliveries
-    and corrections land each logical row exactly once in the table."""
-
-    def _sink(df: DataFrame, epoch_id: int) -> None:
-        upsert_parquet(df, path, key_cols=key_cols, partition_col=partition_col)
-
-    return _sink

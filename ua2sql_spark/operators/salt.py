@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ua2sql_spark.queries.common import DEC
-
 # agg name -> (partial expr builder, merge expr builder)
 _DECOMPOSABLE = {
     # decimal(38,18): the widest exact interior — ±1e20 integral range,
@@ -78,42 +76,3 @@ def salted_agg(
         ]
     )
 
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: list[str],
-    n_salts: int = 16,
-    salt_from: str | Column | None = None,
-    how: str = "inner",
-) -> DataFrame:
-    """Explicit hot-key join salting — the planned (vs AQE's reactive)
-    skew-join mitigation. The big side is salted into ``n_salts``
-    sub-streams; the small side is replicated once per salt (an
-    ``explode`` over 0..n_salts-1, multiplying only the SMALL side's
-    rows); the join runs on (key, salt), so a hot key's rows spread
-    over ``n_salts`` reducers instead of melting one. Each (big, small)
-    match pairs at exactly one salt value, so the result is provably
-    the plain join — duplicate keys on either side included (the
-    property test pins this against a skewed corpus).
-
-    Use when the skew is KNOWN up front (a null-ish default key, a
-    celebrity entity) and the small side is too big to broadcast but
-    cheap to replicate ``n_salts`` times; otherwise prefer broadcast
-    (dims) or AQE skew-split (x122). ``salt_from`` should be a
-    high-cardinality column of the big side NOT in the join key (a
-    primary key): deterministic and uniform. Supported: inner, left
-    (big side preserved).
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    if salt_from is None:
-        salt = (F.rand(seed=0) * n_salts).cast("int")
-    else:
-        col = F.col(salt_from) if isinstance(salt_from, str) else salt_from
-        salt = F.pmod(F.hash(col), F.lit(n_salts))
-    b = big.withColumn("__salt", salt)
-    s = small.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return b.join(s, [*on, "__salt"], how).drop("__salt")

@@ -14,7 +14,7 @@ path exists to drift from the table, because the history IS a fold of
 the commits.
 
 Correctness contract (tests/test_scd2.py): for EVERY version v of the
-snapshot, ``scd2_as_of(history, v)`` row-sets equal
+snapshot, the history rows whose interval covers v row-set-equal
 ``read_snapshot(path, v)`` — reconstruction from the feed is
 indistinguishable from time travel, including across deletes and
 manifest-only rollbacks.
@@ -68,11 +68,3 @@ def build_scd2(spark: SparkSession, path: str, key_cols: list[str]) -> DataFrame
         )
     )
 
-
-def scd2_as_of(history: DataFrame, version: int) -> DataFrame:
-    """The dimension as of snapshot ``version`` — a filter, no join:
-    rows whose interval covers the version."""
-    return history.filter(
-        (F.col("valid_from") <= version)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > version))
-    ).drop("valid_from", "valid_to", "is_current")

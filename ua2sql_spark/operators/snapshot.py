@@ -1,10 +1,8 @@
 """Copy-on-write snapshots over plain-parquet tables: versioned file
 manifests give time-travel reads, version diffs, and torn-read-free
 readers without adopting a table format — the minimal slice of what
-Delta/Iceberg keep in their transaction log, built from the pieces this
-engine already has (file manifests ``operators/manifest.py``, the
-partition-scoped merge ``operators/merge.py``, VACUUM
-``operators/layout.py``).
+Delta/Iceberg keep in their transaction log, built on the
+partition-scoped merge of ``operators/merge.py``.
 
 Reference provenance: extends the reference's append/backup sinks
 (ua2sql.py:274-295 checkpoint-after-commit single-writer model) with
@@ -14,9 +12,10 @@ the versioned-read capability a 100 TB curation pipeline needs —
 Design:
 
 * A snapshot is a parquet manifest under ``<table>/_snapshots/v{N}``:
-  one row per live data file (file path, partition value, row count).
-  The leading underscore keeps every Spark/DuckDB reader from ever
-  globbing it as data.
+  one row per live data file (file path, partition value, row count),
+  plus the table's schema as a ``_table_schema.json`` sidecar. The
+  leading underscore keeps every Spark/DuckDB reader from ever globbing
+  it as data.
 * ``upsert_cow`` is the copy-on-write twin of ``merge.upsert_parquet``:
   identical MERGE semantics (batch replaces key-matches, carries the
   rest, bounded touched-partition list), but rewritten partitions are
@@ -25,17 +24,22 @@ Design:
   partitions) + the new files. Prior versions stay readable.
 * The COMMIT POINT is the atomic filesystem rename of the staged
   manifest directory to its final ``v{N}`` name: a crash before the
-  rename leaves only unreferenced data files (harmless; vacuum sweeps
-  them), never a half-visible version.
+  rename leaves only unreferenced data files (harmless), never a
+  half-visible version.
 * Readers (``read_snapshot``) resolve a version's file list from its
   manifest and read exactly those files with ``basePath`` set — no
   directory listing of the table, so a reader is never torn by a
   concurrent writer appending files (single WRITER, as merge.py).
-* Retention: old versions' files are invisible to the LATEST manifest,
-  so ``vacuum_orphans`` against the latest manifest would end time
-  travel (exactly Delta VACUUM's contract). To keep N versions, pass
-  ``live_files_union`` — the union of all retained snapshots' files —
-  as the vacuum manifest.
+* Retention: every committed version stays readable. Nothing here
+  deletes a data file or a manifest, so old versions' files stay on
+  disk for as long as the table does.
+* Older sidecars: a table may still carry ``_tags.json``,
+  ``_clones.json``, ``_constraints.json``, ``_commit_info.json`` or
+  ``_stats/`` from features this module no longer has. Readers skip
+  ``_``-prefixed names, so the table reads, but its CHECK constraints
+  are no longer enforced. A shallow clone, whose manifest lists files
+  under another table's root, does not read (see
+  :func:`_read_manifest_files`).
 
 Scale shape: the manifest is file-count-bounded (not data-bounded); the
 upsert's data plane is identical to merge.py (touched partitions only,
@@ -46,7 +50,9 @@ before/after file diff lists ONLY the touched partition directories.
 
 from __future__ import annotations
 
+import os
 import re
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,6 +68,7 @@ _SNAP_DIR = "_snapshots"
 # (7 digits), so the match must be \d{6,} or that version becomes
 # invisible to list_versions and the single writer wedges re-targeting it.
 _VER_RE = re.compile(r"^v(\d{6,})$")
+_SCHEMA_SIDECAR = "_table_schema.json"
 
 _MANIFEST_SCHEMA = "file string, partition string, row_count bigint"
 
@@ -81,20 +88,26 @@ def snapshot_path(path: str, version: int) -> str:
     return f"{_snap_root(path)}/v{version:06d}"
 
 
-def list_versions(spark: SparkSession, path: str) -> list[int]:
-    """Committed snapshot versions, ascending. A version exists iff its
-    directory has been atomically renamed into place (staged ``.tmp-*``
-    directories are by construction never matched)."""
-    jvm, fs, _ = _jfs(spark, path)
-    root = jvm.org.apache.hadoop.fs.Path(_snap_root(path))
-    if not fs.exists(root):
+def _list_version_dirs(spark: SparkSession, root: str) -> list[int]:
+    """``N`` of every ``v{N}`` directory directly under ``root``,
+    ascending; empty when ``root`` does not exist. Staged ``.tmp-*``
+    directories are by construction never matched."""
+    jvm, fs, _ = _jfs(spark, root)
+    p = jvm.org.apache.hadoop.fs.Path(root)
+    if not fs.exists(p):
         return []
     out = []
-    for st in fs.listStatus(root):
+    for st in fs.listStatus(p):
         m = _VER_RE.match(st.getPath().getName())
         if m and st.isDirectory():
             out.append(int(m.group(1)))
     return sorted(out)
+
+
+def list_versions(spark: SparkSession, path: str) -> list[int]:
+    """Committed snapshot versions, ascending. A version exists iff its
+    directory has been atomically renamed into place."""
+    return _list_version_dirs(spark, _snap_root(path))
 
 
 def latest_version(spark: SparkSession, path: str) -> int | None:
@@ -109,122 +122,42 @@ def read_manifest(spark: SparkSession, path: str, version: int) -> DataFrame:
 def _read_manifest_files(
     spark: SparkSession, files: list[str], merge_schema: bool = False
 ) -> DataFrame:
-    """Read manifest-listed data files GROUPED BY their owning table
-    root (every manifest entry is ``<root>/<partition_dir>/<name>``):
-    each group gets its own ``basePath`` so hive partition columns are
-    inferred, which lets a SHALLOW CLONE's foreign files — still living
-    under the SOURCE table's directory — read exactly like local ones.
-    For an un-cloned table there is one group and the plan is identical
-    to the previous single ``basePath`` read (plan-pins unaffected)."""
-    import os
-
-    groups: dict[str, list[str]] = {}
-    for f in files:
-        groups.setdefault(os.path.dirname(os.path.dirname(f)), []).append(f)
-    out = None
-    for root in sorted(groups):
-        reader = spark.read.option("basePath", root)
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        part = reader.parquet(*sorted(groups[root]))
-        out = (
-            part
-            if out is None
-            else out.unionByName(part, allowMissingColumns=merge_schema)
-        )
-    return out
+    """Read manifest-listed data files with ``basePath`` set to their
+    table root (every manifest entry is ``<root>/<partition_dir>/<name>``),
+    so hive partition columns are inferred. Files under more than one
+    root (a shallow clone's manifest) are rejected: one ``basePath``
+    cannot read them."""
+    roots = {os.path.dirname(os.path.dirname(f)) for f in files}
+    if len(roots) > 1:
+        raise ValueError(f"manifest files span {len(roots)} table roots: {sorted(roots)}")
+    reader = spark.read.option("basePath", roots.pop())
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*sorted(files))
 
 
 def read_snapshot(
     spark: SparkSession,
     path: str,
-    version: int | str | None = None,
+    version: int | None = None,
     merge_schema: bool = False,
-    where: tuple | None = None,
 ) -> DataFrame:
     """The table as of ``version`` (default: latest). Reads exactly the
     manifest's files — never lists the table directory, so concurrent
     appends by the single writer are invisible until their commit.
     ``merge_schema=True`` unions file schemas across versions'
     surviving files (older files' missing columns read as NULL) — the
-    schema-evolution read for tables whose upserts added columns.
-
-    ``where=(col, lo, hi[, cast])`` is versioned DATA SKIPPING: when the
-    version carries committed file stats (``upsert_cow(stats_cols=...)``)
-    the read opens only files whose [min, max] on ``col`` can overlap —
-    time travel AND pruning from the same commit (Delta/Iceberg keep
-    these stats in the log; here they ride the manifest dir). Files the
-    stats never covered (pre-stats versions' carried files) are KEPT
-    conservatively, and the predicate is always re-applied exactly, so
-    results are identical with and without stats."""
-    if version is None or isinstance(version, str):
-        # a string version is a TAG name (``tag_snapshot``)
-        version = _resolve_version(spark, path, version)
+    schema-evolution read for tables whose upserts added columns."""
+    if version is None:
+        version = latest_version(spark, path)
+        if version is None:
+            raise ValueError(f"no snapshots under {path}")
     files = [
         r["file"] for r in read_manifest(spark, path, version).select("file").collect()
     ]
     if not files:
         raise ValueError(f"snapshot v{version} of {path} is empty")
-    pred = None
-    if where is not None:
-        col, lo, hi = where[0], where[1], where[2]
-        cast = where[3] if len(where) > 3 else "bigint"
-        pred = F.col(col).between(F.lit(lo), F.lit(hi))
-        stats = snapshot_stats(spark, path, version)
-        if stats is not None:
-            from ua2sql_spark.operators.manifest import prune_files
-
-            kept = prune_files(stats, col, lo, hi, cast=cast)
-            if kept is not None:
-                # "covered" must be judged PER COLUMN: a file whose
-                # stats rows describe only OTHER columns (stats_cols
-                # varied across the versions that wrote it) has no
-                # [min,max] for `col` and must be conservatively kept —
-                # the whole-file set would silently drop its rows
-                # (ADVICE r8 high).
-                covered = {
-                    r["file"]
-                    for r in stats.filter(F.col("col") == col)
-                    .select("file")
-                    .distinct()
-                    .collect()
-                }
-                files = sorted(set(kept) | (set(files) - covered))
-                if not files:
-                    # Zero overlap: derive the empty frame from the SAME
-                    # reader path as a non-empty read (basePath +
-                    # mergeSchema honored) so partition-column type
-                    # inference and the merged schema match the
-                    # non-empty result exactly (ADVICE r8 low — the
-                    # sidecar StructType can disagree with
-                    # directory-name inference). But NOT over the full
-                    # file list: with mergeSchema that is a footer
-                    # sweep over every live file (millions at 100 TB)
-                    # just to return a guaranteed-empty frame (ADVICE
-                    # r9 #3). ONE file per partition dir suffices
-                    # exactly: a partition's live files are always
-                    # written by the single commit that last rewrote it
-                    # (CoW rewrites whole partitions), so per-partition
-                    # representatives cover every schema generation AND
-                    # every partition-dir value the type inference
-                    # unions over. Sorted min-per-partition also keeps
-                    # the first file identical to the sorted full list,
-                    # so the mergeSchema=False branch reads the same
-                    # footer it would have. The filter(false) collapses
-                    # to an empty LocalRelation at optimization time,
-                    # so no data file is scanned.
-                    files = sorted(
-                        r["f"]
-                        for r in read_manifest(spark, path, version)
-                        .groupBy("partition")
-                        .agg(F.min("file").alias("f"))
-                        .collect()
-                    )
-                    return _read_manifest_files(
-                        spark, files, merge_schema
-                    ).filter(F.lit(False))
-    out = _read_manifest_files(spark, files, merge_schema)
-    return out.filter(pred) if pred is not None else out
+    return _read_manifest_files(spark, files, merge_schema)
 
 
 def snapshot_diff(
@@ -236,101 +169,6 @@ def snapshot_diff(
     old = {r["file"] for r in read_manifest(spark, path, v_old).collect()}
     new = {r["file"] for r in read_manifest(spark, path, v_new).collect()}
     return {"added": sorted(new - old), "removed": sorted(old - new)}
-
-
-def delete_versions_before(spark: SparkSession, path: str, keep_from: int) -> list[int]:
-    """Retention shortening: drop the manifest dirs of every version
-    below ``keep_from`` (time travel to them ends), so a following
-    ``vacuum_orphans(live_files_union(...))`` reclaims the files only
-    they referenced — the Delta ``logRetentionDuration`` + VACUUM
-    sequence, and the hard-erasure tail of a compliance
-    :func:`delete_cow`. Returns the versions removed."""
-    versions = list_versions(spark, path)
-    if not versions or keep_from > versions[-1]:
-        raise ValueError(
-            f"keep_from={keep_from} would drop every version of {path} "
-            f"(latest is {versions[-1] if versions else None})"
-        )
-    # Tags are retention pins (Delta/Iceberg tag semantics): a tagged
-    # version cannot be silently aged out — delete the tag first.
-    pinned = {
-        f"{name} -> v{v}"
-        for name, v in list_tags(spark, path).items()
-        if v < keep_from
-    }
-    if pinned:
-        raise ValueError(
-            f"retention would drop tagged version(s) of {path}: "
-            f"{sorted(pinned)}; delete_tag first"
-        )
-    jvm, fs, _ = _jfs(spark, path)
-    dropped = []
-    for v in versions:
-        if v < keep_from:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(snapshot_path(path, v)), True
-            )
-            dropped.append(v)
-    return dropped
-
-
-def live_files_union(
-    spark: SparkSession,
-    path: str,
-    include_clones: bool = True,
-    _visited: frozenset | None = None,
-) -> DataFrame:
-    """Union of every retained snapshot's file list — pass as the
-    ``manifest`` to ``layout.vacuum_orphans`` to sweep only files no
-    retained version references (delete old snapshot manifests first to
-    shorten retention, exactly Delta's VACUUM knob).
-
-    Clone safety is the DEFAULT (VERDICT r11 #3): shallow clones
-    registered on this table (``clone_snapshot`` writes the sidecar at
-    clone time) contribute their live sets too — recursively, so
-    clones-of-clones are covered — and a registered clone that cannot
-    be read raises instead of being silently skipped, because skipping
-    it would let vacuum delete files the clone still references.
-    ``unregister_clone`` retires a deleted clone; source-only vacuum is
-    the explicit opt-in ``include_clones=False``.
-
-    The recursion carries a visited-path set (ADVICE r12 #4): the API
-    cannot create a cycle (``clone_snapshot`` requires a fresh dst),
-    but a hand-edited or corrupted ``_clones.json`` (self-registration,
-    A↔B) must surface as a named diagnostic on the vacuum path, not an
-    unbounded ``RecursionError``. Detection is by exact path STRING —
-    the registry stores the strings passed to ``clone_snapshot``, so
-    two spellings of one directory are the registry's corruption to
-    fix, not this guard's."""
-    seen = (_visited or frozenset()) | {path}
-    versions = list_versions(spark, path)
-    if not versions:
-        raise ValueError(f"no snapshots under {path}")
-    df = None
-    for v in versions:
-        part = read_manifest(spark, path, v).select("file")
-        df = part if df is None else df.unionByName(part)
-    if include_clones:
-        for c in list_clones(spark, path):
-            if c in seen:
-                raise ValueError(
-                    f"clone registry cycle: {c!r} is registered under "
-                    f"{path!r} but is already on the recursion path "
-                    f"{sorted(seen)}; _clones.json is corrupted — "
-                    "unregister_clone() the bogus entry"
-                )
-            try:
-                df = df.unionByName(live_files_union(spark, c, _visited=seen))
-            except ValueError as e:
-                if "clone registry cycle" in str(e):
-                    raise
-                raise ValueError(
-                    f"registered clone {c!r} of {path!r} is unreadable "
-                    f"({e}); if the clone was deleted, unregister_clone() "
-                    "it — vacuuming without its live set would delete "
-                    "files it may still reference"
-                ) from e
-    return df.distinct()
 
 
 def _list_partition_files(
@@ -361,16 +199,43 @@ def _manifest_rows_with_counts(
     spark: SparkSession, files: list[tuple[str, str]]
 ) -> list[tuple[str, str, int | None]]:
     """Attach exact per-file row counts to (file, partition) pairs via
-    ONE distributed footer pass (``manifest.file_row_counts`` — the
-    Delta ``numRecords`` stat). Every committer records them, so
+    ONE distributed footer pass (:func:`file_row_counts` — the Delta
+    ``numRecords`` stat). Every committer records them, so
     ``snapshot_layout_health``'s ``n_rows`` is real instead of NULL and
     carried manifest entries propagate the counts forward for free.
     Cost: one job over the files THIS commit wrote (churn-bounded,
     metadata pages only)."""
-    from ua2sql_spark.operators.manifest import file_row_counts
-
     counts = file_row_counts(spark, [f for f, _p in files])
     return [(f, part, counts.get(f)) for f, part in files]
+
+
+def file_row_counts(spark: SparkSession, files: list[str]) -> dict[str, int]:
+    """``file -> parquet footer num_rows`` for an EXPLICIT file list,
+    read DISTRIBUTED (one metadata page per file, never the data); the
+    returned map is file-count-bounded, so the one collect is the same
+    O(files-touched) the caller's manifest commit already pays."""
+    if not files:
+        return {}
+    import pandas as pd
+
+    paths_df = spark.createDataFrame([(f,) for f in files], "file string")
+
+    def read_counts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pyarrow.parquet as pq
+
+        for pdf in batches:
+            rows = []
+            for fpath in pdf["file"]:
+                local = fpath[len("file:") :] if fpath.startswith("file:") else fpath
+                rows.append((fpath, pq.ParquetFile(local).metadata.num_rows))
+            yield pd.DataFrame(rows, columns=["file", "row_count"])
+
+    return {
+        r["file"]: r["row_count"]
+        for r in paths_df.repartition(min(len(files), 64))
+        .mapInPandas(read_counts, schema="file string, row_count bigint")
+        .collect()
+    }
 
 
 def bootstrap_snapshot(
@@ -396,14 +261,9 @@ def bootstrap_snapshot(
         if not part.startswith(f"{partition_col}="):
             continue
         # fully-qualified (scheme+authority kept): manifests must be
-        # readable on non-default filesystems (s3a:// at 100 TB), and
-        # vacuum_orphans normalizes both forms identically
+        # readable on non-default filesystems (s3a:// at 100 TB)
         pairs.append((p.toString(), part))
-    rows = _manifest_rows_with_counts(spark, pairs)
-    return _commit_manifest(
-        spark, path, 0, rows, operation="BOOTSTRAP",
-        op_metrics={"n_adopted_files": len(rows)},
-    )
+    return _commit_manifest(spark, path, 0, _manifest_rows_with_counts(spark, pairs))
 
 
 def _commit_manifest(
@@ -412,74 +272,23 @@ def _commit_manifest(
     version: int,
     rows: list[tuple],
     table_schema=None,
-    stats_df: DataFrame | None = None,
-    constraints: dict[str, str] | None = None,
-    operation: str | None = None,
-    op_metrics: dict | None = None,
 ) -> int:
     """Write the manifest to a staged directory, then atomically rename
     it to v{N} — THE commit point. ``table_schema`` (a StructType, when
     the committer knows it) rides along as an underscore-prefixed JSON
     sidecar inside the manifest dir — parquet readers ignore it, and it
     gives later upserts the table's FULL logical schema without a
-    footer sweep over every live file (100 TB tables have millions).
-
-    ``constraints`` (name -> SQL predicate) persists the table's CHECK
-    invariants as another sidecar. ``None`` means "carry the previous
-    latest version's constraints unchanged" — so metadata-oblivious
-    commits (delete, compact, rollback) can never silently
-    drop the table's invariants; pass a dict (possibly empty) to set
-    the constraint set explicitly."""
-    import json as _json
+    footer sweep over every live file (100 TB tables have millions)."""
     import uuid
 
     jvm, fs, _ = _jfs(spark, path)
-    if constraints is None and version > 0:
-        prev = latest_version(spark, path)
-        if prev is not None:
-            constraints = table_constraints(spark, path, prev)
     staged = f"{_snap_root(path)}/.tmp-{uuid.uuid4().hex}"
     spark.createDataFrame(rows, _MANIFEST_SCHEMA).coalesce(1).write.parquet(staged)
-    if stats_df is not None:
-        # per-file column stats ride an underscore-prefixed SUBDIR
-        # (ignored by the manifest's parquet read) inside the same
-        # staged dir, so the rename commits manifest + schema + stats
-        # as one atom; written distributed — |files|x|cols| rows never
-        # pass through the driver
-        stats_df.write.parquet(f"{staged}/{_STATS_DIR}")
     if table_schema is not None:
         sidecar = jvm.org.apache.hadoop.fs.Path(staged, _SCHEMA_SIDECAR)
         out = fs.create(sidecar, True)
         try:
             out.write(bytearray(table_schema.json().encode("utf-8")))
-        finally:
-            out.close()
-    if constraints:
-        csc = jvm.org.apache.hadoop.fs.Path(staged, _CONSTRAINTS_SIDECAR)
-        out = fs.create(csc, True)
-        try:
-            out.write(
-                bytearray(
-                    _json.dumps(constraints, sort_keys=True).encode("utf-8")
-                )
-            )
-        finally:
-            out.close()
-    if operation is not None:
-        import datetime as _dt
-
-        info = {
-            "operation": operation,
-            "timestamp": _dt.datetime.now(_dt.timezone.utc).isoformat(),
-            "n_files": len(rows),
-            "metrics": {k: str(v) for k, v in (op_metrics or {}).items()},
-        }
-        isc = jvm.org.apache.hadoop.fs.Path(staged, _COMMIT_INFO_SIDECAR)
-        out = fs.create(isc, True)
-        try:
-            out.write(
-                bytearray(_json.dumps(info, sort_keys=True).encode("utf-8"))
-            )
         finally:
             out.close()
     final = jvm.org.apache.hadoop.fs.Path(snapshot_path(path, version))
@@ -490,49 +299,6 @@ def _commit_manifest(
             "(concurrent writer?)"
         )
     return version
-
-
-_SCHEMA_SIDECAR = "_table_schema.json"
-_STATS_DIR = "_stats"
-_CONSTRAINTS_SIDECAR = "_constraints.json"
-_COMMIT_INFO_SIDECAR = "_commit_info.json"
-
-
-def describe_history(spark: SparkSession, path: str) -> list[dict]:
-    """Delta's DESCRIBE HISTORY: one dict per retained version,
-    newest first — version, operation, UTC timestamp, file count, and
-    the committing operation's metrics (rows upserted/deleted, restore
-    target, ...). Versions committed before operation tagging existed
-    report operation 'UNKNOWN'. Driver-side but bounded by the retained
-    version count (manifest dirs, not data files)."""
-    import json as _json
-
-    jvm, fs, _ = _jfs(spark, path)
-    out = []
-    for v in reversed(list_versions(spark, path)):
-        raw = _read_sidecar_text(
-            jvm, fs, snapshot_path(path, v), _COMMIT_INFO_SIDECAR
-        )
-        if raw:
-            info = _json.loads(raw)
-        else:
-            info = {"operation": "UNKNOWN", "timestamp": None,
-                    "n_files": None, "metrics": {}}
-        info["version"] = v
-        out.append(info)
-    return out
-
-
-class ConstraintViolation(ValueError):
-    """A batch violated the table's CHECK constraints; nothing committed."""
-
-    def __init__(self, path: str, violations: dict[str, tuple[int, str]]):
-        self.violations = violations
-        detail = "; ".join(
-            f"{name}: {n} row(s) violate `{sql}`"
-            for name, (n, sql) in sorted(violations.items())
-        )
-        super().__init__(f"CHECK constraint violation on {path}: {detail}")
 
 
 def _read_sidecar_text(jvm, fs, dir_path: str, name: str) -> str | None:
@@ -552,115 +318,16 @@ def _read_sidecar_text(jvm, fs, dir_path: str, name: str) -> str | None:
     return bytes(data).decode("utf-8")
 
 
-def table_constraints(
-    spark: SparkSession, path: str, version: int | None = None
-) -> dict[str, str]:
-    """The CHECK constraints (name -> SQL predicate) committed with
-    ``version`` (default: latest). Empty dict for tables/versions
-    without constraints."""
-    import json as _json
-
-    if version is None:
-        version = latest_version(spark, path)
-        if version is None:
-            return {}
-    jvm, fs, _ = _jfs(spark, path)
-    raw = _read_sidecar_text(
-        jvm, fs, snapshot_path(path, version), _CONSTRAINTS_SIDECAR
-    )
-    return _json.loads(raw) if raw else {}
-
-
-def _enforce_constraints(
-    batch: DataFrame, path: str, constraints: dict[str, str]
-) -> None:
-    """One aggregate job counting violations of every constraint over
-    the incoming batch; raises :class:`ConstraintViolation` listing
-    each violated constraint with its row count. SQL CHECK semantics:
-    a row violates only when the predicate evaluates FALSE — NULL
-    (unknown) passes, exactly like the standard and Delta."""
-    names = sorted(constraints)
-    aggs = [
-        F.sum(
-            F.when(~F.expr(constraints[name]), 1).otherwise(0)
-        ).alias(f"__c{i}")
-        for i, name in enumerate(names)
-    ]
-    row = batch.agg(*aggs).first()
-    violations = {
-        name: (int(row[f"__c{i}"]), constraints[name])
-        for i, name in enumerate(names)
-        if row[f"__c{i}"]
-    }
-    if violations:
-        raise ConstraintViolation(path, violations)
-
-
-def drop_constraint(spark: SparkSession, path: str, name: str) -> int:
-    """Remove one CHECK constraint via a metadata-only commit: a new
-    version with the SAME file manifest (zero data movement, rollback's
-    shape) whose constraint sidecar omits ``name``. Raises KeyError if
-    the constraint doesn't exist on the latest version."""
-    prev = latest_version(spark, path)
-    if prev is None:
-        raise ValueError(f"no snapshots under {path}")
-    cons = table_constraints(spark, path, prev)
-    if name not in cons:
-        raise KeyError(
-            f"constraint {name!r} not on {path} (has {sorted(cons)})"
-        )
-    del cons[name]
-    rows = [
-        (r["file"], r["partition"], r["row_count"])
-        for r in read_manifest(spark, path, prev).collect()
-    ]
-    prev_stats = snapshot_stats(spark, path, prev)
-    return _commit_manifest(
-        spark,
-        path,
-        prev + 1,
-        rows,
-        table_schema=table_schema(spark, path, prev),
-        stats_df=prev_stats,
-        constraints=cons,
-        operation="DROP_CONSTRAINT",
-        op_metrics={"constraint": name},
-    )
-
-
-def snapshot_stats(spark: SparkSession, path: str, version: int) -> DataFrame | None:
-    """The committed per-file column stats of ``version`` (schema =
-    ``operators/manifest._MANIFEST_SCHEMA``), or None when the version
-    was committed without ``stats_cols``."""
-    jvm, fs, _ = _jfs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(snapshot_path(path, version), _STATS_DIR)
-    if not fs.exists(p):
-        return None
-    return spark.read.parquet(p.toString())
-
-
 def table_schema(spark: SparkSession, path: str, version: int):
     """The committed logical schema of ``version`` (StructType), or
     None for manifests written before the sidecar existed."""
+    import json
+
     from pyspark.sql.types import StructType
 
     jvm, fs, _ = _jfs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(snapshot_path(path, version), _SCHEMA_SIDECAR)
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        data = []
-        while True:
-            b = stream.read()
-            if b < 0:
-                break
-            data.append(b)
-    finally:
-        stream.close()
-    return StructType.fromJson(
-        __import__("json").loads(bytes(data).decode("utf-8"))
-    )
+    raw = _read_sidecar_text(jvm, fs, snapshot_path(path, version), _SCHEMA_SIDECAR)
+    return None if raw is None else StructType.fromJson(json.loads(raw))
 
 
 def _table_columns(spark: SparkSession, path: str, version: int) -> list[str]:
@@ -679,65 +346,17 @@ def upsert_cow(
     path: str,
     key_cols: list[str],
     partition_col: str,
-    stats_cols: list[str] | None = None,
-    constraints: dict[str, str] | None = None,
 ) -> tuple[int, int]:
     """Copy-on-write MERGE: same semantics and partition-stability
     precondition as ``merge.upsert_parquet`` (key-matched target rows
     replaced, others carried, only touched partitions rewritten), but
     non-destructive — rewritten partitions land as NEW files, the new
     manifest version points at them, and every prior version stays
-    readable until vacuumed. Returns (new_version, rows_written).
+    readable. Returns (new_version, rows_written).
     Batch versions and the touched-partition bound follow the policy in
-    ``operators/merge.py`` (latest-wins per key).
-
-    ``constraints`` adds Delta-style CHECK invariants (name -> SQL
-    predicate over the table's columns). The commit's EFFECTIVE set is
-    the table's persisted constraints updated with this dict; every
-    incoming batch row must satisfy all of them (FALSE = violation,
-    NULL passes, per SQL CHECK) or the whole commit aborts with
-    :class:`ConstraintViolation` before anything is written. The set
-    persists in the manifest sidecar and is enforced on every later
-    upsert automatically; ``drop_constraint`` removes one."""
+    ``operators/merge.py`` (latest-wins per key)."""
     spark = batch.sparkSession
     batch = latest_per_key(batch, key_cols)
-
-    prev_for_cons = latest_version(spark, path)
-    persisted_cons = (
-        table_constraints(spark, path, prev_for_cons)
-        if prev_for_cons is not None
-        else {}
-    )
-    # ADD CONSTRAINT semantics (ADVICE r9 #1): a constraint that is new
-    # (or whose predicate changed) on a NON-EMPTY table must hold for
-    # the rows already stored, not just the incoming batch — otherwise
-    # table_constraints() advertises an invariant the data violates.
-    # Delta scans existing data before accepting ADD CONSTRAINT; so do
-    # we: one aggregate job over the latest snapshot, checking ONLY the
-    # added/changed constraints (existing rows satisfy the persisted
-    # set by induction — every prior commit enforced it).
-    added_cons = {
-        n: p
-        for n, p in (constraints or {}).items()
-        if persisted_cons.get(n) != p
-    }
-    if added_cons and prev_for_cons is not None:
-        existing = read_snapshot(spark, path, prev_for_cons, merge_schema=True)
-        # A constraint may reference a column this batch INTRODUCES —
-        # stored rows don't have it in any file, so surface it as NULL
-        # (NULL passes CHECK, per SQL) instead of failing analysis.
-        missing = [c for c in batch.columns if c not in existing.columns]
-        if missing:
-            bt = dict(batch.dtypes)
-            existing = existing.select(
-                "*", *[F.lit(None).cast(bt[c]).alias(c) for c in missing]
-            )
-        _enforce_constraints(existing, path, added_cons)
-    effective_cons = dict(persisted_cons)
-    effective_cons.update(constraints or {})
-    if effective_cons:
-        _enforce_constraints(batch, path, effective_cons)
-
     touched = touched_partitions(batch, partition_col)
 
     prev = latest_version(spark, path)
@@ -819,33 +438,9 @@ def upsert_cow(
     )
 
     version = (prev if prev is not None else -1) + 1
-    stats_df = None
-    if stats_cols:
-        # churn-bounded: footer-read ONLY the files this commit wrote;
-        # carried files keep their previous version's stats rows (files
-        # never covered by stats stay prunable-never, read-always)
-        from ua2sql_spark.operators.manifest import file_stats
-
-        stats_df = file_stats(spark, [f for f, _p, _rc in new_files], stats_cols)
-        if prev is not None:
-            prev_stats = snapshot_stats(spark, path, prev)
-            if prev_stats is not None and carried_manifest:
-                carried_set = {f for f, _p, _rc in carried_manifest}
-                stats_df = stats_df.unionByName(
-                    prev_stats.filter(F.col("file").isin(list(carried_set)))
-                )
     rows_written = int(obs.get["rows"])
     _commit_manifest(
-        spark,
-        path,
-        version,
-        carried_manifest + new_files,
-        table_schema=out.schema,
-        stats_df=stats_df,
-        constraints=effective_cons,
-        operation="UPSERT",
-        op_metrics={"rows_written": rows_written,
-                    "files_added": len(new_files)},
+        spark, path, version, carried_manifest + new_files, table_schema=out.schema
     )
     return version, rows_written
 
@@ -879,15 +474,13 @@ def delete_cow(
     the deleted rows as ``delete`` change events, so SCD2 folds, IVM
     refreshes, and cursor consumers all observe the erasure.
 
-    COMPLIANCE NOTE: prior versions still reference the old files —
-    time travel is the POINT of the store. Hard erasure = this commit
-    followed by dropping the pre-delete manifests and vacuuming
-    (``live_files_union`` + ``layout.vacuum_orphans``), exactly Delta's
-    DELETE-then-VACUUM sequence.
+    COMPLIANCE NOTE: the deleted rows are invisible from the new
+    version on, but not erased. Earlier versions still reference the
+    old files, read them under time travel, and those files stay on
+    disk: nothing here deletes a data file.
 
     Returns (new_version, rows_deleted); no version commits when
-    nothing matches. Stats/schema sidecars propagate: rewritten files
-    get fresh stats, carried files keep theirs."""
+    nothing matches. The schema sidecar carries over."""
     prev = latest_version(spark, path)
     if prev is None:
         raise ValueError(f"no snapshots under {path}")
@@ -939,25 +532,12 @@ def delete_cow(
     )
 
     version = prev + 1
-    stats_df = None
-    prev_stats = snapshot_stats(spark, path, prev)
-    if prev_stats is not None:
-        from ua2sql_spark.operators.manifest import file_stats
-
-        cols = [r["col"] for r in prev_stats.select("col").distinct().collect()]
-        carried_set = [f for f, _p, _rc in carried_manifest]
-        stats_df = file_stats(
-            spark, [f for f, _p, _rc in new_files], cols
-        ).unionByName(prev_stats.filter(F.col("file").isin(carried_set)))
     _commit_manifest(
         spark,
         path,
         version,
         carried_manifest + new_files,
         table_schema=table_schema(spark, path, prev),
-        stats_df=stats_df,
-        operation="DELETE",
-        op_metrics={"rows_deleted": n_deleted},
     )
     return version, n_deleted
 
@@ -966,7 +546,7 @@ def rollback(spark: SparkSession, path: str, to_version: int) -> int:
     """Restore the table to an earlier version by committing a NEW
     version whose manifest equals the old one — manifest-only, zero
     data movement (Delta's RESTORE). History stays intact: the bad
-    versions remain inspectable until their files are vacuumed."""
+    versions remain inspectable."""
     versions = list_versions(spark, path)
     if to_version not in versions:
         raise ValueError(f"version {to_version} not in {versions}")
@@ -980,9 +560,6 @@ def rollback(spark: SparkSession, path: str, to_version: int) -> int:
         versions[-1] + 1,
         rows,
         table_schema=table_schema(spark, path, to_version),
-        stats_df=snapshot_stats(spark, path, to_version),
-        operation="RESTORE",
-        op_metrics={"to_version": to_version},
     )
 
 
@@ -1022,10 +599,8 @@ def snapshot_layout_health(
     (grouped from the manifest's fully-qualified paths — VERDICT r12
     #4; the previous per-file ``getFileStatus`` loop was hours at a
     10⁵–10⁶-file table), with a per-file fallback only for a file
-    missing from its directory listing (a concurrently-vacuumed or
-    hand-moved file — never a healthy table). No data files are read.
-    Foreign (clone-referenced) files group under their own parent
-    directories, so clones cost the same bound."""
+    missing from its directory listing (a hand-moved file — never a
+    healthy table). No data files are read."""
     v = version if version is not None else latest_version(spark, path)
     if v is None:
         raise ValueError(f"no snapshots under {path}")
@@ -1084,9 +659,9 @@ def compact_snapshot(
     file each, committed as a new version — the maintenance pass that
     keeps per-version writes (each micro-batch upsert can leave several
     small files per touched partition) from decaying scan efficiency.
-    Copy-on-write like everything here: old files stay until vacuumed,
-    prior versions stay readable, the commit point is the manifest
-    rename. Returns (new_version, compacted partition dir names).
+    Copy-on-write like everything here: old files stay on disk, prior
+    versions stay readable, the commit point is the manifest rename.
+    Returns (new_version, compacted partition dir names).
 
     Scale shape: the manifest (file-count-bounded) picks the fragmented
     partitions driver-side; only THOSE partitions are read (by explicit
@@ -1129,9 +704,9 @@ def compact_snapshot(
     frag_dirs = [part for part, _files in frag]
     before = _list_partition_files(spark, path, frag_dirs)
     for part, files in frag:
-        # one coalesced file per fragmented partition; the grouped read
-        # keeps the partition column so partitionBy lands it back in
-        # place (and re-homes a cloned partition's foreign files)
+        # one coalesced file per fragmented partition; the basePath
+        # read keeps the partition column so partitionBy lands it back
+        # in place
         (
             _read_manifest_files(spark, files)
             .coalesce(1)
@@ -1144,27 +719,12 @@ def compact_snapshot(
         spark, [(f, part) for f, (part, _sz) in after.items() if f not in before]
     )
     version = prev + 1
-    stats_df = None
-    prev_stats = snapshot_stats(spark, path, prev)
-    if prev_stats is not None:
-        # same columns as the previous version's stats, computed only
-        # for the freshly-coalesced files; untouched files carry over
-        from ua2sql_spark.operators.manifest import file_stats
-
-        cols = [r["col"] for r in prev_stats.select("col").distinct().collect()]
-        untouched_set = [f for f, _p, _rc in untouched]
-        stats_df = file_stats(
-            spark, [f for f, _p, _rc in new_files], cols
-        ).unionByName(prev_stats.filter(F.col("file").isin(untouched_set)))
     _commit_manifest(
         spark,
         path,
         version,
         untouched + new_files,
-        operation="OPTIMIZE_COMPACT",
-        op_metrics={"files_written": len(new_files)},
         table_schema=table_schema(spark, path, prev),
-        stats_df=stats_df,
     )
     return version, sorted(p for p, _ in frag)
 
@@ -1279,9 +839,9 @@ def changes_since(
     ``from_version = -1`` means "from the very beginning": the feed
     opens with version 0's rows as inserts (Delta's
     ``startingVersion=0`` includes commit 0), then the per-commit
-    diffs. A non-negative ``from_version`` must still be a committed
-    (retained) version — if retention aged it out, the diff base is
-    gone and the only honest recovery is a re-bootstrap: full-sync from
+    diffs. A non-negative ``from_version`` must be a committed version
+    — if its manifest is gone, the diff base is gone and the only
+    honest recovery is a re-bootstrap: full-sync from
     ``read_snapshot(latest)`` and ``commit(latest)``; the error says
     so.
 
@@ -1297,7 +857,7 @@ def changes_since(
     if from_version >= 0 and from_version not in all_versions:
         raise ValueError(
             f"from_version {from_version} is not a committed version "
-            f"(retained: {all_versions}); if retention removed it, "
+            f"(committed: {all_versions}); if its manifest is gone, "
             "re-bootstrap: full-sync from read_snapshot(latest) and "
             "commit(latest)"
         )
@@ -1332,103 +892,20 @@ def changes_since(
     return out
 
 
-# ---------------------------------------------------------------------------
-# Tags + shallow clone (VERDICT r10 #7): the cheap branch-for-experiment
-# primitives a 100 TB corpus store wants before any risky rewrite. A tag
-# is a named retention-pinned pointer to a version; a shallow clone is a
-# manifest-only table whose v0 references another table's live files at
-# a pinned version — zero data copied, O(manifest) commit.
-# ---------------------------------------------------------------------------
-_TAGS_SIDECAR = "_tags.json"
-
-
-def list_tags(spark: SparkSession, path: str) -> dict[str, int]:
-    """name -> version for every tag on the table. Fails closed on a
-    half-committed sidecar, same as :func:`list_clones`."""
-    import json as _json
-
-    raw = _read_sidecar_fail_closed(spark, path, _TAGS_SIDECAR)
-    return _json.loads(raw) if raw else {}
-
-
-def _write_tags(spark: SparkSession, path: str, tags: dict[str, int]) -> None:
-    import json as _json
-
-    _write_sidecar_atomic(
-        spark, path, _TAGS_SIDECAR, _json.dumps(tags, sort_keys=True)
-    )
-
-
-def tag_snapshot(
-    spark: SparkSession, path: str, name: str, version: int | None = None
-) -> int:
-    """Pin ``name`` to ``version`` (default latest). A tag is readable
-    via ``read_snapshot(version=name)`` and protects its version from
-    ``delete_versions_before`` until deleted. Names are immutable while
-    they exist (re-pointing silently would break any run that recorded
-    the tag) — ``delete_tag`` first to move one. Same single-writer
-    contract as every commit here."""
-    if _VER_RE.match(name):
-        raise ValueError(f"tag name {name!r} collides with version syntax")
-    vs = list_versions(spark, path)
-    if not vs:
-        raise ValueError(f"no snapshots under {path}")
-    v = vs[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"version {v} does not exist under {path}")
-    tags = list_tags(spark, path)
-    if name in tags and tags[name] != v:
-        raise ValueError(
-            f"tag {name!r} already points at v{tags[name]}; delete_tag first"
-        )
-    tags[name] = v
-    _write_tags(spark, path, tags)
-    return v
-
-
-def delete_tag(spark: SparkSession, path: str, name: str) -> int:
-    """Remove a tag; returns the version it pointed at."""
-    tags = list_tags(spark, path)
-    if name not in tags:
-        raise ValueError(f"no tag {name!r} on {path}")
-    v = tags.pop(name)
-    _write_tags(spark, path, tags)
-    return v
-
-
-def _resolve_version(
-    spark: SparkSession, path: str, version: int | str | None
-) -> int:
-    """None -> latest; str -> tag lookup; int passes through."""
-    if version is None:
-        v = latest_version(spark, path)
-        if v is None:
-            raise ValueError(f"no snapshots under {path}")
-        return v
-    if isinstance(version, str):
-        tags = list_tags(spark, path)
-        if version not in tags:
-            raise ValueError(f"no tag {version!r} on {path}")
-        return tags[version]
-    return version
-
-
-_CLONES_SIDECAR = "_clones.json"
-
-
 def _write_sidecar_atomic(
     spark: SparkSession, path: str, name: str, text: str
 ) -> None:
-    """Mutable-sidecar commit idiom (ADVICE r12 #1): stage the new
-    content under a unique ``.tmp-`` name, delete the old file, rename
-    the stage into place — a reader never observes a torn write, which
-    the previous ``fs.create(overwrite)`` allowed (a crash mid-write
-    left truncated JSON that broke every later read). The remaining
-    crash window (between delete and rename) leaves the stage file
-    behind with no final file; :func:`_read_sidecar_fail_closed` turns
-    that state into a named recovery error instead of an empty
-    registry. Mutation runs under the table's single-writer commit
-    contract, same as every manifest commit here."""
+    """Mutable-sidecar commit idiom (``ivm_join``'s cursor is the one
+    mutable sidecar under ``_snapshots/``): stage the new content under
+    a unique ``.tmp-`` name, delete the old file, rename the stage into
+    place — a reader never observes a torn write, which
+    ``fs.create(overwrite)`` allows (a crash mid-write leaves truncated
+    JSON that breaks every later read). The remaining crash window
+    (between delete and rename) leaves the stage file behind with no
+    final file; :func:`_read_sidecar_fail_closed` turns that state into
+    a named recovery error instead of a missing sidecar. Mutation runs
+    under the table's single-writer commit contract, same as every
+    manifest commit here."""
     import uuid
 
     jvm, fs, _ = _jfs(spark, path)
@@ -1451,9 +928,7 @@ def _read_sidecar_fail_closed(spark: SparkSession, path: str, name: str):
     """Read a mutable sidecar; if the final file is MISSING but a
     staged ``.tmp-`` twin exists, a writer crashed between delete and
     rename — fail closed with recovery instructions rather than return
-    "no registrations" (for ``_clones.json`` that empty answer is
-    exactly the silent vacuum data loss the sidecar exists to
-    prevent)."""
+    None, which a caller would read as "never written"."""
     jvm, fs, _ = _jfs(spark, path)
     raw = _read_sidecar_text(jvm, fs, _snap_root(path), name)
     if raw is None:
@@ -1469,102 +944,3 @@ def _read_sidecar_fail_closed(spark: SparkSession, path: str, name: str):
                         f"as {name} to recover"
                     )
     return raw
-
-
-def list_clones(spark: SparkSession, path: str) -> list[str]:
-    """Destination paths of every shallow clone registered on this
-    table (written by :func:`clone_snapshot` at clone time). Entries
-    are the exact path strings passed to ``clone_snapshot``. Fails
-    closed on a half-committed sidecar (crashed writer) — see
-    :func:`_read_sidecar_fail_closed`."""
-    import json as _json
-
-    raw = _read_sidecar_fail_closed(spark, path, _CLONES_SIDECAR)
-    return _json.loads(raw) if raw else []
-
-
-def _write_clones(spark: SparkSession, path: str, clones: list[str]) -> None:
-    import json as _json
-
-    _write_sidecar_atomic(
-        spark, path, _CLONES_SIDECAR, _json.dumps(sorted(clones))
-    )
-
-
-def unregister_clone(spark: SparkSession, src_path: str, dst_path: str) -> None:
-    """Retire a clone registration — AFTER the clone is deleted or has
-    fully localized away from the source's files. The registry fails
-    vacuum closed (``live_files_union`` raises on an unreadable
-    registered clone), so a deleted clone must be unregistered
-    consciously rather than silently dropped."""
-    clones = list_clones(spark, src_path)
-    if dst_path not in clones:
-        raise ValueError(f"{dst_path!r} is not a registered clone of {src_path!r}")
-    _write_clones(spark, src_path, [c for c in clones if c != dst_path])
-
-
-def clone_snapshot(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    version: int | str | None = None,
-) -> int:
-    """SHALLOW CLONE (Delta's ``CREATE TABLE ... SHALLOW CLONE`` analog):
-    commit ``dst_path``'s v0 as a manifest that references
-    ``src_path``'s live files at ``version`` (default latest; a tag
-    name works). Zero data copied — the commit is O(manifest), not
-    O(table) — and the source's history is untouched.
-
-    The clone is a real table afterwards: manifest entries are
-    fully-qualified, so every read resolves foreign files through the
-    per-root grouped reader (:func:`_read_manifest_files`), and
-    copy-on-write mutations (upsert/delete/compact) rewrite touched
-    partitions into the CLONE's own directory — the clone localizes
-    lazily as it diverges, exactly the branch-for-experiment shape.
-    Schema sidecar and CHECK constraints carry over from the source
-    version.
-
-    VACUUM INTERACTION: the clone's foreign files live under the
-    SOURCE's directory, so a source vacuum that ignores clones would
-    invalidate them. The clone therefore REGISTERS itself in the
-    source's ``_clones.json`` sidecar before committing, and
-    ``live_files_union(src)`` unions registered clones' live sets BY
-    DEFAULT — ``vacuum_orphans(live_files_union(src))`` is clone-safe
-    with zero caller bookkeeping (VERDICT r11 #3). Registration happens
-    before the clone's v0 commit so a crash between the two leaves a
-    phantom registration (vacuum fails closed until
-    ``unregister_clone``), never an unregistered clone (silent data
-    loss). Source-only vacuum is the explicit opt-in
-    ``live_files_union(src, include_clones=False)``.
-
-    Registration is a read-modify-write of the source's sidecar and
-    runs under the source table's SINGLE-WRITER commit contract (the
-    same one every manifest commit assumes): two concurrent
-    ``clone_snapshot`` calls against one source must be externally
-    serialized or one registration can be lost (ADVICE r12 #1)."""
-    src_v = _resolve_version(spark, src_path, version)
-    if latest_version(spark, dst_path) is not None:
-        raise ValueError(f"{dst_path} already has snapshots")
-    jvm, fs, dst_root = _jfs(spark, dst_path)
-    if fs.exists(dst_root):
-        raise ValueError(
-            f"{dst_path} exists; clone into a fresh directory so vacuum "
-            "never has to reason about pre-existing unmanaged files"
-        )
-    clones = list_clones(spark, src_path)
-    if dst_path not in clones:
-        _write_clones(spark, src_path, clones + [dst_path])
-    rows = [
-        (r["file"], r["partition"], r["row_count"])
-        for r in read_manifest(spark, src_path, src_v).collect()
-    ]
-    return _commit_manifest(
-        spark,
-        dst_path,
-        0,
-        rows,
-        table_schema=table_schema(spark, src_path, src_v),
-        constraints=table_constraints(spark, src_path, src_v) or {},
-        operation="CLONE",
-        op_metrics={"source_path": src_path, "source_version": src_v},
-    )

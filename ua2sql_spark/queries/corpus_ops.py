@@ -22,8 +22,7 @@ Scale shape at 100 TB (SCALE.md §5b):
 * the shuffle-order op is ``ORDER BY md5(seed|id) LIMIT k`` —
   TakeOrderedAndProject (per-partition top-k, merge on driver), never a
   global sort; writing a full shuffled corpus instead uses
-  ``repartitionByRange`` on the same key (see operators/layout.py
-  ``write_clustered``).
+  ``repartitionByRange`` on the same key.
 * repetition scoring is map-only (projection arithmetic on the gram
   array) — zero shuffles.
 """

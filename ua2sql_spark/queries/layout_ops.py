@@ -1,17 +1,16 @@
 """Data-layout queries: the z-order (Morton) clustering primitive under
 the driver's exact-correctness gate.
 
-``operators/layout.py`` owns the write paths (compaction, range
-clustering, z-order clustering); this module pins the bit arithmetic
-those paths sort by. The Morton code is pure JVM bit-spreading
+``operators/layout.py`` owns the Morton key; this module pins the bit
+arithmetic a z-order layout sorts by. The Morton code is pure JVM bit-spreading
 (shiftleft/and/or inside whole-stage codegen) and the DuckDB oracle
 computes the identical schedule via :func:`zorder_sql`, so the
 engines must agree on every single bit — any drift in the interleave
 hash-mismatches.
 
-Scale: computing z is a map-only projection; the layout write is one
-range exchange (operators/layout.py:write_zordered). Nothing here
-shuffles except the final per-bucket aggregate.
+Scale: computing z is a map-only projection; a layout write sorted on
+it is one range exchange. Nothing here shuffles except the final
+per-bucket aggregate.
 """
 
 from __future__ import annotations

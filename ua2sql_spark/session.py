@@ -46,7 +46,9 @@ you'd also want on a 1000-executor cluster:
   setup and rotation CPU stayed flat or fell. The archive still maps: a
   dynamic archive dumped under one of G1, parallel and serial maps
   under the others. A launch environment that already selects a
-  collector keeps it (see :func:`collector_options`).
+  collector keeps it (see :func:`collector_options`); under ZGC or
+  Shenandoah, where such an archive does not map, the engine adds no
+  JVM options at all (see :func:`driver_launch`).
 """
 
 from __future__ import annotations
@@ -72,6 +74,9 @@ DUMP_WAIT_S = 120
 PARALLEL_GC = "-XX:+UseParallelGC"
 COLLECTOR_ENVS = ("PYSPARK_SUBMIT_ARGS", "SPARK_SUBMIT_OPTS", "JAVA_TOOL_OPTIONS",
                   "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS")
+# Collectors under which an archive dumped under the engine's maps. ZGC
+# and Shenandoah use no compressed oops, so they cannot map one.
+CDS_COLLECTORS = ("G1", "Parallel", "Serial")
 
 
 def _default_shuffle_partitions() -> int:
@@ -173,26 +178,40 @@ def archive_key(java: str, jars_dir: str) -> str:
     return h.hexdigest()[:16]
 
 
+def chosen_collector() -> str | None:
+    """The collector the launch environment selects (``G1`` for
+    ``-XX:+UseG1GC``), or ``None``."""
+    for name in COLLECTOR_ENVS:
+        if m := re.search(r"-XX:\+Use(\w+)GC\b", os.environ.get(name, "")):
+            return m[1]
+    return None
+
+
 def collector_options() -> str:
     """:data:`PARALLEL_GC`, or ``""`` when the launch environment already
     selects a collector: a second ``-XX:+Use...GC`` stops the JVM
     ("Multiple garbage collectors selected")."""
-    chosen = (re.search(r"-XX:\+Use\w+GC\b", os.environ.get(name, "")) for name in COLLECTOR_ENVS)
-    return "" if any(chosen) else PARALLEL_GC
+    return "" if chosen_collector() else PARALLEL_GC
 
 
 def driver_launch(spark_home: str) -> tuple[str, str, str | None, str | None] | None:
     """How to start the driver JVM: its java options (the collector of
     :func:`collector_options`, then the CDS flags of :func:`cds_launch`),
     the ``SPARK_CONF_DIR`` to launch with, the archive it maps and the
-    temp file it dumps one to. ``None`` means start as usual: the conf
-    dir holds a file Spark reads, whose ``spark.driver.defaultJavaOptions``
-    a builder value would override, or there is nothing to add."""
+    temp file it dumps one to. ``None`` means start as usual, with no
+    engine options: the conf dir holds a file Spark reads, whose
+    ``spark.driver.defaultJavaOptions`` a builder value would override,
+    the launch environment selects a collector outside
+    :data:`CDS_COLLECTORS`, or there is nothing to add. Such a collector
+    neither maps nor dumps the archive, so a host that alternates ZGC
+    with default starts does not delete and re-dump it on every switch."""
     conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
     try:
         if os.path.exists(conf) and any(not n.endswith(".template") for n in os.listdir(conf)):
             return None
     except OSError:
+        return None
+    if chosen_collector() not in (None, *CDS_COLLECTORS):
         return None
     options, conf_dir, archive, dump_to = cds_launch(spark_home) or ("", conf, None, None)
     options = " ".join(filter(None, (collector_options(), options)))

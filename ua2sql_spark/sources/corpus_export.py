@@ -1,7 +1,5 @@
 """Corpus delivery sinks: the formats training jobs actually consume.
 
-``export_jsonl_gz``   — sharded gzip JSON-lines (the interchange format
-                        every tokenizer/loader reads).
 ``write_webdataset``  — WebDataset-style tar shards: each sample's
                         members (``{key}.txt``, optional ``{key}.bin``)
                         stored contiguously in a shard tar, so a
@@ -29,17 +27,6 @@ import os
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def export_jsonl_gz(df: DataFrame, path: str, n_files: int) -> None:
-    """Write ``df`` as ``n_files`` gzip JSON-lines shards."""
-    (
-        df.repartition(n_files)
-        .write.mode("overwrite")
-        .option("compression", "gzip")
-        .json(path)
-    )
-
 
 _MANIFEST_SCHEMA = "shard int, path string, n_samples long, n_bytes long"
 
