@@ -1,19 +1,33 @@
-"""Physical-plan inspection — scale assertions as code.
-
-`.explain("formatted")` is the feedback loop for 100 TB design: these
-helpers turn "did the filter push down / did the dim broadcast / how
-many shuffles" into testable predicates (tests/test_plans.py), so a
-regression that, say, turns a broadcast join into a sort-merge join
-fails CI rather than surfacing as a 100× slowdown on a cluster.
+"""Helpers that only the tests use: physical-plan inspection, a GIF
+encoder that builds decoder fixtures, a local-file Unity export client
+and a WebDataset shard reader. No module under ``ua2sql_spark/`` imports
+this one (``tests/test_catalog.py::test_engine_imports_no_test_helper``).
 """
 
 from __future__ import annotations
 
+import io
+import os
 import re
+import shutil
+import struct
+import tarfile
+from collections.abc import Iterator
+from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame
 
+from ua2sql_spark.functions.gif import GifError
 
+
+# ---------------------------------------------------------------------------
+# Physical-plan inspection: scale assertions as code. These turn "did the
+# filter push down / did the dim broadcast / how many shuffles" into
+# predicates, so a regression that, say, turns a broadcast join into a
+# sort-merge join fails a test rather than surfacing as a 100x slowdown on
+# a cluster.
+# ---------------------------------------------------------------------------
 def _explain(df: DataFrame, mode: str) -> str:
     jvm = df.sparkSession._jvm
     jmode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
@@ -264,3 +278,153 @@ def reeval_hazards(df: DataFrame) -> list[str]:
                         "Project above Generate (re-evaluated per generated row)"
                     )
     return finds
+
+
+# ---------------------------------------------------------------------------
+# GIF89a encoder: real LZW compression (dictionary build, clear-code reset
+# at 4096 entries), so the decoder tests roundtrip genuine compressed bytes.
+# ---------------------------------------------------------------------------
+class _LsbBitWriter:
+    def __init__(self):
+        self.out = bytearray()
+        self.acc = 0
+        self.nbits = 0
+
+    def write(self, code: int, length: int) -> None:
+        self.acc |= code << self.nbits
+        self.nbits += length
+        while self.nbits >= 8:
+            self.out.append(self.acc & 0xFF)
+            self.acc >>= 8
+            self.nbits -= 8
+
+    def flush(self) -> bytes:
+        if self.nbits:
+            self.out.append(self.acc & 0xFF)
+        return bytes(self.out)
+
+
+def _lzw_encode(min_code_size: int, indices: bytes) -> bytes:
+    clear = 1 << min_code_size
+    eoi = clear + 1
+    writer = _LsbBitWriter()
+
+    def reset() -> tuple[dict[bytes, int], int, int]:
+        return (
+            {bytes([i]): i for i in range(clear)},
+            eoi + 1,
+            min_code_size + 1,
+        )
+
+    table, next_code, code_size = reset()
+    writer.write(clear, code_size)
+    run = b""
+    for byte in indices:
+        cand = run + bytes([byte])
+        if cand in table:
+            run = cand
+            continue
+        writer.write(table[run], code_size)
+        table[cand] = next_code
+        if next_code == (1 << code_size) and code_size < 12:
+            code_size += 1
+        next_code += 1
+        if next_code > 4095:
+            writer.write(clear, code_size)
+            table, next_code, code_size = reset()
+        run = bytes([byte])
+    if run:
+        writer.write(table[run], code_size)
+    writer.write(eoi, code_size)
+    return writer.flush()
+
+
+def encode_gif(width: int, height: int, palette: list[bytes], indices: bytes) -> bytes:
+    """Encode one frame as GIF89a: ``palette`` is ≤256 RGB triples,
+    ``indices`` one palette index per pixel, row-major."""
+    if not 0 < len(palette) <= 256:
+        raise GifError(f"palette size {len(palette)} out of range")
+    depth = max(2, (len(palette) - 1).bit_length())  # GIF minimum: 2 bits
+    table = b"".join(palette) + b"\x00\x00\x00" * ((1 << depth) - len(palette))
+    out = bytearray(b"GIF89a")
+    out += struct.pack("<HHBBB", width, height, 0x80 | ((depth - 1) & 7), 0, 0)
+    out += table
+    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, 0)
+    out.append(depth)
+    data = _lzw_encode(depth, indices)
+    for i in range(0, len(data), 255):
+        chunk = data[i : i + 255]
+        out.append(len(chunk))
+        out += chunk
+    out += b"\x00\x3b"
+    return bytes(out)
+
+
+# ---------------------------------------------------------------------------
+# Unity export client over pre-staged local files
+# (``ua2sql_spark.sources.ingest.ExportClient``).
+# ---------------------------------------------------------------------------
+@dataclass
+class LocalFileExportClient:
+    """Test/offline double: 'exports' are pre-staged local files keyed by
+    (feed, job index). Deterministic job ids: '<feed>-<n>'."""
+
+    exports: dict[str, list[list[str]]]  # feed -> runs -> file paths
+
+    def request_export(self, feed, start_date, continue_from):
+        runs = self.exports.get(feed, [])
+        nxt = 0 if continue_from is None else int(continue_from.rsplit("-", 1)[1]) + 1
+        if nxt >= len(runs):
+            return None  # nothing new to export
+        return f"{feed}-{nxt}"
+
+    def is_complete(self, job_id):
+        return True
+
+    def download_results(self, job_id, staging_dir):
+        feed, n = job_id.rsplit("-", 1)
+        out = []
+        for src in self.exports[feed][int(n)]:
+            dst = os.path.join(staging_dir, os.path.basename(src))
+            shutil.copyfile(src, dst)
+            out.append(dst)
+        return out
+
+
+# ---------------------------------------------------------------------------
+# WebDataset loader: reads back what ``corpus_export.write_webdataset`` writes.
+# ---------------------------------------------------------------------------
+def read_webdataset(spark, in_dir: str) -> DataFrame:
+    """Load WebDataset tar shards back into (key, text, payload) rows —
+    the loader side of ``corpus_export.write_webdataset``.
+
+    ``binaryFile`` distributes whole shards to tasks (a tar is a
+    sequential format, so shard == work unit, same as a training
+    loader); each task untars in memory via Arrow-batched mapInPandas.
+    Scale note: shards are sized ~1 GB by the writer, well inside
+    executor memory; sample members are grouped by basename per the
+    WebDataset convention."""
+    files = spark.read.format("binaryFile").load(in_dir + "/*.tar")
+
+    def untar(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for blob in pdf["content"]:
+                with tarfile.open(fileobj=io.BytesIO(bytes(blob))) as tar:
+                    samples: dict[str, dict] = {}
+                    for m in tar.getmembers():
+                        key, ext = m.name.rsplit(".", 1)
+                        samples.setdefault(key, {})[ext] = tar.extractfile(m).read()
+                    for key, members in samples.items():
+                        rows.append(
+                            (
+                                key,
+                                members.get("txt", b"").decode("utf-8"),
+                                members.get("bin"),
+                            )
+                        )
+            yield pd.DataFrame(rows, columns=["key", "text", "payload"])
+
+    return files.select("content").mapInPandas(
+        untar, schema="key string, text string, payload binary"
+    )

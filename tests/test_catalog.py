@@ -169,21 +169,14 @@ def test_engine_reads_no_private_session_conf():
 # Top-level functions and classes that no root reaches but that stay, with
 # the reason. An exempt name counts as a root, so its helpers need no entry.
 UNREACHED_KEPT = {
-    "sources.ingest.LocalFileExportClient": "test double of the Unity export client",
-    "functions.gif.encode_gif": "builds the GIF fixtures the media queries decode",
-    "functions.media.encode_avi_mjpeg": "builds the AVI fixtures the media queries decode",
-    "functions.media.encode_mov_mjpeg": "builds the MOV fixtures the media queries decode",
-    "sources.corpus_export.read_webdataset": "reads back the WebDataset shards the corpus pipeline writes",
-    "sources.unity.split_corrupt": "separates malformed export lines, which real feeds deliver",
-    "sources.unity.landed_schema": "declares the landed feed schema that read_feed's output is checked against",
-    "sources.jdbc.jdbc_upsert_sink": "the Structured Streaming + JDBC sink of the landing path",
-    "operators.ivf.probe_ivf_index": "the search half of the index that x198 builds",
-    "queries.multimodal.decode_images": "real-codec media seam",
-    "queries.multimodal.thumbnail_images": "real-codec media seam",
-    "queries.multimodal.probe_media": "real-codec media seam",
-    "functions.media.fake_decode_image": "real-codec media seam",
-    "functions.media.resize_image_real": "real-codec media seam",
-    "functions.media.sample_frames_real": "real-codec media seam",
+    "sources.unity.split_corrupt": (
+        "separates malformed export lines, which real feeds deliver; "
+        "ROADMAP item 3 puts it on the landing path"
+    ),
+    "sources.jdbc.upsert_feed_jdbc": (
+        "the idempotent JDBC upsert a stream's foreachBatch runs; "
+        "ROADMAP item 1 gives it the cross-batch version order of the other sinks"
+    ),
 }
 
 
@@ -193,8 +186,9 @@ def test_every_engine_function_is_reached_from_a_root():
     the tests: a registered query, a module-level statement,
     ``__main__.main``, or what ``__spark_entry__``, ``bench.py`` and
     ``perfbench`` use. A definition only its own tests reach is dead
-    weight. Whoever adds one wires it to a root or names it in
-    ``UNREACHED_KEPT`` with the reason.
+    weight: delete it, or move it to ``tests/helpers.py`` if tests need
+    it. Whoever keeps one in the package wires it to a root or names it
+    in ``UNREACHED_KEPT`` with the reason. No package is exempt.
 
     Names resolve through each module's imports (a function-local import
     binds for the whole module) and through package re-exports. An
@@ -316,7 +310,7 @@ def test_every_engine_function_is_reached_from_a_root():
             if hit not in reached:
                 reached.add(hit)
                 todo.append(hit)
-    engine = [m for m in defs if m.split(".")[0] == "ua2sql_spark" and m.split(".")[:2] != ["ua2sql_spark", "plans"]]
+    engine = [m for m in defs if m.split(".")[0] == "ua2sql_spark"]
     unreached = sorted(
         [f"{m} (module)" for m in engine if m not in loaded]
         + [f"{m}.{name}" for m in engine for name in defs[m] if (m, name) not in reached]
@@ -338,6 +332,29 @@ def test_checkpoint_imports_no_pyspark():
         alias.name for node in ast.walk(tree) if isinstance(node, ast.Import) for alias in node.names
     ] + [node.module or "" for node in ast.walk(tree) if isinstance(node, ast.ImportFrom)]
     assert [m for m in imported if m.split(".")[0] == "pyspark"] == [], imported
+
+
+def test_engine_imports_no_test_helper():
+    """Static guard: ``tests/helpers.py`` holds what only the tests
+    call, so no module under ``ua2sql_spark/`` imports it or anything
+    else from ``tests``, at module level or inside a function."""
+    import ast
+    import pathlib
+
+    import ua2sql_spark
+
+    root = pathlib.Path(ua2sql_spark.__file__).parent
+    hits = []
+    for p in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and not node.level:
+                names = [node.module or ""]
+            else:
+                continue
+            hits += [f"{p.relative_to(root)}:{node.lineno} {n}" for n in names if n.split(".")[0] == "tests"]
+    assert hits == [], hits
 
 
 # ---------------------------------------------------------------------------

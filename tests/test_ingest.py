@@ -18,13 +18,10 @@ from decimal import Decimal
 import pytest
 
 from ua2sql_spark.sources.checkpoint import JobIdCheckpoint
-from ua2sql_spark.sources.ingest import (
-    LocalFileExportClient,
-    parquet_sink,
-    run_ingest,
-)
+from ua2sql_spark.sources.ingest import parquet_sink, run_ingest
 from ua2sql_spark.sources.jdbc import jdbc_writer_options
 from ua2sql_spark.sources.unity import FEEDS, landed_schema, read_feed
+from tests.helpers import LocalFileExportClient
 
 
 def write_jsonl_gz(path: str, rows: list[dict]) -> str:
@@ -408,6 +405,30 @@ def test_all_feed_schemas_declared():
         assert {"ts", "submit_time", "userid", "remote_ip"} <= set(s.names)
 
 
+def test_perfbench_landed_schema_matches_the_engine(monkeypatch):
+    """perfbench checks what ``land_feeds`` lands against its own Arrow
+    declaration of the landed schema. It must be the engine's
+    ``landed_schema``: the same names, in the same order, of the same
+    types."""
+    import importlib.util
+    import sys
+
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from tests.conftest import REPO_ROOT
+
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_gen", os.path.join(REPO_ROOT, "perfbench", "gen.py"))
+    gen = importlib.util.module_from_spec(spec)
+    monkeypatch.setitem(sys.modules, spec.name, gen)  # its dataclasses look it up
+    spec.loader.exec_module(gen)
+    for feed in FEEDS:
+        engine = [(f.name, to_arrow_type(f.dataType, timestamp_utc=False))
+                  for f in landed_schema(feed).fields]
+        bench = [(f.name, f.type) for f in gen.landed_schema(feed)]
+        assert bench == engine, feed
+
+
 def test_corrupt_record_quarantine(spark, landing):
     """A malformed line must not kill the ingest (the reference would
     raise at json.loads, ua2sql.py:222): PERMISSIVE capture routes it to
@@ -512,14 +533,16 @@ def test_stream_upsert_sink_end_to_end(spark, landing, tmp_path):
     """Streaming T1+T4: file-source checkpoint gives at-least-once
     micro-batches; the foreachBatch upsert makes duplicate rows inside
     later files no-ops — target converges to the distinct row set."""
-    from ua2sql_spark.sources.jdbc import jdbc_upsert_sink
+    from ua2sql_spark.sources.jdbc import upsert_feed_jdbc
     from ua2sql_spark.streaming.ingest import stream_feed
 
     url = f"jdbc:derby:{tmp_path}/derby_stream;create=true"
     props = {"driver": "org.apache.derby.iapi.jdbc.AutoloadedDriver"}
     ckpt = str(tmp_path / "ckpt")
-    sink = jdbc_upsert_sink(url, "custom_s", "custom",
-                            properties=props, pg_types=False)
+
+    def sink(batch_df, epoch_id):
+        upsert_feed_jdbc(batch_df, url, "custom_s", "custom",
+                         properties=props, pg_types=False)
 
     write_jsonl_gz(os.path.join(landing, "a.txt.gz"), custom_rows())
     q = stream_feed(spark, landing, "custom", ckpt, sink)
@@ -586,7 +609,7 @@ def test_webdataset_export_roundtrip_and_determinism(spark, tmp_path):
         assert h1 == h2, name
 
     # the loader side: read_webdataset reproduces every sample
-    from ua2sql_spark.sources.corpus_export import read_webdataset
+    from tests.helpers import read_webdataset
 
     back = {
         r["key"]: (r["text"], bytes(r["payload"]))

@@ -1,5 +1,5 @@
-"""Real media codecs (X6): actual pixel/sample bytes through the same
-Spark plumbing the oracle-checked x52/x53 queries use.
+"""Real media codecs (X6): actual pixel and sample bytes through the
+pure-stdlib decoders of ``ua2sql_spark.functions.media``.
 
 Payloads are synthesized in-test (PPM/PGM/BMP images, PCM WAV audio) so
 every expected value is known in closed form; no image/audio libraries
@@ -15,13 +15,14 @@ import zlib
 
 import pytest
 
-from ua2sql_spark.functions.media import (
-    decode_audio_real,
-    decode_image_real,
-    fake_decode_image,
-    resize_dims,
-    resize_image_real,
-)
+from ua2sql_spark.functions.media import decode_audio_real, decode_raster, resize_dims
+from tests.helpers import _lzw_encode, encode_gif
+
+
+def decoded(payload: bytes) -> dict:
+    """Width, height and the mean of all channel samples in [0, 1]."""
+    width, height, _, raster = decode_raster(payload)
+    return {"width": width, "height": height, "mean_pixel": sum(raster) / len(raster) / 255.0}
 
 
 def ppm(width: int, height: int, rgb=(10, 20, 30), comment=False) -> bytes:
@@ -62,20 +63,20 @@ def wav16(n: int, rate: int = 8000, amp: int = 1000, channels: int = 1) -> bytes
 
 
 def test_ppm_decode_exact():
-    d = decode_image_real(ppm(8, 4, rgb=(10, 20, 30), comment=True))
+    d = decoded(ppm(8, 4, rgb=(10, 20, 30), comment=True))
     assert (d["width"], d["height"]) == (8, 4)
     assert d["mean_pixel"] == pytest.approx(20 / 255.0)  # mean(10,20,30)=20
 
 
 def test_pgm_decode_exact():
-    d = decode_image_real(pgm(5, 3, value=51))
+    d = decoded(pgm(5, 3, value=51))
     assert (d["width"], d["height"]) == (5, 3)
     assert d["mean_pixel"] == pytest.approx(0.2)
 
 
 def test_bmp_decode_strips_row_padding():
     # width 3 → 9 data bytes padded to 12 per row; mean must exclude pads
-    d = decode_image_real(bmp24(3, 2, bgr=(30, 20, 10)))
+    d = decoded(bmp24(3, 2, bgr=(30, 20, 10)))
     assert (d["width"], d["height"]) == (3, 2)
     assert d["mean_pixel"] == pytest.approx(20 / 255.0)
 
@@ -137,7 +138,7 @@ def test_png_decode_all_filter_types():
         for y in range(5)
     ]
     payload = png(3, 5, pixels, filters=[0, 1, 2, 3, 4])
-    d = decode_image_real(payload)
+    d = decoded(payload)
     flat = [c for row in pixels for px in row for c in px]
     assert (d["width"], d["height"]) == (3, 5)
     assert d["mean_pixel"] == pytest.approx(sum(flat) / len(flat) / 255.0)
@@ -145,12 +146,12 @@ def test_png_decode_all_filter_types():
 
 def test_png_decode_rgba_and_gray():
     rgba = [[(10, 20, 30, 255), (40, 50, 60, 128)]]
-    d = decode_image_real(png(2, 1, rgba, filters=[4]))
+    d = decoded(png(2, 1, rgba, filters=[4]))
     flat = [c for px in rgba[0] for c in px]
     assert (d["width"], d["height"]) == (2, 1)
     assert d["mean_pixel"] == pytest.approx(sum(flat) / 8 / 255.0)
     gray = [[(51,)], [(153,)]]
-    d = decode_image_real(png(1, 2, gray, filters=[2, 2]))
+    d = decoded(png(1, 2, gray, filters=[2, 2]))
     assert (d["width"], d["height"]) == (1, 2)
     assert d["mean_pixel"] == pytest.approx(102 / 255.0)
 
@@ -164,9 +165,9 @@ def test_png_unsupported_variants_raise():
         + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr))
     )
     with pytest.raises(NotImplementedError):
-        decode_image_real(bad)
+        decoded(bad)
     with pytest.raises(NotImplementedError):  # truncated stream
-        decode_image_real(b"\x89PNG\r\n\x1a\n....")
+        decoded(b"\x89PNG\r\n\x1a\n....")
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
@@ -226,9 +227,9 @@ def test_png_adam7_interlaced_decode():
 
 def test_unsupported_image_formats_raise():
     with pytest.raises(NotImplementedError):  # WebP: no codec in container
-        decode_image_real(b"RIFF\x00\x00\x00\x00WEBPVP8 ")
+        decoded(b"RIFF\x00\x00\x00\x00WEBPVP8 ")
     with pytest.raises(NotImplementedError):  # truncated JPEG stream
-        decode_image_real(b"\xff\xd8\xff\xe0 not a full jpeg")
+        decoded(b"\xff\xd8\xff\xe0 not a full jpeg")
 
 
 # ---------------------------------------------------------------------------
@@ -323,7 +324,7 @@ def test_jpeg_progressive_raises():
 def test_gif_roundtrip_forces_dictionary_growth_and_reset():
     import random
 
-    from ua2sql_spark.functions.gif import decode_gif, encode_gif
+    from ua2sql_spark.functions.gif import decode_gif
 
     rng = random.Random(3)
     w, h = 200, 120  # 24k random 8-bit pixels: grows past 12 bits → reset
@@ -335,7 +336,7 @@ def test_gif_roundtrip_forces_dictionary_growth_and_reset():
 
 
 def test_gif_roundtrip_repetitive_deep_chains():
-    from ua2sql_spark.functions.gif import decode_gif, encode_gif
+    from ua2sql_spark.functions.gif import decode_gif
 
     w, h = 64, 48
     pal = [b"\x00\x00\x00", b"\xff\x00\x00", b"\x00\xff\x00", b"\x00\x00\xff"]
@@ -347,7 +348,7 @@ def test_gif_roundtrip_repetitive_deep_chains():
 def test_gif_interlaced_rows_reorder():
     """Hand-pack an interlaced frame (flag 0x40, rows stored in the
     4-pass order) and check the decoder un-interlaces it."""
-    from ua2sql_spark.functions.gif import _lzw_encode, decode_gif
+    from ua2sql_spark.functions.gif import decode_gif
 
     w, h = 4, 10
     idx = bytes((y % 4) for y in range(h) for _ in range(w))  # row y = color y%4
@@ -369,20 +370,18 @@ def test_gif_interlaced_rows_reorder():
     assert rgb == b"".join(pal[i] for i in idx)
 
 
-def test_gif_through_decode_image_real():
-    from ua2sql_spark.functions.gif import encode_gif
-
-    d = decode_image_real(encode_gif(3, 2, [bytes([60, 120, 180])], bytes(6)))
+def test_gif_through_decode_raster():
+    d = decoded(encode_gif(3, 2, [bytes([60, 120, 180])], bytes(6)))
     assert (d["width"], d["height"]) == (3, 2)
     assert d["mean_pixel"] == pytest.approx(120 / 255.0)
 
 
-def test_jpeg_through_decode_image_real():
+def test_jpeg_through_decode_raster():
     from ua2sql_spark.functions.jpeg import encode_jpeg
 
     w, h = 16, 8
     raster = bytes([90, 150, 210] * (w * h))  # constant color
-    d = decode_image_real(encode_jpeg(w, h, 3, raster, quality=100))
+    d = decoded(encode_jpeg(w, h, 3, raster, quality=100))
     assert (d["width"], d["height"]) == (w, h)
     assert d["mean_pixel"] == pytest.approx(150 / 255.0, abs=0.01)
 
@@ -398,44 +397,6 @@ def test_wav_decode_exact():
 def test_non_wav_raises():
     with pytest.raises(NotImplementedError):
         decode_audio_real(b"ID3\x03not audio at all")
-
-
-def test_resize_image_real_pixels():
-    src = ppm(8, 4, rgb=(10, 20, 30))
-    out = resize_image_real(src, target_long_side=4)
-    d = decode_image_real(out)
-    assert (d["width"], d["height"]) == resize_dims(8, 4, 4) == (4, 2)
-    assert d["mean_pixel"] == pytest.approx(20 / 255.0)  # uniform image
-    assert resize_image_real(src, target_long_side=100) == src  # no upscale
-
-
-def test_real_bytes_through_mapinpandas(spark):
-    """The x53 decode plumbing with REAL codecs: binary payloads in a
-    DataFrame, Arrow-batched mapInPandas, exact pixel stats out."""
-    from ua2sql_spark.queries.multimodal import decode_images
-
-    from ua2sql_spark.functions.jpeg import encode_jpeg
-
-    png_pixels = [[(60, 120, 180), (90, 150, 210)] for _ in range(3)]
-    payloads = [
-        (1, ppm(8, 4, rgb=(10, 20, 30))),
-        (2, pgm(5, 3, value=51)),
-        (3, bmp24(3, 2, bgr=(30, 20, 10))),
-        (4, png(2, 3, png_pixels, filters=[0, 1, 4])),
-        (5, encode_jpeg(16, 8, 3, bytes([90, 150, 210]) * 128, quality=100)),
-    ]
-    df = spark.createDataFrame(payloads, "doc_id bigint, payload binary")
-    got = {r["doc_id"]: r for r in decode_images(df).collect()}
-    assert (got[5]["width"], got[5]["height"]) == (16, 8)
-    assert got[5]["mean_pixel"] == pytest.approx(150 / 255.0, abs=0.01)
-    assert (got[1]["width"], got[1]["height"]) == (8, 4)
-    assert got[1]["mean_pixel"] == pytest.approx(20 / 255.0)
-    assert (got[2]["width"], got[2]["height"]) == (5, 3)
-    assert got[2]["mean_pixel"] == pytest.approx(0.2)
-    assert (got[3]["width"], got[3]["height"]) == (3, 2)
-    assert got[3]["mean_pixel"] == pytest.approx(20 / 255.0)
-    assert (got[4]["width"], got[4]["height"]) == (2, 3)
-    assert got[4]["mean_pixel"] == pytest.approx(135 / 255.0)
 
 
 def tiff(width: int, height: int, samples: bytes, spp: int = 3, big_endian=False,
@@ -532,7 +493,6 @@ def test_tiff_compressed_raises():
 def test_thumbnail_chain_all_formats():
     """decode → downscale → JPEG re-encode for every supported input
     format; output decodes back with the expected dims and brightness."""
-    from ua2sql_spark.functions.gif import encode_gif
     from ua2sql_spark.functions.jpeg import encode_jpeg
     from ua2sql_spark.functions.media import thumbnail_real
 
@@ -546,48 +506,14 @@ def test_thumbnail_chain_all_formats():
     }
     for name, payload in sources.items():
         thumb, tw, th = thumbnail_real(payload, target_long_side=16, quality=90)
-        d = decode_image_real(thumb)
-        src = decode_image_real(payload)
+        d = decoded(thumb)
+        src = decoded(payload)
         assert (d["width"], d["height"]) == (tw, th), name
         assert max(d["width"], d["height"]) == 16, name
         assert (d["width"], d["height"]) == resize_dims(
             src["width"], src["height"], 16
         ), name
         assert d["mean_pixel"] == pytest.approx(150 / 255.0, abs=0.03), name
-
-
-def test_thumbnail_images_mapinpandas(spark):
-    """Thumbnail operator over a binary DataFrame: real codec chain in,
-    JPEG thumbs out; unsupported payloads become NULL, not failures."""
-    from ua2sql_spark.queries.multimodal import thumbnail_images
-
-    payloads = [
-        (1, ppm(64, 32, rgb=(90, 150, 210))),
-        (2, png(40, 20, [[(10, 20, 30)] * 40] * 20)),
-        (3, b"RIFF\x00\x00\x00\x00WEBPVP8 not supported"),
-    ]
-    df = spark.createDataFrame(payloads, "doc_id bigint, payload binary")
-    got = {r["doc_id"]: r for r in thumbnail_images(df, 16).collect()}
-    assert (got[1]["thumb_width"], got[1]["thumb_height"]) == (16, 8)
-    assert bytes(got[1]["thumb"])[:2] == b"\xff\xd8"  # JPEG out
-    assert (got[2]["thumb_width"], got[2]["thumb_height"]) == (16, 8)
-    assert got[3]["thumb"] is None and got[3]["thumb_width"] is None
-
-
-def test_fake_and_real_share_schema(spark):
-    """Seam contract: swapping codec tiers changes values, never the
-    schema or plan shape."""
-    from ua2sql_spark.queries.multimodal import decode_images
-
-    df = spark.createDataFrame(
-        [(1, ppm(4, 4))], "doc_id bigint, payload binary"
-    )
-    real = decode_images(df)
-    fake = decode_images(df, decoder=fake_decode_image)
-    assert real.schema == fake.schema
-    assert real.schema.simpleString() == (
-        "struct<doc_id:bigint,width:int,height:int,mean_pixel:double>"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -609,7 +535,7 @@ from hypothesis import strategies as st
 @settings(max_examples=25, deadline=None,
           suppress_health_check=list(HealthCheck))
 def test_gif_roundtrip_property(w, h, ncolors, data):
-    from ua2sql_spark.functions.gif import decode_gif, encode_gif
+    from ua2sql_spark.functions.gif import decode_gif
 
     palette = [
         bytes([(i * 37) % 256, (i * 101) % 256, (i * 11) % 256])
@@ -741,20 +667,21 @@ def test_probe_mp4_boxes():
     assert d["n_tracks"] == 2
 
 
-def test_probe_media_unified(spark):
-    """The triage operator: mixed payloads in one DataFrame, typed
-    metadata out, unknowns survive as kind='unknown'."""
-    from ua2sql_spark.queries.multimodal import probe_media
+def test_probe_media_unified():
+    """The triage probe: mixed payloads, typed metadata out, unknowns
+    survive as kind='unknown'."""
+    from ua2sql_spark.functions.media import probe_media_metadata
 
-    payloads = [
-        (1, ppm(8, 4)),
-        (2, wav16(800, rate=8000)),
-        (3, aiff(2, 44100, [100, -100] * 50)),
-        (4, mp3_frames(5)),
-        (5, b"garbage that matches nothing"),
-    ]
-    df = spark.createDataFrame(payloads, "doc_id bigint, payload binary")
-    got = {r["doc_id"]: r for r in probe_media(df).collect()}
+    got = {
+        doc_id: probe_media_metadata(payload)
+        for doc_id, payload in [
+            (1, ppm(8, 4)),
+            (2, wav16(800, rate=8000)),
+            (3, aiff(2, 44100, [100, -100] * 50)),
+            (4, mp3_frames(5)),
+            (5, b"garbage that matches nothing"),
+        ]
+    }
     assert got[1]["kind"] == "image" and (got[1]["width"], got[1]["height"]) == (8, 4)
     assert got[2]["kind"] == "audio" and got[2]["duration_s"] == pytest.approx(0.1)
     assert got[3]["kind"] == "audio" and got[3]["sample_rate"] == 44100
@@ -816,95 +743,11 @@ def test_probe_webp_all_variants():
     assert d["kind"] == "image" and (d["width"], d["height"]) == (320, 240)
 
 
-# ---------------------------------------------------------------------------
-# AVI/MJPEG: real video frame sampling. The container writer + RIFF
-# walker + per-frame JPEG decode are all pure stdlib, so the
-# previously-stubbed sample_frames_real tier is now REAL for the one
-# container/codec combination this environment can express end-to-end.
-# ---------------------------------------------------------------------------
-def _mjpeg_avi(colors, w=16, h=16):
-    from ua2sql_spark.functions.jpeg import encode_jpeg
-    from ua2sql_spark.functions.media import encode_avi_mjpeg
-
-    frames = [encode_jpeg(w, h, 3, bytes(c) * (w * h), quality=95) for c in colors]
-    return encode_avi_mjpeg(frames, w, h, fps=10), frames
-
-
-def test_avi_mjpeg_roundtrip_and_stride():
-    import hashlib
-
-    from ua2sql_spark.functions.jpeg import decode_jpeg
-    from ua2sql_spark.functions.media import _avi_video_chunks, sample_frames_real
-
-    colors = [(255, 0, 0), (0, 255, 0), (0, 0, 255), (128, 128, 128), (10, 200, 30)]
-    avi, frames = _mjpeg_avi(colors)
-    # container roundtrip: chunk walker recovers the exact JPEG bytes
-    assert [b for _, b in _avi_video_chunks(avi)] == frames
-    # stride sampling decodes every 2nd frame through the real codec
-    out = sample_frames_real(avi, stride=2)
-    assert [d["frame_no"] for d in out] == [0, 2, 4]
-    for d in out:
-        w, h, c, raster = decode_jpeg(frames[d["frame_no"]])
-        assert (d["width"], d["height"], d["channels"]) == (w, h, c)
-        assert d["frame_hash"] == hashlib.md5(raster).hexdigest()
-        # flat 8x8-aligned frames are DC-only: recovery error is
-        # bounded by quantization rounding (|err| <= 2 per sample)
-        expect = bytes(colors[d["frame_no"]]) * (16 * 16)
-        assert max(abs(a - b) for a, b in zip(raster, expect)) <= 2
-
-
-def test_avi_non_mjpeg_and_non_avi_raise():
-    from ua2sql_spark.functions.media import encode_avi_mjpeg, sample_frames_real
-
-    with pytest.raises(NotImplementedError, match="RIFF/AVI"):
-        sample_frames_real(b"\x00" * 64)
-    # a video chunk that is not a JPEG stream names the missing codec path
-    bogus = encode_avi_mjpeg([b"NOTJPEGDATA"], 4, 4)
-    with pytest.raises(NotImplementedError, match="MJPEG"):
-        sample_frames_real(bogus)
-
-
-def test_real_frame_sampling_mapinpandas(spark):
-    """The REAL tier through the exact mapInPandas seam x83 uses: AVI
-    payloads in a binary column, Arrow-batched sampling, one row per
-    sampled frame with decoded geometry."""
-    import pandas as pd
-    from collections.abc import Iterator
-
-    from ua2sql_spark.functions.media import sample_frames_real
-
-    avi1, _ = _mjpeg_avi([(9, 9, 9)] * 4)
-    avi2, _ = _mjpeg_avi([(1, 2, 3)] * 7, w=24, h=8)
-    df = spark.createDataFrame(
-        [(1, bytearray(avi1)), (2, bytearray(avi2))], "doc_id bigint, payload binary"
-    )
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (doc_id, fr["frame_no"], fr["width"], fr["height"], fr["frame_hash"])
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
-                for fr in sample_frames_real(bytes(payload), stride=3)
-            ]
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_no", "width", "height", "frame_hash"]
-            )
-
-    out = df.mapInPandas(
-        sample,
-        schema="doc_id bigint, frame_no bigint, width int, height int, frame_hash string",
-    ).toPandas().sort_values(["doc_id", "frame_no"]).reset_index(drop=True)
-    assert out[out.doc_id == 1].frame_no.tolist() == [0, 3]
-    assert out[out.doc_id == 2].frame_no.tolist() == [0, 3, 6]
-    assert set(out[out.doc_id == 2].width) == {24}
-
-
 def test_probe_image_dims_header_only():
     """Triage must never pay a pixel decode: dims come from headers for
     every format, INCLUDING payloads whose full decode would fail —
     a valid-IHDR PNG with garbage IDAT and a progressive JPEG both
     probe fine while decode_raster raises on them."""
-    from ua2sql_spark.functions.gif import encode_gif
     from ua2sql_spark.functions.jpeg import encode_jpeg
     from ua2sql_spark.functions.media import (
         decode_raster,
@@ -966,89 +809,6 @@ def test_aifc_sowt_little_endian_decode():
     d = decode_audio_real(payload)
     assert (d["channels"], d["sample_rate"], d["n_samples"]) == (1, 22050, 200)
     assert d["rms"] == pytest.approx(1000.0)
-
-
-# ---------------------------------------------------------------------------
-# QuickTime/MOV MJPEG: the second video container (VERDICT r5 #8). Box
-# writer + stbl sample-table resolution are pure stdlib; the frame
-# fingerprint must be container-invariant.
-# ---------------------------------------------------------------------------
-def _mjpeg_mov(colors, w=16, h=16):
-    from ua2sql_spark.functions.jpeg import encode_jpeg
-    from ua2sql_spark.functions.media import encode_mov_mjpeg
-
-    frames = [encode_jpeg(w, h, 3, bytes(c) * (w * h), quality=95) for c in colors]
-    return encode_mov_mjpeg(frames, w, h, fps=10), frames
-
-
-def test_mov_mjpeg_roundtrip_and_stride():
-    from ua2sql_spark.functions.media import _mov_video_samples, sample_frames_real
-
-    colors = [(255, 0, 0), (0, 255, 0), (0, 0, 255), (40, 40, 40), (200, 9, 77)]
-    mov, frames = _mjpeg_mov(colors)
-    # sample-table resolution recovers the exact JPEG bytes, in order
-    assert [b for _, b in _mov_video_samples(mov)] == frames
-    out = sample_frames_real(mov, stride=2)
-    assert [d["frame_no"] for d in out] == [0, 2, 4]
-    assert all((d["width"], d["height"]) == (16, 16) for d in out)
-
-
-def test_mov_and_avi_fingerprint_identically():
-    """frame_hash digests the DECODED raster: identical video frames in
-    the two containers must fingerprint identically regardless of chunk
-    layout — the cross-container dedup invariant."""
-    from ua2sql_spark.functions.media import sample_frames_real
-
-    colors = [(5, 10, 15), (250, 128, 3), (77, 77, 77)]
-    avi, _ = _mjpeg_avi(colors)
-    mov, _ = _mjpeg_mov(colors)
-    a = sample_frames_real(avi, stride=1)
-    m = sample_frames_real(mov, stride=1)
-    assert [d["frame_hash"] for d in a] == [d["frame_hash"] for d in m]
-    # offsets differ (different containers) but numbering agrees
-    assert [d["frame_no"] for d in a] == [d["frame_no"] for d in m]
-
-
-def test_mov_general_stsc_mapping():
-    """stsc runs with >1 sample per chunk resolve correctly (the
-    encoder writes 1:1, the PARSER must handle the general layout)."""
-    from ua2sql_spark.functions.jpeg import encode_jpeg
-    from ua2sql_spark.functions.media import _mov_video_samples, encode_mov_mjpeg
-
-    frames = [
-        encode_jpeg(8, 8, 1, bytes([i * 40]) * 64, quality=90) for i in range(4)
-    ]
-    mov = bytearray(encode_mov_mjpeg(frames, 8, 8))
-    # rewrite the sample tables: 2 chunks x 2 samples each. stsc run =
-    # (first_chunk=1, per_chunk=2, id=1); stco = offsets of frames 0, 2.
-    idx = mov.find(b"stsc")
-    struct.pack_into(">IIII", mov, idx + 8, 1, 1, 2, 1)
-    off0 = mov.find(frames[0])
-    off2 = off0 + len(frames[0]) + len(frames[1])
-    cidx = mov.find(b"stco")
-    # stco layout: size(cidx-4) 'stco' vflags(cidx+4) count(cidx+8)
-    # entries(cidx+12); shrink in place to n=2 entries and turn the
-    # stale 8-byte tail into a free box
-    assert struct.unpack_from(">I", mov, cidx - 4)[0] == 8 + 4 + 4 + 4 * 4
-    struct.pack_into(">I", mov, cidx + 8, 2)
-    struct.pack_into(">II", mov, cidx + 12, off0, off2)
-    struct.pack_into(">I", mov, cidx - 4, 8 + 4 + 4 + 4 * 2)
-    struct.pack_into(">I4s", mov, cidx + 20, 8, b"free")
-    got = _mov_video_samples(bytes(mov))
-    assert [b for _, b in got] == frames
-
-
-def test_mov_errors():
-    from ua2sql_spark.functions.media import _mov_video_samples, encode_mov_mjpeg
-
-    with pytest.raises(NotImplementedError, match="ISO-BMFF"):
-        _mov_video_samples(b"RIFF\x00\x00\x00\x00AVI ")
-    # an audio-style track (non-JPEG fourcc) yields no video track
-    mov = bytearray(encode_mov_mjpeg([b"\xff\xd8fake"], 4, 4))
-    i = mov.find(b"jpeg", mov.find(b"stsd"))
-    mov[i : i + 4] = b"avc1"
-    with pytest.raises(NotImplementedError, match="no MJPEG video track"):
-        _mov_video_samples(bytes(mov))
 
 
 # ---------------------------------------------------------------------------

@@ -10,16 +10,19 @@ import re
 from pyspark.sql import functions as F
 
 from ua2sql_spark.catalog import load_table
-from ua2sql_spark.plans.explain import (
+from ua2sql_spark.registry import all_queries
+from tests.conftest import SF_DIR
+from tests.helpers import (
     broadcast_join_count,
     formatted_plan,
     pushed_filters,
+    reeval_hazards,
     scan_read_schema,
     shuffle_count,
+    simple_plan,
+    sortmerge_join_count,
     wholestage_codegen_count,
 )
-from ua2sql_spark.registry import all_queries
-from tests.conftest import SF_DIR
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -52,16 +55,12 @@ def test_pricing_summary_single_shuffle(spark):
 def test_order_limit_is_topk_not_global_sort(spark):
     """orderBy+limit must plan TakeOrderedAndProject (distributed top-k),
     never a global sort (reference checkpoint-lookup shape, O1/O2)."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["q26_order_limit"].fn(spark, SF_DIR)
     plan = simple_plan(df)
     assert "TakeOrderedAndProject" in plan, plan
 
 
 def test_topk_per_group_uses_window_group_limit(spark):
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["q25_topk_per_group"].fn(spark, SF_DIR)
     assert "WindowGroupLimit" in simple_plan(df)
 
@@ -78,8 +77,6 @@ def test_codegen_covers_flagship(spark):
 
 
 def test_minhash_has_no_cartesian(spark):
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["x43_minhash_lsh_neardup"].fn(spark, SF_DIR)
     plan = simple_plan(df)
     assert "CartesianProduct" not in plan
@@ -87,8 +84,6 @@ def test_minhash_has_no_cartesian(spark):
 
 
 def test_semi_join_plans_as_semi(spark):
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["q07_join_semi"].fn(spark, SF_DIR)
     assert "LeftSemi" in simple_plan(df)
 
@@ -97,8 +92,6 @@ def test_ivf_assignment_broadcasts_centroids(spark):
     """IVF assignment must broadcast the centroid table (corpus never
     shuffles for assignment); the probe join must broadcast the query
     side — no shuffle of the full corpus on either step."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["x71_ivf_ann"].fn(spark, SF_DIR)
     plan = simple_plan(df)
     assert "CartesianProduct" not in plan
@@ -118,8 +111,6 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     join key remove the fact-fact shuffle entirely. The operators don't
     require bucketing; this pins that they benefit when the layout
     provides it (exchange-free sort-merge join)."""
-    from ua2sql_spark.plans.explain import simple_plan, sortmerge_join_count
-
     li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
     o = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_totalprice")
     spark.sql("DROP TABLE IF EXISTS b_li")
@@ -151,8 +142,6 @@ def test_partition_pruning(spark, tmp_path):
     """Raw-zone layout discipline (SCALE.md §4): a date predicate over a
     jobType/date-partitioned zone must prune partitions at planning
     time, not filter rows after a full scan."""
-    from ua2sql_spark.plans.explain import formatted_plan
-
     events = load_table(spark, SF_DIR, "events").withColumn(
         "ingest_date", F.to_date("ts")
     )
@@ -169,8 +158,6 @@ def test_no_query_plans_cartesian_or_row_python(spark):
     """Sweep every registered query: no CartesianProduct outside the
     intentionally-cross q10, and no row-wise Python eval anywhere
     (Python only ever appears Arrow-batched). Plan-only — no execution."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     allowed_cartesian = {"q10_join_cross", "x45_cosine_topk"}
     for name, spec in all_queries().items():
         plan = simple_plan(spec.fn(spark, SF_DIR))
@@ -183,8 +170,6 @@ def test_supplier_wait_decorrelates_to_hash_joins(spark):
     """q86's EXISTS/NOT EXISTS must plan as hash-based LeftSemi/LeftAnti
     on the order key (inequality riding as a join condition) — never a
     nested-loop join."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     plan = simple_plan(all_queries()["q86_supplier_wait"].fn(spark, SF_DIR))
     assert "LeftSemi" in plan and "LeftAnti" in plan
     assert "BroadcastNestedLoop" not in plan and "Cartesian" not in plan
@@ -219,8 +204,6 @@ def test_priority_exists_plans_semi_with_residual(spark):
     """q94: EXISTS decorrelates to one hash LeftSemi on the order key
     (the non-equi shipdate conjunct rides as residual) — never a
     nested-loop."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     plan = simple_plan(all_queries()["q94_priority_exists"].fn(spark, SF_DIR))
     assert "LeftSemi" in plan
     assert "BroadcastNestedLoop" not in plan and "Cartesian" not in plan
@@ -244,8 +227,6 @@ def test_sequence_pack_expansion_is_exchange_free(spark):
 def test_contamination_joins_on_gram_no_cartesian(spark):
     """x106: eval-vs-train gram overlap must plan hash joins keyed on the
     gram string — never a nested-loop/cartesian comparison of documents."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["x106_contamination"].fn(spark, SF_DIR)
     plan = simple_plan(df)
     assert "CartesianProduct" not in plan
@@ -262,8 +243,6 @@ def test_vocab_oov_broadcasts_vocabulary(spark):
 def test_train_shuffle_is_topk_not_global_sort(spark):
     """x109: the deterministic shuffle-order preview must plan
     TakeOrderedAndProject (per-partition top-k), never a global sort."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["x109_train_shuffle"].fn(spark, SF_DIR)
     assert "TakeOrderedAndProject" in simple_plan(df)
 
@@ -280,8 +259,6 @@ def test_global_shuffle_windows_are_bucket_partitioned(spark):
     one partition — the per-row row_number window is partitioned by the
     hash-prefix bucket, and the bucket-offset table (256 rows) joins
     back via broadcast."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["x104_global_shuffle"].fn(spark, SF_DIR)
     plan = simple_plan(df)
     assert "windowspecdefinition(__b" in plan, plan
@@ -292,8 +269,6 @@ def test_minhash_fast_family_has_no_md5(spark):
     """x101: the xxhash64 production family must keep signature/band
     hashing inside codegen'd 64-bit ops — no md5 (and so no hex-string
     materialization) anywhere in its plan."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["x101_minhash_fast_exact_tier"].fn(spark, SF_DIR)
     plan = simple_plan(df).lower()
     assert "xxhash64" in plan, plan
@@ -304,8 +279,6 @@ def test_incremental_dedup_is_anti_join_on_fingerprint(spark):
     """x117: the batch-vs-index dedup must plan a hash-keyed LeftAnti
     join (never a nested-loop), and no text column may survive past the
     fingerprint projection into the join."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["x117_incremental_dedup"].fn(spark, SF_DIR)
     plan = simple_plan(df)
     assert "LeftAnti" in plan, plan
@@ -317,8 +290,6 @@ def test_full_outer_joins_preaggregated_sides(spark):
     """q116: both inputs collapse to one row per customer BEFORE the
     full-outer join — the plan must show partial aggregates below the
     join, and an equi full-outer (no nested loop)."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["q116_join_full_outer"].fn(spark, SF_DIR)
     plan = simple_plan(df)
     assert "FullOuter" in plan, plan
@@ -334,37 +305,6 @@ def test_zorder_layout_is_projection_plus_one_agg(spark):
     assert shuffle_count(df) == 1
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_persisted_ivf_index_prunes_partitions_and_matches_inline(spark, tmp_path):
-    """save_ivf_index materializes cell-partitioned inverted lists; a
-    probe scans ONLY the probed cells (partition pruning visible in the
-    scan) and returns exactly the inline ivf_probe_topk answer."""
-    from ua2sql_spark.operators.ivf import (
-        ivf_probe_topk,
-        probe_ivf_index,
-        save_ivf_index,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    path = str(tmp_path / "ivf")
-    save_ivf_index(emb, path, centroid_stride=25)
-
-    probe_ids = emb.filter(F.col("vec_id") < 10).select("vec_id")
-    queries = emb.join(probe_ids, "vec_id").select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = probe_ivf_index(spark, path, queries, nprobe=2, k=5)
-
-    # partition pruning: the lists scan carries a cell IN (...) filter
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan, plan
-
-    inline = ivf_probe_topk(emb, probe_ids, centroid_stride=25, nprobe=2, k=5)
-    key = lambda rows: sorted(  # noqa: E731
-        (r["query_id"], r["neighbor_id"], r["cos_sim"], r["rnk"]) for r in rows
-    )
-    assert key(got.collect()) == key(inline.collect())
 
 
 def test_hybrid_search_uses_topk_not_global_sort(spark):
@@ -453,8 +393,6 @@ def test_bpe_merge_pairs_explodes_vocab_not_corpus(spark):
     trick that makes BPE training linear in corpus size. Plan shape:
     word-count aggregate BEFORE the generate, and the final top-k is a
     TakeOrderedAndProject, not a global sort."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["x134_bpe_merge_pairs"].fn(spark, SF_DIR)
     plan = simple_plan(df)
     gen_pos = plan.find("Generate")
@@ -476,8 +414,6 @@ def test_pagerank_reuses_materialized_edges(spark):
     (localCheckpoint'd) edge list — the shingle self-join appears zero
     times in the final plan (it ran once, eagerly) and each of the 3
     iterations scans the checkpoint RDD instead of re-deriving edges."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["x138_domain_pagerank"].fn(spark, SF_DIR)
     plan = simple_plan(df)
     # 3 iterations × (contribution join + outdeg) + final outdeg join
@@ -529,8 +465,6 @@ def test_pq_encode_runs_once_behind_checkpoint(spark):
     ExistingRDD scan, so ADC scoring and the shortlist window read
     codes instead of re-running the argmin per (candidate, query)
     pair (x138's materialize-once discipline)."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["x154_pq_recall_contract"].fn(spark, SF_DIR)
     plan = simple_plan(df)
     assert "ExistingRDD" in plan, plan
@@ -543,8 +477,6 @@ def test_pr_curve_windows_run_on_aggregated_bins_only(spark):
     sits BELOW the Window in the plan, and the only global sort is of
     bin rows (after aggregation), so corpus-side work is one scan +
     one bounded exchange at any N."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["x155_pr_calibration"].fn(spark, SF_DIR)
     plan = simple_plan(df)
     w = plan.find("Window")
@@ -572,8 +504,6 @@ def test_sliding_actives_has_no_range_self_join(spark):
     """q159: the rolling distinct is the coverage explode (Generate) +
     one partial-aggregated distinct — NOT a range self-join of days x
     activity (no non-broadcast join at all)."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     df = all_queries()["q159_sliding_active_users"].fn(spark, SF_DIR)
     plan = simple_plan(df)
     assert "Generate explode" in plan, plan
@@ -603,8 +533,6 @@ def test_reeval_tripwire_catches_both_regression_shapes(spark):
     (codegen re-evaluates them per generated row: measured 10x) — and
     GREEN on the legitimate explode-then-process-the-element pattern."""
     import math
-
-    from ua2sql_spark.plans.explain import reeval_hazards
 
     d = load_table(spark, SF_DIR, "documents")
     ws = F.split(F.col("text"), " ")
@@ -671,8 +599,6 @@ def test_no_query_reevaluates_expensive_exprs(spark):
     rows only, never the corpus side (which is localCheckpoint-
     barriered); restructuring would change FP summation order in a
     hash-checked query."""
-    from ua2sql_spark.plans.explain import reeval_hazards
-
     allowed = {"x154_pq_recall_contract"}
     bad = {}
     for name, spec in all_queries().items():
@@ -688,8 +614,6 @@ def test_lateral_topk_decorrelates_to_window_group_limit(spark):
     """q155: the correlated LATERAL subquery with ORDER BY + LIMIT must
     decorrelate into a hash join + WindowGroupLimit (per-partition
     top-k BEFORE the shuffle) — never a per-outer-row nested loop."""
-    from ua2sql_spark.plans.explain import simple_plan
-
     plan = simple_plan(all_queries()["q155_lateral_topk"].fn(spark, SF_DIR))
     assert "WindowGroupLimit" in plan, plan
     assert "BroadcastNestedLoop" not in plan and "Cartesian" not in plan, plan
@@ -718,8 +642,6 @@ def test_lsh_index_probe_prunes_band_partitions(spark, tmp_path):
     push (band_no, band_bucket) as PartitionFilters on the lists scan —
     the probe's read cost is the batch's buckets, never the corpus."""
     from ua2sql_spark.operators.dedup import probe_lsh_index, save_lsh_index
-    from ua2sql_spark.plans.explain import formatted_plan
-
     docs = load_table(spark, SF_DIR, "documents")
     path = str(tmp_path / "lsh_index")
     save_lsh_index(docs.filter(F.col("doc_id") % 4 != 0), path)

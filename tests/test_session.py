@@ -197,6 +197,26 @@ def test_get_spark_launches_from_the_empty_conf_dir_and_restores_environ(tmp_pat
         assert "-XX:ArchiveClassesAtExit=" in options["spark.driver.defaultJavaOptions"]
 
 
+def test_shuffle_partitions_follow_cpus_set_after_import(monkeypatch):
+    """``get_spark`` reads ``SPARK_GRAFT_CPUS`` at call time for the
+    shuffle partition count, as it does for ``local[N]``: a process
+    that sets the variable after importing the engine gets both."""
+    from ua2sql_spark import session
+
+    launch = _Launch(monkeypatch)
+    monkeypatch.setattr(session, "driver_launch", lambda spark_home: None)
+    for cpus, partitions in [("5", "5"), ("7", "7"), ("*", "32")]:
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+        session.get_spark()
+        options, _ = launch.calls[-1]
+        assert options["spark.master"] == f"local[{cpus}]"
+        assert options["spark.sql.shuffle.partitions"] == partitions
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    session.get_spark(shuffle_partitions=3)
+    options, _ = launch.calls[-1]
+    assert (options["spark.master"], options["spark.sql.shuffle.partitions"]) == ("local[*]", "3")
+
+
 # --- The driver JVM's collector --------------------------------------
 
 

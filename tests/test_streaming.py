@@ -128,21 +128,16 @@ def test_stream_static_enrichment_join(spark, tmp_path):
 
 def test_media_seam_contract():
     """The codec seam: uncompressed containers decode for real
-    (tests/test_media_codecs.py), compressed formats raise
-    NotImplementedError with the dependency named; fakes are
-    deterministic and shape-compatible."""
+    (tests/test_media_codecs.py), anything else raises
+    NotImplementedError; x83's frame fake is deterministic."""
     import pytest as _pytest
 
     from ua2sql_spark.functions import media
 
     with _pytest.raises(NotImplementedError):
-        media.decode_image_real(b"\x89PNG....")  # compressed: needs PIL
-    with _pytest.raises(NotImplementedError):
-        media.sample_frames_real(b"x")  # video: needs ffmpeg
+        media.decode_raster(b"\x89PNG....")  # truncated PNG
     assert media.resize_dims(640, 480, 320) == (320, 240)
     assert media.resize_dims(100, 50, 320) == (100, 50)  # never upscales
-    d = media.fake_decode_image(b"\x00" * 1000)
-    assert set(d) == {"width", "height", "mean_pixel"}
     frames = media.fake_sample_frames(7, b"\x00" * 1000)
     assert [f["frame_no"] for f in frames] == [0]
     assert media.fake_sample_frames(7, b"\x00" * 1000) == frames  # deterministic

@@ -12,7 +12,7 @@ Decode handles what cameras and encoders overwhelmingly emit: baseline
 with any sampling factors (4:4:4 / 4:2:2 / 4:2:0), restart markers,
 and 0xFF00 byte stuffing. The encoder exists so tests can roundtrip
 real compressed bytes without third-party fixtures — and doubles as the
-thumbnail re-encode step after ``resize_image_real``.
+thumbnail re-encode step of ``media.thumbnail_real``.
 
 Performance note: this is the *codec seam* behind Arrow-batched
 ``mapInPandas`` (queries/multimodal.py). On a production cluster the

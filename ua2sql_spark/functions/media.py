@@ -1,30 +1,22 @@
-"""Media codec seam (SURVEY §2.11 X6): the boundary between the engine's
-Spark plumbing (schemas, Arrow batching, 1→N frame expansion,
-partitioning) and the actual codecs.
+"""Pure-stdlib media codecs behind the multimodal queries (SURVEY §2.11 X6).
 
-Two codec tiers share every signature and output shape:
+Images: PPM/PGM binary, BMP 24/32-bpp, 8-bit PNG (all five scanline
+filters, Adam7 interlacing, palette expansion), baseline JPEG (full T.81
+sequential-DCT decode — Huffman, IDCT, chroma upsampling, restart
+markers — see functions/jpeg.py), GIF (LZW, functions/gif.py),
+uncompressed TIFF. Audio: PCM WAV, AIFF/AIFF-C, Sun AU (G.711 mu-law +
+linear). No third-party libs. Formats whose full decode needs a native
+codec (WebP, MP3 PCM, video pixels) raise naming the dependency, but
+``probe_media_metadata`` still extracts their header-level metadata
+(MP3 duration/bitrate via frame walk, MP4 duration/tracks via box walk),
+which is what pipeline filters gate on.
 
-* ``decode_image_real`` / ``decode_audio_real`` / ``resize_image_real``
-  — REAL pure-stdlib codecs: PPM/PGM binary, BMP 24/32-bpp, 8-bit PNG
-  (all five scanline filters, Adam7 interlacing, palette
-  expansion), baseline JPEG (full T.81
-  sequential-DCT decode — Huffman, IDCT, chroma upsampling, restart
-  markers — see functions/jpeg.py; verified against real camera
-  output), GIF (LZW, functions/gif.py), uncompressed TIFF; audio: PCM
-  WAV, AIFF/AIFF-C, Sun AU (G.711 mu-law + linear). No third-party
-  libs. Formats whose FULL decode genuinely needs a native codec
-  (WebP, MP3 PCM, video pixels) raise naming the dependency — but
-  ``probe_media_metadata`` still extracts their header-level metadata
-  (MP3 duration/bitrate via frame walk, MP4 duration/tracks via box
-  walk), which is what pipeline filters gate on.
-* ``fake_*`` — deterministic stand-ins deriving outputs purely from
-  payload length/content so the DuckDB oracle can replicate them in SQL;
-  used by the oracle-checked queries (x52/x53/x83).
-
-Swapping real for fake changes *values*, never plans, schemas, or batch
-shapes — which is exactly the part a Spark engine owns. The real tier is
-exercised end-to-end (real bytes through the same ``mapInPandas``
-plumbing) in tests/test_media_codecs.py.
+The registered queries that run them: x153 (EXIF probe), x180 (WAV
+features), x187 (decode, orient, downscale and JPEG re-encode a
+thumbnail) and x205 (PNG round trip and dHash). ``fake_sample_frames``
+is x83's deterministic stand-in: it derives frames from payload length
+alone, so the DuckDB oracle can replicate it in SQL.
+tests/test_media_codecs.py checks every codec on synthesized bytes.
 """
 
 from __future__ import annotations
@@ -241,10 +233,9 @@ def decode_raster(payload: bytes) -> tuple[int, int, int, bytes]:
     try:
         # Truncated/corrupt payloads surface as raw struct/Index/Value
         # errors from the binary parsers; the decode tier's contract is
-        # NotImplementedError for ANYTHING it cannot decode, so the
-        # mapInPandas operators' per-row guards (thumbnail_images,
-        # probe_media) stay airtight — a corrupt payload must never
-        # kill a 100 TB job.
+        # NotImplementedError for ANYTHING it cannot decode, so a
+        # mapInPandas operator's per-row guard stays airtight — a
+        # corrupt payload must never kill a 100 TB job.
         if magic in (b"P5", b"P6"):
             width, height, maxval, channels, raster = _parse_pnm(payload)
             if len(raster) < width * height * channels:
@@ -282,17 +273,6 @@ def decode_raster(payload: bytes) -> tuple[int, int, int, bytes]:
         "PIL/opencv/ffmpeg, not in this container; PPM/PGM/BMP/PNG/"
         "baseline-JPEG/GIF/uncompressed-TIFF decode natively"
     )
-
-
-def decode_image_real(payload: bytes) -> dict:
-    """Decode an image payload to (width, height, mean_pixel).
-
-    Real pure-stdlib decode for every :func:`decode_raster` format;
-    ``mean_pixel`` is the mean of all channel samples normalized to
-    [0, 1]. Formats needing codecs this container lacks raise."""
-    width, height, _, raster = decode_raster(payload)
-    mean = (sum(raster) / len(raster) / 255.0) if raster else 0.0
-    return {"width": width, "height": height, "mean_pixel": mean}
 
 
 def apply_exif_orientation(
@@ -380,15 +360,6 @@ def thumbnail_real(
     )
 
 
-def fake_decode_image(payload: bytes) -> dict:
-    nbytes = len(payload)
-    return {
-        "width": nbytes % 640,
-        "height": nbytes % 480,
-        "mean_pixel": (nbytes * 37 % 256) / 255.0,
-    }
-
-
 # ---------------------------------------------------------------------------
 # Real audio decode: PCM WAV via the stdlib wave module.
 # ---------------------------------------------------------------------------
@@ -444,26 +415,6 @@ def decode_audio_real(payload: bytes) -> dict:
     }
 
 
-def resize_image_real(payload: bytes, target_long_side: int) -> bytes:
-    """Real aspect-preserving nearest-neighbour downscale of a binary
-    netpbm payload (P5/P6); returns a new netpbm payload. Never
-    upscales. Dimension arithmetic is `resize_dims` — shared with the
-    metadata-only path."""
-    width, height, maxval, channels, raster = _parse_pnm(payload)
-    new_w, new_h = resize_dims(width, height, target_long_side)
-    if (new_w, new_h) == (width, height):
-        return payload
-    out = bytearray()
-    for y in range(new_h):
-        sy = y * height // new_h
-        for x in range(new_w):
-            sx = x * width // new_w
-            off = (sy * width + sx) * channels
-            out += raster[off : off + channels]
-    magic = payload[:2].decode()
-    return f"{magic}\n{new_w} {new_h}\n{maxval}\n".encode() + bytes(out)
-
-
 def resize_dims(width: int, height: int, target_long_side: int) -> tuple[int, int]:
     """Aspect-preserving integer resize arithmetic (floor), long side
     clamped to ``target_long_side``; never upscales."""
@@ -474,342 +425,6 @@ def resize_dims(width: int, height: int, target_long_side: int) -> tuple[int, in
         width * target_long_side // long_side,
         height * target_long_side // long_side,
     )
-
-
-def _avi_video_chunks(payload: bytes) -> list[tuple[int, bytes]]:
-    """Walk the RIFF tree of an AVI payload and return the video stream
-    chunks (``##dc`` compressed / ``##db`` uncompressed DIB, in file
-    order) as (byte_offset, body) pairs. Reference analog: the
-    'multimodal columns' north star — video as an opaque binary column
-    whose container structure the engine understands enough to slice."""
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise NotImplementedError("not a RIFF/AVI stream")
-    frames: list[tuple[int, bytes]] = []
-
-    def walk(pos: int, end: int) -> None:
-        while pos + 8 <= end:
-            cid = payload[pos : pos + 4]
-            (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-            body0, body1 = pos + 8, pos + 8 + size
-            if body1 > end:
-                raise NotImplementedError("truncated AVI chunk")
-            if cid == b"LIST":
-                walk(body0 + 4, body1)  # first 4 bytes = list type fourcc
-            elif cid[2:4] in (b"dc", b"db") and cid[:2].isdigit():
-                frames.append((body0, payload[body0:body1]))
-            pos = body1 + (size & 1)  # RIFF chunks are word-aligned
-
-    walk(12, len(payload))
-    return frames
-
-
-def sample_frames_real(payload: bytes, stride: int = FRAME_STRIDE) -> list[dict]:
-    """Decode an MJPEG video payload — AVI (RIFF) OR QuickTime/MOV
-    (ISO-BMFF, see :func:`_mov_video_samples`) — and return every
-    ``stride``-th frame, fully decoded through the pure-stdlib
-    baseline-JPEG codec. Same row shape as ``fake_sample_frames``
-    (frame_no, frame_offset, frame_hash) plus the decoded geometry;
-    frame_hash digests the DECODED raster, so the two containers
-    holding identical video bytes fingerprint identically regardless
-    of chunk layout (pinned by
-    tests/test_media_codecs.py::test_mov_and_avi_fingerprint_identically).
-    Other containers (MKV — needs ffmpeg/pyav) and non-MJPEG codecs
-    raise ``NotImplementedError`` naming the dependency."""
-    from ua2sql_spark.functions.jpeg import decode_jpeg
-
-    if payload[:4] == b"RIFF":
-        chunks = _avi_video_chunks(payload)
-    elif len(payload) > 12 and payload[4:8] == b"ftyp":
-        chunks = _mov_video_samples(payload)
-    else:
-        raise NotImplementedError("not a RIFF/AVI or QuickTime/MOV stream")
-    out = []
-    for frame_no in range(0, len(chunks), stride):
-        offset, body = chunks[frame_no]
-        if body[:2] != b"\xff\xd8":
-            raise NotImplementedError(
-                "video chunk is not an MJPEG frame (non-JPEG codec "
-                "needs ffmpeg/pyav, not in this container)"
-            )
-        width, height, channels, raster = decode_jpeg(body)
-        out.append(
-            {
-                "frame_no": frame_no,
-                "frame_offset": offset,
-                "frame_hash": hashlib.md5(raster).hexdigest(),
-                "width": width,
-                "height": height,
-                "channels": channels,
-            }
-        )
-    return out
-
-
-def encode_avi_mjpeg(
-    jpeg_frames: list[bytes],
-    width: int,
-    height: int,
-    fps: int = 25,
-) -> bytes:
-    """Assemble baseline-JPEG frames into a standards-shaped AVI/MJPEG
-    container (RIFF → hdrl(avih + strl(strh 'vids'/'MJPG' + strf
-    BITMAPINFOHEADER)) → movi('00dc' chunks) → idx1). The writer half
-    of the video shard path: training pipelines re-shard sampled clips
-    the same way corpus_export re-shards text."""
-    max_size = max((len(f) for f in jpeg_frames), default=0)
-    avih = struct.pack(
-        "<14I",
-        1_000_000 // fps, max_size * fps, 0, 0x10,  # AVIF_HASINDEX
-        len(jpeg_frames), 0, 1, max_size, width, height, 0, 0, 0, 0,
-    )
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIII4H",
-        b"vids", b"MJPG",
-        0,                    # dwFlags
-        0, 0,                 # wPriority, wLanguage
-        0,                    # dwInitialFrames
-        1, fps,               # dwScale / dwRate = fps
-        0, len(jpeg_frames),  # dwStart, dwLength (frames)
-        max_size, 10_000,     # dwSuggestedBufferSize, dwQuality
-        0,                    # dwSampleSize (0 = one sample per chunk)
-        0, 0, width, height,  # rcFrame
-    )
-    strf = struct.pack(
-        "<IiiHH4sIiiII", 40, width, height, 1, 24, b"MJPG",
-        width * height * 3, 0, 0, 0, 0,
-    )
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (b"\x00" * (len(body) & 1))
-
-    def lst(ltype: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", ltype + body)
-
-    strl = lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf))
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + strl)
-    movi_body = b"".join(chunk(b"00dc", f) for f in jpeg_frames)
-    movi = lst(b"movi", movi_body)
-    # idx1 offsets are relative to the 'movi' fourcc (the common form).
-    idx_entries, off = [], 4
-    for f in jpeg_frames:
-        idx_entries.append(struct.pack("<4sIII", b"00dc", 0x10, off, len(f)))
-        off += 8 + len(f) + (len(f) & 1)
-    idx1 = chunk(b"idx1", b"".join(idx_entries))
-    return chunk(b"RIFF", b"AVI " + hdrl + movi + idx1)
-
-
-# ---------------------------------------------------------------------------
-# Second video container: QuickTime/MOV with MJPEG samples (ISO-BMFF box
-# tree + stbl sample tables). Same (offset, body) chunk contract as
-# _avi_video_chunks, so sample_frames_real fingerprints identical video
-# bytes identically across BOTH containers.
-# ---------------------------------------------------------------------------
-def _box(btype: bytes, body: bytes) -> bytes:
-    return struct.pack(">I", 8 + len(body)) + btype + body
-
-
-def _full_box(btype: bytes, body: bytes, version: int = 0, flags: int = 0) -> bytes:
-    return _box(btype, struct.pack(">I", (version << 24) | flags) + body)
-
-
-def encode_mov_mjpeg(
-    jpeg_frames: list[bytes],
-    width: int,
-    height: int,
-    fps: int = 25,
-) -> bytes:
-    """Assemble baseline-JPEG frames into a QuickTime/MOV container
-    (ftyp 'qt  ' + mdat + moov/trak/mdia/minf/stbl with stsd('jpeg'),
-    stts, stsc, stsz, stco). One sample per chunk; stco offsets are
-    absolute file offsets, so mdat is laid out first. The MOV twin of
-    :func:`encode_avi_mjpeg`."""
-    ftyp = _box(b"ftyp", b"qt  " + struct.pack(">I", 0) + b"qt  ")
-    mdat_body = b"".join(jpeg_frames)
-    # per-sample absolute offsets: after ftyp + mdat's 8-byte header
-    offsets, pos = [], len(ftyp) + 8
-    for f in jpeg_frames:
-        offsets.append(pos)
-        pos += len(f)
-    n = len(jpeg_frames)
-    timescale = fps
-    duration = n  # n samples x delta 1 at timescale=fps
-    mvhd = _full_box(
-        b"mvhd",
-        struct.pack(">IIII", 0, 0, timescale, duration)
-        + struct.pack(">IHH", 0x00010000, 0x0100, 0)  # rate, volume, rsvd
-        + b"\x00" * 8
-        + _QT_IDENTITY_MATRIX
-        + b"\x00" * 24
-        + struct.pack(">I", 2),  # next track id
-    )
-    tkhd = _full_box(
-        b"tkhd",
-        struct.pack(">IIIII", 0, 0, 1, 0, duration)
-        + b"\x00" * 8
-        + struct.pack(">HHHH", 0, 0, 0, 0)  # layer, group, volume, rsvd
-        + _QT_IDENTITY_MATRIX
-        + struct.pack(">II", width << 16, height << 16),
-        flags=0x7,
-    )
-    mdhd = _full_box(
-        b"mdhd", struct.pack(">IIIIHH", 0, 0, timescale, duration, 0, 0)
-    )
-    hdlr = _full_box(b"hdlr", b"mhlr" + b"vide" + b"\x00" * 12 + b"\x00")
-    vmhd = _full_box(b"vmhd", struct.pack(">HHHH", 0, 0, 0, 0), flags=1)
-    dref = _full_box(
-        b"dref", struct.pack(">I", 1) + _full_box(b"url ", b"", flags=1)
-    )
-    dinf = _box(b"dinf", dref)
-    sample_desc = (
-        struct.pack(">HH", 0, 0)  # pre_defined, reserved
-        + b"\x00" * 12
-        + struct.pack(">HH", width, height)
-        + struct.pack(">IIIH", 0x00480000, 0x00480000, 0, 1)  # dpi, dsize, fc
-        + b"\x00" * 32  # compressor name
-        + struct.pack(">Hh", 24, -1)  # depth, color table id
-    )
-    stsd = _full_box(
-        b"stsd",
-        struct.pack(">I", 1)
-        + struct.pack(">I", 16 + len(sample_desc))
-        + b"jpeg"
-        + b"\x00" * 6
-        + struct.pack(">H", 1)
-        + sample_desc,
-    )
-    stts = _full_box(b"stts", struct.pack(">III", 1, n, 1))
-    stsc = _full_box(b"stsc", struct.pack(">IIII", 1, 1, 1, 1))
-    stsz = _full_box(
-        b"stsz",
-        struct.pack(">II", 0, n)
-        + b"".join(struct.pack(">I", len(f)) for f in jpeg_frames),
-    )
-    stco = _full_box(
-        b"stco",
-        struct.pack(">I", n) + b"".join(struct.pack(">I", o) for o in offsets),
-    )
-    stbl = _box(b"stbl", stsd + stts + stsc + stsz + stco)
-    minf = _box(b"minf", vmhd + dinf + stbl)
-    mdia = _box(b"mdia", mdhd + hdlr + minf)
-    trak = _box(b"trak", tkhd + mdia)
-    moov = _box(b"moov", mvhd + trak)
-    return ftyp + _box(b"mdat", mdat_body) + moov
-
-
-_QT_IDENTITY_MATRIX = struct.pack(
-    ">9I", 0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000
-)
-
-_MOV_JPEG_FOURCCS = (b"jpeg", b"mjpa", b"mjpb", b"MJPG")
-
-
-def _mov_video_samples(payload: bytes) -> list[tuple[int, bytes]]:
-    """Walk a QuickTime/MOV (ISO-BMFF) box tree and return the video
-    track's MJPEG samples as (absolute_offset, body) pairs, resolved
-    through the stbl sample tables (stsd codec check, stsz sizes,
-    stsc sample→chunk mapping, stco/co64 chunk offsets). General stsc
-    handling — not just the one-sample-per-chunk layout the encoder
-    writes."""
-    if len(payload) < 12 or payload[4:8] != b"ftyp":
-        raise NotImplementedError("not an ISO-BMFF (MOV/MP4) stream")
-
-    def children(lo: int, hi: int):
-        pos = lo
-        while pos + 8 <= hi:
-            (size,) = struct.unpack_from(">I", payload, pos)
-            btype = payload[pos + 4 : pos + 8]
-            head = 8
-            if size == 1:
-                (size,) = struct.unpack_from(">Q", payload, pos + 8)
-                head = 16
-            elif size == 0:
-                size = hi - pos
-            if size < head or pos + size > hi:
-                raise NotImplementedError("truncated MOV box")
-            yield btype, pos + head, pos + size
-            pos += size
-
-    def find(lo: int, hi: int, btype: bytes):
-        return [(a, b) for t, a, b in children(lo, hi) if t == btype]
-
-    moov = find(0, len(payload), b"moov")
-    if not moov:
-        raise NotImplementedError("MOV missing moov box")
-    for trak_lo, trak_hi in find(*moov[0], b"trak"):
-        for mdia_lo, mdia_hi in find(trak_lo, trak_hi, b"mdia"):
-            for minf_lo, minf_hi in find(mdia_lo, mdia_hi, b"minf"):
-                for stbl_lo, stbl_hi in find(minf_lo, minf_hi, b"stbl"):
-                    samples = _stbl_samples(payload, stbl_lo, stbl_hi)
-                    if samples is not None:
-                        return samples
-    raise NotImplementedError("MOV has no MJPEG video track")
-
-
-def _stbl_samples(
-    payload: bytes, lo: int, hi: int
-) -> list[tuple[int, bytes]] | None:
-    """Resolve one stbl's sample tables; None if the track's codec is
-    not an MJPEG flavor (caller tries the next track)."""
-    tables: dict[bytes, tuple[int, int]] = {}
-    pos = lo
-    while pos + 8 <= hi:
-        (size,) = struct.unpack_from(">I", payload, pos)
-        btype = payload[pos + 4 : pos + 8]
-        if size == 0:
-            size = hi - pos
-        if size < 8 or pos + size > hi:
-            raise NotImplementedError("truncated stbl box")
-        tables[btype] = (pos + 8, pos + size)
-        pos += size
-    if b"stsd" not in tables:
-        return None
-    sd_lo, _ = tables[b"stsd"]
-    fourcc = payload[sd_lo + 12 : sd_lo + 16]  # vflags(4) count(4) size(4)
-    if fourcc not in _MOV_JPEG_FOURCCS:
-        return None
-    for need in (b"stsz", b"stsc"):
-        if need not in tables:
-            raise NotImplementedError(f"MOV stbl missing {need.decode()}")
-    # sizes
-    z_lo, _ = tables[b"stsz"]
-    fixed, n = struct.unpack_from(">II", payload, z_lo + 4)
-    sizes = (
-        [fixed] * n
-        if fixed
-        else list(struct.unpack_from(f">{n}I", payload, z_lo + 12))
-    )
-    # chunk offsets (stco 32-bit or co64 64-bit)
-    if b"stco" in tables:
-        c_lo, _ = tables[b"stco"]
-        (n_chunks,) = struct.unpack_from(">I", payload, c_lo + 4)
-        chunk_offs = list(struct.unpack_from(f">{n_chunks}I", payload, c_lo + 8))
-    elif b"co64" in tables:
-        c_lo, _ = tables[b"co64"]
-        (n_chunks,) = struct.unpack_from(">I", payload, c_lo + 4)
-        chunk_offs = list(struct.unpack_from(f">{n_chunks}Q", payload, c_lo + 8))
-    else:
-        raise NotImplementedError("MOV stbl missing stco/co64")
-    # sample -> chunk via stsc runs: (first_chunk, samples_per_chunk, _)
-    s_lo, _ = tables[b"stsc"]
-    (n_runs,) = struct.unpack_from(">I", payload, s_lo + 4)
-    runs = [
-        struct.unpack_from(">III", payload, s_lo + 8 + 12 * i) for i in range(n_runs)
-    ]
-    out: list[tuple[int, bytes]] = []
-    si = 0
-    for ri, (first, per_chunk, _sdi) in enumerate(runs):
-        last = runs[ri + 1][0] - 1 if ri + 1 < len(runs) else n_chunks
-        for ci in range(first - 1, last):
-            off = chunk_offs[ci]
-            for _ in range(per_chunk):
-                if si >= n:
-                    break
-                out.append((off, payload[off : off + sizes[si]]))
-                off += sizes[si]
-                si += 1
-    if si != n:
-        raise NotImplementedError("MOV sample tables inconsistent")
-    return out
 
 
 def fake_sample_frames(

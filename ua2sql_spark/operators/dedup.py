@@ -392,7 +392,7 @@ def lsh_band_rows(
 
 # ---------------------------------------------------------------------------
 # Persisted LSH band index (VERDICT r9 #6) — the near-dup analog of
-# operators/ivf.py's save_ivf_index/probe_ivf_index: mint signatures for
+# operators/ivf.py's save_ivf_index: mint signatures for
 # the historical corpus ONCE, lay the band rows out partitioned by
 # (band_no, band_bucket), and let every later ingest batch probe only
 # the partitions its own band keys hash into. Without this, daily

@@ -201,9 +201,10 @@ def ivf_topk(
 
 # ---------------------------------------------------------------------------
 # Persisted index: the production IVF deployment shape. Build once,
-# write the inverted lists as cell-partitioned parquet; every later
-# query batch reads ONLY its probed cells' directories (real partition
-# pruning — the parquet analog of FAISS's inverted-list seek).
+# write the inverted lists as cell-partitioned parquet, fold later
+# batches in against the frozen centroids and report per-cell drift
+# (x198). No registered query searches a saved index, so there is no
+# probe over it here; ``ivf_probe_topk`` is the search path.
 # ---------------------------------------------------------------------------
 def save_ivf_index(
     emb: DataFrame,
@@ -214,8 +215,7 @@ def save_ivf_index(
 ) -> None:
     """Materialize the IVF index at ``path``: ``centroids/`` (small) and
     ``lists/`` (the corpus, hive-partitioned by cell id). Index build is
-    the one-time assign pass; probes after this are metadata-pruned
-    scans of the probed cells only."""
+    the one-time assign pass."""
     cent = emb.filter(F.col(id_col) % centroid_stride == 0).select(
         F.col(id_col).alias("cid"), F.col(vec_col).alias("cemb")
     )
@@ -243,8 +243,7 @@ def append_ivf_index(
     so old and new inverted lists agree about every cell boundary) and
     append into the same cell-partitioned layout. The daily-ingest
     shape for embeddings, symmetric with ``dedup.append_lsh_index``:
-    append work scales with the batch, probes see the grown lists
-    through the exact partition pruning they already do. Centroid
+    append work scales with the batch. Centroid
     drift (a corpus whose distribution walks away from the frozen
     centroids) is a REBUILD decision, deliberately not hidden here —
     same operating contract as FAISS's add() vs retrain; the number
@@ -264,58 +263,6 @@ def append_ivf_index(
         .partitionBy("cell")
         .parquet(path + "/lists")
     )
-
-
-def probe_ivf_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    id_col: str = "query_id",
-    vec_col: str = "embedding",
-    nprobe: int = 1,
-    k: int = 5,
-) -> DataFrame:
-    """Top-k over a saved index: rank cells per query by centroid cosine
-    (broadcast centroids), then scan ONLY the probed cells via a
-    partition-pruning ``cell IN (...)`` filter on the lists table.
-
-    The probed-cell id list is collected driver-side — bounded by
-    |queries| × nprobe (a query *batch*, not the corpus). Same
-    determinism contract as ivf_probe_topk: 6-decimal rounding before
-    every rank, ties on id."""
-    cent = spark.read.parquet(path + "/centroids")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qemb")
-    )
-    qscore = q.crossJoin(F.broadcast(cent)).withColumn(
-        "__score", F.round(_cosine(F.col("__qemb"), F.col("cemb")), 6)
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("__score"), F.asc("cid"))
-    probe = (
-        qscore.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
-        .select("query_id", "__qemb", F.col("cid").alias("__qcell"))
-        # Materialize once: the probe subplan (query×centroid cross +
-        # rank window) is needed twice — driver-side for the pruned
-        # cell list AND as the broadcast side of the candidate join.
-        # Without this the most expensive control step of every probe
-        # call executes twice.
-        .localCheckpoint()
-    )
-    cells = sorted({r["__qcell"] for r in probe.select("__qcell").collect()})
-    lists = spark.read.parquet(path + "/lists").filter(F.col("cell").isin(cells))
-    pairs = F.broadcast(probe).join(
-        lists,
-        (F.col("__qcell") == F.col("cell"))
-        & (F.col("query_id") != F.col("neighbor_id")),
-    )
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        F.round(_cosine(F.col("__qemb"), F.col("nemb")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
 def ivf_health_report(

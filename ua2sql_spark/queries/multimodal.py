@@ -1,11 +1,13 @@
 """Multimodal columns: SURVEY.md §2.11 X6.
 
 Media are opaque ``binary`` payload columns plus typed metadata. The
-container has no image/audio codecs, so the *decode* step is a
-deterministic stand-in (documented stub — see
-``ua2sql_spark.functions.media`` for the real-codec seam); everything
-Spark-side — binary schema, Arrow batching through ``mapInPandas``,
-partition-preserving metadata extraction — is real and oracle-checked.
+corpus is text, so x53's image decode and x83's frame sampling are
+deterministic stand-ins derived from payload length, which the oracle
+replicates in SQL. x153, x180, x187 and x205 build real JPEG, WAV and
+PNG payloads per row and run them through the pure-stdlib codecs of
+``ua2sql_spark.functions.media``. Everything Spark-side — binary schema,
+Arrow batching through ``mapInPandas``, partition-preserving metadata
+extraction — is real and oracle-checked.
 """
 
 from __future__ import annotations
@@ -54,53 +56,18 @@ def x52_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # X6b: the decode path — Arrow-batched mapInPandas over binary payloads.
-# The "decoder" is a deterministic stub (real codecs are not in this
-# container); the oracle replicates its arithmetic in SQL, so what's
+# The corpus holds text, not images, so the "decoder" is a deterministic
+# stub; the oracle replicates its arithmetic in SQL, so what's
 # verified is the full Spark plumbing: binary column in, typed schema
 # out, batch-wise pandas execution.
 # ---------------------------------------------------------------------------
 _DECODE_SCHEMA = "doc_id BIGINT, width INT, height INT, mean_pixel DOUBLE"
 
 
-def decode_images(df: DataFrame, decoder=None) -> DataFrame:
-    """The X6 image-decode operator: (doc_id, payload binary) →
-    (doc_id, width, height, mean_pixel) via Arrow-batched mapInPandas.
-
-    ``decoder`` is any `payload bytes -> {width, height, mean_pixel}`
-    callable — `functions.media.decode_image_real` (actual PPM/PGM/BMP
-    pixel decode, the default) or `fake_decode_image` (length-derived
-    stand-in the SQL oracle can mirror). Same plan either way; only the
-    per-batch Python body differs."""
-    from ua2sql_spark.functions.media import decode_image_real
-
-    dec = decoder or decode_image_real
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            decoded = [dec(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.Series(
-                        [d["width"] for d in decoded], dtype="int32"
-                    ),
-                    "height": pd.Series(
-                        [d["height"] for d in decoded], dtype="int32"
-                    ),
-                    "mean_pixel": pd.Series(
-                        [d["mean_pixel"] for d in decoded], dtype="float64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=_DECODE_SCHEMA)
-
-
 def _fake_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Deterministic stand-in for an image decoder: derives dimensions and
     a 'mean pixel' from payload length alone — vectorized, so the
-    oracle-checked hot path stays column-wise; the per-payload real-codec
-    path is `decode_images`."""
+    oracle-checked hot path stays column-wise."""
     for pdf in batches:
         nbytes = pdf["payload"].map(len)
         yield pd.DataFrame(
@@ -129,98 +96,11 @@ def x53_decode_mapinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_payload.mapInPandas(_fake_decode_batches, schema=_DECODE_SCHEMA)
 
 
-def thumbnail_images(
-    df: DataFrame, target_long_side: int = 256, quality: int = 85
-) -> DataFrame:
-    """The X6 thumbnailing operator: (doc_id, payload binary) →
-    (doc_id, thumb binary, thumb_width, thumb_height) via Arrow-batched
-    mapInPandas. Decode → aspect-preserving downscale → baseline-JPEG
-    re-encode, all inside ``functions.media.thumbnail_real`` (pure
-    stdlib here; a cluster binds the same seam to libjpeg-turbo).
-    Payloads in unsupported formats pass through as NULL thumbs rather
-    than failing the batch — corrupt media must never kill a 100 TB
-    job."""
-    from ua2sql_spark.functions.media import thumbnail_real
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            thumbs, widths, heights = [], [], []
-            for p in pdf["payload"]:
-                try:
-                    t, w, h = thumbnail_real(p, target_long_side, quality)
-                    thumbs.append(t)
-                    widths.append(w)
-                    heights.append(h)
-                except NotImplementedError:
-                    thumbs.append(None)
-                    widths.append(None)
-                    heights.append(None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "thumb": thumbs,
-                    "thumb_width": pd.array(widths, dtype="Int32"),
-                    "thumb_height": pd.array(heights, dtype="Int32"),
-                }
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema="doc_id bigint, thumb binary, thumb_width int, thumb_height int",
-    )
-
-
-def probe_media(df: DataFrame) -> DataFrame:
-    """The X6 media-triage operator: (doc_id, payload binary) → typed
-    metadata (kind, width, height, duration_s, sample_rate, n_tracks)
-    via Arrow-batched mapInPandas over ``functions.media``'s unified
-    probe. Full image decode where supported, header-level probing for
-    MP3/MP4 (the duration/bitrate a pipeline filter needs, no PCM or
-    pixels), kind='unknown' for anything else — corrupt payloads never
-    fail the batch. This is the first pass of every multimodal ingest:
-    gate on dimensions/duration before any expensive decode."""
-    from ua2sql_spark.functions.media import probe_media_metadata
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            probed = [probe_media_metadata(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "kind": [d["kind"] for d in probed],
-                    "width": pd.array([d["width"] for d in probed], dtype="Int32"),
-                    "height": pd.array([d["height"] for d in probed], dtype="Int32"),
-                    "duration_s": pd.array(
-                        [d["duration_s"] for d in probed], dtype="Float64"
-                    ),
-                    "sample_rate": pd.array(
-                        [d["sample_rate"] for d in probed], dtype="Int32"
-                    ),
-                    "n_tracks": pd.array(
-                        [d["n_tracks"] for d in probed], dtype="Int32"
-                    ),
-                    "exif_orientation": pd.array(
-                        [d["exif_orientation"] for d in probed], dtype="Int32"
-                    ),
-                    "exif_datetime": [d["exif_datetime"] for d in probed],
-                }
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema=(
-            "doc_id bigint, kind string, width int, height int, "
-            "duration_s double, sample_rate int, n_tracks int, "
-            "exif_orientation int, exif_datetime string"
-        ),
-    )
-
-
 # ---------------------------------------------------------------------------
 # X6c: frame sampling — the 1→N multimodal expansion (one video payload
 # row out to many sampled-frame rows) through Arrow-batched mapInPandas.
-# The fake codec derives frames from payload length (functions/media.py
-# is the real-codec seam); the oracle replicates its arithmetic, so the
+# The fake codec derives frames from payload length (the corpus holds no
+# video); the oracle replicates its arithmetic, so the
 # verified part is the expansion plumbing: batch in, variable-length
 # frame rows out, schema preserved.
 # ---------------------------------------------------------------------------

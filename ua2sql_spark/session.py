@@ -79,22 +79,14 @@ COLLECTOR_ENVS = ("PYSPARK_SUBMIT_ARGS", "SPARK_SUBMIT_OPTS", "JAVA_TOOL_OPTIONS
 CDS_COLLECTORS = ("G1", "Parallel", "Serial")
 
 
-def _default_shuffle_partitions() -> int:
-    """SPARK_GRAFT_CPUS doubles as the local[] thread spec, where '*'
-    is legal — only digit values can size the shuffle; anything else
-    falls back to 32 (evaluated lazily so importing the module never
-    crashes on a non-integer spec)."""
-    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return int(raw) if raw.isdigit() else 32
-
-
-DEFAULT_SHUFFLE_PARTITIONS = _default_shuffle_partitions()
-
-
 def get_spark(app_name: str = "ua2sql_spark", shuffle_partitions: int | None = None) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's defaults."""
+    """Build (or reuse) a SparkSession with the engine's defaults.
+
+    ``SPARK_GRAFT_CPUS`` is read at each call. It is the ``local[]``
+    thread spec, where ``*`` is legal, and a digit value also sizes the
+    shuffle; without one the shuffle has 32 partitions."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    sp = shuffle_partitions or (int(cpus) if cpus.isdigit() else 32)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -299,7 +291,9 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
 
     The driver harness constructs its own SparkSession and hands it to
     ``__spark_entry__.entry``; this applies the confs that are safely
-    mutable at runtime (timezone, AQE, shuffle partitions).
+    mutable at runtime (timezone, AQE, the runtime bloom filter). It
+    leaves the shuffle partition count alone: the harness sized its
+    session for its own cores.
     ``spark.sql.codegen.cache.maxEntries`` is a static conf, so such a
     session keeps Spark's default of 100 generated classes (see the
     module docstring); only sessions from :func:`get_spark` get 1000.

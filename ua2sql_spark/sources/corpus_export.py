@@ -5,6 +5,8 @@
                         stored contiguously in a shard tar, so a
                         training loader streams samples with pure
                         sequential IO and shards shuffle as units.
+                        The tests read shards back with
+                        ``read_webdataset`` (``tests/helpers.py``).
 
 Scale design:
 * Shard assignment is a deterministic key hash — rerun/partitioning
@@ -91,45 +93,4 @@ def write_webdataset(
 
     return staged.groupBy("__shard").applyInPandas(
         write_shard, schema=_MANIFEST_SCHEMA
-    )
-
-
-def read_webdataset(spark, in_dir: str) -> DataFrame:
-    """Load WebDataset tar shards back into (key, text, payload) rows —
-    the loader side of :func:`write_webdataset`.
-
-    ``binaryFile`` distributes whole shards to tasks (a tar is a
-    sequential format, so shard == work unit, same as a training
-    loader); each task untars in memory via Arrow-batched mapInPandas.
-    Scale note: shards are sized ~1 GB by the writer, well inside
-    executor memory; sample members are grouped by basename per the
-    WebDataset convention."""
-    from collections.abc import Iterator
-
-    files = spark.read.format("binaryFile").load(in_dir + "/*.tar")
-
-    def untar(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-        import tarfile
-
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                with tarfile.open(fileobj=_io.BytesIO(bytes(blob))) as tar:
-                    samples: dict[str, dict] = {}
-                    for m in tar.getmembers():
-                        key, ext = m.name.rsplit(".", 1)
-                        samples.setdefault(key, {})[ext] = tar.extractfile(m).read()
-                    for key, members in samples.items():
-                        rows.append(
-                            (
-                                key,
-                                members.get("txt", b"").decode("utf-8"),
-                                members.get("bin"),
-                            )
-                        )
-            yield pd.DataFrame(rows, columns=["key", "text", "payload"])
-
-    return files.select("content").mapInPandas(
-        untar, schema="key string, text string, payload binary"
     )

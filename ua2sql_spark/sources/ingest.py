@@ -6,8 +6,9 @@ export job (continueFrom=prev jobId | 30-day backfill) → poll → download
 staging cleanup → checkpoint append.
 
 Spark mapping (SURVEY §3): the HTTP legs (S1–S3) are driver-side Python
-behind the ``ExportClient`` protocol (injectable; tests use
-``LocalFileExportClient``); everything from the landing dir onward is
+behind the ``ExportClient`` protocol (injectable; the tests inject
+``LocalFileExportClient`` from ``tests/helpers.py``, which copies
+pre-staged local files); everything from the landing dir onward is
 Spark. The download step keeps files compressed — Spark gunzips on read,
 so the reference's in-memory ``gzip.GzipFile`` stage (ua2sql.py:157-158)
 disappears.
@@ -22,7 +23,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import date, timedelta
 from typing import Callable, Protocol
 
@@ -39,8 +40,7 @@ POLL_INTERVAL_S = 5.0   # ua2sql.py:265
 class ExportClient(Protocol):
     """The Unity Raw Data Export API surface the reference consumes
     (S1–S3). Production implementation:
-    ``ua2sql_spark.sources.http_export.HttpExportClient`` (`requests`);
-    tests may inject the local-file fake below."""
+    ``ua2sql_spark.sources.http_export.HttpExportClient`` (`requests`)."""
 
     def request_export(
         self, feed: str, start_date: date | None, continue_from: str | None
@@ -56,35 +56,6 @@ class ExportClient(Protocol):
         """GET each result.fileList url into staging (ua2sql.py:128-161);
         files may stay .gz — Spark reads them transparently."""
         ...
-
-
-@dataclass
-class LocalFileExportClient:
-    """Test/offline double: 'exports' are pre-staged local files keyed by
-    (feed, job index). Deterministic job ids: '<feed>-<n>'."""
-
-    exports: dict[str, list[list[str]]]  # feed -> runs -> file paths
-    _requested: dict[str, int] = field(default_factory=dict)
-
-    def request_export(self, feed, start_date, continue_from):
-        runs = self.exports.get(feed, [])
-        nxt = 0 if continue_from is None else int(continue_from.rsplit("-", 1)[1]) + 1
-        if nxt >= len(runs):
-            return None  # nothing new to export
-        self._requested[feed] = nxt
-        return f"{feed}-{nxt}"
-
-    def is_complete(self, job_id):
-        return True
-
-    def download_results(self, job_id, staging_dir):
-        feed, n = job_id.rsplit("-", 1)
-        out = []
-        for src in self.exports[feed][int(n)]:
-            dst = os.path.join(staging_dir, os.path.basename(src))
-            shutil.copyfile(src, dst)
-            out.append(dst)
-        return out
 
 
 def remove_files_in_directory(path: str) -> None:

@@ -22,8 +22,6 @@ DDL types stay integration-gated behind ``pg_types``.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -172,23 +170,3 @@ def upsert_feed_jdbc(
     )
 
 
-def jdbc_upsert_sink(
-    url: str,
-    table: str,
-    feed: str,
-    key_cols: list[str] | None = None,
-    properties: dict[str, str] | None = None,
-    pg_types: bool = True,
-) -> Callable[[DataFrame, int], None]:
-    """``foreachBatch`` closure over :func:`upsert_feed_jdbc` — plug into
-    ``streaming.ingest.stream_feed`` for an end-to-end exactly-once-effect
-    pipeline: the checkpoint gives at-least-once micro-batches, the
-    key-anti-join makes re-deliveries no-ops."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        upsert_feed_jdbc(
-            batch_df, url, table, feed,
-            key_cols=key_cols, properties=properties, pg_types=pg_types,
-        )
-
-    return sink

@@ -67,12 +67,6 @@ _FEED_EXTRA_RAW: dict[str, list[StructField]] = {
     ],
 }
 
-# `amount` is money: Numeric in the reference (ua2sql.py:82). Carried as
-# string through JSON then cast to exact decimal — it must never transit
-# a double (SURVEY §7 hard part 2).
-AMOUNT_DECIMAL = "decimal(38,18)"
-
-
 def raw_schema(feed: str) -> StructType:
     """Schema of the feed's JSON-lines dump, pre-normalization."""
     if feed not in FEEDS:
@@ -81,7 +75,12 @@ def raw_schema(feed: str) -> StructType:
 
 
 def landed_schema(feed: str) -> StructType:
-    """Schema after normalization (what the reference's tables hold)."""
+    """Schema after normalization (what the reference's tables hold).
+
+    The one declaration of the landed types: :func:`normalize_feed`
+    converts to it. `amount` is money, Numeric in the reference
+    (ua2sql.py:82): carried as a string through JSON, then cast to an
+    exact decimal, so it never transits a double (SURVEY §7 hard part 2)."""
     fields = []
     for f in raw_schema(feed).fields:
         if f.name in ("ts", "submit_time"):
@@ -95,16 +94,17 @@ def landed_schema(feed: str) -> StructType:
 
 def normalize_feed(df: DataFrame, feed: str, parity_ts: bool = False) -> DataFrame:
     """Apply the reference's per-row transform (ua2sql.py:224-237) as
-    column expressions: epoch-ms → UTC timestamp (P2), amount → exact
-    decimal. ``parity_ts`` reproduces the whole-second truncation of
-    ua2sql.py:233."""
-    def to_ts(c: str):
-        t = F.timestamp_millis(F.col(c))
-        return F.date_trunc("second", t) if parity_ts else t
-
-    out = df.withColumn("ts", to_ts("ts")).withColumn("submit_time", to_ts("submit_time"))
-    if feed == "transaction":
-        out = out.withColumn("amount", F.col("amount").cast(AMOUNT_DECIMAL))
+    column expressions, converting each column to its
+    :func:`landed_schema` type: epoch-ms → UTC timestamp (P2), string →
+    exact decimal. ``parity_ts`` reproduces the whole-second truncation
+    of ua2sql.py:233."""
+    out = df
+    for f in landed_schema(feed).fields:
+        if isinstance(f.dataType, TimestampType):
+            t = F.timestamp_millis(F.col(f.name))
+            out = out.withColumn(f.name, F.date_trunc("second", t) if parity_ts else t)
+        elif isinstance(f.dataType, DecimalType):
+            out = out.withColumn(f.name, F.col(f.name).cast(f.dataType))
     return out
 
 

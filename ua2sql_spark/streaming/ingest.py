@@ -11,6 +11,12 @@ poll, land files, insert, record offset in the JobId table
   README.md:30) — drain everything new, then stop
 * ``foreachBatch`` = the batched JDBC insert (S7); at-least-once by
   default, same as the reference's checkpoint-after-commit (T4)
+
+A JDBC stream sink with an exactly-once effect is :func:`stream_feed`
+with a ``foreachBatch`` closure over
+``ua2sql_spark.sources.jdbc.upsert_feed_jdbc``: the checkpoint gives
+at-least-once micro-batches and the upsert's key anti-join makes a
+redelivered row a no-op (``tests/test_ingest.py``).
 """
 
 from __future__ import annotations
