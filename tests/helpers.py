@@ -1,7 +1,7 @@
-"""Helpers that only the tests use: physical-plan inspection, a GIF
-encoder that builds decoder fixtures, a local-file Unity export client
-and a WebDataset shard reader. No module under ``ua2sql_spark/`` imports
-this one (``tests/test_catalog.py::test_engine_imports_no_test_helper``).
+"""Helpers that only the tests use: physical-plan inspection, a
+local-file Unity export client and a WebDataset shard reader. No module
+under ``ua2sql_spark/`` imports this one
+(``tests/test_catalog.py::test_engine_imports_no_test_helper``).
 """
 
 from __future__ import annotations
@@ -10,15 +10,12 @@ import io
 import os
 import re
 import shutil
-import struct
 import tarfile
 from collections.abc import Iterator
 from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame
-
-from ua2sql_spark.functions.gif import GifError
 
 
 # ---------------------------------------------------------------------------
@@ -278,86 +275,6 @@ def reeval_hazards(df: DataFrame) -> list[str]:
                         "Project above Generate (re-evaluated per generated row)"
                     )
     return finds
-
-
-# ---------------------------------------------------------------------------
-# GIF89a encoder: real LZW compression (dictionary build, clear-code reset
-# at 4096 entries), so the decoder tests roundtrip genuine compressed bytes.
-# ---------------------------------------------------------------------------
-class _LsbBitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, length: int) -> None:
-        self.acc |= code << self.nbits
-        self.nbits += length
-        while self.nbits >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            self.out.append(self.acc & 0xFF)
-        return bytes(self.out)
-
-
-def _lzw_encode(min_code_size: int, indices: bytes) -> bytes:
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    writer = _LsbBitWriter()
-
-    def reset() -> tuple[dict[bytes, int], int, int]:
-        return (
-            {bytes([i]): i for i in range(clear)},
-            eoi + 1,
-            min_code_size + 1,
-        )
-
-    table, next_code, code_size = reset()
-    writer.write(clear, code_size)
-    run = b""
-    for byte in indices:
-        cand = run + bytes([byte])
-        if cand in table:
-            run = cand
-            continue
-        writer.write(table[run], code_size)
-        table[cand] = next_code
-        if next_code == (1 << code_size) and code_size < 12:
-            code_size += 1
-        next_code += 1
-        if next_code > 4095:
-            writer.write(clear, code_size)
-            table, next_code, code_size = reset()
-        run = bytes([byte])
-    if run:
-        writer.write(table[run], code_size)
-    writer.write(eoi, code_size)
-    return writer.flush()
-
-
-def encode_gif(width: int, height: int, palette: list[bytes], indices: bytes) -> bytes:
-    """Encode one frame as GIF89a: ``palette`` is ≤256 RGB triples,
-    ``indices`` one palette index per pixel, row-major."""
-    if not 0 < len(palette) <= 256:
-        raise GifError(f"palette size {len(palette)} out of range")
-    depth = max(2, (len(palette) - 1).bit_length())  # GIF minimum: 2 bits
-    table = b"".join(palette) + b"\x00\x00\x00" * ((1 << depth) - len(palette))
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", width, height, 0x80 | ((depth - 1) & 7), 0, 0)
-    out += table
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, 0)
-    out.append(depth)
-    data = _lzw_encode(depth, indices)
-    for i in range(0, len(data), 255):
-        chunk = data[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3b"
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------

@@ -195,7 +195,13 @@ def test_every_engine_function_is_reached_from_a_root():
     import alone reaches nothing; a name must be used. Module-level
     statements and ``@query`` registrations count only in a module that a
     root imports, directly or transitively, and a module that no root
-    imports fails the guard by itself."""
+    imports fails the guard by itself.
+
+    A name is all this guard sees: a decoder counts as reached when a
+    dispatcher names it, whether or not a query ever feeds it a payload.
+    ``tests/test_media_codecs.py::test_every_codec_function_runs_under_a_query``
+    closes that gap for the media codecs by running the media queries'
+    per-row code and checking that every codec function executes."""
     import ast
     import pathlib
 

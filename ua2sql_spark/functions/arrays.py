@@ -31,6 +31,14 @@ def sq_norm(a: Column) -> Column:
     )
 
 
+def cosine(a: Column, b: Column) -> Column:
+    """dot(a, b) / (|a|·|b|), unguarded, so it matches the oracles'
+    plain division exactly. Precondition: non-zero vectors (the fixtures
+    guarantee it; x112's quantizer guards amax=0 separately). A zero
+    vector gives NaN, which sorts FIRST under a descending rank."""
+    return dot(a, b) / (F.sqrt(sq_norm(a)) * F.sqrt(sq_norm(b)))
+
+
 def sign_bucket(e: Column, n_dims: int = 8) -> Column:
     """Random-hyperplane-style LSH bucket: sign bits of the first
     ``n_dims`` components packed into a long (SURVEY X5 scale path)."""

@@ -1,25 +1,19 @@
-"""Pure-stdlib baseline JPEG codec (X6 media seam, SURVEY §2.11).
+"""Pure-stdlib baseline JPEG codec for 8-bit grayscale rasters.
 
-The container ships no PIL/opencv/ffmpeg, so the engine carries its own
-baseline-JPEG implementation — the sequential DCT process of ITU-T
-T.81: marker parsing, canonical Huffman entropy coding, dequantize +
-zigzag, separable 8×8 IDCT/FDCT, chroma up/down-sampling, and the JFIF
-YCbCr↔RGB transform. Progressive (SOF2), arithmetic coding, 12-bit
-precision, and CMYK raise ``NotImplementedError`` naming the variant.
+``encode_jpeg`` writes one shape of stream: a JFIF APP0 segment, one
+quantization table, one DC and one AC Huffman table of uniform code
+length, a single-component baseline (SOF0) frame and one scan, with no
+restart markers. ``decode_jpeg`` reads exactly that shape, with any
+canonical Huffman tables, through the sequential DCT process of ITU-T
+T.81: marker parsing, Huffman decoding, dequantization in zigzag order
+and the separable 8×8 IDCT. Any other frame (colour, progressive,
+arithmetic, 12-bit) or marker (restart, comment) raises ``JpegError``,
+a ``NotImplementedError``.
 
-Decode handles what cameras and encoders overwhelmingly emit: baseline
-(SOF0) and extended-sequential (SOF1) Huffman scans, grayscale or YCbCr
-with any sampling factors (4:4:4 / 4:2:2 / 4:2:0), restart markers,
-and 0xFF00 byte stuffing. The encoder exists so tests can roundtrip
-real compressed bytes without third-party fixtures — and doubles as the
-thumbnail re-encode step of ``media.thumbnail_real``.
-
-Performance note: this is the *codec seam* behind Arrow-batched
-``mapInPandas`` (queries/multimodal.py). On a production cluster the
-same seam binds to PIL-SIMD/libjpeg-turbo; the Spark plumbing — schema,
-batching, partitioning — is identical either way, which is the part the
-engine owns. Pure-Python decode is for correctness tests at small
-payload counts, not the 100 TB hot path.
+x153 and x187 build their payloads with the encoder, and x187's
+``media.thumbnail_real`` decodes, downscales and re-encodes them. Pure
+Python is the correctness tier behind the Arrow-batched ``mapInPandas``
+of ``queries/multimodal.py``, not a decode farm.
 """
 
 from __future__ import annotations
@@ -62,16 +56,6 @@ _STD_LUMA_Q = (
     49, 64, 78, 87, 103, 121, 120, 101,
     72, 92, 95, 98, 112, 100, 103, 99,
 )
-_STD_CHROMA_Q = (
-    17, 18, 24, 47, 99, 99, 99, 99,
-    18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99,
-    47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-)
 
 
 class JpegError(NotImplementedError):
@@ -101,51 +85,25 @@ def _canonical_codes(bits: list[int], vals: bytes) -> dict[int, tuple[int, int]]
 
 
 class _BitReader:
-    """MSB-first bit reader over entropy-coded data: un-stuffs 0xFF00,
-    stops at markers, and byte-aligns across RSTn."""
+    """MSB-first bit reader over entropy-coded data that un-stuffs 0xFF00.
+    A marker inside the scan raises; a truncated scan raises IndexError,
+    which :func:`decode_jpeg` turns into :class:`JpegError`."""
 
     def __init__(self, data: bytes, pos: int):
         self.data = data
         self.pos = pos
         self.bit = 0
-        self.marker = None  # pending marker byte (RSTn/EOI/next header)
 
     def next_bit(self) -> int:
-        d = self.data
-        if self.marker is not None:
-            raise JpegError("bit read past marker boundary")
-        if self.pos >= len(d):
-            raise JpegError("truncated entropy-coded segment")
-        byte = d[self.pos]
-        if byte == 0xFF and self.bit == 0:
-            nxt = d[self.pos + 1] if self.pos + 1 < len(d) else None
-            if nxt != 0x00:  # a real marker, not a stuffed 0xFF
-                self.marker = nxt
-                raise JpegError("bit read past marker boundary")
+        byte = self.data[self.pos]
+        if byte == 0xFF and self.bit == 0 and self.data[self.pos + 1] != 0x00:
+            raise JpegError("marker inside the entropy-coded segment")
         b = (byte >> (7 - self.bit)) & 1
         self.bit += 1
         if self.bit == 8:
             self.bit = 0
             self.pos += 2 if byte == 0xFF else 1  # skip the 0x00 stuffing
         return b
-
-    def at_marker(self) -> int | None:
-        """Peek: byte-aligned at an 0xFFxx marker? Returns the marker byte."""
-        p = self.pos
-        if self.bit:  # mid-byte: align first (CCITT: pad bits are 1s)
-            p += 2 if self.data[p] == 0xFF else 1
-        if p + 1 < len(self.data) and self.data[p] == 0xFF and self.data[p + 1] != 0x00:
-            return self.data[p + 1]
-        return None
-
-    def restart(self) -> None:
-        """Consume an RSTn marker and realign to the next byte."""
-        if self.bit:
-            self.pos += 2 if self.data[self.pos] == 0xFF else 1
-            self.bit = 0
-        if not (self.data[self.pos] == 0xFF and 0xD0 <= self.data[self.pos + 1] <= 0xD7):
-            raise JpegError("expected restart marker")
-        self.pos += 2
 
     def receive(self, n: int) -> int:
         v = 0
@@ -198,192 +156,103 @@ def _fdct_block(samples: list[int]) -> list[float]:
 # ---------------------------------------------------------------------------
 # Decoder.
 # ---------------------------------------------------------------------------
-def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Decode a baseline JPEG to (width, height, channels, raster).
-
-    Raster is row-major interleaved 8-bit samples: 1 channel for
-    grayscale, 3 (RGB) for YCbCr sources. Raises :class:`JpegError`
-    (a NotImplementedError) for progressive/arithmetic/12-bit/CMYK."""
+def decode_jpeg(payload: bytes) -> tuple[int, int, bytes]:
+    """Decode a single-component baseline JPEG to (width, height,
+    raster), the raster one 8-bit sample per pixel in row-major order.
+    APPn segments are skipped; DQT, DHT, SOF0 and SOS are read, and any
+    other marker raises :class:`JpegError`."""
     if payload[:2] != b"\xff\xd8":
         raise JpegError("not a JPEG stream (missing SOI)")
     qt: dict[int, list[int]] = {}
     huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    frame = None  # (width, height, components)
-    restart_interval = 0
+    frame = None  # (width, height, quantization table id)
     pos = 2
     try:
         while pos + 4 <= len(payload):
             if payload[pos] != 0xFF:
                 raise JpegError("marker desync")
             marker = payload[pos + 1]
-            if marker == 0xFF:  # fill byte before a marker
-                pos += 1
-                continue
-            if marker == 0xD9:  # EOI
-                break
-            if marker == 0x01 or 0xD0 <= marker <= 0xD8:  # standalone markers
-                pos += 2
-                continue
             (seglen,) = struct.unpack_from(">H", payload, pos + 2)
             seg = payload[pos + 4 : pos + 2 + seglen]
             pos += 2 + seglen
             if marker == 0xDB:  # DQT — possibly several tables per marker
-                p = 0
-                while p < len(seg):
-                    prec, tid = seg[p] >> 4, seg[p] & 0x0F
-                    p += 1
-                    if prec == 0:
-                        qt[tid] = list(seg[p : p + 64])
-                        p += 64
-                    else:
-                        qt[tid] = list(struct.unpack_from(">64H", seg, p))
-                        p += 128
+                for p in range(0, len(seg), 65):
+                    if seg[p] >> 4:
+                        raise JpegError("16-bit quantization table")
+                    qt[seg[p] & 0x0F] = list(seg[p + 1 : p + 65])
             elif marker == 0xC4:  # DHT — possibly several tables per marker
                 p = 0
                 while p < len(seg):
                     tclass, tid = seg[p] >> 4, seg[p] & 0x0F
                     bits = list(seg[p + 1 : p + 17])
                     n = sum(bits)
-                    vals = seg[p + 17 : p + 17 + n]
-                    codes = _canonical_codes(bits, vals)
+                    codes = _canonical_codes(bits, seg[p + 17 : p + 17 + n])
                     huff[(tclass, tid)] = {
                         (length, code): sym for sym, (code, length) in codes.items()
                     }
                     p += 17 + n
-            elif marker in (0xC0, 0xC1):  # SOF0/SOF1: baseline sequential
+            elif marker == 0xC0:  # SOF0
                 depth, height, width, ncomp = struct.unpack_from(">BHHB", seg, 0)
-                if depth != 8:
-                    raise JpegError(f"{depth}-bit JPEG precision unsupported")
-                if ncomp not in (1, 3):
-                    raise JpegError(f"{ncomp}-component JPEG (CMYK?) unsupported")
-                comps = []
-                for i in range(ncomp):
-                    cid, hv, tq = struct.unpack_from(">BBB", seg, 6 + 3 * i)
-                    comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
-                frame = (width, height, comps)
-            elif marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-                raise JpegError(
-                    f"SOF{marker - 0xC0}: only baseline/extended-sequential "
-                    "Huffman JPEG decodes natively (no progressive/arithmetic)"
-                )
-            elif marker == 0xDD:  # DRI
-                (restart_interval,) = struct.unpack_from(">H", seg, 0)
-            elif marker == 0xDA:  # SOS — entropy-coded data follows
-                if frame is None:
-                    raise JpegError("SOS before SOF")
-                nscan = seg[0]
-                if nscan != len(frame[2]):
-                    # T.81 permits non-interleaved per-component scans;
-                    # decoding only the first would silently return a
-                    # grayscale image for a color JPEG — refuse instead
-                    # (the module contract: unsupported variants raise).
+                if depth != 8 or ncomp != 1:
                     raise JpegError(
-                        f"non-interleaved scan ({nscan} of {len(frame[2])} "
-                        "components): only single-scan interleaved baseline "
-                        "decodes natively"
+                        f"{depth}-bit {ncomp}-component frame: only 8-bit "
+                        "grayscale decodes"
                     )
-                scan = []
-                for i in range(nscan):
-                    cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
-                    comp = next(c for c in frame[2] if c["id"] == cs)
-                    scan.append((comp, tdta >> 4, tdta & 0x0F))
-                return _decode_scan(payload, pos, frame, scan, qt, huff, restart_interval)
-            # APPn/COM/others: skipped
+                frame = (width, height, seg[8])
+            elif marker == 0xDA:  # SOS — entropy-coded data follows
+                if frame is None or seg[0] != 1:
+                    raise JpegError("SOS without a single-component SOF0 frame")
+                width, height, tq = frame
+                dc, ac = huff[(0, seg[2] >> 4)], huff[(1, seg[2] & 0x0F)]
+                return _decode_scan(payload, pos, width, height, qt[tq], dc, ac)
+            elif not 0xE0 <= marker <= 0xEF:  # APPn (JFIF, Exif) are skipped
+                raise JpegError(
+                    f"marker 0x{marker:02X}: only baseline grayscale JPEG "
+                    "without restart markers decodes"
+                )
         raise JpegError("no SOS marker found")
-    except (struct.error, IndexError, StopIteration, KeyError) as exc:
+    except (struct.error, IndexError, KeyError) as exc:
         raise JpegError(f"malformed JPEG stream: {exc!r}") from exc
 
 
-def _decode_scan(payload, pos, frame, scan, qt, huff, restart_interval):
-    width, height, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcus_x = -(-width // (8 * hmax))
-    mcus_y = -(-height // (8 * vmax))
-
-    planes = {}
-    for comp, _, _ in scan:
-        pw, ph = mcus_x * comp["h"] * 8, mcus_y * comp["v"] * 8
-        planes[comp["id"]] = (bytearray(pw * ph), pw)
-
+def _decode_scan(payload, pos, width, height, q, dc_table, ac_table):
+    """Decode the one scan's 8×8 blocks in raster order and crop the
+    block-padded plane to ``width`` × ``height``."""
+    blocks_x, blocks_y = -(-width // 8), -(-height // 8)
+    pw = blocks_x * 8
+    plane = bytearray(pw * blocks_y * 8)
     reader = _BitReader(payload, pos)
-    dc_pred = {comp["id"]: 0 for comp, _, _ in scan}
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                m = reader.at_marker()
-                if m is not None and 0xD0 <= m <= 0xD7:
-                    reader.restart()
-                    dc_pred = dict.fromkeys(dc_pred, 0)
-            for comp, td, ta in scan:
-                q = qt[comp["tq"]]
-                for by in range(comp["v"]):
-                    for bx in range(comp["h"]):
-                        coef = [0.0] * 64
-                        s = _decode_symbol(reader, huff[(0, td)])
-                        diff = _extend(reader.receive(s), s)
-                        dc_pred[comp["id"]] += diff
-                        coef[0] = dc_pred[comp["id"]] * q[0]
-                        k = 1
-                        while k < 64:
-                            rs = _decode_symbol(reader, huff[(1, ta)])
-                            run, size = rs >> 4, rs & 0x0F
-                            if size == 0:
-                                if run == 15:  # ZRL
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += run
-                            if k > 63:
-                                raise JpegError("AC coefficient index overflow")
-                            coef[ZIGZAG[k]] = _extend(reader.receive(size), size) * q[k]
-                            k += 1
-                        block = _idct_block(coef)
-                        plane, pw = planes[comp["id"]]
-                        ox = (mx * comp["h"] + bx) * 8
-                        oy = (my * comp["v"] + by) * 8
-                        for r in range(8):
-                            row_off = (oy + r) * pw + ox
-                            plane[row_off : row_off + 8] = bytes(
-                                block[r * 8 : r * 8 + 8]
-                            )
-            mcu_count += 1
-
-    return _planes_to_raster(width, height, comps, scan, planes, hmax, vmax)
-
-
-def _planes_to_raster(width, height, comps, scan, planes, hmax, vmax):
-    """Upsample component planes (nearest) to full resolution and apply
-    the JFIF YCbCr→RGB transform; grayscale passes through."""
-    if len(scan) == 1:
-        plane, pw = planes[comps[0]["id"]]
-        out = bytearray(width * height)
-        for y in range(height):
-            out[y * width : (y + 1) * width] = plane[y * pw : y * pw + width]
-        return width, height, 1, bytes(out)
-
-    comp_planes = [(planes[c["id"]][0], planes[c["id"]][1], c["h"], c["v"]) for c in comps]
-    out = bytearray(width * height * 3)
-    for y in range(height):
-        for x in range(width):
-            samples = [
-                plane[(y * v // vmax) * pw + (x * h // hmax)]
-                for plane, pw, h, v in comp_planes
-            ]
-            yy, cb, cr = samples[0], samples[1] - 128, samples[2] - 128
-            off = (y * width + x) * 3
-            out[off] = min(255, max(0, int(round(yy + 1.402 * cr))))
-            out[off + 1] = min(255, max(0, int(round(yy - 0.344136 * cb - 0.714136 * cr))))
-            out[off + 2] = min(255, max(0, int(round(yy + 1.772 * cb))))
-    return width, height, 3, bytes(out)
+    dc_pred = 0
+    for by in range(blocks_y):
+        for bx in range(blocks_x):
+            coef = [0.0] * 64
+            s = _decode_symbol(reader, dc_table)
+            dc_pred += _extend(reader.receive(s), s)
+            coef[0] = dc_pred * q[0]
+            k = 1
+            while k < 64:
+                rs = _decode_symbol(reader, ac_table)
+                run, size = rs >> 4, rs & 0x0F
+                if size == 0:
+                    if run == 15:  # ZRL
+                        k += 16
+                        continue
+                    break  # EOB
+                k += run
+                coef[ZIGZAG[k]] = _extend(reader.receive(size), size) * q[k]
+                k += 1
+            block = _idct_block(coef)
+            for r in range(8):
+                row_off = (by * 8 + r) * pw + bx * 8
+                plane[row_off : row_off + 8] = bytes(block[r * 8 : r * 8 + 8])
+    return width, height, b"".join(plane[y * pw : y * pw + width] for y in range(height))
 
 
 # ---------------------------------------------------------------------------
-# Encoder: baseline SOF0, grayscale / 4:4:4 / 4:2:0.
+# Encoder: baseline SOF0, one component.
 # ---------------------------------------------------------------------------
 # Simple valid canonical Huffman tables (uniform lengths — legal if
-# inefficient; the decode path handles arbitrary DHTs incl. Annex K).
+# inefficient; the decoder takes any canonical table).
 _ENC_DC_BITS = [0, 0, 0, 12] + [0] * 12  # all 12 DC size categories: 4 bits
 _ENC_DC_VALS = bytes(range(12))
 _ENC_AC_VALS = bytes(
@@ -393,11 +262,11 @@ _ENC_AC_VALS = bytes(
 _ENC_AC_BITS = [0] * 7 + [len(_ENC_AC_VALS)] + [0] * 8  # all 162: 8 bits
 
 
-def _quant_table(base: tuple[int, ...], quality: int) -> list[int]:
-    """libjpeg quality scaling: 50 → base table, 100 → all ones."""
+def _quant_table(quality: int) -> list[int]:
+    """libjpeg quality scaling: 50 → the T.81 table, 100 → all ones."""
     quality = min(100, max(1, quality))
     scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    return [min(255, max(1, (b * scale + 50) // 100)) for b in base]
+    return [min(255, max(1, (b * scale + 50) // 100)) for b in _STD_LUMA_Q]
 
 
 class _BitWriter:
@@ -417,16 +286,9 @@ class _BitWriter:
             self.nbits -= 8
         self.acc &= (1 << self.nbits) - 1
 
-    def pad(self) -> None:
+    def flush(self) -> bytes:
         if self.nbits:
             self.write(0x7F, 8 - self.nbits)  # pad with 1s per spec
-
-    def raw(self, data: bytes) -> None:
-        """Append marker bytes verbatim (markers are never stuffed)."""
-        self.out += data
-
-    def flush(self) -> bytes:
-        self.pad()
         return bytes(self.out)
 
 
@@ -475,111 +337,31 @@ def _block_at(plane: list[list[int]], x0: int, y0: int) -> list[int]:
     ]
 
 
-def encode_jpeg(
-    width: int,
-    height: int,
-    channels: int,
-    raster: bytes,
-    quality: int = 92,
-    subsample: bool = False,
-    restart_interval: int = 0,
-) -> bytes:
-    """Encode an interleaved 8-bit raster (1 = gray, 3 = RGB) as a
-    baseline JFIF JPEG. ``subsample=True`` emits 4:2:0 (2×2-averaged
-    chroma); else 4:4:4. ``restart_interval`` > 0 emits a DRI segment
-    and an RSTn marker (byte-aligned, DC predictors reset) every that
-    many MCUs — what camera firmware does for error resilience, and
-    what lets a parallel decoder split the scan."""
-    if channels not in (1, 3):
-        raise JpegError(f"encode: {channels}-channel raster unsupported")
-    luma_q = _quant_table(_STD_LUMA_Q, quality)
-    chroma_q = _quant_table(_STD_CHROMA_Q, quality)
-
-    if channels == 1:
-        yp = [
-            [raster[y * width + x] for x in range(width)] for y in range(height)
-        ]
-        planes = [(yp, luma_q)]
-    else:
-        yp, cb, cr = [], [], []
-        for y in range(height):
-            ry, rb, rr = [], [], []
-            for x in range(width):
-                off = (y * width + x) * 3
-                r, g, b = raster[off], raster[off + 1], raster[off + 2]
-                ry.append(min(255, max(0, int(round(0.299 * r + 0.587 * g + 0.114 * b)))))
-                rb.append(min(255, max(0, int(round(-0.168736 * r - 0.331264 * g + 0.5 * b + 128)))))
-                rr.append(min(255, max(0, int(round(0.5 * r - 0.418688 * g - 0.081312 * b + 128)))))
-            yp.append(ry)
-            cb.append(rb)
-            cr.append(rr)
-        if subsample:
-            def down2(p):
-                return [
-                    [
-                        (
-                            p[2 * y][2 * x]
-                            + p[2 * y][min(2 * x + 1, width - 1)]
-                            + p[min(2 * y + 1, height - 1)][2 * x]
-                            + p[min(2 * y + 1, height - 1)][min(2 * x + 1, width - 1)]
-                            + 2
-                        )
-                        // 4
-                        for x in range(-(-width // 2))
-                    ]
-                    for y in range(-(-height // 2))
-                ]
-            cb, cr = down2(cb), down2(cr)
-        planes = [(yp, luma_q), (cb, chroma_q), (cr, chroma_q)]
-
-    ydiv = 2 if (channels == 3 and subsample) else 1
-    comp_hv = [(ydiv, ydiv)] + [(1, 1)] * (len(planes) - 1)
-
+def encode_jpeg(width: int, height: int, raster: bytes, quality: int = 92) -> bytes:
+    """Encode an 8-bit grayscale raster (one sample per pixel, row-major)
+    as a single-component baseline JFIF JPEG at libjpeg ``quality``."""
+    q = _quant_table(quality)
+    plane = [[raster[y * width + x] for x in range(width)] for y in range(height)]
     out = bytearray(b"\xff\xd8")  # SOI
     out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    for tid, q in enumerate([luma_q] + ([chroma_q] if channels == 3 else [])):
-        out += b"\xff\xdb" + struct.pack(">HB", 67, tid) + bytes(q)
-    sof = struct.pack(">BHHB", 8, height, width, len(planes))
-    for i, (h, v) in enumerate(comp_hv):
-        tq = 0 if i == 0 else 1
-        sof += struct.pack(">BBB", i + 1, (h << 4) | v, tq)
-    out += b"\xff\xc0" + struct.pack(">H", 2 + len(sof)) + sof
-    dc_codes = _canonical_codes(_ENC_DC_BITS, _ENC_DC_VALS)
-    ac_codes = _canonical_codes(_ENC_AC_BITS, _ENC_AC_VALS)
+    out += b"\xff\xdb" + struct.pack(">HB", 67, 0) + bytes(q)
+    # SOF0: 8-bit, height, width, one component (id 1, 1x1 sampling, table 0)
+    out += b"\xff\xc0" + struct.pack(">HBHHBBBB", 11, 8, height, width, 1, 1, 0x11, 0)
     for tclass, bits, vals in [(0, _ENC_DC_BITS, _ENC_DC_VALS), (1, _ENC_AC_BITS, _ENC_AC_VALS)]:
-        for tid in range(2 if channels == 3 else 1):
-            body = bytes([(tclass << 4) | tid]) + bytes(bits) + vals
-            out += b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    sos = bytes([len(planes)])
-    for i in range(len(planes)):
-        td = ta = 0 if i == 0 else 1
-        sos += bytes([i + 1, (td << 4) | ta])
-    sos += b"\x00\x3f\x00"  # Ss/Se/AhAl for sequential DCT
-    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
+        body = bytes([tclass << 4]) + bytes(bits) + vals
+        out += b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
+    # SOS: one component (id 1, DC/AC tables 0), then Ss/Se/AhAl of sequential DCT
+    out += b"\xff\xda" + struct.pack(">HBBBBBB", 8, 1, 1, 0x00, 0, 63, 0)
 
     writer = _BitWriter()
-    hmax = max(h for h, _ in comp_hv)
-    vmax = max(v for _, v in comp_hv)
-    mcus_x = -(-width // (8 * hmax))
-    mcus_y = -(-height // (8 * vmax))
-    dc_pred = [0] * len(planes)
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            mcu_index = my * mcus_x + mx
-            if restart_interval and mcu_index and mcu_index % restart_interval == 0:
-                writer.pad()
-                rst_no = (mcu_index // restart_interval - 1) % 8
-                writer.raw(bytes([0xFF, 0xD0 + rst_no]))
-                dc_pred = [0] * len(planes)
-            for ci, ((plane, q), (h, v)) in enumerate(zip(planes, comp_hv)):
-                for by in range(v):
-                    for bx in range(h):
-                        block = _block_at(plane, (mx * h + bx) * 8, (my * v + by) * 8)
-                        dc_pred[ci] = _encode_block(
-                            writer, block, q, dc_pred[ci], dc_codes, ac_codes
-                        )
+    dc_codes = _canonical_codes(_ENC_DC_BITS, _ENC_DC_VALS)
+    ac_codes = _canonical_codes(_ENC_AC_BITS, _ENC_AC_VALS)
+    dc_pred = 0
+    for y0 in range(0, height, 8):
+        for x0 in range(0, width, 8):
+            dc_pred = _encode_block(
+                writer, _block_at(plane, x0, y0), q, dc_pred, dc_codes, ac_codes
+            )
     out += writer.flush()
     out += b"\xff\xd9"  # EOI
     return bytes(out)

@@ -29,11 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ua2sql_spark.functions.arrays import dot, sq_norm
-
-
-def _cosine(a, b):
-    return dot(a, b) / (F.sqrt(sq_norm(a)) * F.sqrt(sq_norm(b)))
+from ua2sql_spark.functions.arrays import cosine, dot, sq_norm
 
 
 def ivf_assign(
@@ -134,7 +130,7 @@ def ivf_probe_topk(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qemb")
     )
     qscore = q.crossJoin(F.broadcast(cent)).withColumn(
-        "__score", F.round(_cosine(F.col("__qemb"), F.col("__cemb")), 6)
+        "__score", F.round(cosine(F.col("__qemb"), F.col("__cemb")), 6)
     )
     wq = Window.partitionBy("query_id").orderBy(F.desc("__score"), F.asc("__cid"))
     probe = (
@@ -153,7 +149,7 @@ def ivf_probe_topk(
     scored = pairs.select(
         "query_id",
         "neighbor_id",
-        F.round(_cosine(F.col("__qemb"), F.col("__nemb")), 6).alias("cos_sim"),
+        F.round(cosine(F.col("__qemb"), F.col("__nemb")), 6).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -190,7 +186,7 @@ def ivf_topk(
     scored = pairs.select(
         "query_id",
         "neighbor_id",
-        F.round(_cosine(F.col("__qemb"), F.col("__nemb")), 6).alias("cos_sim"),
+        F.round(cosine(F.col("__qemb"), F.col("__nemb")), 6).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -299,7 +295,7 @@ def ivf_health_report(
     rows = lists.join(F.broadcast(cent), F.col("cell") == F.col("cid")).select(
         "cell",
         (F.col("generation") == 0).alias("__built"),
-        F.round(_cosine(F.col("nemb"), F.col("cemb")), 6).alias("__cos"),
+        F.round(cosine(F.col("nemb"), F.col("cemb")), 6).alias("__cos"),
     )
     agg = rows.groupBy("cell").agg(
         F.sum(F.when(F.col("__built"), 1).otherwise(0)).cast("bigint").alias("n_built"),

@@ -49,7 +49,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ua2sql_spark.operators.snapshot import _jfs, _list_version_dirs
+from ua2sql_spark.operators.snapshot import _commit_staged, _jfs, _list_version_dirs
 
 DEC = "decimal(28,8)"
 _N_BUCKETS = 64
@@ -102,18 +102,11 @@ def _read_manifest(spark: SparkSession, view_path: str, version: int) -> list[tu
 def _commit_view_manifest(
     spark: SparkSession, view_path: str, version: int, rows: list[tuple]
 ) -> None:
-    """Staged write + atomic rename to v{N} — THE commit point (the
-    snapshot store's model, ``snapshot._commit_manifest``)."""
-    jvm, fs, _ = _jfs(spark, view_path)
-    staged = f"{_ivm_root(view_path)}/.tmp-{uuid.uuid4().hex}"
-    spark.createDataFrame(rows, _MANIFEST_SCHEMA).coalesce(1).write.parquet(staged)
-    final = jvm.org.apache.hadoop.fs.Path(_manifest_path(view_path, version))
-    fs.mkdirs(final.getParent())
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(staged), final):
-        raise RuntimeError(
-            f"view manifest rename failed for v{version} of {view_path} "
-            "(concurrent writer?)"
-        )
+    """Commit the (bucket, dir) manifest as v{N} — the snapshot store's
+    staged write + rename, ``snapshot._commit_staged``."""
+    _commit_staged(
+        spark, _ivm_root(view_path), _manifest_path(view_path, version), rows, _MANIFEST_SCHEMA
+    )
 
 
 def _write_buckets(df: DataFrame, view_path: str) -> list[tuple]:

@@ -266,6 +266,39 @@ def bootstrap_snapshot(
     return _commit_manifest(spark, path, 0, _manifest_rows_with_counts(spark, pairs))
 
 
+def _commit_staged(
+    spark: SparkSession,
+    root: str,
+    final: str,
+    rows: list[tuple],
+    schema: str,
+    table_schema=None,
+) -> None:
+    """Write ``rows`` as one parquet file to a ``.tmp-`` staging
+    directory under ``root`` (readers skip dot-prefixed names), then
+    rename it to ``final`` — THE commit point of a snapshot or view
+    manifest. ``table_schema`` (a StructType, when the committer knows
+    it) rides along as an underscore-prefixed JSON sidecar inside the
+    manifest dir — parquet readers ignore it, and it gives later upserts
+    the table's FULL logical schema without a footer sweep over every
+    live file (100 TB tables have millions)."""
+    import uuid
+
+    jvm, fs, _ = _jfs(spark, root)
+    staged = jvm.org.apache.hadoop.fs.Path(f"{root}/.tmp-{uuid.uuid4().hex}")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(staged.toString())
+    if table_schema is not None:
+        out = fs.create(jvm.org.apache.hadoop.fs.Path(staged, _SCHEMA_SIDECAR), True)
+        try:
+            out.write(bytearray(table_schema.json().encode("utf-8")))
+        finally:
+            out.close()
+    target = jvm.org.apache.hadoop.fs.Path(final)
+    fs.mkdirs(target.getParent())
+    if not fs.rename(staged, target):
+        raise RuntimeError(f"manifest commit rename failed for {final} (concurrent writer?)")
+
+
 def _commit_manifest(
     spark: SparkSession,
     path: str,
@@ -273,31 +306,10 @@ def _commit_manifest(
     rows: list[tuple],
     table_schema=None,
 ) -> int:
-    """Write the manifest to a staged directory, then atomically rename
-    it to v{N} — THE commit point. ``table_schema`` (a StructType, when
-    the committer knows it) rides along as an underscore-prefixed JSON
-    sidecar inside the manifest dir — parquet readers ignore it, and it
-    gives later upserts the table's FULL logical schema without a
-    footer sweep over every live file (100 TB tables have millions)."""
-    import uuid
-
-    jvm, fs, _ = _jfs(spark, path)
-    staged = f"{_snap_root(path)}/.tmp-{uuid.uuid4().hex}"
-    spark.createDataFrame(rows, _MANIFEST_SCHEMA).coalesce(1).write.parquet(staged)
-    if table_schema is not None:
-        sidecar = jvm.org.apache.hadoop.fs.Path(staged, _SCHEMA_SIDECAR)
-        out = fs.create(sidecar, True)
-        try:
-            out.write(bytearray(table_schema.json().encode("utf-8")))
-        finally:
-            out.close()
-    final = jvm.org.apache.hadoop.fs.Path(snapshot_path(path, version))
-    fs.mkdirs(final.getParent())
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(staged), final):
-        raise RuntimeError(
-            f"snapshot commit rename failed for v{version} of {path} "
-            "(concurrent writer?)"
-        )
+    """Commit the table's manifest as v{N} (:func:`_commit_staged`)."""
+    _commit_staged(
+        spark, _snap_root(path), snapshot_path(path, version), rows, _MANIFEST_SCHEMA, table_schema
+    )
     return version
 
 

@@ -11,10 +11,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ua2sql_spark.catalog import load_table
-from ua2sql_spark.functions.arrays import sign_bucket
+from ua2sql_spark.functions.arrays import cosine, sign_bucket
 from ua2sql_spark.functions.text import char_shingles, xor_seed
 from ua2sql_spark.queries.common import sql_dsum, dsum
-from ua2sql_spark.queries.similarity import _sql_cosine, cosine
+from ua2sql_spark.queries.similarity import _sql_cosine
 from ua2sql_spark.registry import query
 
 

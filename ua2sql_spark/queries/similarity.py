@@ -22,22 +22,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ua2sql_spark.catalog import load_table
-from ua2sql_spark.functions.arrays import dot, sign_bucket, sq_norm
+from ua2sql_spark.functions.arrays import cosine, dot, sign_bucket, sq_norm
 from ua2sql_spark.registry import query
 
 N_PROBE = 10
 TOP_K = 5
 BUCKET_DIMS = 8
 IVF_STRIDE = 25
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Unguarded cosine — matches the oracles' plain division exactly.
-    Precondition: non-zero vectors (the fixtures guarantee it; x112's
-    quantizer guards amax=0 separately). Pipelines that may see zero
-    vectors should use functions/arrays.cosine, whose zero-norm branch
-    returns NULL instead of NaN (NaN sorts FIRST under desc rank)."""
-    return dot(a, b) / (F.sqrt(sq_norm(a)) * F.sqrt(sq_norm(b)))
 
 
 _SQL_DOT = (
